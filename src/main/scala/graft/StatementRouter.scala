@@ -866,7 +866,7 @@ class StatementRouter(spark: SparkSession, root: String) {
 
     val analyzer = graft.operators.MatchText.Analyzer.byName(spec.analyzer)
     val idx = graft.operators.MatchText.IndexCache.cached(
-      s"${tablePath(table)}#${spec.name}#fielded#v$version") {
+      spark, s"${tablePath(table)}#${spec.name}#fielded#v$version") {
       // durable fielded index: load if a committed store exists for this
       // version, else build, persist, and reclaim stale versions
       val idxRootStr = s"${tablePath(table)}/_ftindex/${spec.name}__fielded"
@@ -1467,7 +1467,7 @@ class StatementRouter(spark: SparkSession, root: String) {
     val version = VersionedTable.latestVersion(spark, tablePath(table)).get
     val analyzer = graft.operators.MatchText.Analyzer.byName(spec.analyzer)
     val idx = graft.operators.MatchText.IndexCache.cached(
-      s"${tablePath(table)}#${spec.name}#v$version") {
+      spark, s"${tablePath(table)}#${spec.name}#v$version") {
       // durable index: the reference keeps its Lucene index on disk next
       // to the shard; graft's twin is term-bucketed Parquet under the
       // table root, written once per (index, committed version) — fresh
@@ -1825,7 +1825,7 @@ class StatementRouter(spark: SparkSession, root: String) {
       if (!isPq) None
       else Some(graft.operators.MatchText
             .IndexCache.cached[(DataFrame, DataFrame, Array[Array[Array[Float]]])](
-              s"${tablePath(table)}#${spec.name}#vecpq#v$version") {
+              spark, s"${tablePath(table)}#${spec.name}#vecpq#v$version") {
             if (fs.exists(new Path(s"$stored/codes"))) {
               StatementRouter.lastVecIndexBuild.set("loaded")
               val (c, cents) = graft.operators.Similarity
@@ -1889,7 +1889,7 @@ class StatementRouter(spark: SparkSession, root: String) {
       if (isPq) None
       else Some(graft.operators.MatchText.IndexCache
             .cached[(DataFrame, DataFrame)](
-              s"${tablePath(table)}#${spec.name}#vec#v$version") {
+              spark, s"${tablePath(table)}#${spec.name}#vec#v$version") {
             if (fs.exists(new Path(s"$stored/codes"))) {
               StatementRouter.lastVecIndexBuild.set("loaded")
               graft.operators.Similarity.loadQuantizedIndex(spark, stored)
@@ -1965,7 +1965,7 @@ class StatementRouter(spark: SparkSession, root: String) {
       case Some(target) =>
         val picked = graft.operators.MatchText.IndexCache
           .cached[java.lang.Integer](
-            s"${tablePath(table)}#${spec.name}#autonp#v$version") {
+            spark, s"${tablePath(table)}#${spec.name}#autonp#v$version") {
           val curvePath = s"$stored/recallcurve"
           val cents = pqHandles.map(_._2).orElse(int8Handles.map(_._2)).get
           val centCount = cents.count().toInt
@@ -2538,7 +2538,7 @@ class StatementRouter(spark: SparkSession, root: String) {
         require(txn.isEmpty, "RENAME TO inside a transaction is not supported")
         require(VersionedTable.latestVersion(spark, tablePath(to)).isEmpty,
           s"table $to already exists")
-        VersionedTable.invalidateReadMemo(tablePath(name))
+        Memo.invalidate(_.contains(tablePath(name)))
         require(fs.rename(new Path(tablePath(name)), new Path(tablePath(to))),
           s"rename $name -> $to failed")
         summary(0L)
@@ -2624,10 +2624,9 @@ class StatementRouter(spark: SparkSession, root: String) {
       require(VersionedTable.latestVersion(spark, tablePath(tgt)).isDefined,
         s"table $tgt does not exist")
       val tmp = new Path(tablePath(s"__swap_$tgt"))
-      // directory surgery ahead: memoized version reads under either root
-      // must not survive the rename (VersionedTable.invalidateReadMemo)
-      VersionedTable.invalidateReadMemo(tablePath(src))
-      VersionedTable.invalidateReadMemo(tablePath(tgt))
+      // directory surgery ahead: memo entries under either root must not
+      // survive the rename
+      Memo.invalidate(k => k.contains(tablePath(src)) || k.contains(tablePath(tgt)))
       require(fs.rename(new Path(tablePath(tgt)), tmp), "swap failed")
       require(fs.rename(new Path(tablePath(src)), new Path(tablePath(tgt))),
         "swap failed")
@@ -3542,8 +3541,8 @@ class StatementRouter(spark: SparkSession, root: String) {
       exprs => graft.functions.UdfOverloads.dispatch(fname, exprs),
       "scala_udf")
     // same-signature OR REPLACE keeps the registry name-set unchanged —
-    // bump the snapshot counter so pg_proc/routines refresh (ADVICE r15)
-    graft.sources.CatalogSnapshot.bump(spark)
+    // drop the function-list snapshot so pg_proc/routines refresh
+    Memo.invalidate(_.startsWith(graft.sources.CatalogSnapshot.functionsKey))
     summary(1L)
   }
 
@@ -3586,7 +3585,7 @@ class StatementRouter(spark: SparkSession, root: String) {
     spark.sql(s"DROP TEMPORARY FUNCTION IF EXISTS `${removed.mangled}`")
     if (remaining == 0)
       spark.sql(s"DROP TEMPORARY FUNCTION IF EXISTS `$fname`")
-    graft.sources.CatalogSnapshot.bump(spark)
+    Memo.invalidate(_.startsWith(graft.sources.CatalogSnapshot.functionsKey))
     summary(1L)
   }
 

@@ -22,17 +22,13 @@ object Tables {
     * metadata in DocTableInfo; Spark caches it for catalog tables but not
     * for repeated `read.parquet` calls). The fixture files are immutable,
     * so the resolved DataFrame (plan metadata only — every execution still
-    * scans the parquet) is reused per (session, dir, table). Keyed on the
-    * session REFERENCE (not a hash) so distinct sessions never collide. */
-  private val loadMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, String), DataFrame]()
-
+    * scans the parquet) is reused per (session, dir, table). */
   def load(spark: SparkSession, dir: String, name: String): DataFrame = {
     // the nanos conf must be set before the first events read in any
     // session; cheap, so set it unconditionally (memo hit or not)
     if (name == "events")
       spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    loadMemo.computeIfAbsent((spark, dir, name), _ => build(spark, dir, name))
+    Memo(spark, s"load#$dir#$name")(build(spark, dir, name))
   }
 
   private def build(spark: SparkSession, dir: String, name: String): DataFrame =
@@ -75,21 +71,24 @@ object Tables {
     * (session, dir) already analyzed and the catalog tables still exist;
     * the temp-view unshadowing stays per-call because interleaved entries
     * re-register fixture temp views. */
-  private val statsMemo = java.util.concurrent.ConcurrentHashMap.newKeySet[
-    (SparkSession, String)]()
-
   def registerAllWithStats(spark: SparkSession, dir: String): Unit = {
     // stats are pointless unless the planner consumes them
     spark.conf.set("spark.sql.cbo.enabled", "true")
     spark.conf.set("spark.sql.cbo.joinReorder.enabled", "true")
-    val firstTime = statsMemo.add((spark, dir))
+    var firstTime = false
+    Memo(spark, s"analyze#$dir") { firstTime = true }
     names.filterNot(_ == "events").foreach { n =>
       spark.catalog.dropTempView(n)
       // location guard (ADVICE r15): CREATE TABLE IF NOT EXISTS is a no-op
       // when the name already points at a DIFFERENT dir's files — the old
       // path would then ANALYZE (and memoize) the wrong scale factor's
       // data silently. Drop and recreate when the location mismatches.
-      val want = new org.apache.hadoop.fs.Path(s"$dir/$n.parquet").toUri.getPath
+      // The catalog stores a qualified location, so a relative `dir` is
+      // qualified before the comparison.
+      val raw = new org.apache.hadoop.fs.Path(s"$dir/$n.parquet")
+      val loc = raw.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        .makeQualified(raw)
+      val want = loc.toUri.getPath
       val cur =
         if (!spark.catalog.tableExists(n)) None
         else Some(new org.apache.hadoop.fs.Path(spark.sessionState.catalog
@@ -97,7 +96,7 @@ object Tables {
           .location).toUri.getPath)
       if (cur.exists(_ != want)) spark.sql(s"DROP TABLE $n")
       if (firstTime || cur.isEmpty || cur.exists(_ != want)) {
-        spark.sql(s"CREATE TABLE IF NOT EXISTS $n USING parquet LOCATION '$dir/$n.parquet'")
+        spark.sql(s"CREATE TABLE IF NOT EXISTS $n USING parquet LOCATION '$loc'")
         spark.sql(s"ANALYZE TABLE $n COMPUTE STATISTICS")
       }
     }

@@ -1,7 +1,6 @@
 package graft.functions
 
 import org.apache.spark.sql.SparkSession
-import java.util.concurrent.ConcurrentHashMap
 
 /** One-stop SQL registration for the graft function pack, so every custom
   * function is callable from `spark.sql` as well as the Column API.
@@ -19,8 +18,6 @@ final case class ParsedUrl(scheme: String, userinfo: String, hostname: String,
                            fragment: String)
 
 object GraftFunctions {
-  private val registered = ConcurrentHashMap.newKeySet[String]()
-
   def registerAll(spark: SparkSession): Unit = {
     // STANDARD-CONFORMING string literals, always — the reference (like
     // PG with standard_conforming_strings=on) does NOT process
@@ -32,7 +29,10 @@ object GraftFunctions {
     // deprecation WARN out of per-entry logs.
     if (spark.conf.get("spark.sql.parser.escapedStringLiterals", "false") != "true")
       spark.conf.set("spark.sql.parser.escapedStringLiterals", "true")
-    if (!registered.add(System.identityHashCode(spark).toString)) return
+    graft.Memo(spark, "functions")(register(spark))
+  }
+
+  private def register(spark: SparkSession): Unit = {
     val u = spark.udf
 
     // text / dedup kernels

@@ -151,7 +151,6 @@ object JsUdf {
     expectOp("{")
 
     val bindings = scala.collection.mutable.LinkedHashMap.empty[String, E]
-    def isName(t: T, s: String) = t == Id(s)
 
     def q(s: String) = "'" + s.replace("'", "''") + "'"
 

@@ -25,11 +25,6 @@ object TimeFunctions {
     timestamp_micros(t - rem)
   }
 
-  /** `date_bin` with an interval given in millis, CrateDB's native unit
-    * (timestamps are epoch millis, `io/crate/types/TimestampType.java`). */
-  def dateBinMillis(widthMillis: Long, ts: Column): Column =
-    dateBin(widthMillis * 1000L, ts)
-
   /** MySQL-style `date_format` pattern → java.time pattern (reference
     * `expression/scalar/timestamp/DateFormatFunction.java:40` uses
     * MySQL `%`-patterns). Covers the commonly used subset. */

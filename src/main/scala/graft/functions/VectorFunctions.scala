@@ -41,9 +41,6 @@ object VectorFunctions {
     if (denom == 0.0) null else Double.box(dot / denom)
   }
 
-  /** Codegen'd native dot product (graft.plans.DotProductExpr). */
-  def dotNative(a: Column, b: Column): Column = call_function("graft_dot", a, b)
-
   private def d(c: Column): Column = transform(c, x => x.cast("double"))
 
   def dot(a: Column, b: Column): Column =

@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.functions.TextFunctions
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Full-text `MATCH` (reference:
@@ -22,18 +22,17 @@ import org.apache.spark.sql.functions._
   */
 object MatchText {
 
-  /** Process-wide memo for built index bundles, keyed by (data dir, index
-    * name). An index is built ONCE per dataset and reused by every
-    * subsequent search — the reference likewise separates index
-    * construction (a DDL-time cost) from query cost. The bench/verify
+  /** Built index bundles in [[graft.Memo]], keyed by (session, data dir or
+    * table path, index name). An index is built ONCE per dataset and
+    * reused by every subsequent search — the reference likewise separates
+    * index construction (a DDL-time cost) from query cost. The bench/verify
     * harnesses clear this between queries so a bundle never outlives the
     * query that built it (its persisted DataFrames are unpersisted by the
     * harness's storage cleanup; entries here are just references). */
   object IndexCache {
-    private val m = new java.util.concurrent.ConcurrentHashMap[String, AnyRef]()
-    def cached[T <: AnyRef](key: String)(build: => T): T =
-      m.computeIfAbsent(key, _ => build).asInstanceOf[T]
-    def clear(): Unit = m.clear()
+    def cached[T](spark: SparkSession, key: String)(build: => T): T =
+      graft.Memo(spark, s"index#$key")(build)
+    def clear(): Unit = graft.Memo.invalidate(_.startsWith("index#"))
   }
 
   /** Per-index analyzer chain (reference
@@ -160,9 +159,6 @@ object MatchText {
     * default (HAN incl. ext-A, HIRAGANA, KATAKANA, HANGUL syllables). */
   private[operators] val cjkClass: String =
     "[\\u3040-\\u30FF\\u3400-\\u4DBF\\u4E00-\\u9FFF\\uAC00-\\uD7AF]"
-  private[operators] def isCjkChar(c: Char): Boolean =
-    (c >= 0x3040 && c <= 0x30FF) || (c >= 0x3400 && c <= 0x4DBF) ||
-    (c >= 0x4E00 && c <= 0x9FFF) || (c >= 0xAC00 && c <= 0xD7AF)
 
   /** Per-script ids for the CJKBigramFilter flags: 1 = hiragana,
     * 2 = katakana, 3 = han, 4 = hangul, 0 = everything else. */
@@ -1083,8 +1079,6 @@ object MatchText {
     else if (s.length > 3 && (s.endsWith("t") || s.endsWith("n"))) s.dropRight(1)
     else s
 
-  private def termCol(text: Column): Column = Analyzer.default(text)
-
   /** `MATCH(col, 'query')` with the reference's options
     * (`MatchPredicate.java:85`, `docs/general/dql/fulltext.rst`):
     *
@@ -1110,10 +1104,6 @@ object MatchText {
       else perTerm.reduceOption(_ || _)
     combined.getOrElse(lit(true))
   }
-
-  /** `MATCH ... USING phrase`: exact phrase containment (normalized). */
-  def phrasePredicate(text: Column, phrase: String): Column =
-    lower(text).contains(phrase.toLowerCase)
 
   /** `MATCH ... USING phrase WITH (slop = n)` (`MatchPredicate.java:85`;
     * Lucene sloppy phrase): the phrase terms appear IN ORDER with at most

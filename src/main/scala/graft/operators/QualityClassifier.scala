@@ -148,32 +148,6 @@ object QualityClassifier {
       (z > lit(0L)).as("predicted"))
   }
 
-  /** Map-only scoring from the STRING form of the model (the committed
-    * [[Q248PinnedModel]] constants, or any (bucket, 12-dp-decimal)
-    * rendering of [[train]]'s output): sparse weights rebuilt into the
-    * dense plan literal, each string parsed to the identical BigDecimal
-    * the oracle's CAST parses. */
-  def scoreFromStrings(docs: DataFrame, weights: Map[Int, String],
-                       bias: String, dims: Int = 1024,
-                       idCol: String = "doc_id", textCol: String = "text",
-                       maxTokens: Int = 64): DataFrame = {
-    val wLit = array((0 until dims).map { i =>
-      lit(BigDecimal(weights.getOrElse(i, "0"))).cast("decimal(28,12)")
-    }: _*)
-    val toks = coalesce(tokenCol(col(textCol), maxTokens),
-      array().cast("array<string>"))
-    val bucket = (t: Column) =>
-      pmod(conv(substr(md5(t), lit(1), lit(15)), 16, 10).cast("long"),
-        lit(dims)).cast("int")
-    val z = aggregate(toks,
-      lit(BigDecimal(bias)).cast("decimal(38,12)"),
-      (acc, t) =>
-        (acc + element_at(wLit, bucket(t) + 1)).cast("decimal(38,12)"))
-    docs.select(col(idCol),
-      z.as("score"),
-      (z > lit(0)).as("predicted"))
-  }
-
   /** Map-only scoring: (idCol, score = the exact DECIMAL(38,12) logit,
     * predicted = logit > 0). Zero shuffle; the weights ride the plan as
     * a literal array. */

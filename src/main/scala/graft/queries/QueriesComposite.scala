@@ -42,7 +42,7 @@ object QueriesComposite {
 
     "q96_match_bm25" -> ((s, dir) => {
       val docs = T(s, dir, "documents")
-      val index = graft.operators.MatchText.IndexCache.cached(s"$dir#default")(
+      val index = graft.operators.MatchText.IndexCache.cached(s, s"$dir#default")(
         graft.operators.MatchText.buildIndex(docs, "doc_id", "text"))
       graft.operators.MatchText.searchBM25(index, "spark filter window", topN = 20)
         .select(col("doc_id"), round(col("score"), 6).as("score"), col("terms_hit"))

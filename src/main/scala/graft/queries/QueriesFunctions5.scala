@@ -66,7 +66,7 @@ object QueriesFunctions5 {
         .select(col("doc_id"),
           array_join(slice(split(col("text"), " "), 1, 5), " ").as("title"),
           col("text").as("body"))
-      val idx = MatchText.IndexCache.cached(s"$dir#q103_fielded")(
+      val idx = MatchText.IndexCache.cached(s, s"$dir#q103_fielded")(
         MatchText.buildFieldedIndex(docs, "doc_id", Seq("title", "body")))
       MatchText.searchFielded(idx, "spark filter window",
           boosts = Map("title" -> 2.0), matchType = "most_fields", topN = 20)
@@ -101,7 +101,7 @@ object QueriesFunctions5 {
     // same terms the index holds. Oracle replays the chain in DuckDB SQL.
     "q106_analyzer_search" -> ((s, dir) => {
       val docs = T(s, dir, "documents")
-      val idx = MatchText.IndexCache.cached(s"$dir#q106_english")(
+      val idx = MatchText.IndexCache.cached(s, s"$dir#q106_english")(
         MatchText.buildIndex(docs, "doc_id", "text", MatchText.Analyzer.english))
       MatchText.search(idx, "sparks filters windows", topN = 20)
         .select(col("doc_id"), round(col("score"), 6).as("score"), col("terms_hit"))

@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.Memo
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -23,11 +24,6 @@ import org.apache.spark.sql.functions._
   *    again, comparable to its r01 workload.
   */
 object QueriesRound15 {
-
-  /** q280's bucketed-table build memo (q276's pattern — construction
-    * once per (dir, JVM), the probed plan re-derived per rep). */
-  private val bucketedMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   /** Pin SQL confs for the duration of `f`, restoring previous values
     * (unset keys restored to unset). */
@@ -61,8 +57,7 @@ object QueriesRound15 {
       val tag = java.lang.Long.toHexString(
         graft.functions.TextFunctions.fnv1a64(dir))
       val (ot, ct) = (s"q280_orders_b_$tag", s"q280_cust_b_$tag")
-      bucketedMemo.computeIfAbsent(
-        s"q280#${System.identityHashCode(s)}#$dir", _ => {
+      Memo(s, s"q280#$dir") {
         val orders = graft.Tables.load(s, dir, "orders")
           .select(col("o_custkey"), col("o_orderkey"),
             expr("CAST(round(o_totalprice * 100) AS BIGINT)").as("price_cents"))
@@ -78,7 +73,7 @@ object QueriesRound15 {
         Bucketing.writeBucketed(orders, ot, 8, Seq("o_custkey"))
         Bucketing.writeBucketed(cust, ct, 8, Seq("o_custkey"))
         "built"
-      })
+      }
       val shuffleFree = withConfs(s,
         "spark.sql.adaptive.enabled" -> "false",
         "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
@@ -109,7 +104,7 @@ object QueriesRound15 {
         Similarity.kmeansBucketize(emb, numCentroids = 16, iters = 2)
       val approx = Similarity.ivfKnn(bucketed, centroids, qs, k = 5, nprobe = 8)
       val hits = approx.select(col("qid"), col("cid"), lit(1).as("hit"))
-      // shared per-JVM exact-top-5 memo (same corpus/queries as q185's
+      // shared per-session exact-top-5 memo (same corpus/queries as q185's
       // audit side — one materialization serves both)
       val rec = QueriesPipeline.TruthMemo
         .exactKnn(emb, qs, 5, s"knnlt10#$dir")

@@ -325,7 +325,7 @@ object QueriesRound3 {
       val found = Similarity.hyperplaneNearDupPairs(emb,
           threshold = 0.4, tables = 12)
         .select(col("id_a"), col("id_b"), lit(1).as("hit"))
-      // exact all-pairs ground truth via the shared per-JVM parquet memo
+      // exact all-pairs ground truth via the shared per-session parquet memo
       // (QueriesPipeline.TruthMemo — same key as q67, so the two entries
       // share ONE materialization): deterministic, so no result row
       // changes, and the timed bench rep measures the LSH operator

@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.Tables
+import graft.{Memo, Tables}
 import graft.functions.GeoShapeFunctions
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -14,12 +14,9 @@ import org.apache.spark.sql.functions._
 object QueriesRound4 {
   private def T(s: SparkSession, dir: String, n: String) = Tables.load(s, dir, n)
 
-  /** Router-table roots memoized per (query, sfDir) within the JVM:
-    * repeated invocations (bench reps) time the QUERY, not table+index
-    * construction — mirroring how the reference separates indexing from
-    * search cost. Fresh JVMs (verify runs) build from scratch. */
-  private val routerRoots =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  // Router-table roots are memoized per (session, query, sfDir): bench
+  // reps time the QUERY, not table+index construction — the reference
+  // likewise separates indexing from search cost.
 
   /** Concave L-polygon with a square hole in its lower arm: chosen because
     * it is simultaneously a hard case for geometry code (concavity + hole)
@@ -410,9 +407,9 @@ object QueriesRound4 {
     "q185_ivf_quantized" -> ((s, dir) => {
       val emb = T(s, dir, "embeddings")
       val qs = emb.filter(col("vec_id") < 10)
-      // IVF index construction (train + assign) happens once per (dir,
-      // JVM) — the q187/q227 construction-vs-query separation; the rep
-      // times the quantized probe + rescore, the operator under test
+      // IVF index construction (train + assign) happens once per
+      // (session, dir) — the q187/q227 construction-vs-query separation;
+      // the rep times the quantized probe + rescore, the operator under test
       val built = QueriesPipeline.TruthMemo.builtFrames(s, s"q185ivf#$dir") {
         val (b, c) = graft.operators.Similarity
           .kmeansBucketize(emb, numCentroids = 16, iters = 2)
@@ -422,7 +419,7 @@ object QueriesRound4 {
       val approx = graft.operators.Similarity.ivfKnnQuantized(
         bucketed, centroids, qs, k = 5, nprobe = 8)
       val hits = approx.select(col("qid"), col("cid"), lit(1).as("hit"))
-      // exact recall ground truth via the shared per-JVM parquet memo
+      // exact recall ground truth via the shared per-session parquet memo
       // (deterministic — no hashed value changes; the timed rep measures
       // the quantized IVF probe, not the exact side's re-derivation)
       val rec = QueriesPipeline.TruthMemo.exactKnn(emb, qs, 5, s"knnlt10#$dir")
@@ -459,13 +456,13 @@ object QueriesRound4 {
     // TF fallback, exactly how the reference reads MATCH scores out of
     // Lucene postings. DuckDB replays the full BM25 formula (idf, length
     // normalization, AND-match semantics) from the same parquet rows.
-    // Table+index construction memoizes per (sfDir, JVM) — like the
+    // Table+index construction memoizes per (session, sfDir) — like the
     // reference (and q103/q106), indexing cost is separated from query
     // cost, so bench rep 2 times the search.
     "q187_indexed_score" -> ((s, dir) => {
       graft.functions.GraftFunctions.registerAll(s)
       graft.Tables.registerAll(s, dir)
-      val root = routerRoots.computeIfAbsent(s"q187#$dir", _ => {
+      val root = Memo(s, s"q187#$dir") {
         val rt = graft.ArtifactStore.scratchDir("q187")
           .toFile.getAbsolutePath
         val r0 = new graft.StatementRouter(s, rt)
@@ -476,7 +473,7 @@ object QueriesRound4 {
         r0.execute("INSERT INTO scored_docs (doc_id, text) " +
           "SELECT doc_id, text FROM documents")
         rt
-      })
+      }
       val r = new graft.StatementRouter(s, root)
       r.execute("""
         SELECT doc_id, round(_score, 6) AS score
@@ -521,7 +518,7 @@ object QueriesRound4 {
     "q189_partitioned" -> ((s, dir) => {
       graft.functions.GraftFunctions.registerAll(s)
       graft.Tables.registerAll(s, dir)
-      val root = routerRoots.computeIfAbsent(s"q189#$dir", _ => {
+      val root = Memo(s, s"q189#$dir") {
         val rt = graft.ArtifactStore.scratchDir("q189")
           .toFile.getAbsolutePath
         val r0 = new graft.StatementRouter(s, rt)
@@ -534,7 +531,7 @@ object QueriesRound4 {
         r0.execute("INSERT INTO part_orders " +
           "SELECT o_orderkey, o_orderstatus, o_orderpriority, o_totalprice FROM orders")
         rt
-      })
+      }
       val r = new graft.StatementRouter(s, root)
       r.execute("""
         SELECT o_orderpriority,
@@ -567,7 +564,7 @@ object QueriesRound4 {
       val docs = T(s, dir, "documents")
       val emb = T(s, dir, "embeddings")
       val joined = docs.join(emb, col("doc_id") === col("vec_id"))
-      val index = graft.operators.MatchText.IndexCache.cached(s"$dir#hybrid")(
+      val index = graft.operators.MatchText.IndexCache.cached(s, s"$dir#hybrid")(
         graft.operators.MatchText.buildIndex(
           joined.select(col("doc_id"), col("text")), "doc_id", "text"))
       val qv = emb.filter(col("vec_id") === 0)
@@ -636,7 +633,7 @@ object QueriesRound4 {
     "q195_fielded_index_score" -> ((s, dir) => {
       graft.functions.GraftFunctions.registerAll(s)
       graft.Tables.registerAll(s, dir)
-      val root = routerRoots.computeIfAbsent(s"q195#$dir", _ => {
+      val root = Memo(s, s"q195#$dir") {
         val rt = graft.ArtifactStore.scratchDir("q195")
           .toFile.getAbsolutePath
         val r0 = new graft.StatementRouter(s, rt)
@@ -649,7 +646,7 @@ object QueriesRound4 {
         r0.execute("INSERT INTO fielded_docs (doc_id, head_part, tail_part) " +
           "SELECT doc_id, substr(text, 1, 80), substr(text, 81) FROM documents")
         rt
-      })
+      }
       val r = new graft.StatementRouter(s, root)
       r.execute("""
         SELECT doc_id, round(_score, 6) AS score
@@ -668,7 +665,7 @@ object QueriesRound4 {
     "q196_partition_dml" -> ((s, dir) => {
       graft.functions.GraftFunctions.registerAll(s)
       graft.Tables.registerAll(s, dir)
-      val root = routerRoots.computeIfAbsent(s"q196#$dir", _ => {
+      val root = Memo(s, s"q196#$dir") {
         val rt = graft.ArtifactStore.scratchDir("q196")
           .toFile.getAbsolutePath
         val r0 = new graft.StatementRouter(s, rt)
@@ -683,7 +680,7 @@ object QueriesRound4 {
           "WHERE o_orderstatus = 'O'")
         r0.execute("DELETE FROM pdml WHERE o_orderstatus = 'P'")
         rt
-      })
+      }
       val r = new graft.StatementRouter(s, root)
       r.execute("""
         SELECT o_orderstatus, count(*) AS n,
@@ -848,7 +845,7 @@ object QueriesRound4 {
       val approx = graft.operators.Similarity.ivfKnnStored(
         updated, centroids, emb, qs, k = 5, nprobe = 8)
       val hits = approx.select(col("qid"), col("cid"), lit(1).as("hit"))
-      // exact recall ground truth via the shared per-JVM parquet memo
+      // exact recall ground truth via the shared per-session parquet memo
       // (q185's pattern: deterministic audit side, timed rep measures the
       // delta-maintained index probe)
       val rec = QueriesPipeline.TruthMemo
@@ -935,7 +932,7 @@ object QueriesRound4 {
     // test, and a token-adjacency regex).
     "q205_ngram_shingle" -> ((s, dir) => {
       import graft.operators.MatchText
-      val root = routerRoots.computeIfAbsent(s"q205#$dir", _ => {
+      val root = Memo(s, s"q205#$dir") {
         val rt = graft.ArtifactStore.scratchDir("q205")
           .toFile.getAbsolutePath
         val r0 = new graft.StatementRouter(s, rt)
@@ -945,8 +942,8 @@ object QueriesRound4 {
         r0.execute("""CREATE ANALYZER q205shingle (
             TOKENIZER standard, TOKEN_FILTERS (lowercase, shingle))""")
         rt
-      })
-      require(root.nonEmpty) // DDL ran once per JVM; registry is global
+      }
+      require(root.nonEmpty) // DDL ran once per session; registry is global
       // head-bounded text and a quarter of the corpus: gram/shingle
       // expansion multiplies token count and higher-order functions run
       // interpreted, so the catalog entry bounds per-doc and corpus cost
@@ -979,7 +976,7 @@ object QueriesRound4 {
     "q206_analyze_stats" -> ((s, dir) => {
       graft.functions.GraftFunctions.registerAll(s)
       graft.Tables.registerAll(s, dir)
-      routerRoots.computeIfAbsent(s"q206#$dir", _ => {
+      Memo(s, s"q206#$dir") {
         val rt = graft.ArtifactStore.scratchDir("q206")
           .toFile.getAbsolutePath
         val r0 = new graft.StatementRouter(s, rt)
@@ -991,7 +988,7 @@ object QueriesRound4 {
           FROM customer""")
         r0.execute("ANALYZE")
         rt
-      })
+      }
       graft.sources.PgCatalog.registerAll(s)
       val n = "(SELECT count(*) FROM customer)"
       val dv = "(SELECT count(DISTINCT CASE WHEN c_custkey % 10 = 0 " +

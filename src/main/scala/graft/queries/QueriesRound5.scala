@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.Tables
+import graft.{Memo, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -25,8 +25,6 @@ import org.apache.spark.sql.functions._
 object QueriesRound5 {
   private def T(s: SparkSession, dir: String, n: String) = Tables.load(s, dir, n)
 
-  private val routerRoots =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   /** Deterministic 64-dim query vector, literal in both the Spark SQL and
     * the DuckDB oracle (values in [-1, 1], no float32 surprises). */
@@ -54,7 +52,7 @@ object QueriesRound5 {
     "q211_js_udf_interp" -> ((s, dir) => {
       graft.functions.GraftFunctions.registerAll(s)
       graft.Tables.registerAll(s, dir)
-      val rt = routerRoots.computeIfAbsent(s"q211#$dir", _ =>
+      val rt = Memo(s, s"q211#$dir")(
         graft.ArtifactStore.scratchDir("q211")
           .toFile.getAbsolutePath)
       val r = new graft.StatementRouter(s, rt)
@@ -183,7 +181,7 @@ object QueriesRound5 {
     "q210_knn_stored" -> ((s, dir) => {
       graft.functions.GraftFunctions.registerAll(s)
       graft.Tables.registerAll(s, dir)
-      val root = routerRoots.computeIfAbsent(s"q210#$dir", _ => {
+      val root = Memo(s, s"q210#$dir") {
         val rt = graft.ArtifactStore.scratchDir("q210")
           .toFile.getAbsolutePath
         val r0 = new graft.StatementRouter(s, rt)
@@ -195,7 +193,7 @@ object QueriesRound5 {
         r0.execute("INSERT INTO vstore (vec_id, embedding) " +
           "SELECT vec_id, embedding FROM embeddings")
         rt
-      })
+      }
       val r = new graft.StatementRouter(s, root)
       r.execute(knnSelect.format("vstore"))
     })

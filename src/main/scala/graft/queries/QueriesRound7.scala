@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.Memo
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -32,9 +33,6 @@ import org.apache.spark.sql.functions._
   */
 object QueriesRound7 {
 
-  private val routerRoots =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** Same deterministic 64-dim literal as q209/q210. */
   private val vecLit: String =
     (0 until 64).map(i => ((i % 7) - 3) / 3.0)
@@ -44,7 +42,7 @@ object QueriesRound7 {
                      table: String, nprobe: Int): graft.StatementRouter = {
     graft.functions.GraftFunctions.registerAll(s)
     graft.Tables.registerAll(s, dir)
-    val root = routerRoots.computeIfAbsent(s"$key#$dir", _ => {
+    val root = Memo(s, s"$key#$dir") {
       val rt = graft.ArtifactStore.scratchDir(s"$key")
         .toFile.getAbsolutePath
       val r0 = new graft.StatementRouter(s, rt)
@@ -56,7 +54,7 @@ object QueriesRound7 {
       r0.execute(s"INSERT INTO $table (vec_id, embedding) " +
         "SELECT vec_id, embedding FROM embeddings")
       rt
-    })
+    }
     new graft.StatementRouter(s, root)
   }
 
@@ -80,7 +78,7 @@ object QueriesRound7 {
     // each truth pair annotated with the operator's aggregate recall
     // floor — the O(n²) truth materialization is this entry's cost by
     // design, shared with q67/q135 through QueriesPipeline.TruthMemo's
-    // per-JVM parquet memo.
+    // per-session parquet memo.
     "q217_embedding_neardup_pairs" -> ((s, dir) => {
       import org.apache.spark.sql.expressions.Window
       val emb = graft.Tables.load(s, dir, "embeddings")
@@ -129,7 +127,7 @@ object QueriesRound7 {
     "q219_fdw_jdbc" -> ((s, dir) => {
       graft.functions.GraftFunctions.registerAll(s)
       graft.Tables.registerAll(s, dir)
-      val root = routerRoots.computeIfAbsent(s"q219#$dir", _ => {
+      val root = Memo(s, s"q219#$dir") {
         val rt = graft.ArtifactStore.scratchDir("q219")
           .toFile.getAbsolutePath
         // keep derby.log out of the working directory
@@ -145,7 +143,7 @@ object QueriesRound7 {
           "(n_nationkey BIGINT, n_name TEXT, n_regionkey BIGINT) " +
           "SERVER derby_srv OPTIONS (table_name 'NATION_REMOTE')")
         rt
-      })
+      }
       val r = new graft.StatementRouter(s, root)
       r.execute(
         """SELECT r.r_name, count(*) AS nations,
@@ -168,7 +166,7 @@ object QueriesRound7 {
     "q220_analyze_mcv_sampled" -> ((s, dir) => {
       graft.functions.GraftFunctions.registerAll(s)
       graft.Tables.registerAll(s, dir)
-      routerRoots.computeIfAbsent(s"q220#$dir", _ => {
+      Memo(s, s"q220#$dir") {
         val rt = graft.ArtifactStore.scratchDir("q220")
           .toFile.getAbsolutePath
         val r0 = new graft.StatementRouter(s, rt)
@@ -181,7 +179,7 @@ object QueriesRound7 {
         try r0.execute("ANALYZE")
         finally s.conf.unset("graft.analyze.mcv_sample_cap")
         rt
-      })
+      }
       graft.sources.PgCatalog.registerAll(s)
       s.sql("""
         SELECT attname,

@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.Memo
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -29,31 +30,16 @@ import org.apache.spark.sql.functions._
   */
 object QueriesRound9 {
 
-  private val routerRoots =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** Same deterministic 64-dim literal as q209/q210/q215. */
   private val vecLit: String =
     (0 until 64).map(i => ((i % 7) - 3) / 3.0)
       .map(v => f"$v%.6f").mkString("[", ", ", "]")
 
-  /** q227's trained codebooks + checkpointed codes, memoized per fixture
-    * dir (the TruthMemo pattern): bench runs each entry twice per JVM,
-    * and PQ training/encoding is deterministic, so the second rep times
-    * the SEARCH, not a redundant rebuild. */
-  private val pqMemo = new java.util.concurrent.ConcurrentHashMap[
-    String, (Array[Array[Array[Float]]], DataFrame)]()
-
-  /** q232's residual-IVFADC fixtures (centroids, residual codebooks,
-    * checkpointed residual codes) — same TruthMemo discipline as q227. */
-  private val resMemo = new java.util.concurrent.ConcurrentHashMap[
-    String, (DataFrame, Array[Array[Array[Float]]], DataFrame)]()
-
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q226_analyze_histogram" -> ((s, dir) => {
       graft.functions.GraftFunctions.registerAll(s)
       graft.Tables.registerAll(s, dir)
-      routerRoots.computeIfAbsent(s"q226#$dir", _ => {
+      Memo(s, s"q226#$dir") {
         val rt = graft.ArtifactStore.scratchDir("q226")
           .toFile.getAbsolutePath
         val r0 = new graft.StatementRouter(s, rt)
@@ -64,7 +50,7 @@ object QueriesRound9 {
           FROM customer""")
         r0.execute("ANALYZE")
         rt
-      })
+      }
       graft.sources.PgCatalog.registerAll(s)
       // rank-gate each stored decile bound against the raw parquet column
       // (exact, independent of the sketch): a bound that drifted from its
@@ -107,10 +93,12 @@ object QueriesRound9 {
       // 8 deterministic queries drawn like every other knn fixture
       val q = emb.orderBy(xxhash64(col("vec_id")), col("vec_id")).limit(8)
         .select(col("vec_id"), col("embedding")).localCheckpoint()
-      val (cb, codes) = pqMemo.computeIfAbsent(s"q227#$dir", _ => {
+      // deterministic training/encoding, built once per (session, dir):
+      // bench rep 2 times the SEARCH, not a redundant rebuild
+      val (cb, codes) = Memo(s, s"q227#$dir") {
         val cb0 = graft.operators.Similarity.pqTrain(emb, m = 16, ksub = 16)
         (cb0, graft.operators.Similarity.pqEncode(emb, cb0).localCheckpoint())
-      })
+      }
       val approx = graft.operators.Similarity
         .pqKnn(codes, cb, emb, q, k = 10, rerank = 8)
       // exact L2 truth (same metric as the ADC/re-rank path)
@@ -147,7 +135,7 @@ object QueriesRound9 {
     "q228_knn_pq_filtered_stored" -> ((s, dir) => {
       graft.functions.GraftFunctions.registerAll(s)
       graft.Tables.registerAll(s, dir)
-      val root = routerRoots.computeIfAbsent(s"q228#$dir", _ => {
+      val root = Memo(s, s"q228#$dir") {
         val rt = graft.ArtifactStore.scratchDir("q228")
           .toFile.getAbsolutePath
         val r0 = new graft.StatementRouter(s, rt)
@@ -161,7 +149,7 @@ object QueriesRound9 {
         r0.execute("INSERT INTO vstorepq (vec_id, embedding) " +
           "SELECT vec_id, embedding FROM embeddings")
         rt
-      })
+      }
       val r = new graft.StatementRouter(s, root)
       graft.StatementRouter.lastKnnRoute.set("")
       val out = r.execute(
@@ -202,7 +190,7 @@ object QueriesRound9 {
       import graft.operators.MatchText
       graft.functions.GraftFunctions.registerAll(s)
       graft.Tables.registerAll(s, dir)
-      routerRoots.computeIfAbsent(s"q235#$dir", _ => {
+      Memo(s, s"q235#$dir") {
         val rt = graft.ArtifactStore.scratchDir("q235")
           .toFile.getAbsolutePath
         val r0 = new graft.StatementRouter(s, rt)
@@ -219,7 +207,7 @@ object QueriesRound9 {
           |    (ignored_scripts = ['hiragana', 'katakana', 'hangul'])))"""
           .stripMargin)
         rt
-      })
+      }
       val c = graft.Tables.load(s, dir, "customer")
         .select(col("c_custkey").as("k"))
       def pick(words: Seq[String], m: Int) =
@@ -261,7 +249,7 @@ object QueriesRound9 {
     "q234_knn_filtered_fixed_probe" -> ((s, dir) => {
       graft.functions.GraftFunctions.registerAll(s)
       graft.Tables.registerAll(s, dir)
-      val root = routerRoots.computeIfAbsent(s"q234#$dir", _ => {
+      val root = Memo(s, s"q234#$dir") {
         val rt = graft.ArtifactStore.scratchDir("q234")
           .toFile.getAbsolutePath
         val r0 = new graft.StatementRouter(s, rt)
@@ -273,7 +261,7 @@ object QueriesRound9 {
         r0.execute("INSERT INTO vstorefix (vec_id, embedding) " +
           "SELECT vec_id, embedding FROM embeddings")
         rt
-      })
+      }
       val r = new graft.StatementRouter(s, root)
       graft.StatementRouter.lastKnnRoute.set("")
       graft.StatementRouter.lastKnnProbe.set("")
@@ -302,7 +290,7 @@ object QueriesRound9 {
     "q233_knn_pq_residual_stored" -> ((s, dir) => {
       graft.functions.GraftFunctions.registerAll(s)
       graft.Tables.registerAll(s, dir)
-      val root = routerRoots.computeIfAbsent(s"q233#$dir", _ => {
+      val root = Memo(s, s"q233#$dir") {
         val rt = graft.ArtifactStore.scratchDir("q233")
           .toFile.getAbsolutePath
         val r0 = new graft.StatementRouter(s, rt)
@@ -316,7 +304,7 @@ object QueriesRound9 {
         r0.execute("INSERT INTO vstorepqr (vec_id, embedding) " +
           "SELECT vec_id, embedding FROM embeddings")
         rt
-      })
+      }
       val r = new graft.StatementRouter(s, root)
       graft.StatementRouter.lastKnnRoute.set("")
       val out = r.execute(
@@ -347,7 +335,8 @@ object QueriesRound9 {
         .select(col("vec_id"), col("embedding"))
       val q = emb.orderBy(xxhash64(col("vec_id")), col("vec_id")).limit(8)
         .select(col("vec_id"), col("embedding")).localCheckpoint()
-      val (cents, cb, codes) = resMemo.computeIfAbsent(s"q232#$dir", _ => {
+      // residual-IVFADC fixtures, built once per (session, dir) like q227
+      val (cents, cb, codes) = Memo(s, s"q232#$dir") {
         val (bucketed, c0) = graft.operators.Similarity
           .kmeansBucketize(emb, numCentroids = 16, iters = 2)
         val cb0 = graft.operators.Similarity
@@ -355,7 +344,7 @@ object QueriesRound9 {
         val codes0 = graft.operators.Similarity
           .ivfPqIndexResidual(bucketed, c0, cb0).localCheckpoint()
         (c0.localCheckpoint(), cb0, codes0)
-      })
+      }
       val approx = graft.operators.Similarity.ivfPqKnnStoredResidual(
         codes, cents, cb, emb, q, k = 10, nprobe = 8, rerank = 8)
       // exact truth: same vector_similarity ordering as the re-rank

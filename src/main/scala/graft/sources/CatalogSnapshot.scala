@@ -22,34 +22,18 @@ private[graft] object CatalogSnapshot {
   def tables(spark: SparkSession): Seq[org.apache.spark.sql.catalog.Table] =
     spark.catalog.listTables().collect().toSeq
 
-  private final case class FnEntry(
-      fingerprint: (Int, Int), fns: Seq[org.apache.spark.sql.catalog.Function])
-
-  private val fnMemo =
-    new java.util.concurrent.ConcurrentHashMap[SparkSession, FnEntry]()
-
-  /** Content-change counter per session: the name-set fingerprint alone
-    * misses a CREATE OR REPLACE of an EXISTING signature (same names, new
-    * implementation — ADVICE r15), so the router's create/drop-function
-    * paths bump this and the memo key carries it. */
-  private val bumps =
-    new java.util.concurrent.ConcurrentHashMap[SparkSession, Integer]()
-  private[graft] def bump(spark: SparkSession): Unit =
-    bumps.merge(spark, Integer.valueOf(1), (a, b) => Integer.valueOf(a + b))
+  /** Key prefix of the memoized function lists: CREATE OR REPLACE of an
+    * EXISTING signature keeps the name set (same names, new implementation
+    * — ADVICE r15), so the router's create/drop-function paths invalidate
+    * this prefix. */
+  private[graft] val functionsKey = "catalog.functions#"
 
   /** The resolved function list, rebuilt only when the session's function
     * registry changes (order-independent name-set fingerprint — CREATE
-    * FUNCTION / DROP FUNCTION both alter it — plus the [[bump]] counter
-    * for same-name replacements). */
+    * FUNCTION / DROP FUNCTION both alter it) or [[functionsKey]] is
+    * invalidated. */
   def functions(spark: SparkSession): Seq[org.apache.spark.sql.catalog.Function] = {
-    val fp = (spark.sessionState.functionRegistry.listFunction().toSet.hashCode(),
-      bumps.getOrDefault(spark, Integer.valueOf(0)).intValue())
-    val cached = fnMemo.get(spark)
-    if (cached != null && cached.fingerprint == fp) cached.fns
-    else {
-      val fns = spark.catalog.listFunctions().collect().toSeq
-      fnMemo.put(spark, FnEntry(fp, fns))
-      fns
-    }
+    val fp = spark.sessionState.functionRegistry.listFunction().toSet.hashCode()
+    graft.Memo(spark, s"$functionsKey$fp")(spark.catalog.listFunctions().collect().toSeq)
   }
 }

@@ -65,24 +65,20 @@ object Fdw {
   def listUserMappings: Seq[((String, String), Map[String, String])] =
     userMappings.toSeq.sortBy(_._1)
 
-  /** Resolved-relation cache: Spark's JDBC source opens a live connection
-    * to resolve the remote schema when `load()` builds the DataFrame, so
-    * re-resolving per statement would tax every statement touching a
-    * foreign table with a round-trip. Keyed by the EFFECTIVE connection
-    * config (post-user-mapping server + remote table + session), so any
-    * FDW DDL change — ALTER SERVER options, a remapped user, a re-pointed
-    * foreign table — keys differently and resolves fresh; stale entries
-    * are simply never hit again. The cached DataFrame stays lazy: every
-    * action re-reads the remote data, only the schema resolution is
-    * reused. Failures are NOT cached — an unreachable server retries on
-    * its next reference. */
-  private val scanCache =
-    scala.collection.concurrent.TrieMap.empty[(Int, Server, String), DataFrame]
-  /** JDBC schema resolutions performed (cache misses) — spec observability. */
+  /** JDBC schema resolutions performed (memo misses) — spec observability. */
   private[graft] val resolveCount = new java.util.concurrent.atomic.AtomicLong(0)
 
   /** Scan a registered foreign table by local name (applies the server's
-    * user mapping for the session user if one exists). */
+    * user mapping for the session user if one exists).
+    *
+    * Spark's JDBC source opens a live connection to resolve the remote
+    * schema when `load()` builds the DataFrame, so the resolved relation
+    * is memoized per session, keyed by the EFFECTIVE connection config
+    * (post-user-mapping server + remote table): any FDW DDL change — ALTER
+    * SERVER options, a remapped user, a re-pointed foreign table — keys
+    * differently and resolves fresh. The DataFrame stays lazy: every
+    * action re-reads the remote data. Failures are NOT cached — an
+    * unreachable server retries on its next reference. */
   def scan(spark: SparkSession, name: String, user: String = ""): DataFrame = {
     val ft = foreignTables.getOrElse(name, sys.error(s"no such foreign table: $name"))
     val base = servers(ft.server)
@@ -90,11 +86,10 @@ object Fdw {
       .map(m => base.copy(user = m.getOrElse("user", base.user),
         password = m.getOrElse("password", base.password)))
       .getOrElse(base)
-    scanCache.getOrElseUpdate(
-      (System.identityHashCode(spark), mapped, ft.remoteTable), {
-        resolveCount.incrementAndGet()
-        foreignTable(spark, mapped, ft.remoteTable)
-      })
+    graft.Memo(spark, s"fdw#$mapped#${ft.remoteTable}") {
+      resolveCount.incrementAndGet()
+      foreignTable(spark, mapped, ft.remoteTable)
+    }
   }
 
   /** `SELECT ... FROM foreign_table` — whole-table or pushdown-filtered scan. */
@@ -107,19 +102,4 @@ object Fdw {
       else r
     server.options.foldLeft(withAuth) { case (acc, (k, v)) => acc.option(k, v) }.load()
   }
-
-  /** Partitioned parallel scan on a numeric column — the scale path for
-    * large foreign tables (N concurrent range-bounded connections). */
-  def foreignTablePartitioned(spark: SparkSession, server: Server, table: String,
-                              partitionCol: String, lower: Long, upper: Long,
-                              numPartitions: Int): DataFrame =
-    spark.read.format("jdbc")
-      .option("url", server.url)
-      .option("dbtable", table)
-      .option("user", server.user).option("password", server.password)
-      .option("partitionColumn", partitionCol)
-      .option("lowerBound", lower.toString)
-      .option("upperBound", upper.toString)
-      .option("numPartitions", numPartitions.toString)
-      .load()
 }

@@ -247,12 +247,6 @@ object InformationSchema {
       "form_of_use")
   }
 
-  /** `information_schema.constraint_column_usage` — columns each PRIMARY
-    * KEY constraint touches (reference
-    * `InformationConstraintColumnUsage.java`). */
-  def constraintColumnUsage(spark: SparkSession): DataFrame =
-    constraintColumnUsageFrom(spark, CatalogSnapshot.tables(spark))
-
   private def constraintColumnUsageFrom(spark: SparkSession,
       tabs: Seq[org.apache.spark.sql.catalog.Table]): DataFrame = {
     import spark.implicits._
@@ -425,23 +419,16 @@ object InformationSchema {
       "foreign_server_name", "option_name", "option_value")
   }
 
-  /** Per-session memo for the fixed-content relations (same discipline as
-    * PgCatalog.staticMemo: the DataFrame build costs an encoder pass per
-    * call and the rows never change within a session). */
-  private val staticMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), DataFrame]()
-  private def memoStatic(spark: SparkSession, name: String)(
-      build: => DataFrame): DataFrame =
-    staticMemo.computeIfAbsent((spark, name), _ => build)
-
   /** Register all views under information_schema-style names. */
   def register(spark: SparkSession): Unit = {
     // ONE catalog snapshot + schema cache shared across the builders (was
     // 7 listTables().collect() + a listColumns Dataset per table per call)
     val tabs = CatalogSnapshot.tables(spark)
     val fieldsOf = fieldsLookup(spark)
+    // fixed-content relations are memoized per session (PgCatalog's
+    // discipline: an encoder pass per build, rows constant in a session)
     def static(name: String)(build: => DataFrame): Unit =
-      memoStatic(spark, name)(build).createOrReplaceTempView(name)
+      graft.Memo(spark, s"catalog#$name")(build).createOrReplaceTempView(name)
     tablesFrom(spark, tabs).createOrReplaceTempView("information_schema_tables")
     columnsFrom(spark, tabs, fieldsOf).createOrReplaceTempView("information_schema_columns")
     schemata(spark).createOrReplaceTempView("information_schema_schemata")

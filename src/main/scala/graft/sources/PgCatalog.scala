@@ -498,26 +498,19 @@ object PgCatalog {
     }.toDF("word", "catcode", "catdesc")
   }
 
-  /** Per-session memo for relations whose content never changes within a
-    * session (fixed rows or empty-by-design): building their DataFrames
-    * costs an encoder/LocalRelation pass each, and registerAll used to
-    * repay it on every call. Dynamic relations (class/attribute/tables/
-    * views/index/constraint/stats/proc/settings/roles/cursors) stay
-    * rebuilt per call — the "snapshot views, re-register to refresh"
-    * contract PgCatalogSpec pins. */
-  private val staticMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), DataFrame]()
-  private def memoStatic(spark: SparkSession, name: String)(
-      build: => DataFrame): DataFrame =
-    staticMemo.computeIfAbsent((spark, name), _ => build)
-
   def registerAll(spark: SparkSession): Unit = {
     // ONE catalog snapshot + schema cache shared by every dynamic builder
     // (was 7 listTables().collect() + 3 per-table analysis loops per call)
     val tabs = CatalogSnapshot.tables(spark)
     val schemaOf = schemaLookup(spark)
+    // relations whose content never changes within a session (fixed rows
+    // or empty-by-design) are memoized per session: each build costs an
+    // encoder/LocalRelation pass. Dynamic relations (class/attribute/
+    // tables/views/index/constraint/stats/proc/settings/roles/cursors)
+    // stay rebuilt per call — the "snapshot views, re-register to refresh"
+    // contract PgCatalogSpec pins.
     def static(name: String)(build: => DataFrame): Unit =
-      memoStatic(spark, name)(build).createOrReplaceTempView(name)
+      graft.Memo(spark, s"catalog#$name")(build).createOrReplaceTempView(name)
     static("pg_type")(pgType(spark))
     static("pg_namespace")(pgNamespace(spark))
     pgClassFrom(spark, tabs).createOrReplaceTempView("pg_class")

@@ -537,25 +537,11 @@ object VersionedTable {
             // per registerViews per statement otherwise — is reusable.
             // Partitioned/bucketed reads stay per-call: their stored specs
             // are table-level and can evolve under an old version.
-            plainReadMemo.computeIfAbsent((spark, dataDir),
-              _ => spark.read.parquet(dataDir))
+            // The immutability holds for commits, not for whole-directory
+            // surgery: DROP TABLE, ALTER RENAME, ALTER CLUSTER SWAP TABLE
+            // and vacuum invalidate every memo key naming the table path.
+            graft.Memo(spark, s"read#$dataDir")(spark.read.parquet(dataDir))
         }
-    }
-  }
-
-  private val plainReadMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), DataFrame]()
-
-  /** Drop memoized reads under `path` — REQUIRED before an operation that
-    * moves or deletes table directories out from under their committed
-    * version paths (DROP TABLE, ALTER RENAME, ALTER CLUSTER SWAP TABLE,
-    * vacuum): the copy-on-write immutability the memo relies on holds for
-    * commits, not for whole-directory surgery. */
-  def invalidateReadMemo(path: String): Unit = {
-    val it = plainReadMemo.keySet.iterator()
-    while (it.hasNext) {
-      val k = it.next()
-      if (k._2.startsWith(path)) it.remove()
     }
   }
 
@@ -568,7 +554,7 @@ object VersionedTable {
     * (call before deleting the table root — a later CREATE TABLE at the
     * same path would otherwise resolve a stale entry). */
   def dropCatalogEntries(spark: SparkSession, path: String): Unit = {
-    invalidateReadMemo(path)
+    graft.Memo.invalidate(_.contains(path))
     versions(spark, path).foreach { v =>
       spark.sql(s"DROP TABLE IF EXISTS ${catalogName(path, v)}")
     }
@@ -580,7 +566,7 @@ object VersionedTable {
     * version dirs by carried partition entries — a version data dir is
     * only deleted when no kept manifest references any dir under it. */
   def vacuum(spark: SparkSession, path: String, keep: Int = 2): Unit = {
-    invalidateReadMemo(path)
+    graft.Memo.invalidate(_.contains(path))
     val f = fs(spark)
     val vs = versions(spark, path)
     val keepVs = vs.takeRight(math.max(keep, 1))

@@ -54,16 +54,6 @@ object EventsStream {
         sum(col("value")).as("sum_value"))
       .select(col("window.start").as("bin"), col("event_type"), col("n"), col("sum_value"))
 
-  /** Sliding-window per-user activity (overlapping windows). */
-  def slidingUserActivity(events: DataFrame, window: String = "30 minutes",
-                          slide: String = "10 minutes",
-                          watermark: String = "30 minutes"): DataFrame =
-    events
-      .withWatermark("ts", watermark)
-      .groupBy(org.apache.spark.sql.functions.window(col("ts"), window, slide), col("user_id"))
-      .agg(count(lit(1)).as("n_events"))
-      .select(col("window.start").as("win_start"), col("user_id"), col("n_events"))
-
   /** Streaming exactly-once dedup by key via `flatMapGroupsWithState` —
     * the custom-state API for semantics the built-in operators can't
     * express. Emits each key's row the first time it is seen; state is one

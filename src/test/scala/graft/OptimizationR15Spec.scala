@@ -43,6 +43,23 @@ class OptimizationR15Spec extends SparkTestBase {
     Tables.registerAll(spark, sfDir)
   }
 
+  test("registerAllWithStats: a relative dir keeps its catalog tables") {
+    val rel = java.nio.file.Paths.get("").toAbsolutePath
+      .relativize(java.nio.file.Paths.get(sfDir)).toString
+    assert(!rel.startsWith("/"))
+    def createTimes: Seq[Long] = Tables.names.filterNot(_ == "events").map(n =>
+      spark.sessionState.catalog.getTableMetadata(
+        org.apache.spark.sql.catalyst.TableIdentifier(n)).createTime)
+    Tables.registerAllWithStats(spark, rel)
+    val first = createTimes
+    Tables.registerAllWithStats(spark, rel)
+    assert(createTimes == first,
+      "the location guard must match a relative dir, not drop and re-ANALYZE")
+    Tables.names.filterNot(_ == "events")
+      .foreach(n => spark.sql(s"DROP TABLE IF EXISTS $n"))
+    Tables.registerAll(spark, sfDir)
+  }
+
   test("CatalogSnapshot.functions: memo refreshes when the registry changes") {
     val before = CatalogSnapshot.functions(spark).map(_.name).toSet
     spark.udf.register("opt_r15_probe_fn", (x: Int) => x + 1)

@@ -166,5 +166,11 @@ class OptimizationR16Spec extends SparkTestBase {
     intercept[IllegalArgumentException] {
       graft.queries.QueriesAccess.truthExactPairs(emb, 0.5, "r16spec#fp")
     }
+    // same key and threshold over another fixture dir (same schema):
+    // the leaf scan paths differ, so it must throw too
+    val other = Tables.load(spark, sfDir.replace("sf0.001", "sf0.01"), "embeddings")
+    intercept[IllegalArgumentException] {
+      graft.queries.QueriesAccess.truthExactPairs(other, 0.4, "r16spec#fp")
+    }
   }
 }
