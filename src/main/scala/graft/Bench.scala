@@ -1,74 +1,22 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      // ContextCleaner reaps broadcast/accumulator blocks only after a
-      // driver GC; its periodic GC defaults to 30 MINUTES, which never
-      // fires inside a bench sweep — the 167-query run accumulates every
-      // query's broadcast blocks meanwhile (see cleanupStorage below)
-      .config("spark.cleaner.periodicGC.interval", "15s")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.functions.GraftFunctions.registerAll(spark)
+    val sfDir = Sweep.sfDir
+    val spark = Engine.session(cbo = false)
     // Uncounted warmup: JIT + parquet-reader + codegen class loading would
     // otherwise be charged to whichever query runs first.
-    try SparkEntry.queries.get("q02_tpch_q1")
-      .foreach(_(spark, sfDir).write.format("noop").mode("overwrite").save())
-    catch { case _: Throwable => () }
+    Sweep.time("bench", "warmup")(SparkEntry.queries("q02_tpch_q1")(spark, sfDir))
 
-    // Storage hygiene between queries: a 167-query × 2-rep sweep in one JVM
-    // otherwise accumulates every `.persist()` (fulltext index bundles) and
-    // `localCheckpoint` block (minhash/IVF rounds) of every earlier query —
-    // storage fills, old-gen GC degrades, and unrelated queries record
-    // 100×+ wall times (the r3 q77=219s pollution). Clearing the cache
-    // manager + unpersisting all persistent RDDs after each query keeps the
-    // block manager flat for the whole sweep.
-    def cleanupStorage(): Unit = {
-      try spark.sharedState.cacheManager.clearCache()
-      catch { case _: Throwable => () }
-      try spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
-      catch { case _: Throwable => () }
-      // surface dead broadcast references to ContextCleaner NOW: without
-      // this, broadcast blocks from all prior queries pile up until a
-      // natural full GC, and the queries unlucky enough to run during the
-      // eventual collection record 10-40× wall times (the r4 first-rerun
-      // q168=24s / q16=20s window — both fast in isolation)
-      System.gc()
-    }
-
-    // noop sink: executes the complete plan (projection included) without
-    // write cost — count() would let Catalyst prune most of the query.
-    // min of 2 runs per query: the driver gates regressions at 2× vs the
-    // recorded baseline, so per-run jitter must not leak into the numbers.
-    // Index-building queries (q103/q106/…) memoize construction per
-    // (dir, key) in MatchText.IndexCache, so rep 2 times the search — the
-    // reference likewise separates indexing cost from query cost.
+    // min of 2 runs per query, storage hygiene after each: the driver
+    // gates regressions at 2× vs the recorded baseline, so per-run jitter
+    // must not leak into the numbers. Index-building queries (q103/q106/…)
+    // memoize construction per (dir, key) in MatchText.IndexCache, so rep 2
+    // times the search — the reference likewise separates indexing cost
+    // from query cost.
     val results = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
-      def once(): Double = {
-        val t0 = System.nanoTime()
-        try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-        catch { case e: Throwable => System.err.println(s"[bench] $name failed: $e") }
-        (System.nanoTime() - t0) / 1e9
-      }
-      val r = name -> math.min(once(), once())
-      graft.operators.MatchText.IndexCache.clear()
-      cleanupStorage()
-      r
+      name -> Sweep.reps(spark, "bench", name, 2)(fn(spark, sfDir)).min
     }.toMap
-    val qs = results.map { case (k, v) => s"\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
-    val total = if (results.nonEmpty) results.values.sum else 0.0
-    val json = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"sf":"$sfDir"}"""
+    val json = Sweep.json("total", results, sfDir)
     // backstop for stdout-prefix mangling: the same line on disk
     try java.nio.file.Files.writeString(java.nio.file.Paths.get("bench_out.json"), json)
     catch { case _: Throwable => () }

@@ -1,32 +1,18 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
-/** Times a single catalog entry in a fresh JVM with the exact
-  * [[Bench]] session settings — the adjudication tool for "is this row
-  * slow or is the box noisy": `sbt "runMain graft.BenchOne q247_js_closures 4"`.
+/** Times a single catalog entry in a fresh JVM with the [[Bench]] session
+  * — the adjudication tool for "is this row slow or is the box noisy":
+  * `sbt "runMain graft.BenchOne q247_js_closures 4"`.
   * Prints one line per rep; NOT part of the driver contract. */
 object BenchOne {
   def main(args: Array[String]): Unit = {
     val name = args(0)
     val reps = if (args.length > 1) args(1).toInt else 3
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.functions.GraftFunctions.registerAll(spark)
+    val spark = Engine.session(cbo = false)
     val fn = SparkEntry.queries(name)
     (1 to reps).foreach { r =>
-      val t0 = System.nanoTime()
-      fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-      println(f"[benchone] $name rep$r: ${(System.nanoTime() - t0) / 1e9}%.2f s")
+      val s = Sweep.time("benchone", name)(fn(spark, Sweep.sfDir))
+      println(f"[benchone] $name rep$r: $s%.2f s")
     }
     spark.stop()
   }

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Benches a NAMED SUBSET of the catalog in one session — the
   * same-window tail-sample companion to the round close (VERDICT r13
@@ -17,52 +16,17 @@ object BenchSample {
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "usage: BenchSample <name,name,...>")
     val want = args(0).split(",").map(_.trim).filter(_.nonEmpty)
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.cleaner.periodicGC.interval", "15s")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.functions.GraftFunctions.registerAll(spark)
-    try SparkEntry.queries.get("q02_tpch_q1")
-      .foreach(_(spark, sfDir).write.format("noop").mode("overwrite").save())
-    catch { case _: Throwable => () }
-    def cleanupStorage(): Unit = {
-      try spark.sharedState.cacheManager.clearCache()
-      catch { case _: Throwable => () }
-      try spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
-      catch { case _: Throwable => () }
-      System.gc()
-    }
+    val sfDir = Sweep.sfDir
+    val spark = Engine.session(cbo = false)
+    Sweep.time("benchsample", "warmup")(SparkEntry.queries("q02_tpch_q1")(spark, sfDir))
     val missing = want.filterNot(SparkEntry.queries.contains)
     if (missing.nonEmpty)
       System.err.println(s"[benchsample] skipping unknown: " +
         missing.mkString(","))
     val results = want.filter(SparkEntry.queries.contains).map { name =>
-      val fn = SparkEntry.queries(name)
-      def once(): Double = {
-        val t0 = System.nanoTime()
-        try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-        catch { case e: Throwable =>
-          System.err.println(s"[benchsample] $name failed: $e") }
-        (System.nanoTime() - t0) / 1e9
-      }
-      val r = name -> math.min(once(), once())
-      graft.operators.MatchText.IndexCache.clear()
-      cleanupStorage()
-      r
+      name -> Sweep.reps(spark, "benchsample", name, 2)(SparkEntry.queries(name)(spark, sfDir)).min
     }.toMap
-    val qs = results.map { case (k, v) => s"\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
-    val total = if (results.nonEmpty) results.values.sum else 0.0
-    val json = s"""{"metric":"tail_sample","value":$total,"unit":"sec","queries":$qs,"sf":"$sfDir"}"""
+    val json = Sweep.json("tail_sample", results, sfDir)
     spark.stop()
     println(json)
   }

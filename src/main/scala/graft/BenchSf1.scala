@@ -44,165 +44,154 @@ object BenchSf1 {
     "q65_knn_bruteforce", "q221_embedding_neardup",
     "q135_embedding_neardup_lsh", "q207_gopher_rules", "q208_incremental_dedup")
 
-  /** Wave 2 (round-7 verdict ask #9): the ROUTED index family — stored
-    * IVF build+probe, BM25 single/fielded index routes, delta
-    * maintenance, the filtered stored route. Index BUILD time dominates
-    * these rows, which is exactly where superlinear surprises would
-    * hide. Selected with SPARK_GRAFT_SF1_WAVE=2 → BENCH_sf1_wave2.json.
-    * Round 9 adds q224 (exact repeated-substring dedup — the k-gram
-    * shuffle is the superlinear-risk path) and re-runs the wave to prove
-    * the filtered-knn single-materialization fix at 10× data. */
-  private val wave2 = Seq(
-    "q210_knn_stored", "q215_knn_filtered_stored", "q216_knn_subquery_vector",
-    "q187_indexed_score", "q195_fielded_index_score", "q202_ivf_delta",
-    "q224_substring_dedup", "q227_knn_pq_adc", "q228_knn_pq_filtered_stored")
-
-  /** Wave 3 (round-9 continuation): the new data-selection / residual-PQ
-    * family. q231's CATALOG entry pins K=16 centroids for the oracle —
-    * at 10× data that is deliberately the WRONG scale configuration
-    * (pairs grow 100×), so the wave times the operator at the paper's
-    * K ≈ √N instead (`q231_semdedup_scaledK` below): expected pair work
-    * is N^1.5 — a ~31× pair ratio at 10× data BY DESIGN, with the
-    * assignment/scan stages linear. Selected with
-    * SPARK_GRAFT_SF1_WAVE=3 → BENCH_sf1_wave3.json. */
-  private val wave3 = Seq(
-    "q229_lm_perplexity", "q230_dsir_selection", "q231_semdedup_scaledK",
-    "q232_knn_pq_residual", "q233_knn_pq_residual_stored",
-    "q234_knn_filtered_fixed_probe", "q235_cjk_bigram_flags")
-
-  /** Wave 4 (round 10): q226 was the only round-9 entry with no wave
-    * row (r9 verdict ask #8) — its percentile_approx sketch-merge is
-    * the path that could degrade at 10× rows — plus the round-10
-    * additions: the map-only mojibake repair, the one-shuffle keepBest
-    * (3N input rows), the Gumbel-noise top-m, and the declared-recall
-    * index whose COLD rep times build + calibration ladder. Selected
-    * with SPARK_GRAFT_SF1_WAVE=4 → BENCH_sf1_wave4.json. */
-  private val wave4 = Seq(
-    "q226_analyze_histogram", "q236_repair_mojibake",
-    "q237_dedup_keepbest", "q238_dsir_gumbel", "q239_knn_auto_nprobe")
-
-  /** Wave 5 (round-10 late tail): the blocklist scan, the LM-tier
-    * window, the Bloom build+membership pass, and the normalization
-    * expression at 10× rows. Selected with SPARK_GRAFT_SF1_WAVE=5 →
-    * BENCH_sf1_wave5.json. */
-  private val wave5 = Seq(
-    "q241_blocklist_filter", "q242_perplexity_buckets",
-    "q243_bloom_history_dedup", "q244_unicode_normalize")
-
-  /** Wave 6 (round-11 tail, entries landed after the full wave ran):
-    * the interpreted-JS family with its regex arm and the quality
-    * classifier (driver-bounded training + map-only scoring — the
-    * scoring pass is the 10× path). Selected with
-    * SPARK_GRAFT_SF1_WAVE=6 → BENCH_sf1_wave6.json. */
-  private val wave6 = Seq(
-    "q247_js_closures", "q248_quality_classifier")
-
-  /** Wave 7 (round-11 continuation): the JS ES-tail entry (classes /
-    * generators / let-capture / Date — all interpreted, so per-row cost
-    * dominates and the path must stay embarrassingly parallel), plus a
-    * q247 re-run because the richer evaluator (more match arms, scope
-    * chains with per-iteration copies) changed the interpreted hot
-    * path's constant factor. Selected with SPARK_GRAFT_SF1_WAVE=7 →
-    * BENCH_sf1_wave7.json. */
-  private val wave7 = Seq(
-    "q249_js_es_tail", "q247_js_closures")
-
-  /** Wave 8 (round 12): every entry whose PLAN the round changed —
-    * q62/q112 gained the no-silent-caps audit fact (one extra tiny
-    * aggregate + 1-row broadcast), q240/q248 write their model artifact
-    * to ArtifactStore (one small parquet write), q245 materializes via
-    * localCheckpoint then releases its broadcast, q250/q251 ride the
-    * reworked fringe expressions (single-parse timetz, trim-or-extend
-    * bit cast). Ratios must stay in their r11 envelopes. Selected with
-    * SPARK_GRAFT_SF1_WAVE=8 → BENCH_sf1_wave8.json. */
-  private val wave8 = Seq(
-    "q62_dedup_minhash", "q112_geo_radius_join", "q240_semdedup_auto",
-    "q245_bloom_bucketed_dedup", "q248_quality_classifier",
-    "q250_lsh_plan", "q251_fringe_types")
-
-  /** Wave 9 (round 14): the round's new/changed-plan entries — the
-    * integer-exact q248 + its probes (map-only folds over documents),
-    * the string/regexp/array/date-trunc golden-arm families (map-only
-    * scalar projections; q269's DP matcher and q271's java-regex paths
-    * are the per-row-cost rows to watch), and q253/q255/q257 whose
-    * interval parse/order paths the round reworked. Selected with
-    * SPARK_GRAFT_SF1_WAVE=9 → BENCH_sf1_wave9.json. */
-  private val wave9 = Seq(
-    "q248_quality_classifier", "q266_token_count_probe",
-    "q267_bucket_sum_probe", "q268_string_pad_trim",
-    "q269_regexp_match_op", "q270_array_set", "q271_regexp_scalars",
-    "q272_date_trunc_tz", "q253_interval_parse", "q255_interval_order",
-    "q257_interval_arith",
-    // post-close continuation entries: the pg table functions, the
-    // COPY round-trip (export+reimport scale linearly with the slice),
-    // the bucketed join (bucketed WRITE dominates — the one-time cost
-    // the strategy amortizes), and the three streaming rows (state
-    // store + scratch-source write at 10× events)
-    "q273_pg_keywords", "q274_pg_expandarray", "q275_copy_roundtrip",
-    "q276_clustered_join", "q277_streaming_tumbling",
-    "q278_streaming_sessions", "q279_streaming_interval_join")
-
-  /** Wave 10 (round 15): the round's changed-plan entries — the
-    * bridge-safety rework (q270 JSON-serialized arrays, q275/q276/q277
-    * integer-cent rows), the new probes (q280 conf-pinned plan fact,
-    * q281 recall audit carrying q66's old exact side), the trimmed q66
-    * (map-only assignment — the row must scale BETTER than its r14
-    * shape), and the regexp rows whose matcher internals were
-    * rebuilt (per-AST memo ids, code-point DP, LRU caches). Selected
-    * with SPARK_GRAFT_SF1_WAVE=10 → BENCH_sf1_wave10.json. */
-  private val wave10 = Seq(
-    "q66_knn_ivf", "q270_array_set", "q275_copy_roundtrip",
-    "q276_clustered_join", "q277_streaming_tumbling",
-    "q280_clustered_plan_probe", "q281_knn_ivf_recall",
-    "q269_regexp_match_op", "q271_regexp_scalars", "q268_string_pad_trim",
-    "q273_pg_keywords", "q177_ddl_alter_view",
-    // the round's conformance tail: per-row array/string/template
-    // scalars — map-only by construction, the wave pins the constant
-    // factor
-    "q282_array_contracts", "q283_pg_to_char")
-
-  /** Wave 11 (optimization round 1): every entry whose code path the
-    * round changed — the registration/metadata memos (catalog snapshot,
-    * resolved-scan reuse, ANALYZE-once), the scale-derived bloom bucket
-    * count (q245 — at sf1 the auto formula still picks 1 build task; at
-    * ≥16M keys it saturates to the old 256), the stream-source memo
-    * (q277-q279), the single-tokenization text passes (q165/q167/q172/
-    * q207), and the build-once IVF/bucketed-table constructions (q185/
-    * q202/q276/q280). Selected with SPARK_GRAFT_SF1_WAVE=11 →
-    * BENCH_sf1_wave11.json. */
-  private val wave11 = Seq(
-    "q245_bloom_bucketed_dedup", "q277_streaming_tumbling",
-    "q278_streaming_sessions", "q279_streaming_interval_join",
-    "q165_repetition", "q167_training_export", "q172_match_phrase_slop",
-    "q207_gopher_rules", "q185_ivf_quantized", "q202_ivf_delta",
-    "q276_clustered_join", "q280_clustered_plan_probe",
-    "q281_knn_ivf_recall", "q246_knn_recall_sample",
-    "q174_pg_catalog", "q226_analyze_histogram", "q110_cbo_join")
-
-  /** Wave 12 (optimization round 2): every entry whose code path THIS
-    * round changed — the pre-shingled minhash/ngram verify (q62/q64,
-    * q93/q208 as minhashDedup consumers), the window-shaped
-    * repeatedGramStats (q224), the in-bucket cosine pair verify on the
-    * hyperplane path (q135 — the IVF path q221/q217 A/B'd both verify
-    * shapes at sf1 and keeps its pre-round join verify, so it is NOT in
-    * this wave), the map-only repetitionStats (q165/q167), the merged
-    * q208 claim write, and the c1-from-c2 LM derivation (q229/q242).
-    * Selected with SPARK_GRAFT_SF1_WAVE=12 → BENCH_sf1_wave12.json. */
-  private val wave12 = Seq(
-    "q62_dedup_minhash", "q64_ngram_jaccard", "q224_substring_dedup",
-    "q135_embedding_neardup_lsh", "q165_repetition",
-    "q167_training_export", "q208_incremental_dedup",
-    "q93_curation_pipeline", "q229_lm_perplexity",
-    "q242_perplexity_buckets")
-
-  /** The CONSOLIDATED wave (r10 verdict ask #7): the ENTIRE catalog at
-    * sf1 in one artifact — the per-wave format proved each round's new
-    * entries sublinear when they landed, but hides whether EARLY entries
-    * still scale after rounds of shared-code churn. Selected with
-    * SPARK_GRAFT_SF1_WAVE=full → BENCH_sf1_full.json (cold + warm
-    * ratios for every entry). q231 keeps its oracle-pinned K here (its
+  /** Later waves, selected with SPARK_GRAFT_SF1_WAVE=N and written to
+    * BENCH_sf1_waveN.json. Any other value runs the headline list into
+    * BENCH_sf1.json, except `full` (r10 verdict ask #7): the ENTIRE
+    * catalog at sf1 in one artifact, BENCH_sf1_full.json — the per-wave
+    * format proved each round's new entries sublinear when they landed,
+    * but hides whether EARLY entries still scale after rounds of
+    * shared-code churn. q231 keeps its oracle-pinned K there (its
     * scale-correct configuration is wave 3's q231_semdedup_scaledK). */
-  private def waveFull: Seq[String] = SparkEntry.queries.keys.toSeq.sorted
+  private val waves: Map[String, Seq[String]] = Map(
+    // Wave 2 (round-7 verdict ask #9): the ROUTED index family — stored
+    // IVF build+probe, BM25 single/fielded index routes, delta
+    // maintenance, the filtered stored route. Index BUILD time dominates
+    // these rows, which is exactly where superlinear surprises would hide.
+    // Round 9 adds q224 (exact repeated-substring dedup — the k-gram
+    // shuffle is the superlinear-risk path) and re-runs the wave to prove
+    // the filtered-knn single-materialization fix at 10× data.
+    "2" -> Seq(
+      "q210_knn_stored", "q215_knn_filtered_stored", "q216_knn_subquery_vector",
+      "q187_indexed_score", "q195_fielded_index_score", "q202_ivf_delta",
+      "q224_substring_dedup", "q227_knn_pq_adc", "q228_knn_pq_filtered_stored"),
+
+    // Wave 3 (round-9 continuation): the new data-selection / residual-PQ
+    // family. q231's CATALOG entry pins K=16 centroids for the oracle — at
+    // 10× data that is deliberately the WRONG scale configuration (pairs
+    // grow 100×), so the wave times the operator at the paper's K ≈ √N
+    // instead (`q231_semdedup_scaledK` below): expected pair work is N^1.5
+    // — a ~31× pair ratio at 10× data BY DESIGN, with the assignment/scan
+    // stages linear.
+    "3" -> Seq(
+      "q229_lm_perplexity", "q230_dsir_selection", "q231_semdedup_scaledK",
+      "q232_knn_pq_residual", "q233_knn_pq_residual_stored",
+      "q234_knn_filtered_fixed_probe", "q235_cjk_bigram_flags"),
+
+    // Wave 4 (round 10): q226 was the only round-9 entry with no wave row
+    // (r9 verdict ask #8) — its percentile_approx sketch-merge is the path
+    // that could degrade at 10× rows — plus the round-10 additions: the
+    // map-only mojibake repair, the one-shuffle keepBest (3N input rows),
+    // the Gumbel-noise top-m, and the declared-recall index whose COLD rep
+    // times build + calibration ladder.
+    "4" -> Seq(
+      "q226_analyze_histogram", "q236_repair_mojibake",
+      "q237_dedup_keepbest", "q238_dsir_gumbel", "q239_knn_auto_nprobe"),
+
+    // Wave 5 (round-10 late tail): the blocklist scan, the LM-tier window,
+    // the Bloom build+membership pass, and the normalization expression at
+    // 10× rows.
+    "5" -> Seq(
+      "q241_blocklist_filter", "q242_perplexity_buckets",
+      "q243_bloom_history_dedup", "q244_unicode_normalize"),
+
+    // Wave 6 (round-11 tail, entries landed after the full wave ran): the
+    // interpreted-JS family with its regex arm and the quality classifier
+    // (driver-bounded training + map-only scoring — the scoring pass is
+    // the 10× path).
+    "6" -> Seq(
+      "q247_js_closures", "q248_quality_classifier"),
+
+    // Wave 7 (round-11 continuation): the JS ES-tail entry (classes /
+    // generators / let-capture / Date — all interpreted, so per-row cost
+    // dominates and the path must stay embarrassingly parallel), plus a
+    // q247 re-run because the richer evaluator (more match arms, scope
+    // chains with per-iteration copies) changed the interpreted hot path's
+    // constant factor.
+    "7" -> Seq(
+      "q249_js_es_tail", "q247_js_closures"),
+
+    // Wave 8 (round 12): every entry whose PLAN the round changed —
+    // q62/q112 gained the no-silent-caps audit fact (one extra tiny
+    // aggregate + 1-row broadcast), q240/q248 write their model artifact
+    // to ArtifactStore (one small parquet write), q245 materializes via
+    // localCheckpoint then releases its broadcast, q250/q251 ride the
+    // reworked fringe expressions (single-parse timetz, trim-or-extend bit
+    // cast). Ratios must stay in their r11 envelopes.
+    "8" -> Seq(
+      "q62_dedup_minhash", "q112_geo_radius_join", "q240_semdedup_auto",
+      "q245_bloom_bucketed_dedup", "q248_quality_classifier",
+      "q250_lsh_plan", "q251_fringe_types"),
+
+    // Wave 9 (round 14): the round's new/changed-plan entries — the
+    // integer-exact q248 + its probes (map-only folds over documents), the
+    // string/regexp/array/date-trunc golden-arm families (map-only scalar
+    // projections; q269's DP matcher and q271's java-regex paths are the
+    // per-row-cost rows to watch), and q253/q255/q257 whose interval
+    // parse/order paths the round reworked.
+    "9" -> Seq(
+      "q248_quality_classifier", "q266_token_count_probe",
+      "q267_bucket_sum_probe", "q268_string_pad_trim",
+      "q269_regexp_match_op", "q270_array_set", "q271_regexp_scalars",
+      "q272_date_trunc_tz", "q253_interval_parse", "q255_interval_order",
+      "q257_interval_arith",
+      // post-close continuation entries: the pg table functions, the
+      // COPY round-trip (export+reimport scale linearly with the slice),
+      // the bucketed join (bucketed WRITE dominates — the one-time cost
+      // the strategy amortizes), and the three streaming rows (state
+      // store + scratch-source write at 10× events)
+      "q273_pg_keywords", "q274_pg_expandarray", "q275_copy_roundtrip",
+      "q276_clustered_join", "q277_streaming_tumbling",
+      "q278_streaming_sessions", "q279_streaming_interval_join"),
+
+    // Wave 10 (round 15): the round's changed-plan entries — the bridge-
+    // safety rework (q270 JSON-serialized arrays, q275/q276/q277 integer-
+    // cent rows), the new probes (q280 conf-pinned plan fact, q281 recall
+    // audit carrying q66's old exact side), the trimmed q66 (map-only
+    // assignment — the row must scale BETTER than its r14 shape), and the
+    // regexp rows whose matcher internals were rebuilt (per-AST memo ids,
+    // code-point DP, LRU caches).
+    "10" -> Seq(
+      "q66_knn_ivf", "q270_array_set", "q275_copy_roundtrip",
+      "q276_clustered_join", "q277_streaming_tumbling",
+      "q280_clustered_plan_probe", "q281_knn_ivf_recall",
+      "q269_regexp_match_op", "q271_regexp_scalars", "q268_string_pad_trim",
+      "q273_pg_keywords", "q177_ddl_alter_view",
+      // the round's conformance tail: per-row array/string/template
+      // scalars — map-only by construction, the wave pins the constant
+      // factor
+      "q282_array_contracts", "q283_pg_to_char"),
+
+    // Wave 11 (optimization round 1): every entry whose code path the
+    // round changed — the registration/metadata memos (catalog snapshot,
+    // resolved-scan reuse, ANALYZE-once), the scale-derived bloom bucket
+    // count (q245 — at sf1 the auto formula still picks 1 build task; at
+    // ≥16M keys it saturates to the old 256), the stream-source memo
+    // (q277-q279), the single-tokenization text passes (q165/q167/q172/
+    // q207), and the build-once IVF/bucketed-table constructions (q185/
+    // q202/q276/q280).
+    "11" -> Seq(
+      "q245_bloom_bucketed_dedup", "q277_streaming_tumbling",
+      "q278_streaming_sessions", "q279_streaming_interval_join",
+      "q165_repetition", "q167_training_export", "q172_match_phrase_slop",
+      "q207_gopher_rules", "q185_ivf_quantized", "q202_ivf_delta",
+      "q276_clustered_join", "q280_clustered_plan_probe",
+      "q281_knn_ivf_recall", "q246_knn_recall_sample",
+      "q174_pg_catalog", "q226_analyze_histogram", "q110_cbo_join"),
+
+    // Wave 12 (optimization round 2): every entry whose code path THIS
+    // round changed — the pre-shingled minhash/ngram verify (q62/q64,
+    // q93/q208 as minhashDedup consumers), the window-shaped
+    // repeatedGramStats (q224), the in-bucket cosine pair verify on the
+    // hyperplane path (q135 — the IVF path q221/q217 A/B'd both verify
+    // shapes at sf1 and keeps its pre-round join verify, so it is NOT in
+    // this wave), the map-only repetitionStats (q165/q167), the merged
+    // q208 claim write, and the c1-from-c2 LM derivation (q229/q242).
+    "12" -> Seq(
+      "q62_dedup_minhash", "q64_ngram_jaccard", "q224_substring_dedup",
+      "q135_embedding_neardup_lsh", "q165_repetition",
+      "q167_training_export", "q208_incremental_dedup",
+      "q93_curation_pipeline", "q229_lm_perplexity",
+      "q242_perplexity_buckets"))
 
   /** Non-catalog bench-only builds (scale-correct configurations of
     * operators whose catalog entries pin oracle-replayable params). */
@@ -239,84 +228,27 @@ object BenchSf1 {
   }
 
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.cleaner.periodicGC.interval", "15s")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.functions.GraftFunctions.registerAll(spark)
-
-    val sf01 = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val spark = Engine.session(cbo = false)
+    val sf01 = Sweep.sfDir
     val sf1 = "/tmp/graft_sf1"
     buildSf1(spark, sf01, sf1)
-
-    def cleanupStorage(): Unit = {
-      try spark.sharedState.cacheManager.clearCache()
-      catch { case _: Throwable => () }
-      try spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
-      catch { case _: Throwable => () }
-      System.gc()
-    }
 
     // (cold, warm): rep 1 includes router-table creation and the durable
     // index BUILD (the superlinear-risk path); rep 2 serves from the
     // loaded index — both ratios matter for the routed-index wave
-    def time(name: String, dir: String): (Double, Double) = {
-      def once(): Double = {
-        val t0 = System.nanoTime()
-        try SparkEntry.queries.getOrElse(name, extras(name))(spark, dir)
-          .write.format("noop").mode("overwrite").save()
-        catch { case e: Throwable =>
-          System.err.println(s"[bench_sf1] $name @ $dir failed: $e") }
-        (System.nanoTime() - t0) / 1e9
-      }
-      val cold = once(); val warm = once()
-      graft.operators.MatchText.IndexCache.clear()
-      cleanupStorage()
-      (cold, warm)
-    }
+    def time(name: String, dir: String): Seq[Double] =
+      Sweep.reps(spark, "bench_sf1", s"$name @ $dir", 2)(
+        SparkEntry.queries.getOrElse(name, extras(name))(spark, dir))
 
-    val wave = sys.env.getOrElse("SPARK_GRAFT_SF1_WAVE", "1")
-    val picked = wave match {
-      case "2"    => wave2
-      case "3"    => wave3
-      case "4"    => wave4
-      case "5"    => wave5
-      case "6"    => wave6
-      case "7"    => wave7
-      case "8"    => wave8
-      case "9"    => wave9
-      case "10"   => wave10
-      case "11"   => wave11
-      case "12"   => wave12
-      case "full" => waveFull
-      case _      => headline
+    val (picked, suffix) = sys.env.getOrElse("SPARK_GRAFT_SF1_WAVE", "1") match {
+      case "full"                 => (SparkEntry.queries.keys.toSeq.sorted, "_full")
+      case w if waves.contains(w) => (waves(w), s"_wave$w")
+      case _                      => (headline, "")
     }
-    val outFile = wave match {
-      case "2"    => "BENCH_sf1_wave2.json"
-      case "3"    => "BENCH_sf1_wave3.json"
-      case "4"    => "BENCH_sf1_wave4.json"
-      case "5"    => "BENCH_sf1_wave5.json"
-      case "6"    => "BENCH_sf1_wave6.json"
-      case "7"    => "BENCH_sf1_wave7.json"
-      case "8"    => "BENCH_sf1_wave8.json"
-      case "9"    => "BENCH_sf1_wave9.json"
-      case "10"   => "BENCH_sf1_wave10.json"
-      case "11"   => "BENCH_sf1_wave11.json"
-      case "12"   => "BENCH_sf1_wave12.json"
-      case "full" => "BENCH_sf1_full.json"
-      case _      => "BENCH_sf1.json"
-    }
+    val outFile = s"BENCH_sf1$suffix.json"
     val rows = picked.map { q =>
-      val (a, aw) = time(q, sf01)
-      val (b, bw) = time(q, sf1)
+      val Seq(a, aw) = time(q, sf01)
+      val Seq(b, bw) = time(q, sf1)
       System.err.println(f"[bench_sf1] $q%-28s sf0.1=${math.min(a, aw)}%7.2fs " +
         f"sf1=${math.min(b, bw)}%8.2fs ratio=${math.min(b, bw) / math.min(a, aw)}%5.1f " +
         f"cold_ratio=${b / a}%5.1f")

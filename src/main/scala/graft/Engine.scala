@@ -2,45 +2,57 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Engine facade: session tuning + SQL entry point.
+/** Engine facade: the one session factory + SQL entry point.
   *
   * The reference's whole query lifecycle (parse → analyze → plan → optimize →
   * distributed phases; SURVEY.md §3, `io/crate/planner/Planner.java:273`)
   * collapses onto Catalyst. What remains for us is session configuration and
   * a small dialect shim ([[Dialect]]).
   *
-  * Scale notes (targets a 1000-executor cluster even though tests run
-  * local[32]):
-  *  - AQE on: runtime partition coalescing, skew-join splitting and
-  *    dynamic join-strategy switches replace the reference's stats-driven
-  *    `ReorderHashJoin` / circuit-breaker machinery.
-  *  - CBO + join reorder on: mirrors the reference's join-graph reordering
+  * [[session]] is the only place a SparkSession is built; every main, tool
+  * and test session comes from it. It sets:
+  *  - master and `spark.sql.shuffle.partitions`: both default to
+  *    `SPARK_GRAFT_CPUS` (32 when unset); on a real cluster set the
+  *    partitions to ~2-3× total cores (AQE coalesces the excess);
+  *  - `spark.sql.session.timeZone=UTC`;
+  *  - `spark.sql.legacy.parquet.nanosAsLong=true`: the events fixture
+  *    stores INT64 TIMESTAMP(NANOS), which [[Tables.load]] converts;
+  *  - `spark.ui.enabled=false`;
+  *  - `spark.cleaner.periodicGC.interval=15s`: ContextCleaner reaps
+  *    broadcast and checkpoint blocks only after a driver GC, and Spark's
+  *    30-minute default never fires inside a catalog sweep;
+  *  - with `cbo` (the default), `spark.sql.cbo.enabled` and
+  *    `cbo.joinReorder.enabled`: stats-driven join reordering mirrors the
+  *    reference's join-graph reordering
   *    (`planner/optimizer/rule/EliminateCrossJoin.java:50`).
-  *  - shuffle partitions default to the local core count here; on a real
-  *    cluster set it ~2-3× total cores (AQE coalesces the excess).
-  */
+  *
+  * CBO is the one parameter because the callers differ on it: the engine
+  * session runs with it, while the [[Bench]] settings (a guardrail),
+  * [[Verify]], the tools and the test session plan without it. Everything
+  * else Spark needs is already its default (AQE with partition coalescing
+  * and skew-join splitting, runtime bloom filters), or is forced by
+  * [[graft.functions.GraftFunctions.registerAll]]
+  * (`spark.sql.parser.escapedStringLiterals=true`), which runs here
+  * together with the `sys.operations_log` stage listener. The warehouse
+  * directory is never set here: a deployment (or the test session) passes
+  * `spark.sql.warehouse.dir` as a system property. */
 object Engine {
-  def session(master: String = "local[32]", shufflePartitions: Int = 32): SparkSession = {
-    val spark = SparkSession.builder()
+  private val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+
+  def session(master: String = s"local[$cpus]", shufflePartitions: Int = cpus,
+              cbo: Boolean = true): SparkSession = {
+    val builder = SparkSession.builder()
       .master(master)
       .appName("graft")
       .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
       .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      .config("spark.ui.enabled", "false")
+      .config("spark.cleaner.periodicGC.interval", "15s")
+    if (cbo) builder
       .config("spark.sql.cbo.enabled", "true")
       .config("spark.sql.cbo.joinReorder.enabled", "true")
-      // runtime bloom-filter pushdown on shuffle joins: the big-side scan
-      // drops rows that can't match a selectively-filtered build side — the
-      // lookup-join/runtime-filter analogue of the reference's doc-id
-      // intersection, and a large win at 100 TB fact-dim joins
-      .config("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
-      // reference/PG standard-conforming strings: no backslash escapes
-      // in '...' literals (also enforced in GraftFunctions.registerAll)
-      .config("spark.sql.parser.escapedStringLiterals", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     graft.functions.GraftFunctions.registerAll(spark)
     // stage-completion ring for sys.operations_log starts with the session

@@ -2,6 +2,7 @@ package graft
 
 import graft.sources.{Dml, VersionedTable}
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 import org.apache.hadoop.fs.Path
@@ -4318,7 +4319,22 @@ class StatementRouter(spark: SparkSession, root: String) {
     }.toSeq: _*)
     // generated columns computed/validated, CHECK + NOT NULL enforced
     val aligned = enforceOnInsert(name, alignedRaw, cols.toSet)
-    val n = aligned.count()
+    val pk = if (oc < 0) VersionedTable.primaryKey(spark, tablePath(name)) else Nil
+    // VALUES rows are already on the driver: count them and compare their
+    // keys there, so the key check adds only the lookup in the table
+    val localKeys = aligned.queryExecution.optimizedPlan match {
+      case _: LocalRelation if pk.nonEmpty => Some(aligned.select(pk.map(col): _*).collect().toSeq)
+      case _ => None
+    }
+    val n = localKeys.fold(aligned.count())(_.size.toLong)
+    // a plain INSERT of a key that exists or repeats within the statement
+    // fails before anything is written (reference DuplicateKeyException)
+    require(pk.isEmpty || (localKeys match {
+      case Some(keys) => keys.distinct.size == n &&
+        target.join(aligned.select(pk.map(col): _*), pk, "left_semi").count() == 0
+      case None =>
+        Dml.absent(target, aligned, pk).select(pk.map(col): _*).distinct().count() == n
+    }), s"DuplicateKeyException: a row with the same primary key exists already in $name")
     var conflictKeys: Seq[String] = Nil
     var doNothing = false
     val next: DataFrame => DataFrame =
@@ -4352,9 +4368,7 @@ class StatementRouter(spark: SparkSession, root: String) {
         val retToks = ts.slice(ri + 1, ts.length)
         val affected =
           if (oc < 0) aligned
-          else if (doNothing)
-            aligned.join(target.select(conflictKeys.map(col): _*),
-              conflictKeys, "left_anti")
+          else if (doNothing) Dml.absent(target, aligned, conflictKeys)
           else
             newState.join(
               aligned.select(conflictKeys.map(col): _*).distinct(),

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -9,16 +8,7 @@ object Verify {
     // optional 3rd arg: only dump queries whose name starts with this
     // prefix (local iteration; the driver always passes two args)
     val prefix = if (args.length > 2) args(2) else ""
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    graft.functions.GraftFunctions.registerAll(spark)
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Engine.session(cbo = false)
     new java.io.File(outDir).mkdirs()
     // dynamic-oracle model artifacts (q248 weights, q240 centroids) live
     // in a SIBLING of the dump dir: part of the round's forensic record,
@@ -37,14 +27,7 @@ object Verify {
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
-      // same storage hygiene as Bench: persisted index bundles and
-      // localCheckpoint blocks must not accumulate across the sweep
-      graft.operators.MatchText.IndexCache.clear()
-      try spark.sharedState.cacheManager.clearCache()
-      catch { case _: Throwable => () }
-      try spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
-      catch { case _: Throwable => () }
+      Sweep.cleanup(spark)
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

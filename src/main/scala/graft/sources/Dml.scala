@@ -22,12 +22,16 @@ object Dml {
   def insertInto(target: DataFrame, rows: DataFrame): DataFrame =
     target.unionByName(rows.select(target.columns.map(col).toSeq: _*))
 
+  /** The rows of `rows` whose key is absent from `target`: one anti-join
+    * (broadcast when small), shared by ON CONFLICT DO NOTHING, its
+    * RETURNING rows and the plain-INSERT duplicate-key check. */
+  def absent(target: DataFrame, rows: DataFrame, keys: Seq[String]): DataFrame =
+    rows.join(target.select(keys.map(col).toSeq: _*), keys, "left_anti")
+
   /** INSERT ... ON CONFLICT (key) DO NOTHING: keep existing rows, add only
-    * rows whose key is absent. One anti-join (broadcast when small). */
+    * rows whose key is absent. */
   def upsertDoNothing(target: DataFrame, rows: DataFrame, keys: Seq[String]): DataFrame =
-    target.unionByName(
-      rows.join(target.select(keys.map(col).toSeq: _*), keys, "left_anti")
-        .select(target.columns.map(col).toSeq: _*))
+    target.unionByName(absent(target, rows, keys).select(target.columns.map(col).toSeq: _*))
 
   /** INSERT ... ON CONFLICT (key) DO UPDATE SET (full-row replace): new rows
     * win over existing ones — MERGE INTO semantics, one outer-joined pass.

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dumps `.explain("formatted")` for named catalog entries to files —
   * the plan evidence for optimization rounds (`plans/rNN/<q>_{before,after}.txt`).
   *
@@ -15,18 +13,7 @@ object ExplainDump {
     val outDir = java.nio.file.Paths.get(args(0))
     java.nio.file.Files.createDirectories(outDir)
     val suffix = args(1)
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.functions.GraftFunctions.registerAll(spark)
+    val spark = graft.Engine.session(cbo = false)
     val names =
       if (args(2) == "all") graft.SparkEntry.queries.keys.toSeq.sorted
       else args(2).split(",").map(_.trim).filter(_.nonEmpty).toSeq
@@ -35,7 +22,7 @@ object ExplainDump {
         case None => System.err.println(s"[explain] no such entry: $name")
         case Some(fn) =>
           try {
-            val df = fn(spark, sfDir)
+            val df = fn(spark, graft.Sweep.sfDir)
             val txt = df.queryExecution.explainString(
               org.apache.spark.sql.execution.FormattedMode)
             java.nio.file.Files.writeString(

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Regenerates [[graft.operators.Q248PinnedModel]] — the COMMITTED
@@ -21,13 +20,7 @@ object PinQ248 {
     "src/main/scala/graft/operators/Q248PinnedModel.scala"
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Engine.session("local[8]", 8, cbo = false)
     val docs = graft.Tables.load(spark, TrainDir, "documents")
       .select(col("doc_id"), col("text"), col("lang"))
       .withColumn("is_en", col("lang") === "en")

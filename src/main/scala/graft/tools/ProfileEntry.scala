@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.scheduler._
 
 /** Runs catalog entries with a job listener and prints one line per Spark
@@ -11,18 +10,7 @@ object ProfileEntry {
   def main(args: Array[String]): Unit = {
     val names = args(0).split(",").map(_.trim).filter(_.nonEmpty)
     val reps = if (args.length > 1) args(1).toInt else 2
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.functions.GraftFunctions.registerAll(spark)
+    val spark = graft.Engine.session(cbo = false)
     case class J(id: Int, t0: Long, desc: String,
                  var tEnd: Long = 0L, var nTasks: Int = 0)
     val jobs = new java.util.concurrent.ConcurrentHashMap[Int, J]()
@@ -42,9 +30,7 @@ object ProfileEntry {
       val fn = graft.SparkEntry.queries(name)
       (1 to reps).foreach { r =>
         jobs.clear(); order.clear()
-        val t0 = System.nanoTime()
-        fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-        val wall = (System.nanoTime() - t0) / 1e9
+        val wall = graft.Sweep.time("pe", name)(fn(spark, graft.Sweep.sfDir))
         Thread.sleep(200)
         import scala.jdk.CollectionConverters._
         val js = order.asScala.flatMap(id => Option(jobs.get(id)))
@@ -53,12 +39,7 @@ object ProfileEntry {
         js.foreach { j =>
           println(f"[pe]   job ${j.id}%3d ${(j.tEnd - j.t0) / 1e3}%7.3f s tasks ${j.nTasks}%4d  ${j.desc}")
         }
-        graft.operators.MatchText.IndexCache.clear()
-        try spark.sharedState.cacheManager.clearCache()
-        catch { case _: Throwable => () }
-        try spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(blocking = false))
-        catch { case _: Throwable => () }
+        graft.Sweep.cleanup(spark)
       }
     }
     spark.stop()

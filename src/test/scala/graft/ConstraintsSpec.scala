@@ -32,6 +32,24 @@ class ConstraintsSpec extends SparkTestBase {
     assert(r.execute("SELECT count(*) AS n FROM computed").head().getLong(0) == 3)
   }
 
+  test("PRIMARY KEY: a plain INSERT of an existing or repeated key fails and writes nothing") {
+    val r = newRouter()
+    r.execute("CREATE TABLE pk (id BIGINT PRIMARY KEY, v TEXT)")
+    r.execute("INSERT INTO pk (id, v) VALUES (1, 'a'), (2, 'b')")
+    for (stmt <- Seq("INSERT INTO pk (id, v) VALUES (1, 'x')",
+                     "INSERT INTO pk (id, v) VALUES (3, 'c'), (3, 'd')",
+                     "INSERT INTO pk (id, v) SELECT id, 'y' FROM pk")) {
+      val e = intercept[Exception](r.execute(stmt))
+      assert(e.getMessage.contains("DuplicateKeyException"), stmt)
+    }
+    assert(r.execute("SELECT id, v FROM pk ORDER BY id").collect()
+      .map(x => (x.getLong(0), x.getString(1))).toSeq == Seq((1L, "a"), (2L, "b")))
+    // fresh keys and ON CONFLICT still go through
+    r.execute("INSERT INTO pk (id, v) VALUES (3, 'c')")
+    r.execute("INSERT INTO pk (id, v) VALUES (1, 'z') ON CONFLICT (id) DO NOTHING")
+    assert(r.execute("SELECT count(*), max(v) FROM pk").head().toSeq == Seq(3L, "c"))
+  }
+
   test("generated column: non-deterministic expressions skip validation") {
     val r = newRouter()
     r.execute("CREATE TABLE genrand (a int, b GENERATED ALWAYS AS (random() + 10))")

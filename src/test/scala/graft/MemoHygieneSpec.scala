@@ -6,9 +6,10 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import scala.jdk.CollectionConverters._
 
-/** Source scan guarding the single-memo design: session-scoped memos live
-  * in graft.Memo, so no session is keyed by its identity hash (which can
-  * collide after GC) and the query catalog holds no ad-hoc memo maps. */
+/** Source scans guarding the single-memo and single-session designs:
+  * session-scoped memos live in graft.Memo, so no session is keyed by its
+  * identity hash (which can collide after GC) and the query catalog holds
+  * no ad-hoc memo maps; every SparkSession comes from Engine.session. */
 class MemoHygieneSpec extends AnyFunSuite {
 
   private def offenders(dir: String, words: String*): Seq[String] = {
@@ -32,5 +33,23 @@ class MemoHygieneSpec extends AnyFunSuite {
   test("no ConcurrentHashMap or TrieMap under src/main/scala/graft/queries") {
     val hits = offenders("src/main/scala/graft/queries", "ConcurrentHashMap", "TrieMap")
     assert(hits.isEmpty, hits.mkString("\n"))
+  }
+
+  test("no SparkSession builder or core-count read under src outside Engine.scala") {
+    // this spec names the words it scans for, so it skips itself
+    val hits = offenders("src", "SparkSession.builder", "SPARK_GRAFT_CPUS")
+      .filterNot(h => h.contains("/Engine.scala:") || h.contains("/MemoHygieneSpec.scala:"))
+    assert(hits.isEmpty, hits.mkString("\n"))
+  }
+
+  test("the test session carries the settings Engine.session pins") {
+    // a new session reads only what the factory set at creation, not what
+    // earlier suites changed at run time (q110 turns CBO on for its session)
+    val created = TestSpark.spark.newSession().conf
+    assert(created.get("spark.sql.session.timeZone") == "UTC")
+    assert(created.get("spark.sql.legacy.parquet.nanosAsLong") == "true")
+    assert(created.get("spark.sql.adaptive.enabled") == "true")
+    assert(created.get("spark.sql.cbo.enabled") == "false")
+    assert(TestSpark.spark.conf.get("spark.sql.parser.escapedStringLiterals") == "true")
   }
 }

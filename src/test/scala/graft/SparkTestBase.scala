@@ -6,18 +6,12 @@ import org.scalatest.funsuite.AnyFunSuite
 /** One shared local session for the whole test JVM (Test / fork := true). */
 object TestSpark {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.warehouse.dir",
-        graft.ArtifactStore.scratchDir("graft-wh").toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // the factory never sets the warehouse, so a deployment's own
+    // -Dspark.sql.warehouse.dir wins; the tests pass theirs the same way
+    System.setProperty("spark.sql.warehouse.dir",
+      graft.ArtifactStore.scratchDir("graft-wh").toString)
+    val s = Engine.session("local[4]", 4, cbo = false)
     s.sparkContext.setLogLevel("ERROR")
-    graft.functions.GraftFunctions.registerAll(s)
     s
   }
   val sfDir = "/root/testdata/sf0.001"

@@ -12,10 +12,11 @@ WITH the numbers instead of being a per-round manual step.
 Usage:
   python3 tools/close_bench.py <prev_close.json> <out.json> [sf_dir]
 
-The launcher needs the Spark add-opens flags (see memory/build notes) —
-they are embedded below.
+The mains launch through tools/run_graft.sh (compiled classes, Spark
+jars, add-opens flags).
 """
 import json
+import os
 import re
 import subprocess
 import sys
@@ -23,24 +24,10 @@ from pathlib import Path
 
 ROOT = Path(__file__).resolve().parent.parent
 
-ADD_OPENS = []
-for p in ("java.lang", "java.lang.invoke", "java.lang.reflect", "java.io",
-          "java.net", "java.nio", "java.util", "java.util.concurrent",
-          "java.util.concurrent.atomic", "sun.nio.ch", "sun.nio.cs",
-          "sun.security.action", "sun.util.calendar"):
-    ADD_OPENS += ["--add-opens", f"java.base/{p}=ALL-UNNAMED"]
 
-CP = f"{ROOT}/target/scala-2.13/classes:/opt/spark/jars/*"
-
-
-def run_java(main, *args, env_extra=None, xmx="96g"):
-    import os
-    env = dict(os.environ)
-    if env_extra:
-        env.update(env_extra)
-    cmd = (["java"] + ADD_OPENS +
-           [f"-Xmx{xmx}", "-Dspark.ui.enabled=false",
-            "-Dspark.sql.session.timeZone=UTC", "-cp", CP, main] + list(args))
+def run_java(main, *args, env_extra=None):
+    env = dict(os.environ, **(env_extra or {}))
+    cmd = [str(ROOT / "tools" / "run_graft.sh"), main] + list(args)
     return subprocess.run(cmd, capture_output=True, text=True, env=env)
 
 

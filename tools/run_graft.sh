@@ -2,6 +2,7 @@
 # Fast standalone launcher for graft mains (Verify/Bench/BenchOne...)
 # bypassing sbt runMain (~2 min faster). Usage:
 #   tools/run_graft.sh graft.Verify /root/testdata/sf0.01 /tmp/vout [prefix]
+ROOT="$(cd "$(dirname "$0")/.." && pwd)"
 OPENS=""
 for p in java.lang java.lang.invoke java.lang.reflect java.io java.net \
          java.nio java.util java.util.concurrent java.util.concurrent.atomic \
@@ -10,4 +11,4 @@ for p in java.lang java.lang.invoke java.lang.reflect java.io java.net \
 done
 exec java $OPENS -Xmx96g -Dspark.ui.enabled=false \
   -Dspark.sql.session.timeZone=UTC \
-  -cp /root/repo/target/scala-2.13/classes:"/opt/spark/jars/*" "$@"
+  -cp "$ROOT/target/scala-2.13/classes":"/opt/spark/jars/*" "$@"
