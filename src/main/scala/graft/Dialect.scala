@@ -45,6 +45,8 @@ object Dialect {
     def is(s: String): Boolean = text.equalsIgnoreCase(s)
     def isSym(s: String): Boolean = kind == K.Sym && text == s
     def sig: Boolean = kind != K.Ws && kind != K.Cmt
+    /** A bare or quoted identifier. */
+    def isWord: Boolean = kind == K.Word || kind == K.QId
   }
 
   private val twoCharSyms = Set("::", "<=", ">=", "<>", "!=", "||", "->", "&&", "~*", "!~", "<<")
@@ -1330,7 +1332,6 @@ object Dialect {
     if (ki < 0) return None
     if (ts.indexWhere(t => t.kind == K.Word && t.is("knn_match"), ki + 1) >= 0)
       return None
-    def isWord(t: Tok) = t.kind == K.Word || t.kind == K.QId
     // depth-0 scan for a keyword, between from and until
     def topIdx(word: String, from: Int, until: Int): Int = {
       var depth = 0; var i = from
@@ -1382,20 +1383,20 @@ object Dialect {
 
     // FROM <tbl[.part]> [AS] [alias] — must run straight into WHERE
     var ti = nextSig(ts, fi)
-    if (ti < 0 || !isWord(ts(ti))) return None
+    if (ti < 0 || !ts(ti).isWord) return None
     var tblR = ts(ti).text
     var cursor = nextSig(ts, ti)
     if (cursor >= 0 && ts(cursor).isSym(".")) {
       val pn = nextSig(ts, cursor)
-      if (pn < 0 || !isWord(ts(pn))) return None
+      if (pn < 0 || !ts(pn).isWord) return None
       tblR = s"$tblR.${ts(pn).text}"; cursor = nextSig(ts, pn)
     }
     var alias = ""
     if (cursor >= 0 && ts(cursor).is("as")) {
       val an = nextSig(ts, cursor)
-      if (an < 0 || !isWord(ts(an))) return None
+      if (an < 0 || !ts(an).isWord) return None
       alias = ts(an).text; cursor = nextSig(ts, an)
-    } else if (cursor >= 0 && isWord(ts(cursor)) && !ts(cursor).is("where")) {
+    } else if (cursor >= 0 && ts(cursor).isWord && !ts(cursor).is("where")) {
       alias = ts(cursor).text; cursor = nextSig(ts, cursor)
     }
     if (cursor != wi) return None
@@ -1464,7 +1465,7 @@ object Dialect {
           val nextOk = pos == sigs.length - 1 || v(sigs(pos + 1)).isSym(",")
           val bare = pos <= 0 || v(sigs(pos - 1)).isSym(",")
           val qualified = pos >= 2 && v(sigs(pos - 1)).isSym(".") &&
-            isWord(v(sigs(pos - 2))) &&
+            v(sigs(pos - 2)).isWord &&
             (pos == 2 || v(sigs(pos - 3)).isSym(","))
           nextOk && (bare || qualified)
         }) lex("* EXCEPT (graft_knn_score)")
@@ -2055,14 +2056,14 @@ object Dialect {
     val w = d(j).text.toLowerCase
     w match {
       case "array" if j + 1 < d.length && d(j + 1).isSym("(") =>
-        val c = matchFwdIn(d, j + 1)
+        val c = matchFwd(d, j + 1)
         val (inner, _) = mapType(d, j + 2)
         (s"ARRAY<$inner>", c + 1)
       case "object" =>
         var k = j + 1
-        if (k < d.length && d(k).isSym("(")) k = matchFwdIn(d, k) + 1 // policy
+        if (k < d.length && d(k).isSym("(")) k = matchFwd(d, k) + 1 // policy
         if (k < d.length && d(k).is("as") && k + 1 < d.length && d(k + 1).isSym("(")) {
-          val c = matchFwdIn(d, k + 1)
+          val c = matchFwd(d, k + 1)
           val subs = splitCommas(d.slice(k + 2, c))
           val fields = subs.map { sd =>
             val fname = ident(sd(0).text)
@@ -2077,7 +2078,7 @@ object Dialect {
         // FLOAT_VECTOR(n) (reference FloatVectorType, vector-search docs):
         // the dimension is declarative only — Spark's twin is ARRAY<FLOAT>
         if (j + 1 < d.length && d(j + 1).isSym("("))
-          ("ARRAY<FLOAT>", matchFwdIn(d, j + 1) + 1)
+          ("ARRAY<FLOAT>", matchFwd(d, j + 1) + 1)
         else ("ARRAY<FLOAT>", j + 1)
       case "double" if j + 1 < d.length && d(j + 1).is("precision") => ("DOUBLE", j + 2)
       case "timestamp" =>
@@ -2089,7 +2090,7 @@ object Dialect {
         // lexicographic order IS BitString.compareTo (bit_cmp), and the
         // router adds a write-time length/charset check per column
         if (j + 1 < d.length && d(j + 1).isSym("("))
-          ("STRING", matchFwdIn(d, j + 1) + 1)
+          ("STRING", matchFwd(d, j + 1) + 1)
         else ("STRING", j + 1)
       case "timetz" =>
         // TIME WITH TIME ZONE (reference TimeTZ.java): struct ordering =
@@ -2101,7 +2102,7 @@ object Dialect {
         val base = typeMap.getOrElse(tw, tw.toUpperCase)
         // precision args e.g. DECIMAL(10,2), VARCHAR(20)
         if (j + 1 < d.length && d(j + 1).isSym("(")) {
-          val c = matchFwdIn(d, j + 1)
+          val c = matchFwd(d, j + 1)
           (base + render(d.slice(j + 1, c + 1)).replaceAll("\\s", ""), c + 1)
         } else (if (base == "VARCHAR") "STRING" else base, j + 1)
     }
@@ -2180,17 +2181,6 @@ object Dialect {
       case _ => // routing without a column (CLUSTERED INTO n SHARDS): dropped
     }
     b.toString
-  }
-
-  /** [[matchFwd]] over an arbitrary slice (defs are sub-vectors). */
-  private def matchFwdIn(d: Vector[Tok], i: Int): Int = {
-    var depth = 0; var k = i
-    while (k < d.length) {
-      if (d(k).isSym("(")) depth += 1
-      else if (d(k).isSym(")")) { depth -= 1; if (depth == 0) return k }
-      k += 1
-    }
-    -1
   }
 
   def translate(stmt: String): String = {

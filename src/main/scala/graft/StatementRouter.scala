@@ -1,5 +1,6 @@
 package graft
 
+import graft.operators.{MatchText, Similarity}
 import graft.sources.{Dml, VersionedTable}
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
@@ -31,7 +32,7 @@ import org.apache.hadoop.fs.Path
   * the RETURNING rows.
   */
 class StatementRouter(spark: SparkSession, root: String) {
-  import Dialect.Tok
+  import Dialect.{Tok, matchFwd}
 
   graft.functions.GraftFunctions.registerAll(spark)
 
@@ -282,7 +283,6 @@ class StatementRouter(spark: SparkSession, root: String) {
       throw new SecurityException(s"Missing '$p' privilege for user '$user'")
     def check(p: String, sec: String, id: Option[String]): Unit =
       if (!sources.Roles.hasPrivilege(user, p, sec, id)) deny(p)
-    def isWordT(t: Tok) = t.kind == Dialect.K.Word || t.kind == Dialect.K.QId
     val viewNames: Set[String] =
       if (fs.exists(viewsDir))
         fs.listStatus(viewsDir).toSeq.map(_.getPath.getName)
@@ -291,9 +291,9 @@ class StatementRouter(spark: SparkSession, root: String) {
     // qualified ident of a relation reference: grab `a.b` or bare `a`
     // starting at token i; returns (qualified-or-bare name, public?)
     def relAt(i: Int): Option[String] = {
-      if (!sig.lift(i).exists(isWordT)) return None
+      if (!sig.lift(i).exists(_.isWord)) return None
       val first = unq(sig(i)).toLowerCase
-      if (sig.lift(i + 1).exists(_.isSym(".")) && sig.lift(i + 2).exists(isWordT))
+      if (sig.lift(i + 1).exists(_.isSym(".")) && sig.lift(i + 2).exists(_.isWord))
         Some(s"$first.${unq(sig(i + 2)).toLowerCase}")
       else Some(first)
     }
@@ -344,13 +344,13 @@ class StatementRouter(spark: SparkSession, root: String) {
         val skip = Set("table", "view", "schema", "function", "analyzer",
           "repository", "snapshot", "server", "foreign", "user", "role",
           "or", "replace", "if", "not", "exists", "materialized")
-        val ti = sig.indexWhere(t => t.sig && isWordT(t) &&
+        val ti = sig.indexWhere(t => t.sig && t.isWord &&
           !skip.contains(t.text.toLowerCase), 1)
         if (ti > 0) {
           // schema-qualified target (`DROP TABLE s.t`): consume the dot so
           // the ladder falls back to SCHEMA 's', not SCHEMA 'doc'
           val tgt =
-            if (sig.lift(ti + 1).exists(_.isSym(".")) && sig.lift(ti + 2).exists(isWordT))
+            if (sig.lift(ti + 1).exists(_.isSym(".")) && sig.lift(ti + 2).exists(_.isWord))
               s"${unq(sig(ti)).toLowerCase}.${unq(sig(ti + 2)).toLowerCase}"
             else qualifyIdent(unq(sig(ti)).toLowerCase)
           check("DDL", "TABLE", Some(tgt))
@@ -370,13 +370,12 @@ class StatementRouter(spark: SparkSession, root: String) {
     * after each FROM/JOIN, minus table-function names. Lexical, shared by
     * privilege enforcement and the closed-table guard. */
   private def scanReadRelations(sig: Vector[Tok]): Seq[String] = {
-    def isWordT(t: Tok) = t.kind == Dialect.K.Word || t.kind == Dialect.K.QId
     sig.indices.flatMap { i =>
       if ((sig(i).is("from") || sig(i).is("join")) &&
           !sig.lift(i - 1).exists(t => t.is("distinct") || t.is("extract")) &&
-          sig.lift(i + 1).exists(isWordT)) {
+          sig.lift(i + 1).exists(_.isWord)) {
         val first = unq(sig(i + 1)).toLowerCase
-        if (sig.lift(i + 2).exists(_.isSym(".")) && sig.lift(i + 3).exists(isWordT))
+        if (sig.lift(i + 2).exists(_.isSym(".")) && sig.lift(i + 3).exists(_.isWord))
           Some(s"$first.${unq(sig(i + 3)).toLowerCase}")
         else Some(first)
       } else None
@@ -403,11 +402,10 @@ class StatementRouter(spark: SparkSession, root: String) {
     }
     def err(n: String, op: String): Nothing = throw new IllegalStateException(
       s"""The relation "${qualifyIdent(n)}" doesn't support or allow $op operations, as it is currently closed.""")
-    def isWordT(t: Tok) = t.kind == Dialect.K.Word || t.kind == Dialect.K.QId
     def relAt(i: Int): Option[String] =
-      if (sig.lift(i).exists(isWordT)) {
+      if (sig.lift(i).exists(_.isWord)) {
         val first = unq(sig(i)).toLowerCase
-        if (sig.lift(i + 1).exists(_.isSym(".")) && sig.lift(i + 2).exists(isWordT))
+        if (sig.lift(i + 1).exists(_.isSym(".")) && sig.lift(i + 2).exists(_.isWord))
           Some(s"$first.${unq(sig(i + 2)).toLowerCase}")
         else Some(first)
       } else None
@@ -515,11 +513,10 @@ class StatementRouter(spark: SparkSession, root: String) {
     if (!stmt.contains(".")) return stmt
     val known = registeredSchemas + "doc"
     val ts = Dialect.lex(stmt).filter(_.sig)
-    def isWord(t: Tok) = t.kind == Dialect.K.Word || t.kind == Dialect.K.QId
     // words used WITHOUT a following dot anywhere → treated as aliases
     val shadowed: Set[String] = ts.indices.flatMap { i =>
       val t = ts(i)
-      if (isWord(t) && known.contains(unq(t).toLowerCase) &&
+      if (t.isWord && known.contains(unq(t).toLowerCase) &&
           !ts.lift(i + 1).exists(_.isSym("."))) Some(unq(t).toLowerCase)
       else None
     }.toSet
@@ -528,9 +525,9 @@ class StatementRouter(spark: SparkSession, root: String) {
     var changed = false
     while (i < ts.length) {
       val t = ts(i)
-      val s = if (isWord(t)) unq(t).toLowerCase else ""
+      val s = if (t.isWord) unq(t).toLowerCase else ""
       if (known.contains(s) && !shadowed.contains(s) &&
-          ts.lift(i + 1).exists(_.isSym(".")) && ts.lift(i + 2).exists(isWord) &&
+          ts.lift(i + 1).exists(_.isSym(".")) && ts.lift(i + 2).exists(_.isWord) &&
           !(i > 0 && ts(i - 1).isSym("."))) {
         if (s == "doc") out.append(unq(ts(i + 2)))
         else out.append(s).append("__").append(unq(ts(i + 2)))
@@ -553,7 +550,6 @@ class StatementRouter(spark: SparkSession, root: String) {
       .filter(_.nonEmpty).toSeq
     if (schemas.forall(s => s == "pg_catalog" || s == "doc")) return stmt
     val ts = Dialect.lex(stmt).filter(_.sig)
-    def isWordT(t: Tok) = t.kind == Dialect.K.Word || t.kind == Dialect.K.QId
     def tableExists(n: String): Boolean =
       try VersionedTable.latestVersion(spark, tablePath(n)).isDefined
       catch { case _: Exception => false }
@@ -570,7 +566,7 @@ class StatementRouter(spark: SparkSession, root: String) {
       // CREATE TABLE [IF NOT EXISTS] <bare> → first user schema of the path
       if (ts.length > 2 && ts(0).is("create") && ts(1).is("table")) {
         val ni = if (ts.lift(2).exists(_.is("if"))) 5 else 2
-        if (ts.lift(ni).exists(isWordT) && !ts.lift(ni + 1).exists(_.isSym(".")))
+        if (ts.lift(ni).exists(_.isWord) && !ts.lift(ni + 1).exists(_.isSym(".")))
           ni
         else -1
       } else -1
@@ -579,7 +575,7 @@ class StatementRouter(spark: SparkSession, root: String) {
     var changed = false
     ts.indices.foreach { i =>
       val t = ts(i)
-      val isRef = i > 0 && isRelKeyword(ts(i - 1)) && isWordT(t) &&
+      val isRef = i > 0 && isRelKeyword(ts(i - 1)) && t.isWord &&
         !ts.lift(i + 1).exists(_.isSym("."))
       if (i == createIdx) {
         schemas.find(s => s != "pg_catalog" && s != "doc") match {
@@ -742,22 +738,22 @@ class StatementRouter(spark: SparkSession, root: String) {
     // multi-column MATCH + _score routes on the RAW statement (the
     // per-field boosts are only visible before the dialect lowers the
     // MATCH); single-column routes on the translated form.
+    StatementRouter.lastIndexBuild.set("")
     val fielded = routeFieldedScore(stmtSys)
     val pre0 = fielded.getOrElse(stmtSys)
     // stored-vector-index upgrade runs BEFORE the dialect, which
     // would otherwise lower knn_match to its exact fallback
     StatementRouter.lastKnnProbe.set("")
-    StatementRouter.lastVecIndexBuild.set("")
     val knn = routeKnnStored(pre0)
+    val knnBuild = StatementRouter.lastIndexBuild.get()
     val pre = knn.getOrElse(pre0)
     val translated = Dialect.translate(pre)
     val scored = routeIndexedScore(translated)
     StatementRouter.lastSelectRoute.set(
       if (knn.isDefined) {
-        val b = StatementRouter.lastVecIndexBuild.get()
         val p = StatementRouter.lastKnnProbe.get()
         StatementRouter.lastKnnRoute.get() +
-          (if (b.isEmpty) "" else s", index $b") +
+          (if (knnBuild.isEmpty) "" else s", index $knnBuild") +
           (if (p.isEmpty) "" else s", probe $p")
       }
       else if (fielded.isDefined) "indexed-score-fielded-bm25"
@@ -785,7 +781,6 @@ class StatementRouter(spark: SparkSession, root: String) {
     val lower = sql.toLowerCase
     if (!lower.contains("_score") || !lower.contains("match")) return None
     val sig = Dialect.lex(sql).filter(_.sig)
-    def isWord(t: Tok) = t.kind == Dialect.K.Word || t.kind == Dialect.K.QId
     if (sig.count(t => t.kind == Dialect.K.Word && t.is("match")) != 1) return None
 
     // the MATCH call, inner column group, query literal, USING method
@@ -810,14 +805,14 @@ class StatementRouter(spark: SparkSession, root: String) {
           (c.dropRight(1), t.text.toDouble)
         case _ => (c, 1.0)
       }
-      if (colToks.isEmpty || !isWord(colToks.last)) return None
+      if (colToks.isEmpty || !colToks.last.isWord) return None
       (unq(colToks.last).toLowerCase, boost)
     }
     var matchEnd = mClose
     var method = "best_fields"
     if (sig.lift(mClose + 1).exists(_.is("using"))) {
       val m = sig.lift(mClose + 2).getOrElse(return None)
-      if (!isWord(m)) return None
+      if (!m.isWord) return None
       method = m.text.toLowerCase
       matchEnd = mClose + 2
     }
@@ -832,100 +827,144 @@ class StatementRouter(spark: SparkSession, root: String) {
 
     // FROM <router table with a composite index covering exactly the
     // MATCH targets and a 1-column PK>
-    val fi = sig.indexWhere(t => t.kind == Dialect.K.Word && t.is("from"))
-    if (fi < 0 || !sig.lift(fi + 1).exists(isWord)) return None
-    val table = unq(sig(fi + 1))
-    val version = VersionedTable.latestVersion(spark, tablePath(table))
-      .getOrElse(return None)
     val targetSet = fieldsBoosts.map(_._1).toSet
-    val spec = VersionedTable.indexSpecs(spark, tablePath(table)).find(s =>
-      !s.analyzer.startsWith("vector:") &&
-        s.cols.map(_.toLowerCase).toSet == targetSet && s.cols.length == targetSet.size)
+    val r = indexedRelation(sig)(s => !s.analyzer.startsWith("vector:") &&
+      s.cols.map(_.toLowerCase).toSet == targetSet && s.cols.length == targetSet.size)
       .getOrElse(return None)
-    val pk = VersionedTable.primaryKey(spark, tablePath(table)) match {
-      case Seq(one) => one
-      case _        => return None
-    }
-
-    // optional alias after the table name
-    val stop = Set("where", "group", "order", "limit", "having", "join",
-      "inner", "left", "right", "full", "cross", "on", "union", "intersect",
-      "except", "offset", "window", "qualify", "lateral")
-    var insertAt = fi + 1
-    var rel = table
-    sig.lift(fi + 2) match {
-      case Some(t2) if t2.is("as") && sig.lift(fi + 3).exists(isWord) =>
-        rel = unq(sig(fi + 3)); insertAt = fi + 3
-      case Some(t2) if isWord(t2) && !stop.contains(t2.text.toLowerCase) =>
-        rel = unq(t2); insertAt = fi + 2
-      case _ => ()
-    }
 
     // classification only (plain EXPLAIN): the shape checks above decided
     // the route — stop before the index build/load and the score view
     if (dry) return Some("")
 
-    val analyzer = graft.operators.MatchText.Analyzer.byName(spec.analyzer)
-    val idx = graft.operators.MatchText.IndexCache.cached(
-      spark, s"${tablePath(table)}#${spec.name}#fielded#v$version") {
-      // durable fielded index: load if a committed store exists for this
-      // version, else build, persist, and reclaim stale versions
-      val idxRootStr = s"${tablePath(table)}/_ftindex/${spec.name}__fielded"
-      val stored = s"$idxRootStr/v$version"
-      if (graft.operators.MatchText.storedIndexExists(spark, stored)) {
-        graft.operators.MatchText.lastIndexBuild = "loaded"
-        graft.operators.MatchText.loadFieldedIndex(spark, stored, analyzer)
-      } else {
-        val built = indexDelta(table, idxRootStr, version, pk, spec.cols) match {
-          case Some((prevV, removed, added)) =>
-            graft.operators.MatchText.lastIndexBuild = "delta"
-            val oldIdx = graft.operators.MatchText
-              .loadFieldedIndex(spark, s"$idxRootStr/v$prevV", analyzer)
-            graft.operators.MatchText
-              .updateFieldedIndex(oldIdx, removed, added, pk, spec.cols)
-          case None =>
-            graft.operators.MatchText.lastIndexBuild = "full"
-            graft.operators.MatchText.buildFieldedIndex(
-              readTable(table), pk, spec.cols, analyzer)
-        }
-        try {
-          graft.operators.MatchText.saveFieldedIndex(built, stored)
-          val idxRoot = new Path(idxRootStr)
-          fs.listStatus(idxRoot).foreach { s =>
-            if (s.getPath.getName != s"v$version") fs.delete(s.getPath, true)
-          }
-        } catch { case _: Exception => () }
-        if (graft.operators.MatchText.storedIndexExists(spark, stored))
-          graft.operators.MatchText.loadFieldedIndex(spark, stored, analyzer)
-        else built
-      }
-    }
-    val boosts = spec.cols.map(c =>
+    val analyzer = MatchText.Analyzer.byName(r.spec.analyzer)
+    val idx = durableIndex[MatchText.FieldedIndex](r, "#fielded",
+        s"${tablePath(r.table)}/_ftindex/${r.spec.name}__fielded", r.spec.cols)(
+      exists = MatchText.storedIndexExists(spark, _),
+      load = MatchText.loadFieldedIndex(spark, _, analyzer),
+      patch = (prev, removed, added) => Some(MatchText.updateFieldedIndex(
+        MatchText.loadFieldedIndex(spark, prev, analyzer), removed, added,
+        r.pk, r.spec.cols)),
+      build = MatchText.buildFieldedIndex(
+        readTable(r.table), r.pk, r.spec.cols, analyzer),
+      save = MatchText.saveFieldedIndex(_, _))
+    val boosts = r.spec.cols.map(c =>
       c -> fieldsBoosts.collectFirst {
         case (f, b) if f == c.toLowerCase => b
       }.getOrElse(1.0)).toMap
-    val scores = graft.operators.MatchText
-      .scoreFieldedBM25(idx, query, boosts, method)
+    val scores = MatchText.scoreFieldedBM25(idx, query, boosts, method)
       .select(col("doc_id").as("graft_score_id"), col("score").as("graft_bm25f"))
     val view = s"graft_fielded_scores_$nextViewN"
     scores.createOrReplaceTempView(view)
 
-    // token rewrite: _score → view score, the MATCH clause → TRUE, the
-    // score join spliced in right after the FROM table (+alias)
-    val out = new StringBuilder
-    var i = 0
-    while (i < sig.length) {
-      if (i == mi) { out.append("TRUE "); i = matchEnd + 1 }
-      else {
-        if (sig(i).kind == Dialect.K.Word && sig(i).is("_score"))
-          out.append(s"$view.graft_bm25f ")
-        else out.append(sig(i).text).append(' ')
-        if (i == insertAt)
-          out.append(s"JOIN $view ON $rel.$pk = $view.graft_score_id ")
-        i += 1
+    // _score → view score, the MATCH clause → TRUE
+    Some(spliceJoin(sig, r, view, "graft_score_id") { i =>
+      if (i == mi) Some(("TRUE", matchEnd))
+      else if (sig(i).kind == Dialect.K.Word && sig(i).is("_score"))
+        Some((s"$view.graft_bm25f", i))
+      else None
+    })
+  }
+
+  /** `FROM <router table> [AS] [alias]` as a declared-index route reads
+    * it: the table, its committed version, its single-column PRIMARY KEY,
+    * the first index spec `fits` accepts, the name the statement
+    * qualifies the table by, and the token the index join follows. */
+  private case class IndexedRelation(table: String, version: Int, pk: String,
+                                     spec: VersionedTable.IndexSpec,
+                                     rel: String, spliceAt: Int)
+
+  private def indexedRelation(sig: Vector[Tok])(
+      fits: VersionedTable.IndexSpec => Boolean): Option[IndexedRelation] = {
+    val fi = sig.indexWhere(t => t.kind == Dialect.K.Word && t.is("from"))
+    if (fi < 0 || !sig.lift(fi + 1).exists(_.isWord)) return None
+    val table = unq(sig(fi + 1))
+    val version = VersionedTable.latestVersion(spark, tablePath(table))
+      .getOrElse(return None)
+    val spec = VersionedTable.indexSpecs(spark, tablePath(table)).find(fits)
+      .getOrElse(return None)
+    val pk = VersionedTable.primaryKey(spark, tablePath(table)) match {
+      case Seq(one) => one
+      case _        => return None
+    }
+    // optional alias after the table name
+    val stop = Set("where", "group", "order", "limit", "having", "join",
+      "inner", "left", "right", "full", "cross", "on", "union", "intersect",
+      "except", "offset", "window", "qualify", "lateral")
+    val (rel, spliceAt) = sig.lift(fi + 2) match {
+      case Some(t2) if t2.is("as") && sig.lift(fi + 3).exists(_.isWord) =>
+        (unq(sig(fi + 3)), fi + 3)
+      case Some(t2) if t2.isWord && !stop.contains(t2.text.toLowerCase) =>
+        (unq(t2), fi + 2)
+      case _ => (table, fi + 1)
+    }
+    Some(IndexedRelation(table, version, pk, spec, rel, spliceAt))
+  }
+
+  /** The durable declared index of `r` at its committed version, memoized
+    * per (table, index, kind, version). The reference keeps each shard's
+    * index on disk beside its data; graft writes one per committed
+    * version under `dir/v<version>`, so fresh sessions load instead of
+    * rebuilding:
+    *
+    *  1. load the stored `v<version>` when it exists;
+    *  2. else patch the newest older stored version with the rows
+    *     [[indexDelta]] reports changed (`patch` returns None to decline);
+    *  3. else build over the whole table;
+    *  4. save, then reclaim every other version — `carry` sees each stale
+    *     version first, with the patched delta's (removed, added) rows;
+    *  5. serve the reloaded store if it committed, else the built index
+    *     (a patched index references the version step 4 reclaimed).
+    *
+    * Records "loaded" | "delta" | "full" in
+    * [[StatementRouter.lastIndexBuild]]. */
+  private def durableIndex[T](r: IndexedRelation, kind: String, dir: String,
+                              cols: Seq[String])(
+      exists: String => Boolean, load: String => T,
+      patch: (String, DataFrame, DataFrame) => Option[T], build: => T,
+      save: (T, String) => Unit,
+      carry: (Path, Option[(DataFrame, DataFrame)]) => Unit = (_, _) => ()): T =
+    MatchText.IndexCache.cached(
+        spark, s"${tablePath(r.table)}#${r.spec.name}$kind#v${r.version}") {
+      val stored = s"$dir/v${r.version}"
+      if (exists(stored)) {
+        StatementRouter.lastIndexBuild.set("loaded")
+        load(stored)
+      } else {
+        val patched = indexDelta(r.table, dir, r.version, r.pk, cols).flatMap {
+          case (prev, removed, added) =>
+            patch(s"$dir/v$prev", removed, added).map((_, (removed, added)))
+        }
+        StatementRouter.lastIndexBuild.set(if (patched.isDefined) "delta" else "full")
+        val built = patched.fold(build)(_._1)
+        try {
+          save(built, stored)
+          fs.listStatus(new Path(dir)).foreach { st =>
+            if (st.getPath.getName != s"v${r.version}") {
+              carry(st.getPath, patched.map(_._2))
+              fs.delete(st.getPath, true)
+            }
+          }
+        } catch { case _: Exception => () } // search proceeds on the built index
+        if (exists(stored)) load(stored) else built
       }
     }
-    Some(out.toString.trim)
+
+  /** The score join of a declared-index route: every token is kept except
+    * where `replace(i)` gives (text, last token replaced), and
+    * `JOIN <view> ON rel.pk = <view>.<idCol>` follows the relation. */
+  private def spliceJoin(sig: Vector[Tok], r: IndexedRelation, view: String,
+                         idCol: String)(replace: Int => Option[(String, Int)]): String = {
+    val out = new StringBuilder
+    var i = 0
+    while (i < sig.length) replace(i) match {
+      case Some((text, last)) => out.append(text).append(' '); i = last + 1
+      case None =>
+        out.append(sig(i).text).append(' ')
+        if (i == r.spliceAt)
+          out.append(s"JOIN $view ON ${r.rel}.${r.pk} = $view.$idCol ")
+        i += 1
+    }
+    out.toString.trim
   }
 
   // JVM-global: per-statement temp view names (graft_match_scores_N,
@@ -952,7 +991,6 @@ class StatementRouter(spark: SparkSession, root: String) {
         !lower.contains("_version") && !lower.contains("_docid") &&
         !lower.contains("_seq_no") && !lower.contains("_primary_term")) return stmt
     val sig = Dialect.lex(stmt).filter(_.sig)
-    def isWordT(t: Tok) = t.kind == Dialect.K.Word || t.kind == Dialect.K.QId
     // the one relation the statement addresses: UPDATE's target, else a
     // single FROM/JOIN reference
     val ti =
@@ -962,7 +1000,7 @@ class StatementRouter(spark: SparkSession, root: String) {
         if (froms.length != 1) return stmt
         froms.head + 1
       }
-    if (!sig.lift(ti).exists(isWordT)) return stmt
+    if (!sig.lift(ti).exists(_.isWord)) return stmt
     val table = unq(sig(ti))
     if (VersionedTable.latestVersion(spark, tablePath(table)).isEmpty) return stmt
     val pk = VersionedTable.primaryKey(spark, tablePath(table))
@@ -1004,7 +1042,7 @@ class StatementRouter(spark: SparkSession, root: String) {
         // keep the original name usable as a qualifier unless the
         // statement aliases the relation itself
         val aliased = sig.lift(i + 1).exists(t2 => t2.is("as") ||
-          (isWordT(t2) && !fromStop.contains(t2.text.toLowerCase)))
+          (t2.isWord && !fromStop.contains(t2.text.toLowerCase)))
         if (!aliased) out.append(s" $table")
         out.append(' ')
       } else if (perRow && !isDml && t.isSym("*") && {
@@ -1012,7 +1050,7 @@ class StatementRouter(spark: SparkSession, root: String) {
         // overlay's internal seq column (the passKnnMatch precedent:
         // `v.* EXCEPT (col)` parses)
         val bare = i == 0 || sig(i - 1).is("select") || sig(i - 1).isSym(",")
-        val qualified = i >= 2 && sig(i - 1).isSym(".") && isWordT(sig(i - 2)) &&
+        val qualified = i >= 2 && sig(i - 1).isSym(".") && sig(i - 2).isWord &&
           (i == 2 || sig(i - 3).is("select") || sig(i - 3).isSym(","))
         val nextOk = sig.lift(i + 1).forall(t2 => t2.isSym(",") || t2.is("from"))
         (bare || qualified) && nextOk
@@ -1070,13 +1108,12 @@ class StatementRouter(spark: SparkSession, root: String) {
     * older than the walk floor resolve to the floor — an upper bound on
     * the true last write, so any truncation degrades conservatively
     * toward the table-version approximation (extra false conflicts,
-    * never a lost update). Result is localCheckpointed and memoized per
-    * (table, version). */
-  private val seqNoMaps =
-    new java.util.concurrent.ConcurrentHashMap[String, Option[DataFrame]]()
-  private def seqNoMapDf(table: String, version: Int): Option[DataFrame] =
-    seqNoMaps.computeIfAbsent(s"$table#$version", _ => {
-      val path = tablePath(table)
+    * never a lost update). Result is memoized per (table path, version)
+    * in [[Memo]], so DROP, RENAME, SWAP and vacuum drop it with the
+    * table. */
+  private def seqNoMapDf(table: String, version: Int): Option[DataFrame] = {
+    val path = tablePath(table)
+    Memo(spark, s"seqno#$path#v$version") {
       val pk = VersionedTable.primaryKey(spark, path)
       if (pk.isEmpty || VersionedTable.partitionSpec(spark, path).isDefined)
         None
@@ -1152,7 +1189,8 @@ class StatementRouter(spark: SparkSession, root: String) {
           }
         built
       } catch { case scala.util.control.NonFatal(_) => None }
-    })
+    }
+  }
 
   /** Cold-start seq resolution: walk committed snapshots newest-first
     * (≤64 or until a vacuumed version), one narrow (pk-concat, xxhash64)
@@ -1384,7 +1422,6 @@ class StatementRouter(spark: SparkSession, root: String) {
   private def routeIndexedScore(sql: String, dry: Boolean = false): Option[String] = {
     if (!sql.toLowerCase.contains("graft_match_score")) return None
     val sig = Dialect.lex(sql).filter(_.sig)
-    def isWord(t: Tok) = t.kind == Dialect.K.Word || t.kind == Dialect.K.QId
 
     // the scored MATCH: graft_match_score(target, 'query')
     val si = sig.indexWhere(t => t.kind == Dialect.K.Word && t.is("graft_match_score"))
@@ -1398,33 +1435,10 @@ class StatementRouter(spark: SparkSession, root: String) {
     val query = unq(sParts(1).head)
 
     // FROM <router table with a covering index spec and a 1-column PK>
-    val fi = sig.indexWhere(t => t.kind == Dialect.K.Word && t.is("from"))
-    if (fi < 0 || !sig.lift(fi + 1).exists(isWord)) return None
-    val table = unq(sig(fi + 1))
-    if (VersionedTable.latestVersion(spark, tablePath(table)).isEmpty) return None
-    val spec = VersionedTable.indexSpecs(spark, tablePath(table)).find(s =>
-      !s.analyzer.startsWith("vector:") &&
-        (s.name.equalsIgnoreCase(targetCol) ||
-          (s.cols.length == 1 && s.cols.head.equalsIgnoreCase(targetCol))))
+    val r = indexedRelation(sig)(s => !s.analyzer.startsWith("vector:") &&
+      (s.name.equalsIgnoreCase(targetCol) ||
+        (s.cols.length == 1 && s.cols.head.equalsIgnoreCase(targetCol))))
       .getOrElse(return None)
-    val pk = VersionedTable.primaryKey(spark, tablePath(table)) match {
-      case Seq(one) => one
-      case _        => return None
-    }
-
-    // optional alias after the table name
-    val stop = Set("where", "group", "order", "limit", "having", "join",
-      "inner", "left", "right", "full", "cross", "on", "union", "intersect",
-      "except", "offset", "window", "qualify", "lateral")
-    var insertAt = fi + 1
-    var rel = table
-    sig.lift(fi + 2) match {
-      case Some(t2) if t2.is("as") && sig.lift(fi + 3).exists(isWord) =>
-        rel = unq(sig(fi + 3)); insertAt = fi + 3
-      case Some(t2) if isWord(t2) && !stop.contains(t2.text.toLowerCase) =>
-        rel = unq(t2); insertAt = fi + 2
-      case _ => ()
-    }
 
     // token-shape bails BEFORE the index build (a bailing statement must
     // neither pay for nor leak a freshly built index + score view):
@@ -1464,78 +1478,41 @@ class StatementRouter(spark: SparkSession, root: String) {
     // classification only (plain EXPLAIN): stop before the build
     if (dry) return Some("")
 
-    // scores from the declared index at the table's committed version
-    val version = VersionedTable.latestVersion(spark, tablePath(table)).get
-    val analyzer = graft.operators.MatchText.Analyzer.byName(spec.analyzer)
-    val idx = graft.operators.MatchText.IndexCache.cached(
-      spark, s"${tablePath(table)}#${spec.name}#v$version") {
-      // durable index: the reference keeps its Lucene index on disk next
-      // to the shard; graft's twin is term-bucketed Parquet under the
-      // table root, written once per (index, committed version) — fresh
-      // sessions LOAD instead of rebuilding, and searches prune to the
-      // query terms' buckets
-      val idxRootStr = s"${tablePath(table)}/_ftindex/${spec.name}"
-      val stored = s"$idxRootStr/v$version"
-      def withConcat(df: DataFrame): (DataFrame, String) =
-        if (spec.cols.length == 1) (df, spec.cols.head)
-        else (df.withColumn("graft_ft_concat",
-          concat_ws(" ", spec.cols.map(col): _*)), "graft_ft_concat")
-      if (graft.operators.MatchText.storedIndexExists(spark, stored)) {
-        graft.operators.MatchText.lastIndexBuild = "loaded"
-        graft.operators.MatchText.loadIndex(spark, stored, analyzer)
-      } else {
-        // incremental maintenance first (reference: DML updates the
-        // per-shard Lucene segments; graft patches the stored postings
-        // from the changed partitions only), full build otherwise
-        val built = indexDelta(table, idxRootStr, version, pk, spec.cols) match {
-          case Some((prevV, removed, added)) =>
-            graft.operators.MatchText.lastIndexBuild = "delta"
-            val oldIdx = graft.operators.MatchText
-              .loadIndex(spark, s"$idxRootStr/v$prevV", analyzer)
-            val (adf, textCol) = withConcat(added)
-            graft.operators.MatchText.updateIndex(oldIdx, removed, adf, pk, textCol)
-          case None =>
-            graft.operators.MatchText.lastIndexBuild = "full"
-            val (df, textCol) = withConcat(readTable(table))
-            graft.operators.MatchText.buildIndex(df, pk, textCol, analyzer)
-        }
-        try {
-          graft.operators.MatchText.saveIndex(built, stored)
-          // stale versions of THIS index are dead once the new one commits
-          val idxRoot = new Path(idxRootStr)
-          fs.listStatus(idxRoot).foreach { s =>
-            if (s.getPath.getName != s"v$version") fs.delete(s.getPath, true)
-          }
-        } catch { case _: Exception => () } // search proceeds on the built index
-        // a delta index references the previous version's parquet, which
-        // the cleanup just reclaimed — serve from the committed store
-        if (graft.operators.MatchText.storedIndexExists(spark, stored))
-          graft.operators.MatchText.loadIndex(spark, stored, analyzer)
-        else built
-      }
-    }
+    // scores from the declared index at the table's committed version:
+    // term-bucketed Parquet under the table root, so searches prune to
+    // the query terms' buckets; DML patches the stored postings from the
+    // changed rows only (reference: DML updates the per-shard Lucene
+    // segments)
+    val analyzer = MatchText.Analyzer.byName(r.spec.analyzer)
+    def withConcat(df: DataFrame): (DataFrame, String) =
+      if (r.spec.cols.length == 1) (df, r.spec.cols.head)
+      else (df.withColumn("graft_ft_concat",
+        concat_ws(" ", r.spec.cols.map(col): _*)), "graft_ft_concat")
+    val idx = durableIndex[MatchText.InvertedIndex](r, "",
+        s"${tablePath(r.table)}/_ftindex/${r.spec.name}", r.spec.cols)(
+      exists = MatchText.storedIndexExists(spark, _),
+      load = MatchText.loadIndex(spark, _, analyzer),
+      patch = (prev, removed, added) => {
+        val (adf, textCol) = withConcat(added)
+        Some(MatchText.updateIndex(MatchText.loadIndex(spark, prev, analyzer),
+          removed, adf, r.pk, textCol))
+      },
+      build = {
+        val (df, textCol) = withConcat(readTable(r.table))
+        MatchText.buildIndex(df, r.pk, textCol, analyzer)
+      },
+      save = MatchText.saveIndex(_, _))
     // non-colliding column names: the base table may have doc_id/score
-    val scores = graft.operators.MatchText.scoreBM25(idx, query)
+    val scores = MatchText.scoreBM25(idx, query)
       .select(col("doc_id").as("graft_score_id"), col("score").as("graft_bm25"))
     val view = s"graft_match_scores_$nextViewN"
     scores.createOrReplaceTempView(view)
 
-    // token rewrite: score calls → view.score, match predicate → TRUE,
-    // join spliced in right after the FROM table (+alias)
-    val out = new StringBuilder
-    var i = 0
-    while (i < sig.length) {
-      (isScoreCall(i), isMatchCall(i)) match {
-        case (Some(c), _) => out.append(s"$view.graft_bm25 "); i = c + 1
-        case (_, Some(c)) => out.append("TRUE "); i = c + 1
-        case _ =>
-          out.append(sig(i).text).append(' ')
-          if (i == insertAt)
-            out.append(s"JOIN $view ON $rel.$pk = $view.graft_score_id ")
-          i += 1
-      }
-    }
-    Some(out.toString.trim)
+    // score calls → view.score, match predicate → TRUE
+    Some(spliceJoin(sig, r, view, "graft_score_id") { i =>
+      isScoreCall(i).map(c => (s"$view.graft_bm25", c))
+        .orElse(isMatchCall(i).map(c => ("TRUE", c)))
+    })
   }
 
   /** SQL `knn_match` through a DECLARED vector index (reference
@@ -1573,7 +1550,6 @@ class StatementRouter(spark: SparkSession, root: String) {
   private def routeKnnStored(sql: String, dry: Boolean = false): Option[String] = {
     if (!sql.toLowerCase.contains("knn_match")) return None
     val sig = Dialect.lex(sql).filter(_.sig)
-    def isWord(t: Tok) = t.kind == Dialect.K.Word || t.kind == Dialect.K.QId
     val ki = sig.indexWhere(t => t.kind == Dialect.K.Word && t.is("knn_match"))
     if (ki < 0 || !sig.lift(ki + 1).exists(_.isSym("("))) return None
     if (sig.indexWhere(t => t.kind == Dialect.K.Word && t.is("knn_match"), ki + 1) >= 0)
@@ -1610,35 +1586,12 @@ class StatementRouter(spark: SparkSession, root: String) {
     }
 
     // FROM <router table with a vector index and a 1-column PK>
-    val fi = sig.indexWhere(t => t.kind == Dialect.K.Word && t.is("from"))
-    if (fi < 0 || !sig.lift(fi + 1).exists(isWord)) return None
-    val table = unq(sig(fi + 1))
-    val version = VersionedTable.latestVersion(spark, tablePath(table))
-      .getOrElse(return None)
-    val spec = VersionedTable.indexSpecs(spark, tablePath(table)).find(s =>
+    val r = indexedRelation(sig)(s =>
       s.analyzer.startsWith("vector:") && s.cols.length == 1 &&
-        (s.name.equalsIgnoreCase(targetCol) ||
-          s.cols.head.equalsIgnoreCase(targetCol)))
+        (s.name.equalsIgnoreCase(targetCol) || s.cols.head.equalsIgnoreCase(targetCol)))
       .getOrElse(return None)
+    val IndexedRelation(table, version, pk, spec, rel, _) = r
     val vecCol = spec.cols.head
-    val pk = VersionedTable.primaryKey(spark, tablePath(table)) match {
-      case Seq(one) => one
-      case _        => return None
-    }
-
-    // optional alias after the table name (routeIndexedScore's shape)
-    val stop = Set("where", "group", "order", "limit", "having", "join",
-      "inner", "left", "right", "full", "cross", "on", "union", "intersect",
-      "except", "offset", "window", "qualify", "lateral")
-    var insertAt = fi + 1
-    var rel = table
-    sig.lift(fi + 2) match {
-      case Some(t2) if t2.is("as") && sig.lift(fi + 3).exists(isWord) =>
-        rel = unq(sig(fi + 3)); insertAt = fi + 3
-      case Some(t2) if isWord(t2) && !stop.contains(t2.text.toLowerCase) =>
-        rel = unq(t2); insertAt = fi + 2
-      case _ => ()
-    }
 
     // WHERE: depth-0 AND conjuncts; the knn_match call must stand alone
     // as one of them, the REST become the docset pre-filter (reference
@@ -1761,6 +1714,7 @@ class StatementRouter(spark: SparkSession, root: String) {
     // ADC tables are built per (query, probed bucket) — same store
     // layout, higher recall at identical byte cost (Jégou 2011 §V.A)
     val isRes = isPq && specParts.length >= 7 && specParts(6) == "res"
+    import spark.implicits._
     val idxRootStr = s"${tablePath(table)}/_vecindex/${spec.name}"
     val stored = s"$idxRootStr/v$version"
     def autoCentroids(n: Long): Int =
@@ -1769,179 +1723,106 @@ class StatementRouter(spark: SparkSession, root: String) {
       // (Similarity.embeddingNearDupPairs's argument)
       if (centStr.toInt > 0) centStr.toInt
       else math.max(16L, math.min(65536L, n * nprobe / 256)).toInt
-    // rows changed by the pending delta patch (|removed| + |added|),
-    // set by the delta build branches for the curve-staleness accounting
-    var pendingDeltaRows: () => Long = () => 0L
-    def persistAndReload[T](writeCodes: => Unit, reload: => T, built: T): T = {
-      try {
-        writeCodes
-        fs.listStatus(new Path(idxRootStr)).foreach { s0 =>
-          if (s0.getPath.getName != s"v$version") {
-            // delta patches keep centroids AND codebooks fixed, so the
-            // previous version's recall-calibration curve stays valid
-            // for ASSIGNMENT — but the recall it measured drifts as the
-            // corpus churns. Copy it forward only while cumulative churn
-            // stays under 20% of the corpus the curve was calibrated
-            // against (tracked in calibmeta); past that, leave the curve
-            // absent so the next declared-recall query recalibrates
-            // (ADVICE r10: an unbounded copy-forward can under-probe a
-            // recall=0.9 index indefinitely). Full rebuilds retrain
-            // centroids, so they always fall through to fresh
-            // calibration (no prior curve survives a "full" build).
-            val prevCurve = new Path(s0.getPath, "recallcurve")
-            val curCurve = new Path(s"$stored/recallcurve")
-            if (StatementRouter.lastVecIndexBuild.get() == "delta" &&
-                fs.exists(prevCurve) && !fs.exists(curCurve)) {
-              val prevMeta = new Path(s0.getPath, "calibmeta")
-              // indexes calibrated before metadata existed carry no
-              // base size: treat as never-stale (legacy behavior)
-              val (baseN, cum, smp) =
-                if (fs.exists(prevMeta)) {
-                  val r = spark.read.parquet(prevMeta.toString).collect()(0)
-                  (r.getLong(0), r.getLong(1), r.getInt(2))
-                } else (Long.MaxValue, 0L, 32)
-              val newCum = cum + pendingDeltaRows()
-              if (baseN == Long.MaxValue || newCum <= baseN / 5) {
-                org.apache.hadoop.fs.FileUtil.copy(fs, prevCurve, fs,
-                  curCurve, false, spark.sparkContext.hadoopConfiguration)
-                import spark.implicits._
-                Seq((baseN, newCum, smp))
-                  .toDF("base_n", "cum_delta", "samples").coalesce(1)
-                  .write.mode("overwrite").parquet(s"$stored/calibmeta")
-              }
-            }
-            fs.delete(s0.getPath, true)
+    // delta patches keep centroids AND codebooks fixed, so the previous
+    // version's recall-calibration curve stays valid for ASSIGNMENT — but
+    // the recall it measured drifts as the corpus churns. Copy it forward
+    // only while cumulative churn stays under 20% of the corpus the curve
+    // was calibrated against (tracked in calibmeta); past that, leave the
+    // curve absent so the next declared-recall query recalibrates (an
+    // unbounded copy-forward can under-probe a recall=0.9 index
+    // indefinitely). Full rebuilds retrain centroids, so no prior curve
+    // survives them and they always fall through to fresh calibration.
+    def carryRecallCurve(stale: Path, patched: Option[(DataFrame, DataFrame)]): Unit =
+      patched.foreach { case (removed, added) =>
+        val prevCurve = new Path(stale, "recallcurve")
+        val curCurve = new Path(s"$stored/recallcurve")
+        if (fs.exists(prevCurve) && !fs.exists(curCurve)) {
+          val prevMeta = new Path(stale, "calibmeta")
+          // indexes calibrated before metadata existed carry no base
+          // size: treat as never-stale (legacy behavior)
+          val (baseN, cum, smp) =
+            if (fs.exists(prevMeta)) {
+              val row = spark.read.parquet(prevMeta.toString).collect()(0)
+              (row.getLong(0), row.getLong(1), row.getInt(2))
+            } else (Long.MaxValue, 0L, 32)
+          val newCum = cum + removed.count() + added.count()
+          if (baseN == Long.MaxValue || newCum <= baseN / 5) {
+            org.apache.hadoop.fs.FileUtil.copy(fs, prevCurve, fs,
+              curCurve, false, spark.sparkContext.hadoopConfiguration)
+            Seq((baseN, newCum, smp))
+              .toDF("base_n", "cum_delta", "samples").coalesce(1)
+              .write.mode("overwrite").parquet(s"$stored/calibmeta")
           }
         }
-      } catch { case _: Exception => () } // search proceeds on the built index
-      if (fs.exists(new Path(s"$stored/codes"))) reload else built
-    }
+      }
 
-    import spark.implicits._
     val queries = Seq((0L, queryVec)).toDF("vec_id", "embedding")
     // index handles are acquired ONCE (memoized per version) and hoisted
     // out of the search dispatch so the recall-curve calibration below
-    // runs on the exact handles the statement search uses
-    val pqHandles: Option[(DataFrame, DataFrame, Array[Array[Array[Float]]])] =
-      if (!isPq) None
-      else Some(graft.operators.MatchText
-            .IndexCache.cached[(DataFrame, DataFrame, Array[Array[Array[Float]]])](
-              spark, s"${tablePath(table)}#${spec.name}#vecpq#v$version") {
-            if (fs.exists(new Path(s"$stored/codes"))) {
-              StatementRouter.lastVecIndexBuild.set("loaded")
-              val (c, cents) = graft.operators.Similarity
-                .loadQuantizedIndex(spark, stored)
-              (c, cents, graft.operators.Similarity
-                .loadPqCodebooks(spark, s"$stored/codebooks"))
-            } else {
-              val corpus = readTable(table)
-              val built = indexDelta(table, idxRootStr, version, pk, Seq(vecCol)) match {
-                case Some((prevV, removed, added))
-                    if fs.exists(new Path(s"$idxRootStr/v$prevV/codes")) &&
-                       fs.exists(new Path(s"$idxRootStr/v$prevV/codebooks")) =>
-                  StatementRouter.lastVecIndexBuild.set("delta")
-                  pendingDeltaRows = () => removed.count() + added.count()
-                  val (oldCodes, cents) = graft.operators.Similarity
-                    .loadQuantizedIndex(spark, s"$idxRootStr/v$prevV")
-                  val cb = graft.operators.Similarity
-                    .loadPqCodebooks(spark, s"$idxRootStr/v$prevV/codebooks")
-                  val patched =
-                    if (isRes) graft.operators.Similarity.updatePqIndexResidual(
-                      oldCodes, cents, cb, removed, added, pk, vecCol)
-                    else graft.operators.Similarity.updatePqIndex(
-                      oldCodes, cents, cb, removed, added, pk, vecCol)
-                  (patched, cents, cb)
-                case _ =>
-                  StatementRouter.lastVecIndexBuild.set("full")
-                  val nc = autoCentroids(corpus.count())
-                  val (bucketed, cents) = graft.operators.Similarity
-                    .kmeansBucketize(corpus, numCentroids = nc, iters = 2,
-                      idCol = pk, vecCol = vecCol)
-                  val cb =
-                    if (isRes) graft.operators.Similarity
-                      .pqTrainResidual(bucketed, cents, m = pqM, ksub = pqKsub)
-                    else graft.operators.Similarity
-                      .pqTrain(corpus, m = pqM, ksub = pqKsub,
-                        idCol = pk, vecCol = vecCol)
-                  val codes0 =
-                    if (isRes) graft.operators.Similarity
-                      .ivfPqIndexResidual(bucketed, cents, cb)
-                    else graft.operators.Similarity.ivfPqIndex(bucketed, cb)
-                  (codes0, cents, cb)
-              }
-              persistAndReload(
-                writeCodes = {
-                  built._1.write.mode("overwrite").partitionBy("bucket")
-                    .parquet(s"$stored/codes")
-                  built._2.write.mode("overwrite").parquet(s"$stored/centroids")
-                  graft.operators.Similarity
-                    .savePqCodebooks(spark, built._3, s"$stored/codebooks")
-                },
-                reload = {
-                  val (c, cents) = graft.operators.Similarity
-                    .loadQuantizedIndex(spark, stored)
-                  (c, cents, graft.operators.Similarity
-                    .loadPqCodebooks(spark, s"$stored/codebooks"))
-                },
-                built)
-            }
-          })
-    val int8Handles: Option[(DataFrame, DataFrame)] =
-      if (isPq) None
-      else Some(graft.operators.MatchText.IndexCache
-            .cached[(DataFrame, DataFrame)](
-              spark, s"${tablePath(table)}#${spec.name}#vec#v$version") {
-            if (fs.exists(new Path(s"$stored/codes"))) {
-              StatementRouter.lastVecIndexBuild.set("loaded")
-              graft.operators.Similarity.loadQuantizedIndex(spark, stored)
-            } else {
-              val corpus = readTable(table)
-              val built: (DataFrame, DataFrame) =
-                indexDelta(table, idxRootStr, version, pk, Seq(vecCol)) match {
-                  case Some((prevV, removed, added))
-                      if fs.exists(new Path(s"$idxRootStr/v$prevV/codes")) =>
-                    StatementRouter.lastVecIndexBuild.set("delta")
-                    pendingDeltaRows = () => removed.count() + added.count()
-                    val (oldCodes, cents) = graft.operators.Similarity
-                      .loadQuantizedIndex(spark, s"$idxRootStr/v$prevV")
-                    (graft.operators.Similarity.updateQuantizedIndex(
-                      oldCodes, cents, removed, added, pk, vecCol), cents)
-                  case _ =>
-                    StatementRouter.lastVecIndexBuild.set("full")
-                    val nc = autoCentroids(corpus.count())
-                    val (bucketed, cents) = graft.operators.Similarity
-                      .kmeansBucketize(corpus, numCentroids = nc, iters = 2,
-                        idCol = pk, vecCol = vecCol)
-                    (graft.operators.Similarity.quantizedIndex(bucketed), cents)
-                }
-              persistAndReload(
-                writeCodes = {
-                  built._1.write.mode("overwrite").partitionBy("bucket")
-                    .parquet(s"$stored/codes")
-                  built._2.write.mode("overwrite").parquet(s"$stored/centroids")
-                },
-                reload = graft.operators.Similarity
-                  .loadQuantizedIndex(spark, stored),
-                built)
-            }
-          })
+    // runs on the exact handles the statement search uses; PQ indexes
+    // carry their codebooks beside the codes and centroids
+    def loadVec(d: String): (DataFrame, DataFrame, Option[Array[Array[Array[Float]]]]) = {
+      val (codes, cents) = Similarity.loadQuantizedIndex(spark, d)
+      (codes, cents,
+        if (isPq) Some(Similarity.loadPqCodebooks(spark, s"$d/codebooks")) else None)
+    }
+    val (codes, centroids, codebooks) =
+      durableIndex[(DataFrame, DataFrame, Option[Array[Array[Array[Float]]]])](
+          r, if (isPq) "#vecpq" else "#vec", idxRootStr, Seq(vecCol))(
+        exists = d => fs.exists(new Path(s"$d/codes")),
+        load = loadVec,
+        // assign the changed rows to the fixed centroids (and codebooks)
+        patch = (prev, removed, added) =>
+          if (!fs.exists(new Path(s"$prev/codes")) ||
+              (isPq && !fs.exists(new Path(s"$prev/codebooks")))) None
+          else {
+            val (oldCodes, cents, cb) = loadVec(prev)
+            Some((cb match {
+              case Some(b) if isRes => Similarity.updatePqIndexResidual(
+                oldCodes, cents, b, removed, added, pk, vecCol)
+              case Some(b) => Similarity.updatePqIndex(
+                oldCodes, cents, b, removed, added, pk, vecCol)
+              case None => Similarity.updateQuantizedIndex(
+                oldCodes, cents, removed, added, pk, vecCol)
+            }, cents, cb))
+          },
+        build = {
+          val corpus = readTable(table)
+          val (bucketed, cents) = Similarity.kmeansBucketize(corpus,
+            numCentroids = autoCentroids(corpus.count()), iters = 2,
+            idCol = pk, vecCol = vecCol)
+          if (!isPq) (Similarity.quantizedIndex(bucketed), cents, None)
+          else if (isRes) {
+            val cb = Similarity.pqTrainResidual(bucketed, cents, m = pqM, ksub = pqKsub)
+            (Similarity.ivfPqIndexResidual(bucketed, cents, cb), cents, Some(cb))
+          } else {
+            val cb = Similarity.pqTrain(corpus, m = pqM, ksub = pqKsub,
+              idCol = pk, vecCol = vecCol)
+            (Similarity.ivfPqIndex(bucketed, cb), cents, Some(cb))
+          }
+        },
+        save = { case ((c, cents, cb), d) =>
+          c.write.mode("overwrite").partitionBy("bucket").parquet(s"$d/codes")
+          cents.write.mode("overwrite").parquet(s"$d/centroids")
+          cb.foreach(Similarity.savePqCodebooks(spark, _, s"$d/codebooks"))
+        },
+        carry = carryRecallCurve)
     /** Raw (qid, cid, sim, rk) hits for ANY query set — the statement
       * search and the calibration rungs share this one dispatch. */
     def searchRaw(np: Int, qdf: DataFrame, kk: Int,
                   filt: Option[DataFrame]): DataFrame =
-      pqHandles match {
-        case Some((codes, centroids, codebooks)) =>
+      codebooks match {
+        case Some(cb) =>
           if (isRes)
-            graft.operators.Similarity.ivfPqKnnStoredResidual(
-              codes, centroids, codebooks, readTable(table), qdf, kk, np,
+            Similarity.ivfPqKnnStoredResidual(
+              codes, centroids, cb, readTable(table), qdf, kk, np,
               idCol = pk, vecCol = vecCol, candidateFilter = filt)
           else
-            graft.operators.Similarity.ivfPqKnnStored(
-              codes, centroids, codebooks, readTable(table), qdf, kk, np,
+            Similarity.ivfPqKnnStored(
+              codes, centroids, cb, readTable(table), qdf, kk, np,
               idCol = pk, vecCol = vecCol, candidateFilter = filt)
         case None =>
-          val (codes, centroids) = int8Handles.get
-          graft.operators.Similarity.ivfKnnStored(
+          Similarity.ivfKnnStored(
             codes, centroids, readTable(table), qdf, kk, np,
             idCol = pk, vecCol = vecCol, metric = "l2",
             candidateFilter = filt)
@@ -1968,8 +1849,7 @@ class StatementRouter(spark: SparkSession, root: String) {
           .cached[java.lang.Integer](
             spark, s"${tablePath(table)}#${spec.name}#autonp#v$version") {
           val curvePath = s"$stored/recallcurve"
-          val cents = pqHandles.map(_._2).orElse(int8Handles.map(_._2)).get
-          val centCount = cents.count().toInt
+          val centCount = centroids.count().toInt
           if (!fs.exists(new Path(curvePath))) {
             val corpus = readTable(table)
             val corpusN = corpus.count()
@@ -2057,21 +1937,13 @@ class StatementRouter(spark: SparkSession, root: String) {
     val view = s"graft_knn_hits_$knnN"
     hits.createOrReplaceTempView(view)
 
-    val out = new StringBuilder
-    var i = 0
-    while (i < sig.length) {
-      if (i == ki) { out.append("TRUE "); i = close + 1 }
-      else {
-        val t = sig(i)
-        if (t.kind == Dialect.K.Word && t.is("_score"))
-          out.append(s"$view.graft_knn_sim ")
-        else out.append(t.text).append(' ')
-        if (i == insertAt)
-          out.append(s"JOIN $view ON $rel.$pk = $view.graft_knn_id ")
-        i += 1
-      }
-    }
-    Some(out.toString.trim)
+    // the knn_match call → TRUE, _score → the hit's similarity
+    Some(spliceJoin(sig, r, view, "graft_knn_id") { i =>
+      if (i == ki) Some(("TRUE", close))
+      else if (sig(i).kind == Dialect.K.Word && sig(i).is("_score"))
+        Some((s"$view.graft_knn_sim", i))
+      else None
+    })
   }
 
   /** MATCH through declared fulltext indexes (reference MatchPredicate
@@ -2790,20 +2662,28 @@ class StatementRouter(spark: SparkSession, root: String) {
     val gzip = opts.get("compression").contains("gzip")
     if (isFrom) {
       val target = readTable(name)
+      // PRIMARY KEY (reference: a duplicate key fails its row, not the
+      // COPY): of the file rows repeating a key only the first is read,
+      // and rows whose key the table holds are skipped
+      val pk = VersionedTable.primaryKey(spark, tablePath(name))
       val (rows, fileSummary) =
         if (fmt == "csv")
           sources.CopyOps.copyFromCsv(spark, target.schema,
-            opts.getOrElse("header", "true").toBoolean, path)
-        else sources.CopyOps.copyFromJson(spark, target.schema, path)
+            opts.getOrElse("header", "true").toBoolean, path, pk)
+        else sources.CopyOps.copyFromJson(spark, target.schema, path, pk)
       // generated columns recompute for file rows (reference: "computed as
       // needed for every INSERT, UPDATE and COPY FROM"); CHECK/NOT NULL
       // enforced like INSERT. Files carrying a generated column get it
       // recomputed (deterministic expressions yield the same value).
       val checked = enforceOnInsert(name, rows, Set.empty)
-      val n = checked.count()
+      // materialized once: the count, the touched partitions and the
+      // write would each re-run the dedup window and the anti-join
+      val imported =
+        if (pk.isEmpty) checked else Dml.absent(target, checked, pk).localCheckpoint()
+      val n = imported.count()
       // an append only changes the incoming rows' partitions
-      writeTable(name, Dml.insertInto(target, checked),
-        partitionTouch(name, checked))
+      writeTable(name, Dml.insertInto(target, imported),
+        partitionTouch(name, imported))
       if (ts.exists(_.is("summary"))) fileSummary else summary(n)
     } else {
       val cur = readTable(name)
@@ -3440,7 +3320,7 @@ class StatementRouter(spark: SparkSession, root: String) {
     }
     require(nameParts.nonEmpty && i < sig.length, "CREATE FUNCTION needs name(args)")
     val fname = nameParts.last
-    val close = Dialect.matchFwd(sig, i)
+    val close = matchFwd(sig, i)
     require(close > i, "unbalanced CREATE FUNCTION argument list")
     val argTypes: Seq[String] = Dialect.splitCommas(sig.slice(i + 1, close)).map { d =>
       val from =
@@ -3565,7 +3445,7 @@ class StatementRouter(spark: SparkSession, root: String) {
     // when the name is overloaded; a bare name drops the only overload
     val types: Option[Seq[String]] =
       if (i < sig.length && sig(i).isSym("(")) {
-        val close = Dialect.matchFwd(sig, i)
+        val close = matchFwd(sig, i)
         Some(Dialect.splitCommas(sig.slice(i + 1, close))
           .filter(_.nonEmpty).map(d => Dialect.mapType(d, 0)._1))
       } else None
@@ -4589,16 +4469,6 @@ class StatementRouter(spark: SparkSession, root: String) {
     val l = b.result(); if (l.nonEmpty) out += l
     out.toSeq
   }
-
-  private def matchFwd(ts: Vector[Tok], i: Int): Int = {
-    var depth = 0; var k = i
-    while (k < ts.length) {
-      if (ts(k).isSym("(")) depth += 1
-      else if (ts(k).isSym(")")) { depth -= 1; if (depth == 0) return k }
-      k += 1
-    }
-    -1
-  }
 }
 
 object StatementRouter {
@@ -4607,14 +4477,16 @@ object StatementRouter {
   /** Monotonic id for per-statement temp views — JVM-global so views from
     * different router instances over one SparkSession never collide. */
   private[graft] val viewSeq = new java.util.concurrent.atomic.AtomicLong(0)
-  /** How the last knn_match stored-index resolution happened —
-    * "loaded" | "delta" | "full"; spec-observability only.
+  /** How the last declared index a statement resolved (fielded or
+    * single-column fulltext, int8 or PQ vector) came to be — "loaded" |
+    * "delta" | "full"; "" when the statement resolved none or hit the
+    * in-session memo. Set by [[durableIndex]], reset per SELECT.
     *
-    * All four provenance slots are THREAD-LOCAL: a statement's route is a
+    * All the provenance slots are THREAD-LOCAL: a statement's route is a
     * per-statement fact, and routers sharing one SparkSession execute on
     * their client threads — a JVM-global slot would let a concurrent
     * statement's provenance bleed into another session's EXPLAIN header. */
-  private[graft] val lastVecIndexBuild: ThreadLocal[String] =
+  private[graft] val lastIndexBuild: ThreadLocal[String] =
     ThreadLocal.withInitial(() => "")
   /** Which knn_match route served the last statement —
     * "stored-index" | "stored-index-filtered" (set only when the stored

@@ -1177,10 +1177,6 @@ object MatchText {
       if (statsRow.isNullAt(1)) 0.0 else statsRow.getDouble(1), analyzer)
   }
 
-  /** Which code path produced the most recent index for a scored route —
-    * "loaded" | "full" | "delta". Test introspection only. */
-  @volatile var lastIndexBuild: String = ""
-
   /** Incremental index maintenance (the delta twin of a full
     * [[buildIndex]]): drop `removedIds`' postings from `old`, merge in a
     * freshly-built index over `added`, and patch the per-term document

@@ -1,6 +1,7 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
@@ -26,38 +27,46 @@ object CopyOps {
     * `schema` is required for a stable error channel (schema-on-read with a
     * corrupt-record column — same contract as the reference's typed target
     * table). Paths may be globs; .gz files decompress transparently. */
-  def copyFromJson(spark: SparkSession, schema: StructType, paths: String*): (DataFrame, DataFrame) = {
+  def copyFromJson(spark: SparkSession, schema: StructType, path: String,
+                   firstPerKey: Seq[String] = Nil): (DataFrame, DataFrame) = {
     val withCorrupt = StructType(schema.fields :+ StructField(CorruptCol, StringType, nullable = true))
     val raw = spark.read
       .schema(withCorrupt)
       .option("mode", "PERMISSIVE")
       .option("columnNameOfCorruptRecord", CorruptCol)
-      .json(paths: _*)
-      .withColumn("_file", input_file_name())
-    split(raw, schema)
+      .json(path)
+    split(raw, schema, firstPerKey)
   }
 
   /** COPY FROM csv (with header). Same contract as [[copyFromJson]]. */
-  def copyFromCsv(spark: SparkSession, schema: StructType, header: Boolean, paths: String*): (DataFrame, DataFrame) = {
+  def copyFromCsv(spark: SparkSession, schema: StructType, header: Boolean, path: String,
+                  firstPerKey: Seq[String] = Nil): (DataFrame, DataFrame) = {
     val withCorrupt = StructType(schema.fields :+ StructField(CorruptCol, StringType, nullable = true))
     val raw = spark.read
       .schema(withCorrupt)
       .option("header", header.toString)
       .option("mode", "PERMISSIVE")
       .option("columnNameOfCorruptRecord", CorruptCol)
-      .csv(paths: _*)
-      .withColumn("_file", input_file_name())
-    split(raw, schema)
+      .csv(path)
+    split(raw, schema, firstPerKey)
   }
 
   /** (good rows without bookkeeping cols, RETURN SUMMARY per file).
     * The parsed scan is cached: Spark disallows plans that read ONLY the
     * corrupt-record column from a raw file scan (the summary aggregation
-    * would), and the cache also keeps COPY single-pass over the input. */
-  private def split(raw0: DataFrame, schema: StructType): (DataFrame, DataFrame) = {
-    val raw = raw0.cache()
-    val good = raw.filter(col(CorruptCol).isNull)
-      .select(schema.fieldNames.map(col).toSeq: _*)
+    * would), and the cache also keeps COPY single-pass over the input.
+    * With `firstPerKey`, good rows repeating a key keep only the first in
+    * file order (file path, then position in the file) — the reference
+    * imports a PRIMARY KEY once and fails the later rows. */
+  private def split(raw0: DataFrame, schema: StructType,
+                    firstPerKey: Seq[String]): (DataFrame, DataFrame) = {
+    val raw = raw0.withColumn("_file", input_file_name())
+      .withColumn("_pos", monotonically_increasing_id()).cache()
+    val parsed = raw.filter(col(CorruptCol).isNull)
+    val good = (if (firstPerKey.isEmpty) parsed else {
+      val w = Window.partitionBy(firstPerKey.map(col): _*).orderBy(col("_file"), col("_pos"))
+      parsed.withColumn("_rn", row_number().over(w)).filter(col("_rn") === 1)
+    }).select(schema.fieldNames.map(col).toSeq: _*)
     val summary = raw.groupBy(col("_file").as("uri"))
       .agg(
         count(when(col(CorruptCol).isNull, 1)).as("success_count"),

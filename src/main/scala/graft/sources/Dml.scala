@@ -24,7 +24,8 @@ object Dml {
 
   /** The rows of `rows` whose key is absent from `target`: one anti-join
     * (broadcast when small), shared by ON CONFLICT DO NOTHING, its
-    * RETURNING rows and the plain-INSERT duplicate-key check. */
+    * RETURNING rows, the plain-INSERT duplicate-key check and COPY FROM
+    * into a PRIMARY KEY table. */
   def absent(target: DataFrame, rows: DataFrame, keys: Seq[String]): DataFrame =
     rows.join(target.select(keys.map(col).toSeq: _*), keys, "left_anti")
 

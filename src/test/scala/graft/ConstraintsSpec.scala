@@ -50,6 +50,19 @@ class ConstraintsSpec extends SparkTestBase {
     assert(r.execute("SELECT count(*), max(v) FROM pk").head().toSeq == Seq(3L, "c"))
   }
 
+  test("PRIMARY KEY: COPY FROM skips existing keys and repeats after the first") {
+    val r = newRouter()
+    r.execute("CREATE TABLE pkc (id BIGINT PRIMARY KEY, v TEXT)")
+    r.execute("INSERT INTO pkc (id, v) VALUES (1, 'a'), (2, 'b')")
+    val f = graft.ArtifactStore.scratchDir("graft_pkc").resolve("rows.json")
+    java.nio.file.Files.write(f, ("{\"id\": 1, \"v\": \"x\"}\n" +
+      "{\"id\": 3, \"v\": \"c\"}\n{\"id\": 3, \"v\": \"d\"}\n").getBytes)
+    assert(r.execute(s"COPY pkc FROM '$f'").head().getLong(0) == 1L)
+    assert(r.execute("SELECT id, v FROM pkc ORDER BY id").collect()
+      .map(x => (x.getLong(0), x.getString(1))).toSeq ==
+      Seq((1L, "a"), (2L, "b"), (3L, "c")))
+  }
+
   test("generated column: non-deterministic expressions skip validation") {
     val r = newRouter()
     r.execute("CREATE TABLE genrand (a int, b GENERATED ALWAYS AS (random() + 10))")

@@ -26,7 +26,7 @@ class IncrementalIndexSpec extends SparkTestBase {
 
     // first scored query: full build, persisted
     val r1 = r.execute(q).collect()
-    assert(MatchText.lastIndexBuild == "full")
+    assert(StatementRouter.lastIndexBuild.get() == "full")
     assert(r1.map(_.getLong(0)).toSet == Set(1L, 2L, 5L))
 
     def assertMatchesFullRebuild(): Unit = {
@@ -43,14 +43,14 @@ class IncrementalIndexSpec extends SparkTestBase {
     // UPDATE one partition → delta patch, BM25 identical to a rebuild
     r.execute("UPDATE inc_docs SET txt = 'nothing here' WHERE day = 'd1'")
     val r2 = r.execute(q).collect()
-    assert(MatchText.lastIndexBuild == "delta")
+    assert(StatementRouter.lastIndexBuild.get() == "delta")
     assert(r2.map(_.getLong(0)).toSet == Set(5L))
     assertMatchesFullRebuild()
 
     // INSERT creating a new partition → delta with additions only
     r.execute("INSERT INTO inc_docs (id, day, txt) VALUES (6, 'd4', 'spark filter again')")
     val r3 = r.execute(q).collect()
-    assert(MatchText.lastIndexBuild == "delta")
+    assert(StatementRouter.lastIndexBuild.get() == "delta")
     assert(r3.map(_.getLong(0)).toSet == Set(5L, 6L))
     assertMatchesFullRebuild()
 
@@ -58,14 +58,14 @@ class IncrementalIndexSpec extends SparkTestBase {
     // corpus stats patched downward)
     r.execute("DELETE FROM inc_docs WHERE day = 'd3'")
     val r4 = r.execute(q).collect()
-    assert(MatchText.lastIndexBuild == "delta")
+    assert(StatementRouter.lastIndexBuild.get() == "delta")
     assert(r4.map(_.getLong(0)).toSet == Set(6L))
     assertMatchesFullRebuild()
 
     // a fresh session (cleared cache) LOADS the committed store
     MatchText.IndexCache.clear()
     r.execute(q).collect()
-    assert(MatchText.lastIndexBuild == "loaded")
+    assert(StatementRouter.lastIndexBuild.get() == "loaded")
   }
 
   test("row-diff delta maintains indexes on UNPARTITIONED tables") {
@@ -81,7 +81,7 @@ class IncrementalIndexSpec extends SparkTestBase {
     val q = """SELECT id, _score FROM flat_docs
                WHERE MATCH(txt, 'spark filter') ORDER BY _score DESC, id"""
     assert(r.execute(q).collect().map(_.getLong(0)).toSet == Set(1L, 2L, 5L))
-    assert(MatchText.lastIndexBuild == "full")
+    assert(StatementRouter.lastIndexBuild.get() == "full")
 
     def matchesRebuild(): Unit = {
       val rows = r.execute(q).collect().map(x => (x.getLong(0), x.getDouble(1)))
@@ -96,19 +96,41 @@ class IncrementalIndexSpec extends SparkTestBase {
     // UPDATE one row of five (<50% churn) → row-diff delta, not rebuild
     r.execute("UPDATE flat_docs SET txt = 'nothing here' WHERE id = 1")
     assert(r.execute(q).collect().map(_.getLong(0)).toSet == Set(2L, 5L))
-    assert(MatchText.lastIndexBuild == "delta")
+    assert(StatementRouter.lastIndexBuild.get() == "delta")
     matchesRebuild()
     // single-row INSERT and DELETE also patch
     r.execute("INSERT INTO flat_docs (id, txt) VALUES (6, 'spark filter six')")
     assert(r.execute(q).collect().map(_.getLong(0)).toSet == Set(2L, 5L, 6L))
-    assert(MatchText.lastIndexBuild == "delta")
+    assert(StatementRouter.lastIndexBuild.get() == "delta")
     r.execute("DELETE FROM flat_docs WHERE id = 5")
     assert(r.execute(q).collect().map(_.getLong(0)).toSet == Set(2L, 6L))
-    assert(MatchText.lastIndexBuild == "delta")
+    assert(StatementRouter.lastIndexBuild.get() == "delta")
     matchesRebuild()
     // majority churn → full rebuild is the cheaper path
     r.execute("UPDATE flat_docs SET txt = concat(txt, ' changed')")
     r.execute(q).collect()
-    assert(MatchText.lastIndexBuild == "full")
+    assert(StatementRouter.lastIndexBuild.get() == "full")
+  }
+
+  test("a fulltext index build on another thread leaves this thread's provenance") {
+    val root = graft.ArtifactStore.scratchDir("graftinc3").toFile.getAbsolutePath
+    val r = new StatementRouter(spark, root)
+    r.execute("""CREATE TABLE thr_docs (
+        id BIGINT PRIMARY KEY, txt TEXT,
+        INDEX txt_ft USING FULLTEXT (txt) WITH (analyzer = 'standard'))""")
+    r.execute("INSERT INTO thr_docs (id, txt) VALUES (1, 'spark filter'), (2, 'join')")
+    StatementRouter.lastIndexBuild.set("loaded")
+    var seen = ""
+    var failure: Option[Throwable] = None
+    val other = new Thread(() =>
+      try {
+        r.execute("SELECT id, _score FROM thr_docs WHERE MATCH(txt, 'spark')").collect()
+        seen = StatementRouter.lastIndexBuild.get()
+      } catch { case e: Throwable => failure = Some(e) })
+    other.start()
+    other.join()
+    failure.foreach(throw _)
+    assert(seen == "full", "the other thread built the index")
+    assert(StatementRouter.lastIndexBuild.get() == "loaded")
   }
 }

@@ -29,7 +29,7 @@ class KnnStoredRouteSpec extends SparkTestBase {
 
     graft.operators.MatchText.IndexCache.clear()
     val rows = r.execute(query).collect()
-    assert(StatementRouter.lastVecIndexBuild.get() == "full")
+    assert(StatementRouter.lastIndexBuild.get() == "full")
     assert(rows.length == 3)
     // nprobe = centroids → exhaustive probe: exact top-3 around (1, 0)
     assert(rows.map(_.getLong(0)).toSet == Set(0L, 1L, 39L))
@@ -48,14 +48,14 @@ class KnnStoredRouteSpec extends SparkTestBase {
     // durable: a fresh cache loads the stored codes instead of rebuilding
     graft.operators.MatchText.IndexCache.clear()
     r.execute(query).collect()
-    assert(StatementRouter.lastVecIndexBuild.get() == "loaded")
+    assert(StatementRouter.lastIndexBuild.get() == "loaded")
 
     // small churn → incremental patch against fixed centroids, and the
     // new vector is searchable
     r.execute("INSERT INTO vt (id, emb) VALUES (100, [0.9999, 0.0001])")
     graft.operators.MatchText.IndexCache.clear()
     val rows2 = r.execute(query).collect()
-    assert(StatementRouter.lastVecIndexBuild.get() == "delta")
+    assert(StatementRouter.lastIndexBuild.get() == "delta")
     assert(rows2.map(_.getLong(0)).toSet == Set(0L, 100L, 1L))
   }
 
@@ -78,7 +78,7 @@ class KnnStoredRouteSpec extends SparkTestBase {
         .stripMargin)
     r.execute("INSERT INTO vt3 (id, emb) VALUES " +
       "(1, [1.0, 0.0]), (2, [0.9, 0.1]), (3, [0.0, 1.0])")
-    StatementRouter.lastVecIndexBuild.set("")
+    StatementRouter.lastIndexBuild.set("")
     StatementRouter.lastKnnRoute.set("")
     val rows = r.execute(
       "SELECT id FROM vt3 WHERE id > 1 AND knn_match(emb, [1.0, 0.0], 1)")
@@ -86,7 +86,7 @@ class KnnStoredRouteSpec extends SparkTestBase {
     // pre-filter semantics: k rows from the FILTERED corpus (id=2, not
     // the global nearest id=1), served from the index, not the fallback
     assert(rows.map(_.getLong(0)).toSeq == Seq(2L))
-    assert(StatementRouter.lastVecIndexBuild.get() != "",
+    assert(StatementRouter.lastIndexBuild.get() != "",
       "filtered searches must be served from the stored index")
     assert(StatementRouter.lastKnnRoute.get() == "stored-index-filtered")
     // BETWEEN inside the pre-filter: its AND is not a conjunct boundary
@@ -232,7 +232,7 @@ class KnnStoredRouteSpec extends SparkTestBase {
     val q = s"SELECT id, _score FROM vpq WHERE knn_match(emb, ${v(1.0, 0.0)}, 2) " +
       "ORDER BY _score DESC"
     val rows = r.execute(q).collect()
-    assert(StatementRouter.lastVecIndexBuild.get() == "full")
+    assert(StatementRouter.lastIndexBuild.get() == "full")
     assert(rows.length == 2 && rows.head.getLong(0) == 1L,
       "the exact self-vector ranks first (re-rank is exact)")
     assert(math.abs(rows.head.getDouble(1) - 1.0) < 1e-9)
@@ -247,7 +247,7 @@ class KnnStoredRouteSpec extends SparkTestBase {
     // durable: a fresh cache loads instead of rebuilding
     graft.operators.MatchText.IndexCache.clear()
     r.execute(q).collect()
-    assert(StatementRouter.lastVecIndexBuild.get() == "loaded")
+    assert(StatementRouter.lastIndexBuild.get() == "loaded")
     // filtered to the unprobed cluster: the guard widens, k matching rows
     StatementRouter.lastKnnProbe.set("")
     val filtered = r.execute(
@@ -260,7 +260,7 @@ class KnnStoredRouteSpec extends SparkTestBase {
     r.execute(s"INSERT INTO vpq (id, emb) VALUES (100, ${v(1.0, 0.0)})")
     graft.operators.MatchText.IndexCache.clear()
     val rows2 = r.execute(q).collect()
-    assert(StatementRouter.lastVecIndexBuild.get() == "delta")
+    assert(StatementRouter.lastIndexBuild.get() == "delta")
     assert(rows2.map(_.getLong(0)).toSet == Set(1L, 100L),
       s"got ${rows2.map(_.getLong(0)).mkString(",")}")
   }
@@ -285,7 +285,7 @@ class KnnStoredRouteSpec extends SparkTestBase {
     val q = s"SELECT id, _score FROM vpqr WHERE knn_match(emb, ${v(1.0, 0.0)}, 2) " +
       "ORDER BY _score DESC"
     val rows = r.execute(q).collect()
-    assert(StatementRouter.lastVecIndexBuild.get() == "full")
+    assert(StatementRouter.lastIndexBuild.get() == "full")
     assert(rows.length == 2 && rows.head.getLong(0) == 1L,
       "the exact self-vector ranks first (re-rank is exact)")
     assert(math.abs(rows.head.getDouble(1) - 1.0) < 1e-9)
@@ -300,13 +300,13 @@ class KnnStoredRouteSpec extends SparkTestBase {
     // durable: a fresh cache loads instead of rebuilding
     graft.operators.MatchText.IndexCache.clear()
     r.execute(q).collect()
-    assert(StatementRouter.lastVecIndexBuild.get() == "loaded")
+    assert(StatementRouter.lastIndexBuild.get() == "loaded")
     // delta patch encodes the added row's RESIDUAL against the fixed
     // centroids/codebooks; the exact duplicate ties into the top-2
     r.execute(s"INSERT INTO vpqr (id, emb) VALUES (100, ${v(1.0, 0.0)})")
     graft.operators.MatchText.IndexCache.clear()
     val rows2 = r.execute(q).collect()
-    assert(StatementRouter.lastVecIndexBuild.get() == "delta")
+    assert(StatementRouter.lastIndexBuild.get() == "delta")
     assert(rows2.map(_.getLong(0)).toSet == Set(1L, 100L),
       s"got ${rows2.map(_.getLong(0)).mkString(",")}")
   }
@@ -366,14 +366,14 @@ class KnnLayoutMatrixSpec extends SparkTestBase {
       graft.operators.MatchText.IndexCache.clear()
       val full = r.execute(q).collect()
         .map(x => (x.getLong(0), math.round(x.getDouble(1) * 1e6))).toSeq
-      assert(StatementRouter.lastVecIndexBuild.get() == "full", name)
+      assert(StatementRouter.lastIndexBuild.get() == "full", name)
       // identical churn everywhere: drop a top hit, add an exact dup
       r.execute(s"DELETE FROM $t WHERE id = 2")
       r.execute(s"INSERT INTO $t (id, emb) VALUES (100, ${v(1.0, 0.0)})")
       graft.operators.MatchText.IndexCache.clear()
       val patched = r.execute(q).collect()
         .map(x => (x.getLong(0), math.round(x.getDouble(1) * 1e6))).toSeq
-      assert(StatementRouter.lastVecIndexBuild.get() == "delta", name)
+      assert(StatementRouter.lastIndexBuild.get() == "delta", name)
       assert(patched.map(_._1).toSet == Set(1L, 100L, 3L), s"$name: $patched")
       (full, patched)
     }
@@ -469,7 +469,7 @@ class KnnCurveCarrySpec extends SparkTestBase {
     graft.operators.MatchText.IndexCache.clear()
     val q = "SELECT id FROM vd WHERE knn_match(emb, [1.0, 0.0], 3)"
     r.execute(q).collect()
-    assert(StatementRouter.lastVecIndexBuild.get() == "full")
+    assert(StatementRouter.lastIndexBuild.get() == "full")
     val idxRoot = new java.io.File(s"$root/vd/_vecindex/iv")
     def curveRows() = {
       val vdir = idxRoot.listFiles()
@@ -484,7 +484,7 @@ class KnnCurveCarrySpec extends SparkTestBase {
     r.execute("INSERT INTO vd (id, emb) VALUES (100, [0.7071, 0.7071])")
     graft.operators.MatchText.IndexCache.clear()
     r.execute(q).collect()
-    assert(StatementRouter.lastVecIndexBuild.get() == "delta")
+    assert(StatementRouter.lastIndexBuild.get() == "delta")
     assert(idxRoot.listFiles().length == 1, "old versions pruned")
     assert(curveRows() == before, "curve copied forward, not rebuilt")
     assert(StatementRouter.lastKnnAutoNprobe.get().nonEmpty)
@@ -516,7 +516,7 @@ class KnnCurveStalenessSpec extends SparkTestBase {
     graft.operators.MatchText.IndexCache.clear()
     val q = "SELECT id FROM vs WHERE knn_match(emb, [1.0, 0.0], 3)"
     r.execute(q).collect()
-    assert(StatementRouter.lastVecIndexBuild.get() == "full")
+    assert(StatementRouter.lastIndexBuild.get() == "full")
     val idxRoot = new java.io.File(s"$root/vs/_vecindex/iv")
     def meta() = {
       val vdir = idxRoot.listFiles()
@@ -530,7 +530,7 @@ class KnnCurveStalenessSpec extends SparkTestBase {
     r.execute("INSERT INTO vs (id, emb) VALUES (100, [0.7071, 0.7071])")
     graft.operators.MatchText.IndexCache.clear()
     r.execute(q).collect()
-    assert(StatementRouter.lastVecIndexBuild.get() == "delta")
+    assert(StatementRouter.lastIndexBuild.get() == "delta")
     assert(meta() == ((32L, 1L, 8)), meta().toString)
     // +8 rows pushes cumulative churn to 9 > 32/5: the stale curve is
     // dropped and the next query pays a fresh calibration on the
@@ -542,7 +542,7 @@ class KnnCurveStalenessSpec extends SparkTestBase {
     r.execute(s"INSERT INTO vs (id, emb) VALUES $more")
     graft.operators.MatchText.IndexCache.clear()
     r.execute(q).collect()
-    assert(StatementRouter.lastVecIndexBuild.get() == "delta")
+    assert(StatementRouter.lastIndexBuild.get() == "delta")
     assert(meta() == ((41L, 0L, 8)), meta().toString)
     assert(StatementRouter.lastKnnAutoNprobe.get().nonEmpty)
   }

@@ -8,8 +8,9 @@ import scala.jdk.CollectionConverters._
 
 /** Source scans guarding the single-memo and single-session designs:
   * session-scoped memos live in graft.Memo, so no session is keyed by its
-  * identity hash (which can collide after GC) and the query catalog holds
-  * no ad-hoc memo maps; every SparkSession comes from Engine.session. */
+  * identity hash (which can collide after GC) and neither the query
+  * catalog nor the statement router holds ad-hoc memo maps; every
+  * SparkSession comes from Engine.session. */
 class MemoHygieneSpec extends AnyFunSuite {
 
   private def offenders(dir: String, words: String*): Seq[String] = {
@@ -32,6 +33,12 @@ class MemoHygieneSpec extends AnyFunSuite {
 
   test("no ConcurrentHashMap or TrieMap under src/main/scala/graft/queries") {
     val hits = offenders("src/main/scala/graft/queries", "ConcurrentHashMap", "TrieMap")
+    assert(hits.isEmpty, hits.mkString("\n"))
+  }
+
+  test("no ConcurrentHashMap or TrieMap in StatementRouter.scala") {
+    val hits = offenders("src/main/scala/graft/StatementRouter.scala",
+      "ConcurrentHashMap", "TrieMap")
     assert(hits.isEmpty, hits.mkString("\n"))
   }
 

@@ -234,6 +234,23 @@ class StatementTailSpec extends SparkTestBase {
     assert(seq1 > s2, "row 1 changed later than row 2's last write")
   }
 
+  test("per-row `_seq_no` reads the new table after DROP and re-CREATE") {
+    val r = newRouter()
+    def seqs() = r.execute("SELECT id, _seq_no FROM occd ORDER BY id").collect()
+      .map(x => (x.getLong(0), x.getLong(1))).toSeq
+    r.execute("CREATE TABLE occd (id BIGINT PRIMARY KEY, v TEXT)")
+    r.execute("INSERT INTO occd (id, v) VALUES (1, 'a')")
+    r.execute("INSERT INTO occd (id, v) VALUES (2, 'b')")
+    val Seq((1L, s1), (2L, s2)) = seqs()
+    assert(s1 < s2)
+    // the new table reaches the same version with other rows and history
+    r.execute("DROP TABLE occd")
+    r.execute("CREATE TABLE occd (id BIGINT PRIMARY KEY, v TEXT)")
+    r.execute("INSERT INTO occd (id, v) VALUES (5, 'e'), (6, 'f')")
+    r.execute("UPDATE occd SET v = 'g' WHERE id = 6")
+    assert(seqs() == Seq((5L, s1), (6L, s2)))
+  }
+
   test("views capture the search_path active at creation (PG semantics)") {
     val r = newRouter()
     try {
