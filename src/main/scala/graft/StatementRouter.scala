@@ -21,10 +21,14 @@ import org.apache.hadoop.fs.Path
   * complete snapshot (the reference gets the same guarantee from the Lucene
   * translog, `TransportShardUpsertAction.java:91`).
   *
-  * Statements are first run through [[Dialect.translate]] (or
-  * [[Dialect.translateDdl]]), so CrateDB-isms — `::` casts, OBJECT literals,
-  * `ANY(array)`, renamed functions — work in every clause, including SET
-  * assignments and WHERE conditions.
+  * A statement is lexed once into a [[StatementRouter.Stmt]]; schema
+  * resolution, privilege checks, dispatch and the handlers read its
+  * tokens. Handlers then run it through [[Dialect.translate]] (or
+  * [[Dialect.translateDdl]]), so CrateDB-isms — `::` casts, OBJECT
+  * literals, `ANY(array)`, renamed functions — work in every clause,
+  * including SET assignments and WHERE conditions; the translated text is
+  * lexed once more. SELECTs run one route chain ([[routeSelect]]) that
+  * plain EXPLAIN shares without the routes' side effects.
   *
   * Scale: every DML transform is a distributed join/window ([[sources.Dml]]
   * — no driver-side row loops); the commit itself moves manifests, not
@@ -33,6 +37,7 @@ import org.apache.hadoop.fs.Path
   */
 class StatementRouter(spark: SparkSession, root: String) {
   import Dialect.{Tok, matchFwd}
+  import StatementRouter.{Route, Served, Stmt, unq}
 
   graft.functions.GraftFunctions.registerAll(spark)
 
@@ -154,27 +159,23 @@ class StatementRouter(spark: SparkSession, root: String) {
 
   /** Latest snapshot of every table under the root, as temp views; inside
     * a transaction the staged snapshots overlay the committed ones (read
-    * your own writes). `stmt` is the statement being served (or "" when
-    * the caller's statement cannot reference relations by name): foreign
-    * tables register LAZILY — only when the statement or a stored view
-    * mentions them — because resolving a JDBC relation's schema opens a
-    * live connection, and registering every foreign table on every
+    * your own writes). `mentions` are the tokens of the statement being
+    * served (none when the caller's statement cannot reference relations
+    * by name): foreign tables register LAZILY — only when the statement or
+    * a stored view names them — because resolving a JDBC relation's
+    * schema opens a live connection, and registering every foreign table on every
     * statement would tax unrelated statements with a round-trip each (an
     * unreachable server would stall them for its connect timeout). */
-  def registerViews(stmt: String = ""): Unit = {
+  def registerViews(mentions: Seq[Tok] = Nil): Unit = {
     // durable schemas resurface per session (information_schema.schemata)
     registeredSchemas.foreach(sources.InformationSchema.registerSchema)
-    val rp = new Path(root)
-    if (fs.exists(rp)) fs.listStatus(rp).foreach { st =>
-      val name = st.getPath.getName
-      if (st.isDirectory && fs.exists(new Path(st.getPath, "_manifests"))) {
-        readTable(name).createOrReplaceTempView(name)
-        // declared PRIMARY KEYs surface through information_schema
-        // (table_constraints / key_column_usage) and pg_catalog
-        // (pg_index / pg_constraint), like the reference's DocTableInfo
-        val pk = VersionedTable.primaryKey(spark, tablePath(name))
-        if (pk.nonEmpty) sources.InformationSchema.registerPrimaryKey(name, pk)
-      }
+    tableNames.foreach { name =>
+      readTable(name).createOrReplaceTempView(name)
+      // declared PRIMARY KEYs surface through information_schema
+      // (table_constraints / key_column_usage) and pg_catalog
+      // (pg_index / pg_constraint), like the reference's DocTableInfo
+      val pk = VersionedTable.primaryKey(spark, tablePath(name))
+      if (pk.nonEmpty) sources.InformationSchema.registerPrimaryKey(name, pk)
     }
     // stored view texts, read once: they feed both the foreign-table
     // mention set and the fixpoint registration below
@@ -196,10 +197,8 @@ class StatementRouter(spark: SparkSession, root: String) {
     val fts = sources.Fdw.listForeignTables
     if (fts.nonEmpty) {
       val mentioned: Set[String] =
-        (Dialect.lex(stmt) ++ viewFiles.flatMap(v => Dialect.lex(v._2)))
-          .collect { case t
-              if t.kind == Dialect.K.Word || t.kind == Dialect.K.QId =>
-            unq(t).toLowerCase }.toSet
+        (mentions ++ viewFiles.flatMap(v => Dialect.lex(v._2)))
+          .collect { case t if t.isWord => unq(t).toLowerCase }.toSet
       fts.foreach { case (name, _) =>
         if (mentioned.contains(name.toLowerCase))
           try sources.Fdw.scan(spark, name, sources.Roles.sessionUser(spark))
@@ -218,8 +217,7 @@ class StatementRouter(spark: SparkSession, root: String) {
       while (pending.nonEmpty && progressed) {
         val next = pending.filterNot { case (name, text) =>
           try {
-            spark.sql(applyDeclaredAnalyzers(Dialect.translate(text)))
-              .createOrReplaceTempView(name)
+            lower(text).createOrReplaceTempView(name)
             true
           } catch { case _: Exception => false }
         }
@@ -231,11 +229,25 @@ class StatementRouter(spark: SparkSession, root: String) {
 
   private def viewsDir = new Path(root, "_views")
 
+  /** The router's tables: directories under the root holding manifests. */
+  private def tableNames: Seq[String] = {
+    val rp = new Path(root)
+    if (!fs.exists(rp)) Nil
+    else fs.listStatus(rp).toSeq
+      .filter(st => st.isDirectory && fs.exists(new Path(st.getPath, "_manifests")))
+      .map(_.getPath.getName)
+  }
+
   private def readTextFile(p: Path): String = {
     val in = fs.open(p)
     val bytes = new Array[Byte](in.available())
     in.readFully(bytes); in.close()
     new String(bytes, "UTF-8")
+  }
+
+  private def writeTextFile(p: Path, text: String): Unit = {
+    val out = fs.create(p, true)
+    out.write(text.getBytes("UTF-8")); out.close()
   }
 
   /** Run a multi-statement script (what a CrateDB client sends over one
@@ -248,15 +260,9 @@ class StatementRouter(spark: SparkSession, root: String) {
     * inside the script batches the enclosed DML into one versioned commit
     * per touched table instead. */
   def executeScript(script: String): DataFrame = {
-    val stmts = scala.collection.mutable.ArrayBuffer.empty[String]
-    val cur = new StringBuilder
-    for (t <- Dialect.lex(script)) {
-      if (t.isSym(";")) { if (cur.toString.trim.nonEmpty) stmts += cur.toString; cur.clear() }
-      else cur.append(t.text)
-    }
-    if (cur.toString.trim.nonEmpty) stmts += cur.toString
+    val stmts = Stmt.script(script)
     require(stmts.nonEmpty, "empty script")
-    stmts.map(execute).last
+    stmts.map(run).last
   }
 
   /** Executes one statement and records it in `sys.jobs_log` exactly once:
@@ -276,7 +282,8 @@ class StatementRouter(spark: SparkSession, root: String) {
     * check costs one conf lookup on the common path. Relation discovery
     * is lexical (words after FROM/JOIN/INTO), the same token stream the
     * router already dispatches on. */
-  private def enforcePrivileges(sig: Vector[Tok]): Unit = {
+  private def enforcePrivileges(s: Stmt): Unit = {
+    val sig = s.sig
     val user = sources.Roles.sessionUser(spark)
     if (sources.Roles.isSuperuser(user)) return
     def deny(p: String): Nothing =
@@ -288,15 +295,6 @@ class StatementRouter(spark: SparkSession, root: String) {
         fs.listStatus(viewsDir).toSeq.map(_.getPath.getName)
           .filter(_.endsWith(".sql")).map(_.stripSuffix(".sql")).toSet
       else Set.empty
-    // qualified ident of a relation reference: grab `a.b` or bare `a`
-    // starting at token i; returns (qualified-or-bare name, public?)
-    def relAt(i: Int): Option[String] = {
-      if (!sig.lift(i).exists(_.isWord)) return None
-      val first = unq(sig(i)).toLowerCase
-      if (sig.lift(i + 1).exists(_.isSym(".")) && sig.lift(i + 2).exists(_.isWord))
-        Some(s"$first.${unq(sig(i + 2)).toLowerCase}")
-      else Some(first)
-    }
     def checkRead(name: String): Unit = {
       val (schema, bare) = name.split("\\.", 2) match {
         case Array(s, t) => (s, t)
@@ -307,34 +305,32 @@ class StatementRouter(spark: SparkSession, root: String) {
       schema match {
         case "information_schema" | "pg_catalog" => () // public, as in PG
         case "sys" => check("DQL", "CLUSTER", None)
-        case s =>
-          val sec = if (viewNames.contains(if (s == "doc") bare else s"${s}__$bare"))
+        case sch =>
+          val sec = if (viewNames.contains(if (sch == "doc") bare else s"${sch}__$bare"))
             "VIEW" else "TABLE"
-          check("DQL", sec, Some(s"$s.$bare"))
+          check("DQL", sec, Some(s"$sch.$bare"))
       }
     }
-    def readTargets(): Seq[String] = scanReadRelations(sig)
     sig(0).text.toLowerCase match {
-      case "select" | "with" | "values" =>
-        // relation-less SELECTs (SELECT 1) are free — privileges attach
-        // to relations, as in the reference
-        readTargets().foreach(checkRead)
-      case "show" | "explain" | "declare" | "fetch" | "move" | "close" =>
-        readTargets().foreach(checkRead)
+      // relation-less SELECTs (SELECT 1) are free — privileges attach to
+      // relations, as in the reference
+      case "select" | "with" | "values" | "show" | "explain" | "declare" |
+           "fetch" | "move" | "close" =>
+        scanReadRelations(s).foreach(checkRead)
       case "insert" =>
-        relAt(sig.indexWhere(_.is("into")) + 1)
+        s.relAt(sig.indexWhere(_.is("into")) + 1)
           .foreach(n => check("DML", "TABLE", Some(qualifyIdent(n))))
       case "update" =>
-        relAt(1).foreach(n => check("DML", "TABLE", Some(qualifyIdent(n))))
+        s.relAt(1).foreach(n => check("DML", "TABLE", Some(qualifyIdent(n))))
       case "delete" | "refresh" | "optimize" =>
-        relAt(sig.indexWhere(t => t.is("from") || t.is("table")) + 1)
+        s.relAt(sig.indexWhere(t => t.is("from") || t.is("table")) + 1)
           .foreach(n => check("DML", "TABLE", Some(qualifyIdent(n))))
       case "copy" =>
         // COPY t TO … reads (DQL); COPY t FROM … writes (DML)
         val isTo = sig.indexWhere(_.is("to")) >= 0 &&
           (sig.indexWhere(_.is("from")) < 0 ||
             sig.indexWhere(_.is("to")) < sig.indexWhere(_.is("from")))
-        relAt(1).foreach(n =>
+        s.relAt(1).foreach(n =>
           check(if (isTo) "DQL" else "DML", "TABLE", Some(qualifyIdent(n))))
       case "create" | "drop" | "alter"
         if sig.length > 1 && (sig(1).is("user") || sig(1).is("role")) =>
@@ -346,15 +342,10 @@ class StatementRouter(spark: SparkSession, root: String) {
           "or", "replace", "if", "not", "exists", "materialized")
         val ti = sig.indexWhere(t => t.sig && t.isWord &&
           !skip.contains(t.text.toLowerCase), 1)
-        if (ti > 0) {
-          // schema-qualified target (`DROP TABLE s.t`): consume the dot so
-          // the ladder falls back to SCHEMA 's', not SCHEMA 'doc'
-          val tgt =
-            if (sig.lift(ti + 1).exists(_.isSym(".")) && sig.lift(ti + 2).exists(_.isWord))
-              s"${unq(sig(ti)).toLowerCase}.${unq(sig(ti + 2)).toLowerCase}"
-            else qualifyIdent(unq(sig(ti)).toLowerCase)
-          check("DDL", "TABLE", Some(tgt))
-        } else check("DDL", "CLUSTER", None)
+        // a schema-qualified target (`DROP TABLE s.t`) keeps its schema,
+        // so the ladder falls back to SCHEMA 's', not SCHEMA 'doc'
+        if (ti > 0) check("DDL", "TABLE", s.relAt(ti).map(qualifyIdent))
+        else check("DDL", "CLUSTER", None)
       case "grant" | "revoke" | "deny" | "kill" | "analyze" | "restore" =>
         check("AL", "CLUSTER", None)
       case _ => () // SET/RESET/BEGIN/COMMIT/ROLLBACK are session-local
@@ -369,16 +360,13 @@ class StatementRouter(spark: SparkSession, root: String) {
   /** Relation references read by a statement — the word (or `a.b` pair)
     * after each FROM/JOIN, minus table-function names. Lexical, shared by
     * privilege enforcement and the closed-table guard. */
-  private def scanReadRelations(sig: Vector[Tok]): Seq[String] = {
+  private def scanReadRelations(s: Stmt): Seq[String] = {
+    val sig = s.sig
     sig.indices.flatMap { i =>
       if ((sig(i).is("from") || sig(i).is("join")) &&
-          !sig.lift(i - 1).exists(t => t.is("distinct") || t.is("extract")) &&
-          sig.lift(i + 1).exists(_.isWord)) {
-        val first = unq(sig(i + 1)).toLowerCase
-        if (sig.lift(i + 2).exists(_.isSym(".")) && sig.lift(i + 3).exists(_.isWord))
-          Some(s"$first.${unq(sig(i + 3)).toLowerCase}")
-        else Some(first)
-      } else None
+          !sig.lift(i - 1).exists(t => t.is("distinct") || t.is("extract")))
+        s.relAt(i + 1)
+      else None
     }.filterNot(n => Seq("lateral", "unnest", "values", "generate_series")
       .contains(n.split("\\.").head))
   }
@@ -386,7 +374,8 @@ class StatementRouter(spark: SparkSession, root: String) {
   /** Closed-table guard (alter-table.rst OPEN/CLOSE: a closed table
     * refuses every operation except ALTER TABLE, with the reference's
     * error shape — `metadata/table/Operation.java:137`). */
-  private def enforceOpen(sig: Vector[Tok]): Unit = {
+  private def enforceOpen(s: Stmt): Unit = {
+    val sig = s.sig
     def internal(n: String): String = n.split("\\.", 2) match {
       case Array(t)        => t // bare name: the internal (possibly s__t) form
       case Array("doc", t) => t
@@ -402,41 +391,36 @@ class StatementRouter(spark: SparkSession, root: String) {
     }
     def err(n: String, op: String): Nothing = throw new IllegalStateException(
       s"""The relation "${qualifyIdent(n)}" doesn't support or allow $op operations, as it is currently closed.""")
-    def relAt(i: Int): Option[String] =
-      if (sig.lift(i).exists(_.isWord)) {
-        val first = unq(sig(i)).toLowerCase
-        if (sig.lift(i + 1).exists(_.isSym(".")) && sig.lift(i + 2).exists(_.isWord))
-          Some(s"$first.${unq(sig(i + 2)).toLowerCase}")
-        else Some(first)
-      } else None
     sig(0).text.toLowerCase match {
       case "select" | "with" | "declare" =>
-        scanReadRelations(sig).foreach(n => if (isClosed(n)) err(n, "READ"))
+        scanReadRelations(s).foreach(n => if (isClosed(n)) err(n, "READ"))
       case "insert" =>
-        relAt(sig.indexWhere(_.is("into")) + 1)
+        s.relAt(sig.indexWhere(_.is("into")) + 1)
           .foreach(n => if (isClosed(n)) err(n, "INSERT"))
       case "update" =>
-        relAt(1).foreach(n => if (isClosed(n)) err(n, "UPDATE"))
+        s.relAt(1).foreach(n => if (isClosed(n)) err(n, "UPDATE"))
       case "delete" =>
-        relAt(sig.indexWhere(_.is("from")) + 1)
+        s.relAt(sig.indexWhere(_.is("from")) + 1)
           .foreach(n => if (isClosed(n)) err(n, "DELETE"))
       case "copy" =>
-        relAt(1).foreach(n => if (isClosed(n)) err(n, "COPY"))
+        s.relAt(1).foreach(n => if (isClosed(n)) err(n, "COPY"))
       case "refresh" | "optimize" =>
-        relAt(sig.indexWhere(_.is("table")) + 1)
+        s.relAt(sig.indexWhere(_.is("table")) + 1)
           .foreach(n => if (isClosed(n)) err(n, "REFRESH"))
       case _ => () // ALTER TABLE & management statements stay allowed
     }
   }
 
-  def execute(stmt: String): DataFrame = {
+  def execute(stmt: String): DataFrame = run(Stmt(stmt))
+
+  private def run(stmt: Stmt): DataFrame = {
     val t0 = System.currentTimeMillis
     // tag the statement's Spark jobs so a concurrent session can
     // `KILL '<group>'` it (reference sys.jobs UUID + KillPlan.java); the
     // group is thread-local, so each client thread kills independently
     spark.sparkContext.setJobGroup(
       s"graft-${StatementRouter.jobSeq.incrementAndGet()}",
-      stmt.take(120), interruptOnCancel = true)
+      stmt.text.take(120), interruptOnCancel = true)
     try {
       // enforcement runs on the search_path-resolved, schema-folded
       // statement, so a bare name is checked as the relation it actually
@@ -448,19 +432,18 @@ class StatementRouter(spark: SparkSession, root: String) {
       val schemasBefore = registeredSchemas
       val resolved = resolveStatement(stmt)
       try {
-        val s = Dialect.lex(resolved).filter(_.sig)
-        if (s.nonEmpty) { enforcePrivileges(s); enforceOpen(s) }
+        if (resolved.sig.nonEmpty) { enforcePrivileges(resolved); enforceOpen(resolved) }
       } catch {
         case e: Exception =>
           (registeredSchemas -- schemasBefore).foreach(unregisterSchema)
           throw e
       }
       val df = executeRouted(resolved)
-      sources.SysCatalog.recordJob(stmt, t0, System.currentTimeMillis)
+      sources.SysCatalog.recordJob(stmt.text, t0, System.currentTimeMillis)
       df
     } catch {
       case e: Exception =>
-        sources.SysCatalog.recordJob(stmt, t0, System.currentTimeMillis, e.getMessage)
+        sources.SysCatalog.recordJob(stmt.text, t0, System.currentTimeMillis, e.getMessage)
         throw e
     }
   }
@@ -473,21 +456,16 @@ class StatementRouter(spark: SparkSession, root: String) {
     * to flat internal names: `doc.t` → `t`, `s.t` → `s__t`. */
   private def schemasFile = new Path(root, "_schemas")
 
-  private def registeredSchemas: Set[String] = {
-    if (!fs.exists(schemasFile)) return Set.empty
-    val in = fs.open(schemasFile)
-    val bytes = new Array[Byte](in.available())
-    in.readFully(bytes); in.close()
-    new String(bytes, "UTF-8").split("\n").map(_.trim).filter(_.nonEmpty).toSet
-  }
+  private def registeredSchemas: Set[String] =
+    if (!fs.exists(schemasFile)) Set.empty
+    else readTextFile(schemasFile).split("\n").map(_.trim).filter(_.nonEmpty).toSet
+
+  private def writeSchemas(schemas: Set[String]): Unit =
+    writeTextFile(schemasFile, schemas.toSeq.sorted.mkString("\n"))
 
   private def registerSchema(s: String): Unit = {
     val cur = registeredSchemas
-    if (!cur.contains(s)) {
-      val out = fs.create(schemasFile, true)
-      out.write((cur + s).toSeq.sorted.mkString("\n").getBytes("UTF-8"))
-      out.close()
-    }
+    if (!cur.contains(s)) writeSchemas(cur + s)
     sources.InformationSchema.registerSchema(s)
   }
 
@@ -496,11 +474,7 @@ class StatementRouter(spark: SparkSession, root: String) {
     * durable catalog mutations behind). */
   private def unregisterSchema(s: String): Unit = {
     val cur = registeredSchemas
-    if (cur.contains(s)) {
-      val out = fs.create(schemasFile, true)
-      out.write((cur - s).toSeq.sorted.mkString("\n").getBytes("UTF-8"))
-      out.close()
-    }
+    if (cur.contains(s)) writeSchemas(cur - s)
     sources.InformationSchema.dropSchema(s)
   }
 
@@ -509,10 +483,10 @@ class StatementRouter(spark: SparkSession, root: String) {
     * or a registered schema AND that word is never used as a bare
     * identifier in the statement (a table alias named like a schema
     * shadows it, as in the reference's resolver). */
-  private def rewriteSchemaQualifiers(stmt: String): String = {
-    if (!stmt.contains(".")) return stmt
+  private def rewriteSchemaQualifiers(stmt: Stmt): Stmt = {
+    if (!stmt.text.contains(".")) return stmt
     val known = registeredSchemas + "doc"
-    val ts = Dialect.lex(stmt).filter(_.sig)
+    val ts = stmt.sig
     // words used WITHOUT a following dot anywhere → treated as aliases
     val shadowed: Set[String] = ts.indices.flatMap { i =>
       val t = ts(i)
@@ -520,7 +494,7 @@ class StatementRouter(spark: SparkSession, root: String) {
           !ts.lift(i + 1).exists(_.isSym("."))) Some(unq(t).toLowerCase)
       else None
     }.toSet
-    val out = new StringBuilder
+    val out = new Stmt.Builder
     var i = 0
     var changed = false
     while (i < ts.length) {
@@ -529,12 +503,11 @@ class StatementRouter(spark: SparkSession, root: String) {
       if (known.contains(s) && !shadowed.contains(s) &&
           ts.lift(i + 1).exists(_.isSym(".")) && ts.lift(i + 2).exists(_.isWord) &&
           !(i > 0 && ts(i - 1).isSym("."))) {
-        if (s == "doc") out.append(unq(ts(i + 2)))
-        else out.append(s).append("__").append(unq(ts(i + 2)))
-        out.append(' '); i += 3; changed = true
-      } else { out.append(t.text).append(' '); i += 1 }
+        out.gen(if (s == "doc") unq(ts(i + 2)) else s"${s}__${unq(ts(i + 2))}")
+        i += 3; changed = true
+      } else { out.keep(t); i += 1 }
     }
-    if (changed) out.toString.trim else stmt
+    if (changed) out.result else stmt
   }
 
   /** `search_path` resolution (reference `conf-session-search-path`,
@@ -544,12 +517,12 @@ class StatementRouter(spark: SparkSession, root: String) {
     * `pg_catalog` never holding user tables. A bare CREATE TABLE lands in
     * the first user schema of the path, as in PG. Set with
     * `SET search_path TO s1[, s2 …]`; RESET restores the default. */
-  private def resolveSearchPath(stmt: String): String = {
+  private def resolveSearchPath(stmt: Stmt): Stmt = {
     val spRaw = spark.conf.getOption("search_path").getOrElse(return stmt)
     val schemas = spRaw.split(",").map(_.trim.toLowerCase)
       .filter(_.nonEmpty).toSeq
     if (schemas.forall(s => s == "pg_catalog" || s == "doc")) return stmt
-    val ts = Dialect.lex(stmt).filter(_.sig)
+    val ts = stmt.sig
     def tableExists(n: String): Boolean =
       try VersionedTable.latestVersion(spark, tablePath(n)).isDefined
       catch { case _: Exception => false }
@@ -565,13 +538,13 @@ class StatementRouter(spark: SparkSession, root: String) {
     val createIdx: Int = {
       // CREATE TABLE [IF NOT EXISTS] <bare> → first user schema of the path
       if (ts.length > 2 && ts(0).is("create") && ts(1).is("table")) {
-        val ni = if (ts.lift(2).exists(_.is("if"))) 5 else 2
+        val ni = stmt.nameAt(2)
         if (ts.lift(ni).exists(_.isWord) && !ts.lift(ni + 1).exists(_.isSym(".")))
           ni
         else -1
       } else -1
     }
-    val out = new StringBuilder
+    val out = new Stmt.Builder
     var changed = false
     ts.indices.foreach { i =>
       val t = ts(i)
@@ -581,18 +554,18 @@ class StatementRouter(spark: SparkSession, root: String) {
         schemas.find(s => s != "pg_catalog" && s != "doc") match {
           case Some(s) =>
             registerSchema(s)
-            out.append(s"${s}__${unq(t)} "); changed = true
-          case None => out.append(t.text).append(' ')
+            out.gen(s"${s}__${unq(t)}"); changed = true
+          case None => out.keep(t)
         }
       } else if (isRef) {
         resolve(unq(t).toLowerCase) match {
           case Some(r) if r != unq(t).toLowerCase =>
-            out.append(r).append(' '); changed = true
-          case _ => out.append(t.text).append(' ')
+            out.gen(r); changed = true
+          case _ => out.keep(t)
         }
-      } else out.append(t.text).append(' ')
+      } else out.keep(t)
     }
-    if (changed) out.toString.trim else stmt
+    if (changed) out.result else stmt
   }
 
   /** Folds schema qualifiers and resolves search_path — the canonical
@@ -602,48 +575,45 @@ class StatementRouter(spark: SparkSession, root: String) {
     * "CrateDB also implicitly creates missing schemas with other CREATE
     * statements") — registered BEFORE the qualifier rewrite so the name
     * folds. NOT idempotent (a search_path CREATE TABLE fold would fold
-    * again), so [[executeRouted]] receives already-resolved text. */
-  private def resolveStatement(stmt0: String): String = {
-    locally {
-      val s0 = Dialect.lex(stmt0).filter(_.sig)
-      if (s0.length > 3 && s0(0).is("create") && s0(1).is("table")) {
-        val ni = if (s0.lift(2).exists(_.is("if"))) 5 else 2
-        if (s0.lift(ni + 1).exists(_.isSym(".")) &&
-            s0.lift(ni).exists(t => t.kind == Dialect.K.Word || t.kind == Dialect.K.QId)) {
-          val s = unq(s0(ni)).toLowerCase
-          if (s != "doc" && !Set("information_schema", "sys", "pg_catalog").contains(s))
-            registerSchema(s)
-        }
+    * again), so [[executeRouted]] receives the already-resolved statement.
+    * A step that changes nothing passes its input on unchanged. */
+  private def resolveStatement(stmt: Stmt): Stmt = {
+    val s0 = stmt.sig
+    if (s0.length > 3 && s0(0).is("create") && s0(1).is("table")) {
+      val ni = stmt.nameAt(2)
+      if (s0.lift(ni + 1).exists(_.isSym(".")) && s0.lift(ni).exists(_.isWord)) {
+        val s = unq(s0(ni)).toLowerCase
+        if (s != "doc" && !Set("information_schema", "sys", "pg_catalog").contains(s))
+          registerSchema(s)
       }
     }
-    resolveSearchPath(rewriteSchemaQualifiers(stmt0))
+    resolveSearchPath(rewriteSchemaQualifiers(stmt))
   }
 
   /** Routes an already-[[resolveStatement]]-resolved statement. */
-  private def executeRouted(stmt: String): DataFrame = {
-    val sig = Dialect.lex(stmt).filter(_.sig)
+  private def executeRouted(stmt: Stmt): DataFrame = {
+    val sig = stmt.sig
     require(sig.nonEmpty, "empty statement")
     sig(0).text.toLowerCase match {
       case "create" if sig.length > 1 && sig(1).is("schema") =>
-        val ni = if (sig.lift(2).exists(_.is("if"))) 5 else 2
-        registerSchema(unq(sig(ni)).toLowerCase)
+        registerSchema(unq(sig(stmt.nameAt(2))).toLowerCase)
         summary(0L)
-      case "drop" if sig.length > 1 && sig(1).is("schema") => dropSchema(sig)
+      case "drop" if sig.length > 1 && sig(1).is("schema") => dropSchema(stmt)
       case "create" if sig.length > 1 && sig(1).is("repository") => createRepository(sig)
       case "drop" if sig.length > 1 && sig(1).is("repository") => dropRepository(sig)
       case "create" if sig.length > 1 && sig(1).is("snapshot") => createSnapshot(sig)
       case "restore" if sig.length > 1 && sig(1).is("snapshot") => restoreSnapshot(sig)
       case "drop" if sig.length > 1 && sig(1).is("snapshot") => dropSnapshot(sig)
       case "create" if sig.length > 1 && sig(1).is("table") => createTable(stmt)
-      case "drop" if sig.length > 1 && sig(1).is("table")   => dropTable(sig)
-      case "create" if sig.length > 1 && sig(1).is("server") => createServer(sig)
+      case "drop" if sig.length > 1 && sig(1).is("table")   => dropTable(stmt)
+      case "create" if sig.length > 1 && sig(1).is("server") => createServer(stmt)
       case "drop" if sig.length > 1 && sig(1).is("server") =>
-        graft.sources.Fdw.dropServer(sig(if (sig.lift(2).exists(_.is("if"))) 4 else 2).text)
+        graft.sources.Fdw.dropServer(sig(stmt.nameAt(2)).text)
         summary(0L)
       case "create" if sig.length > 2 && sig(1).is("foreign") && sig(2).is("table") =>
-        createForeignTable(sig)
+        createForeignTable(stmt)
       case "drop" if sig.length > 2 && sig(1).is("foreign") && sig(2).is("table") =>
-        graft.sources.Fdw.dropForeignTable(sig(if (sig.lift(3).exists(_.is("if"))) 5 else 3).text)
+        graft.sources.Fdw.dropForeignTable(sig(stmt.nameAt(3)).text)
         summary(0L)
       case "create" if sig.length > 2 && sig(1).is("user") && sig(2).is("mapping") =>
         createUserMapping(sig)
@@ -658,14 +628,14 @@ class StatementRouter(spark: SparkSession, root: String) {
       case "grant"  => grantOrDeny(sig, "GRANT")
       case "deny"   => grantOrDeny(sig, "DENY")
       case "revoke" => revokeStmt(sig)
-      case "declare" => declareCursor(stmt, sig)
+      case "declare" => declareCursor(stmt)
       case "fetch"   => fetchStmt(sig)
       case "move"    => fetchStmt(sig)
       case "close"   => closeCursor(sig)
       case "create" if sig.length > 1 && sig(1).is("view") => createView(sig, orReplace = false)
       case "create" if sig.length > 3 && sig(1).is("or") && sig(2).is("replace") &&
         sig(3).is("view") => createView(sig, orReplace = true)
-      case "drop" if sig.length > 1 && sig(1).is("view") => dropView(sig)
+      case "drop" if sig.length > 1 && sig(1).is("view") => dropView(stmt)
       case "create" if sig.length > 1 && sig(1).is("function") =>
         createFunction(sig, orReplace = false)
       case "create" if sig.length > 3 && sig(1).is("or") && sig(2).is("replace") &&
@@ -673,8 +643,7 @@ class StatementRouter(spark: SparkSession, root: String) {
       case "drop" if sig.length > 1 && sig(1).is("function") => dropFunction(sig)
       case "create" if sig.length > 1 && sig(1).is("analyzer") => createAnalyzer(sig)
       case "drop" if sig.length > 1 && sig(1).is("analyzer") =>
-        graft.operators.MatchText.Analyzer.drop(
-          sig(if (sig.lift(2).exists(_.is("if"))) 4 else 2).text)
+        graft.operators.MatchText.Analyzer.drop(sig(stmt.nameAt(2)).text)
         summary(0L)
       case "alter" if sig.length > 1 && sig(1).is("table") => alterTable(sig)
       case "alter" if sig.length > 1 && sig(1).is("cluster") => alterCluster(sig)
@@ -687,8 +656,8 @@ class StatementRouter(spark: SparkSession, root: String) {
       case "insert"   => insert(stmt)
       // OCC predicates (`WHERE _seq_no = … AND _primary_term = …`)
       // resolve against the current snapshot before the DML plans
-      case "update"   => update(rewriteSystemColumns(stmt))
-      case "delete"   => delete(rewriteSystemColumns(stmt))
+      case "update"   => update(rewriteSystemColumns(stmt)._1)
+      case "delete"   => delete(rewriteSystemColumns(stmt)._1)
       case "copy"     => copyStmt(stmt)
       case "explain"  => explainStmt(stmt)
       case "refresh" if sig.length > 1 && sig(1).is("table") => refreshStmt(sig)
@@ -728,42 +697,49 @@ class StatementRouter(spark: SparkSession, root: String) {
     }
   }
 
-  /** The default (query) route: MATCH/knn index upgrades, dialect
-    * lowering, declared-analyzer application. Records WHICH route served
-    * the statement in [[StatementRouter.lastSelectRoute]] — the
-    * provenance `EXPLAIN` prepends to its plan text. */
-  private def resolveSelect(stmt: String): DataFrame = {
-    registerViews(stmt)
-    val stmtSys = rewriteSystemColumns(stmt)
-    // multi-column MATCH + _score routes on the RAW statement (the
-    // per-field boosts are only visible before the dialect lowers the
-    // MATCH); single-column routes on the translated form.
+  /** The default (query) route: [[routeSelect]] with every matched
+    * route served. Records WHICH route served the statement in
+    * [[StatementRouter.lastSelectRoute]] — the provenance `EXPLAIN`
+    * prepends to its plan text. */
+  private def resolveSelect(stmt: Stmt): DataFrame = {
+    registerViews(stmt.sig)
     StatementRouter.lastIndexBuild.set("")
-    val fielded = routeFieldedScore(stmtSys)
-    val pre0 = fielded.getOrElse(stmtSys)
-    // stored-vector-index upgrade runs BEFORE the dialect, which
-    // would otherwise lower knn_match to its exact fallback
     StatementRouter.lastKnnProbe.set("")
-    val knn = routeKnnStored(pre0)
-    val knnBuild = StatementRouter.lastIndexBuild.get()
-    val pre = knn.getOrElse(pre0)
-    val translated = Dialect.translate(pre)
-    val scored = routeIndexedScore(translated)
-    StatementRouter.lastSelectRoute.set(
-      if (knn.isDefined) {
-        val p = StatementRouter.lastKnnProbe.get()
-        StatementRouter.lastKnnRoute.get() +
-          (if (knnBuild.isEmpty) "" else s", index $knnBuild") +
-          (if (p.isEmpty) "" else s", probe $p")
-      }
-      else if (fielded.isDefined) "indexed-score-fielded-bm25"
-      else if (scored.isDefined) "indexed-score-bm25"
-      else "exact")
-    scored match {
-      case Some(routed) => spark.sql(routed)
-      case None         => spark.sql(applyDeclaredAnalyzers(translated))
-    }
+    val (route, _, served) = routeSelect(stmt, _())
+    StatementRouter.lastSelectRoute.set(route)
+    spark.sql(served.text)
   }
+
+  /** The one SELECT route chain, shared by execution and plain EXPLAIN:
+    * system columns → fielded BM25F → stored knn → dialect → BM25 →
+    * declared analyzers, each route reading what the one before it
+    * rewrote. The fielded and knn routes run before the dialect, which
+    * would lower MATCH (hiding per-field boosts) and knn_match to their
+    * exact fallbacks. `serve` runs a matched route's side-effecting half
+    * (execution) or skips it (plain EXPLAIN). Returns the route label, the
+    * system-column rewrite and the statement to run. */
+  private def routeSelect(stmt: Stmt,
+                          serve: Served => Option[String]): (String, Stmt, Stmt) = {
+    val (sys, overlay) = rewriteSystemColumns(stmt)
+    overlay.foreach(serve)
+    def take(r: Option[Route]): Option[(Stmt, String)] =
+      r.flatMap(x => serve(x.serve).map(suffix => (x.stmt, x.label + suffix)))
+    val fielded = take(routeFieldedScore(sys))
+    val pre = fielded.fold(sys)(_._1)
+    val knn = take(routeKnnStored(pre))
+    val lowered = translated(knn.fold(pre)(_._1).text)
+    val scored = take(routeIndexedScore(lowered))
+    (knn.orElse(fielded).orElse(scored).fold("exact")(_._2), sys,
+      scored.fold(applyDeclaredAnalyzers(lowered))(_._1))
+  }
+
+  /** The dialect lowering, lexed once for the BM25 route, the declared
+    * analyzers and the DML handlers. */
+  private def translated(text: String): Stmt = Stmt(Dialect.translate(text))
+
+  /** The exact lowering of a query: dialect, then declared analyzers. */
+  private def lower(query: String): DataFrame =
+    spark.sql(applyDeclaredAnalyzers(translated(query)).text)
 
   /** Multi-column `MATCH((a [boost], b), 'q') [USING best|most_fields]` +
     * `_score` through a DECLARED composite fulltext index (reference:
@@ -777,10 +753,10 @@ class StatementRouter(spark: SparkSession, root: String) {
     * any other shape (foreign MATCH, OR'd predicate, USING WITH options,
     * phrase methods, subquery FROM) returns None and the TF fallback
     * runs. */
-  private def routeFieldedScore(sql: String, dry: Boolean = false): Option[String] = {
-    val lower = sql.toLowerCase
+  private def routeFieldedScore(stmt: Stmt): Option[Route] = {
+    val lower = stmt.text.toLowerCase
     if (!lower.contains("_score") || !lower.contains("match")) return None
-    val sig = Dialect.lex(sql).filter(_.sig)
+    val sig = stmt.sig
     if (sig.count(t => t.kind == Dialect.K.Word && t.is("match")) != 1) return None
 
     // the MATCH call, inner column group, query literal, USING method
@@ -832,37 +808,38 @@ class StatementRouter(spark: SparkSession, root: String) {
       s.cols.map(_.toLowerCase).toSet == targetSet && s.cols.length == targetSet.size)
       .getOrElse(return None)
 
-    // classification only (plain EXPLAIN): the shape checks above decided
-    // the route — stop before the index build/load and the score view
-    if (dry) return Some("")
-
-    val analyzer = MatchText.Analyzer.byName(r.spec.analyzer)
-    val idx = durableIndex[MatchText.FieldedIndex](r, "#fielded",
-        s"${tablePath(r.table)}/_ftindex/${r.spec.name}__fielded", r.spec.cols)(
-      exists = MatchText.storedIndexExists(spark, _),
-      load = MatchText.loadFieldedIndex(spark, _, analyzer),
-      patch = (prev, removed, added) => Some(MatchText.updateFieldedIndex(
-        MatchText.loadFieldedIndex(spark, prev, analyzer), removed, added,
-        r.pk, r.spec.cols)),
-      build = MatchText.buildFieldedIndex(
-        readTable(r.table), r.pk, r.spec.cols, analyzer),
-      save = MatchText.saveFieldedIndex(_, _))
-    val boosts = r.spec.cols.map(c =>
-      c -> fieldsBoosts.collectFirst {
-        case (f, b) if f == c.toLowerCase => b
-      }.getOrElse(1.0)).toMap
-    val scores = MatchText.scoreFieldedBM25(idx, query, boosts, method)
-      .select(col("doc_id").as("graft_score_id"), col("score").as("graft_bm25f"))
+    // the shape checks above decided the route; the index build/load and
+    // the score view are the served half
     val view = s"graft_fielded_scores_$nextViewN"
-    scores.createOrReplaceTempView(view)
+    def serve(): Option[String] = {
+      val analyzer = MatchText.Analyzer.byName(r.spec.analyzer)
+      val idx = durableIndex[MatchText.FieldedIndex](r, "#fielded",
+          s"${tablePath(r.table)}/_ftindex/${r.spec.name}__fielded", r.spec.cols)(
+        exists = MatchText.storedIndexExists(spark, _),
+        load = MatchText.loadFieldedIndex(spark, _, analyzer),
+        patch = (prev, removed, added) => Some(MatchText.updateFieldedIndex(
+          MatchText.loadFieldedIndex(spark, prev, analyzer), removed, added,
+          r.pk, r.spec.cols)),
+        build = MatchText.buildFieldedIndex(
+          readTable(r.table), r.pk, r.spec.cols, analyzer),
+        save = MatchText.saveFieldedIndex(_, _))
+      val boosts = r.spec.cols.map(c =>
+        c -> fieldsBoosts.collectFirst {
+          case (f, b) if f == c.toLowerCase => b
+        }.getOrElse(1.0)).toMap
+      MatchText.scoreFieldedBM25(idx, query, boosts, method)
+        .select(col("doc_id").as("graft_score_id"), col("score").as("graft_bm25f"))
+        .createOrReplaceTempView(view)
+      Some("")
+    }
 
     // _score → view score, the MATCH clause → TRUE
-    Some(spliceJoin(sig, r, view, "graft_score_id") { i =>
+    Some(Route(spliceJoin(stmt, r, view, "graft_score_id") { i =>
       if (i == mi) Some(("TRUE", matchEnd))
       else if (sig(i).kind == Dialect.K.Word && sig(i).is("_score"))
         Some((s"$view.graft_bm25f", i))
       else None
-    })
+    }, "indexed-score-fielded-bm25", () => serve()))
   }
 
   /** `FROM <router table> [AS] [alias]` as a declared-index route reads
@@ -916,13 +893,15 @@ class StatementRouter(spark: SparkSession, root: String) {
     *     (a patched index references the version step 4 reclaimed).
     *
     * Records "loaded" | "delta" | "full" in
-    * [[StatementRouter.lastIndexBuild]]. */
+    * [[StatementRouter.lastIndexBuild]], or "" on a memo hit: the slot
+    * always tells how THIS call's index came to be. */
   private def durableIndex[T](r: IndexedRelation, kind: String, dir: String,
                               cols: Seq[String])(
       exists: String => Boolean, load: String => T,
       patch: (String, DataFrame, DataFrame) => Option[T], build: => T,
       save: (T, String) => Unit,
-      carry: (Path, Option[(DataFrame, DataFrame)]) => Unit = (_, _) => ()): T =
+      carry: (Path, Option[(DataFrame, DataFrame)]) => Unit = (_, _) => ()): T = {
+    StatementRouter.lastIndexBuild.set("")
     MatchText.IndexCache.cached(
         spark, s"${tablePath(r.table)}#${r.spec.name}$kind#v${r.version}") {
       val stored = s"$dir/v${r.version}"
@@ -948,23 +927,24 @@ class StatementRouter(spark: SparkSession, root: String) {
         if (exists(stored)) load(stored) else built
       }
     }
+  }
 
   /** The score join of a declared-index route: every token is kept except
     * where `replace(i)` gives (text, last token replaced), and
     * `JOIN <view> ON rel.pk = <view>.<idCol>` follows the relation. */
-  private def spliceJoin(sig: Vector[Tok], r: IndexedRelation, view: String,
-                         idCol: String)(replace: Int => Option[(String, Int)]): String = {
-    val out = new StringBuilder
+  private def spliceJoin(stmt: Stmt, r: IndexedRelation, view: String,
+                         idCol: String)(replace: Int => Option[(String, Int)]): Stmt = {
+    val sig = stmt.sig
+    val out = new Stmt.Builder
     var i = 0
     while (i < sig.length) replace(i) match {
-      case Some((text, last)) => out.append(text).append(' '); i = last + 1
+      case Some((text, last)) => out.gen(text); i = last + 1
       case None =>
-        out.append(sig(i).text).append(' ')
-        if (i == r.spliceAt)
-          out.append(s"JOIN $view ON ${r.rel}.${r.pk} = $view.$idCol ")
+        out.keep(sig(i))
+        if (i == r.spliceAt) out.gen(s"JOIN $view ON ${r.rel}.${r.pk} = $view.$idCol")
         i += 1
     }
-    out.toString.trim
+    out.result
   }
 
   // JVM-global: per-statement temp view names (graft_match_scores_N,
@@ -984,25 +964,30 @@ class StatementRouter(spark: SparkSession, root: String) {
     * honest equivalent), `_docid` — a scan-internal row id, unique within
     * the scan but unstable across runs, exactly the caveat the reference
     * documents for Lucene segment ids. `_score` has its own routes.
-    * Rewrites only when the statement reads ONE router table. */
-  private def rewriteSystemColumns(stmt: String, dry: Boolean = false): String = {
-    val lower = stmt.toLowerCase
+    * Rewrites only when the statement reads ONE router table. A SELECT of
+    * per-row `_seq_no` reads an overlay view, registered here with the
+    * table-version stand-in; the returned served half swaps in the
+    * row-diff map, which persists the `_seqno` sidecar (plain EXPLAIN
+    * must not). */
+  private def rewriteSystemColumns(stmt: Stmt): (Stmt, Option[Served]) = {
+    val unchanged = (stmt, None)
+    val lower = stmt.text.toLowerCase
     if (!lower.contains("_id") && !lower.contains("_raw") &&
         !lower.contains("_version") && !lower.contains("_docid") &&
-        !lower.contains("_seq_no") && !lower.contains("_primary_term")) return stmt
-    val sig = Dialect.lex(stmt).filter(_.sig)
+        !lower.contains("_seq_no") && !lower.contains("_primary_term")) return unchanged
+    val sig = stmt.sig
     // the one relation the statement addresses: UPDATE's target, else a
     // single FROM/JOIN reference
     val ti =
       if (sig(0).is("update")) 1
       else {
         val froms = sig.indices.filter(i => sig(i).is("from") || sig(i).is("join"))
-        if (froms.length != 1) return stmt
+        if (froms.length != 1) return unchanged
         froms.head + 1
       }
-    if (!sig.lift(ti).exists(_.isWord)) return stmt
+    if (!sig.lift(ti).exists(_.isWord)) return unchanged
     val table = unq(sig(ti))
-    if (VersionedTable.latestVersion(spark, tablePath(table)).isEmpty) return stmt
+    if (VersionedTable.latestVersion(spark, tablePath(table)).isEmpty) return unchanged
     val pk = VersionedTable.primaryKey(spark, tablePath(table))
     val version = VersionedTable.latestVersion(spark, tablePath(table)).get
     val idExpr = pk match {
@@ -1022,29 +1007,27 @@ class StatementRouter(spark: SparkSession, root: String) {
     val fromStop = Set("where", "group", "order", "limit", "having",
       "offset", "window", "join", "inner", "left", "right", "full",
       "cross", "on", "union", "intersect", "except", "qualify", "returning")
-    val out = new StringBuilder
+    val out = new Stmt.Builder
     var changed = false
+    var overlay: Option[Served] = None
     sig.indices.foreach { i =>
       val t = sig(i)
       val prevDot = i > 0 && sig(i - 1).isSym(".")
       if (i == ti && perRow && !isDml) {
         changed = true
-        val overlay = s"graft_seqt_$nextViewN"
-        // dry (plain EXPLAIN): the real overlay computes AND PERSISTS the
-        // `_seqno` sidecar — a storage mutation EXPLAIN must not make.
-        // Preview the plan with the table-version stand-in instead.
-        (if (dry)
-           readTable(table)
-             .withColumn("__graft_seq_no", lit(version).cast("long"))
-         else withSeqNo(readTable(table), table, version))
-          .createOrReplaceTempView(overlay)
-        out.append(overlay)
+        val view = s"graft_seqt_$nextViewN"
+        readTable(table).withColumn("__graft_seq_no", lit(version).cast("long"))
+          .createOrReplaceTempView(view)
+        overlay = Some(() => {
+          withSeqNo(readTable(table), table, version).createOrReplaceTempView(view)
+          Some("")
+        })
+        out.gen(view)
         // keep the original name usable as a qualifier unless the
         // statement aliases the relation itself
         val aliased = sig.lift(i + 1).exists(t2 => t2.is("as") ||
           (t2.isWord && !fromStop.contains(t2.text.toLowerCase)))
-        if (!aliased) out.append(s" $table")
-        out.append(' ')
+        if (!aliased) out.gen(table)
       } else if (perRow && !isDml && t.isSym("*") && {
         // a projection-item star — bare or qualified — must hide the
         // overlay's internal seq column (the passKnnMatch precedent:
@@ -1056,7 +1039,7 @@ class StatementRouter(spark: SparkSession, root: String) {
         (bare || qualified) && nextOk
       }) {
         changed = true
-        out.append("* EXCEPT (__graft_seq_no) ")
+        out.gen("* EXCEPT (__graft_seq_no)")
       } else {
       val repl =
         if (t.kind == Dialect.K.Word && !prevDot) t.text.toLowerCase match {
@@ -1085,17 +1068,17 @@ class StatementRouter(spark: SparkSession, root: String) {
       repl match {
         case Some(r) =>
           changed = true
-          out.append(r)
           // keep a usable output column name for bare SELECT-list items
           // (next token ends the item); WHERE/ORDER uses stay bare
-          if (sig.lift(i + 1).exists(t2 => t2.isSym(",") || t2.is("from")))
-            out.append(s" AS ${t.text}")
-          out.append(' ')
-        case None => out.append(t.text).append(' ')
+          out.gen(
+            if (sig.lift(i + 1).exists(t2 => t2.isSym(",") || t2.is("from")))
+              s"$r AS ${t.text}"
+            else r)
+        case None => out.keep(t)
       }
       }
     }
-    if (changed) out.toString.trim else stmt
+    if (changed) (out.result, overlay) else unchanged
   }
 
   /** Per-row `_seq_no` map for an UNPARTITIONED pk-carrying table
@@ -1419,9 +1402,9 @@ class StatementRouter(spark: SparkSession, root: String) {
     * scale, matched docs flow, not the corpus. Conservative by design:
     * any unrecognized shape (no declared index, composite PRIMARY KEY,
     * MATCH options, subquery FROM) returns None and the TF fallback runs. */
-  private def routeIndexedScore(sql: String, dry: Boolean = false): Option[String] = {
-    if (!sql.toLowerCase.contains("graft_match_score")) return None
-    val sig = Dialect.lex(sql).filter(_.sig)
+  private def routeIndexedScore(stmt: Stmt): Option[Route] = {
+    if (!stmt.text.toLowerCase.contains("graft_match_score")) return None
+    val sig = stmt.sig
 
     // the scored MATCH: graft_match_score(target, 'query')
     val si = sig.indexWhere(t => t.kind == Dialect.K.Word && t.is("graft_match_score"))
@@ -1475,44 +1458,44 @@ class StatementRouter(spark: SparkSession, root: String) {
           sig.lift(i + 1).exists(_.isSym("(")) && isMatchCall(i).isEmpty)
         return None
     }
-    // classification only (plain EXPLAIN): stop before the build
-    if (dry) return Some("")
-
-    // scores from the declared index at the table's committed version:
-    // term-bucketed Parquet under the table root, so searches prune to
-    // the query terms' buckets; DML patches the stored postings from the
-    // changed rows only (reference: DML updates the per-shard Lucene
-    // segments)
-    val analyzer = MatchText.Analyzer.byName(r.spec.analyzer)
-    def withConcat(df: DataFrame): (DataFrame, String) =
-      if (r.spec.cols.length == 1) (df, r.spec.cols.head)
-      else (df.withColumn("graft_ft_concat",
-        concat_ws(" ", r.spec.cols.map(col): _*)), "graft_ft_concat")
-    val idx = durableIndex[MatchText.InvertedIndex](r, "",
-        s"${tablePath(r.table)}/_ftindex/${r.spec.name}", r.spec.cols)(
-      exists = MatchText.storedIndexExists(spark, _),
-      load = MatchText.loadIndex(spark, _, analyzer),
-      patch = (prev, removed, added) => {
-        val (adf, textCol) = withConcat(added)
-        Some(MatchText.updateIndex(MatchText.loadIndex(spark, prev, analyzer),
-          removed, adf, r.pk, textCol))
-      },
-      build = {
-        val (df, textCol) = withConcat(readTable(r.table))
-        MatchText.buildIndex(df, r.pk, textCol, analyzer)
-      },
-      save = MatchText.saveIndex(_, _))
-    // non-colliding column names: the base table may have doc_id/score
-    val scores = MatchText.scoreBM25(idx, query)
-      .select(col("doc_id").as("graft_score_id"), col("score").as("graft_bm25"))
+    // scores from the declared index at the table's committed version
+    // (the served half): term-bucketed Parquet under the table root, so
+    // searches prune to the query terms' buckets; DML patches the stored
+    // postings from the changed rows only (reference: DML updates the
+    // per-shard Lucene segments)
     val view = s"graft_match_scores_$nextViewN"
-    scores.createOrReplaceTempView(view)
+    def serve(): Option[String] = {
+      val analyzer = MatchText.Analyzer.byName(r.spec.analyzer)
+      def withConcat(df: DataFrame): (DataFrame, String) =
+        if (r.spec.cols.length == 1) (df, r.spec.cols.head)
+        else (df.withColumn("graft_ft_concat",
+          concat_ws(" ", r.spec.cols.map(col): _*)), "graft_ft_concat")
+      val idx = durableIndex[MatchText.InvertedIndex](r, "",
+          s"${tablePath(r.table)}/_ftindex/${r.spec.name}", r.spec.cols)(
+        exists = MatchText.storedIndexExists(spark, _),
+        load = MatchText.loadIndex(spark, _, analyzer),
+        patch = (prev, removed, added) => {
+          val (adf, textCol) = withConcat(added)
+          Some(MatchText.updateIndex(MatchText.loadIndex(spark, prev, analyzer),
+            removed, adf, r.pk, textCol))
+        },
+        build = {
+          val (df, textCol) = withConcat(readTable(r.table))
+          MatchText.buildIndex(df, r.pk, textCol, analyzer)
+        },
+        save = MatchText.saveIndex(_, _))
+      // non-colliding column names: the base table may have doc_id/score
+      MatchText.scoreBM25(idx, query)
+        .select(col("doc_id").as("graft_score_id"), col("score").as("graft_bm25"))
+        .createOrReplaceTempView(view)
+      Some("")
+    }
 
     // score calls → view.score, match predicate → TRUE
-    Some(spliceJoin(sig, r, view, "graft_score_id") { i =>
+    Some(Route(spliceJoin(stmt, r, view, "graft_score_id") { i =>
       isScoreCall(i).map(c => (s"$view.graft_bm25", c))
         .orElse(isMatchCall(i).map(c => ("TRUE", c)))
-    })
+    }, "indexed-score-bm25", () => serve()))
   }
 
   /** SQL `knn_match` through a DECLARED vector index (reference
@@ -1547,9 +1530,9 @@ class StatementRouter(spark: SparkSession, root: String) {
     * pre-filter, multi-call shapes, or a filter/vector that fails to
     * evaluate all return None — [[Dialect]]'s exact TakeOrderedAndProject
     * lowering then runs. */
-  private def routeKnnStored(sql: String, dry: Boolean = false): Option[String] = {
-    if (!sql.toLowerCase.contains("knn_match")) return None
-    val sig = Dialect.lex(sql).filter(_.sig)
+  private def routeKnnStored(stmt: Stmt): Option[Route] = {
+    if (!stmt.text.toLowerCase.contains("knn_match")) return None
+    val sig = stmt.sig
     val ki = sig.indexWhere(t => t.kind == Dialect.K.Word && t.is("knn_match"))
     if (ki < 0 || !sig.lift(ki + 1).exists(_.isSym("("))) return None
     if (sig.indexWhere(t => t.kind == Dialect.K.Word && t.is("knn_match"), ki + 1) >= 0)
@@ -1590,8 +1573,7 @@ class StatementRouter(spark: SparkSession, root: String) {
       s.analyzer.startsWith("vector:") && s.cols.length == 1 &&
         (s.name.equalsIgnoreCase(targetCol) || s.cols.head.equalsIgnoreCase(targetCol)))
       .getOrElse(return None)
-    val IndexedRelation(table, version, pk, spec, rel, _) = r
-    val vecCol = spec.cols.head
+    val IndexedRelation(table, _, pk, _, rel, _) = r
 
     // WHERE: depth-0 AND conjuncts; the knn_match call must stand alone
     // as one of them, the REST become the docset pre-filter (reference
@@ -1639,29 +1621,11 @@ class StatementRouter(spark: SparkSession, root: String) {
       .filter(_.nonEmpty)
     if (restConjs.exists(_.toLowerCase.contains("_score"))) return None
 
-    // non-literal query vector: evaluate the expression once on the
-    // driver (single row by definition); a failure — unresolvable
-    // columns, multi-row subquery, wrong type — falls back to the exact
-    // path, which reports it loudly
-    val queryVec: Seq[Float] = litNums.getOrElse {
-      // dry classification (plain EXPLAIN) must not execute the driver
-      // eval — assume the vector resolves; a real execution re-checks
-      if (dry) Seq.empty[Float]
-      else {
-        val exprR = vecToks.map(_.text).mkString(" ")
-        try {
-          val row = spark.sql(Dialect.translate(
-            s"SELECT CAST(($exprR) AS ARRAY<FLOAT>) AS graft_qv")).head()
-          val seq = row.getSeq[Float](0)
-          if (seq == null || seq.isEmpty) return None
-          seq
-        } catch { case scala.util.control.NonFatal(_) => return None }
-      }
-    }
-
     // docset pre-filter: pk-only projection of the rest conjuncts over
     // the table snapshot, semi-joined into the candidate scan inside
-    // ivfKnnStored — the float corpus is never touched by the filter
+    // ivfKnnStored — the float corpus is never touched by the filter.
+    // Analysis binds the snapshot, so the view is dropped right after;
+    // a filter that fails analysis leaves the exact path to serve
     val knnN = nextViewN
     val candFilter: Option[DataFrame] = if (restConjs.isEmpty) None else {
       val fview = s"graft_knn_filter_$knnN"
@@ -1669,23 +1633,45 @@ class StatementRouter(spark: SparkSession, root: String) {
       val fsql = s"SELECT $pk AS cid FROM $fview $rel WHERE " +
         restConjs.mkString("(", ") AND (", ")")
       try Some(spark.sql(Dialect.translate(fsql)))
-      catch { case scala.util.control.NonFatal(_) =>
-        // analysis failed → exact path serves the statement; drop the
-        // view so the failed attempt leaves nothing in the catalog
-        spark.catalog.dropTempView(fview)
-        return None
-      }
+      catch { case scala.util.control.NonFatal(_) => return None }
+      finally spark.catalog.dropTempView(fview)
     }
-    StatementRouter.lastKnnRoute.set(
-      if (candFilter.isDefined) "stored-index-filtered" else "stored-index")
-    if (dry) {
-      // classification only (plain EXPLAIN): the route is decided — stop
-      // before the side-effecting half (index build/load, ANN probe,
-      // recall count). Drop the filter-analysis view; nothing else was
-      // registered. The returned marker is not runnable SQL.
-      if (candFilter.isDefined)
-        spark.catalog.dropTempView(s"graft_knn_filter_$knnN")
-      return Some("")
+    val label = if (candFilter.isDefined) "stored-index-filtered" else "stored-index"
+    StatementRouter.lastKnnRoute.set(label)
+    val view = s"graft_knn_hits_$knnN"
+    // the knn_match call → TRUE, _score → the hit's similarity
+    val routed = spliceJoin(stmt, r, view, "graft_knn_id") { i =>
+      if (i == ki) Some(("TRUE", close))
+      else if (sig(i).kind == Dialect.K.Word && sig(i).is("_score"))
+        Some((s"$view.graft_knn_sim", i))
+      else None
+    }
+    Some(Route(routed, label, () =>
+      serveKnn(r, litNums, vecToks, k, candFilter, view)))
+  }
+
+  /** The served half of [[routeKnnStored]]: the driver-side query-vector
+    * eval, the durable index, the ANN probe and recall count, and the
+    * hits view. Returns the `, index …` / `, probe …` label suffix, or
+    * None when the query vector fails to evaluate. */
+  private def serveKnn(r: IndexedRelation, litNums: Option[Seq[Float]],
+                       vecToks: Vector[Tok], k: Int, candFilter: Option[DataFrame],
+                       view: String): Option[String] = {
+    val IndexedRelation(table, version, pk, spec, _, _) = r
+    val vecCol = spec.cols.head
+    // non-literal query vector: evaluate the expression once on the
+    // driver (single row by definition); a failure — unresolvable
+    // columns, multi-row subquery, wrong type — falls back to the exact
+    // path, which reports it loudly
+    val queryVec: Seq[Float] = litNums.getOrElse {
+      val exprR = vecToks.map(_.text).mkString(" ")
+      try {
+        val row = spark.sql(Dialect.translate(
+          s"SELECT CAST(($exprR) AS ARRAY<FLOAT>) AS graft_qv")).head()
+        val seq = row.getSeq[Float](0)
+        if (seq == null || seq.isEmpty) return None
+        seq
+      } catch { case scala.util.control.NonFatal(_) => return None }
     }
 
     // durable index at the committed version: load, patch, or build.
@@ -1807,6 +1793,8 @@ class StatementRouter(spark: SparkSession, root: String) {
           cb.foreach(Similarity.savePqCodebooks(spark, _, s"$d/codebooks"))
         },
         carry = carryRecallCurve)
+    // this route's own build, read before anything else resolves an index
+    val build = StatementRouter.lastIndexBuild.get()
     /** Raw (qid, cid, sim, rk) hits for ANY query set — the statement
       * search and the calibration rungs share this one dispatch. */
     def searchRaw(np: Int, qdf: DataFrame, kk: Int,
@@ -1934,16 +1922,10 @@ class StatementRouter(spark: SparkSession, root: String) {
         }
       case None => search(npUse)
     }
-    val view = s"graft_knn_hits_$knnN"
     hits.createOrReplaceTempView(view)
-
-    // the knn_match call → TRUE, _score → the hit's similarity
-    Some(spliceJoin(sig, r, view, "graft_knn_id") { i =>
-      if (i == ki) Some(("TRUE", close))
-      else if (sig(i).kind == Dialect.K.Word && sig(i).is("_score"))
-        Some((s"$view.graft_knn_sim", i))
-      else None
-    })
+    val probe = StatementRouter.lastKnnProbe.get()
+    Some((if (build.isEmpty) "" else s", index $build") +
+      (if (probe.isEmpty) "" else s", probe $probe"))
   }
 
   /** MATCH through declared fulltext indexes (reference MatchPredicate
@@ -1960,9 +1942,9 @@ class StatementRouter(spark: SparkSession, root: String) {
     *    term-presence over the union is the same predicate)
     *
     * Targets without a spec keep the default-analyzer `match_text` path. */
-  private def applyDeclaredAnalyzers(sql: String): String = {
-    val sig = Dialect.lex(sql).filter(_.sig)
-    if (!sig.exists(t => t.kind == Dialect.K.Word && t.is("match_text"))) return sql
+  private def applyDeclaredAnalyzers(stmt: Stmt): Stmt = {
+    val sig = stmt.sig
+    if (!sig.exists(t => t.kind == Dialect.K.Word && t.is("match_text"))) return stmt
     val specs: Map[String, VersionedTable.IndexSpec] = {
       val words = sig.filter(t => t.kind == Dialect.K.Word || t.kind == Dialect.K.QId)
         .map(t => unq(t).toLowerCase).toSet
@@ -1976,8 +1958,8 @@ class StatementRouter(spark: SparkSession, root: String) {
         .map(s => s.name.toLowerCase -> s)
         .toMap
     }
-    if (specs.isEmpty) return sql
-    val out = new StringBuilder
+    if (specs.isEmpty) return stmt
+    val out = new Stmt.Builder
     var i = 0
     while (i < sig.length) {
       val t = sig(i)
@@ -1992,18 +1974,17 @@ class StatementRouter(spark: SparkSession, root: String) {
             specs.get(unq(last).toLowerCase).map { spec =>
               val qualifier = target.dropRight(1).map(_.text).mkString // "t."
               val q = renderSig(parts(1))
-              val ored = spec.cols
+              out.gen(spec.cols
                 .map(c => s"match_text_analyzed($qualifier$c, $q, '${spec.analyzer}')")
-                .mkString("(", " OR ", ")")
-              out.append(ored).append(' ')
+                .mkString("(", " OR ", ")"))
               i = close + 1
               true
             }.getOrElse(false)
           } else false
         } else false
-      if (!rewritten) { out.append(t.text).append(' '); i += 1 }
+      if (!rewritten) { out.keep(t); i += 1 }
     }
-    out.toString.trim
+    out.result
   }
 
   /** `SET [SESSION | GLOBAL] [PERSISTENT | TRANSIENT] key { = | TO } value
@@ -2197,25 +2178,19 @@ class StatementRouter(spark: SparkSession, root: String) {
     * refresh of every table. */
   private def analyzeStmt(): DataFrame = {
     registerViews()
-    val rp = new Path(root)
-    val n =
-      if (!fs.exists(rp)) 0L
-      else fs.listStatus(rp).count { st =>
-        val live = st.isDirectory && fs.exists(new Path(st.getPath, "_manifests"))
-        if (live) {
-          try spark.catalog.refreshTable(st.getPath.getName)
-          catch { case _: Exception => () }
-          // per-column statistics → pg_stats (the reference's ANALYZE
-          // feeds TableStatsService, surfaced through pg_stats): one
-          // partial-aggregated pass per table computing null fraction,
-          // average width and approximate distinct count per column —
-          // the same trio the reference's ReservoirSampler collects
-          try collectColumnStats(st.getPath.getName)
-          catch { case _: Exception => () }
-        }
-        live
-      }.toLong
-    summary(n)
+    val names = tableNames
+    names.foreach { name =>
+      try spark.catalog.refreshTable(name)
+      catch { case _: Exception => () }
+      // per-column statistics → pg_stats (the reference's ANALYZE feeds
+      // TableStatsService, surfaced through pg_stats): one
+      // partial-aggregated pass per table computing null fraction,
+      // average width and approximate distinct count per column — the
+      // same trio the reference's ReservoirSampler collects
+      try collectColumnStats(name)
+      catch { case _: Exception => () }
+    }
+    summary(names.length.toLong)
   }
 
   private def collectColumnStats(name: String): Unit = {
@@ -2322,27 +2297,27 @@ class StatementRouter(spark: SparkSession, root: String) {
     val name = unq(sig(vi + 1))
     val ai = sig.indexWhere(_.is("as"), vi + 2)
     require(ai > 0, "CREATE VIEW requires AS <query>")
-    val query = renderSig(sig.slice(ai + 1, sig.length))
+    val queryToks = sig.slice(ai + 1, sig.length)
+    val query = renderSig(queryToks)
     require(VersionedTable.latestVersion(spark, tablePath(name)).isEmpty,
       s"a table named $name already exists")
     val p = new Path(viewsDir, s"$name.sql")
     require(orReplace || !fs.exists(p), s"view $name already exists")
-    registerViews(query)
+    registerViews(queryToks)
     // analyze (not execute) the translated text — schema resolution errors
     // surface at CREATE VIEW, like the reference's analyzer
-    spark.sql(applyDeclaredAnalyzers(Dialect.translate(query))).schema
+    lower(query).schema
     fs.mkdirs(viewsDir)
     val tmp = new Path(viewsDir, s"$name.sql.tmp")
-    val out = fs.create(tmp, true)
-    out.write(query.getBytes("UTF-8")); out.close()
+    writeTextFile(tmp, query)
     fs.delete(p, false)
     require(fs.rename(tmp, p), s"view commit failed for $name")
     summary(0L)
   }
 
-  private def dropView(sig: Vector[Tok]): DataFrame = {
-    val ifExists = sig.lift(2).exists(_.is("if"))
-    val name = unq(sig(if (ifExists) 4 else 2))
+  private def dropView(stmt: Stmt): DataFrame = {
+    val ifExists = stmt.sig.lift(2).exists(_.is("if"))
+    val name = unq(stmt.sig(stmt.nameAt(2)))
     val p = new Path(viewsDir, s"$name.sql")
     if (!fs.exists(p)) require(ifExists, s"view $name does not exist")
     else fs.delete(p, false)
@@ -2600,13 +2575,7 @@ class StatementRouter(spark: SparkSession, root: String) {
     import spark.implicits._
     val fi = sig.indexWhere(t => t.is("from") || t.is("in"))
     val schema = if (fi > 0 && fi + 1 < sig.length) unq(sig(fi + 1)) else "doc"
-    val all = {
-      val rp = new Path(root)
-      if (!fs.exists(rp)) Seq.empty[String]
-      else fs.listStatus(rp).toSeq
-        .filter(st => st.isDirectory && fs.exists(new Path(st.getPath, "_manifests")))
-        .map(_.getPath.getName)
-    }
+    val all = tableNames
     val names =
       if (schema == "doc") all.filterNot(_.contains("__"))
       else if (registeredSchemas.contains(schema.toLowerCase))
@@ -2636,8 +2605,8 @@ class StatementRouter(spark: SparkSession, root: String) {
     * (reference `CopyFromPlan.java` / `CopyToPlan.java` via
     * [[sources.CopyOps]]). FROM appends the parsed rows as a new table
     * version; RETURN SUMMARY yields the per-file error channel. */
-  private def copyStmt(stmt: String): DataFrame = {
-    val ts = Dialect.lex(stmt).filter(_.sig)
+  private def copyStmt(stmt: Stmt): DataFrame = {
+    val ts = stmt.sig
     val name = ts(1).text
     val dirIdx = ts.indexWhere(t => t.is("from") || t.is("to"))
     require(dirIdx > 0, "COPY requires FROM or TO")
@@ -2669,8 +2638,12 @@ class StatementRouter(spark: SparkSession, root: String) {
       val (rows, fileSummary) =
         if (fmt == "csv")
           sources.CopyOps.copyFromCsv(spark, target.schema,
-            opts.getOrElse("header", "true").toBoolean, path, pk)
-        else sources.CopyOps.copyFromJson(spark, target.schema, path, pk)
+            opts.getOrElse("header", "true").toBoolean, path, pk, Some(target))
+        else sources.CopyOps.copyFromJson(spark, target.schema, path, pk, Some(target))
+      // RETURN SUMMARY counts against the table as it stood before this
+      // COPY, so it is computed before the write
+      val report =
+        if (ts.exists(_.is("summary"))) Some(fileSummary.localCheckpoint()) else None
       // generated columns recompute for file rows (reference: "computed as
       // needed for every INSERT, UPDATE and COPY FROM"); CHECK/NOT NULL
       // enforced like INSERT. Files carrying a generated column get it
@@ -2684,7 +2657,7 @@ class StatementRouter(spark: SparkSession, root: String) {
       // an append only changes the incoming rows' partitions
       writeTable(name, Dml.insertInto(target, imported),
         partitionTouch(name, imported))
-      if (ts.exists(_.is("summary"))) fileSummary else summary(n)
+      report.getOrElse(summary(n))
     } else {
       val cur = readTable(name)
       fmt match {
@@ -2696,85 +2669,68 @@ class StatementRouter(spark: SparkSession, root: String) {
     }
   }
 
-  /** Route classification WITHOUT execution (plain EXPLAIN): the same
-    * decision chain as [[resolveSelect]] — token shapes, declared index
-    * specs, PK lookups — but no index is built or loaded, no ANN probe or
-    * recall count runs, and no `_seqno` sidecar is written. The `index …`
-    * and `probe …` suffixes are execution facts and are omitted. */
-  private def classifySelectRoute(stmt: String): String = {
-    val stmtSys = rewriteSystemColumns(stmt, dry = true)
-    val fielded = routeFieldedScore(stmtSys, dry = true)
-    val pre0 = fielded.getOrElse(stmtSys)
-    if (routeKnnStored(pre0, dry = true).isDefined)
-      StatementRouter.lastKnnRoute.get()
-    else if (fielded.isDefined) "indexed-score-fielded-bm25"
-    else if (routeIndexedScore(Dialect.translate(pre0), dry = true).isDefined)
-      "indexed-score-bm25"
-    else "exact"
-  }
-
   /** `EXPLAIN [ANALYZE | VERBOSE] <stmt>` and the option-list form
     * `EXPLAIN (ANALYZE [bool], COSTS [bool], VERBOSE [bool]) <stmt>`
     * (reference explain.rst + `ExplainPlan.java`) → one plan-text row.
     *
-    * Plain EXPLAIN is PLAN-ONLY, like the reference's: the route is
-    * classified by inspection ([[classifySelectRoute]]) and the displayed
-    * plan is the side-effect-free exact lowering — no index is built, no
-    * ANN probe runs, no `_seqno` sidecar is written, nothing on disk
-    * changes. EXPLAIN ANALYZE executes for real, so it resolves through
+    * Plain EXPLAIN is PLAN-ONLY, like the reference's: it runs the same
+    * route chain as execution ([[routeSelect]]) without the served half
+    * of any route, and displays the side-effect-free exact lowering — no
+    * index is built, no ANN probe runs, no `_seqno` sidecar is written,
+    * nothing on disk changes. The `index …` and `probe …` suffixes are
+    * execution facts and are omitted. EXPLAIN ANALYZE executes for real, so it resolves through
     * the full route chain and reports the served plan's shape (hits-view
     * joins &c.) plus index load/delta/full and probe width. VERBOSE maps
     * to Spark's extended breakdown (parsed → analyzed → optimized →
     * physical — the optimizer-steps analog of the reference's VERBOSE
     * table); COSTS to the cost-annotated logical plan
     * (`Statistics(sizeInBytes, rowCount)` per node). */
-  private def explainStmt(stmt: String): DataFrame = {
+  private def explainStmt(stmt: Stmt): DataFrame = {
     import spark.implicits._
-    var analyze = "(?i)^\\s*explain\\s+analyze\\b".r.findFirstIn(stmt).isDefined
-    var verbose = "(?i)^\\s*explain\\s+verbose\\b".r.findFirstIn(stmt).isDefined
+    val sig = stmt.sig
+    var analyze = sig.lift(1).exists(_.is("analyze"))
+    var verbose = sig.lift(1).exists(_.is("verbose"))
     var costs = false
     // parenthesized option list: `name [TRUE|FALSE|ON|OFF|1|0]`, comma-sep
-    val optList = "(?is)^\\s*explain\\s*\\(([^)]*)\\)".r.findFirstMatchIn(stmt)
-    optList.foreach { m =>
-      m.group(1).split(",").map(_.trim).filter(_.nonEmpty).foreach { o =>
-        val parts = o.split("\\s+")
-        val on = parts.lift(1).map(_.toLowerCase) match {
-          case None | Some("true") | Some("on") | Some("1") => true
-          case Some("false") | Some("off") | Some("0")      => false
-          case Some(other) =>
-            sys.error(s"EXPLAIN option ${parts(0)}: bad boolean '$other'")
-        }
-        parts(0).toLowerCase match {
-          case "analyze" => analyze = on
-          case "costs"   => costs = on
-          case "verbose" => verbose = on
-          case other     => sys.error(s"unknown EXPLAIN option: $other")
-        }
+    val optClose = if (sig.lift(1).exists(_.isSym("("))) matchFwd(sig, 1) else -1
+    if (optClose > 0) splitTopCommas(sig.slice(2, optClose)).foreach { o =>
+      val on = o.lift(1).map(_.text.toLowerCase) match {
+        case None | Some("true") | Some("on") | Some("1") => true
+        case Some("false") | Some("off") | Some("0")      => false
+        case Some(other) =>
+          sys.error(s"EXPLAIN option ${o(0).text}: bad boolean '$other'")
+      }
+      o(0).text.toLowerCase match {
+        case "analyze" => analyze = on
+        case "costs"   => costs = on
+        case "verbose" => verbose = on
+        case other     => sys.error(s"unknown EXPLAIN option: $other")
       }
     }
-    val inner = stmt.trim.replaceFirst(
-      "(?is)^explain\\s*(\\([^)]*\\)\\s*|(analyze|verbose)\\s+)?", "")
+    val inner = stmt.from(
+      if (optClose > 0) optClose + 1 else if (analyze || verbose) 2 else 1)
     // default = the plan tree (reference default); VERBOSE = the full
     // parsed→analyzed→optimized→physical breakdown; COSTS = the
     // cost-annotated logical plan
     val mode = if (costs) "cost" else if (verbose) "extended" else "formatted"
-    registerViews(inner)
-    val head = inner.trim.takeWhile(!_.isWhitespace).toLowerCase
+    registerViews(inner.sig)
+    val head = inner.sig.headOption.fold("")(_.text.toLowerCase)
     if (head == "select" || head == "with") {
       if (analyze) {
         val df = resolveSelect(inner)
         val prov = s"route: ${StatementRouter.lastSelectRoute.get()}"
         Seq(prov + "\n" + sources.Maintenance.explain(df, analyze)).toDF("plan")
       } else {
-        val route = classifySelectRoute(inner)
-        val df = spark.sql(applyDeclaredAnalyzers(
-          Dialect.translate(rewriteSystemColumns(inner, dry = true))))
+        val (route, base, served) = routeSelect(inner, _ => Some(""))
+        // a matched route's statement reads views only its served half
+        // registers: show the exact lowering it upgrades instead
+        val df = if (route == "exact") spark.sql(served.text) else lower(base.text)
         Seq(s"route: $route\n" +
             sources.Maintenance.explain(df, analyze = false, mode = mode))
           .toDF("plan")
       }
     } else
-      Seq(sources.Maintenance.explain(Engine.sql(spark, inner), analyze,
+      Seq(sources.Maintenance.explain(Engine.sql(spark, inner.text), analyze,
         mode = mode)).toDF("plan")
   }
 
@@ -2785,25 +2741,24 @@ class StatementRouter(spark: SparkSession, root: String) {
 
   // ---------- CREATE / DROP ----------
 
-  private def createTable(stmt: String): DataFrame = {
+  private def createTable(stmt: Stmt): DataFrame = {
+    val sig = stmt.sig
+    val ifNotExists = sig.lift(2).exists(_.is("if"))
     // CREATE TABLE [IF NOT EXISTS] t AS {(query)|query}  (create-table-as
     // .rst) and CREATE TABLE [IF NOT EXISTS] t (LIKE src [opts])
     // (create-table-like.rst) branch off before the column-list parse
     locally {
-      val sig = Dialect.lex(stmt).filter(_.sig)
-      var i = 2
-      var ine = false
-      if (sig.lift(i).exists(_.is("if"))) { ine = true; i += 3 }
+      val i = stmt.nameAt(2)
       if (sig.lift(i).isDefined) {
         val name = unq(sig(i))
         if (sig.lift(i + 1).exists(_.is("as")))
-          return createTableAs(name, ine, sig, i + 2)
+          return createTableAs(name, ifNotExists, sig, i + 2)
         if (sig.lift(i + 1).exists(_.isSym("(")) &&
             sig.lift(i + 2).exists(_.is("like")))
-          return createTableLike(name, ine, sig, i + 1)
+          return createTableLike(name, ifNotExists, sig, i + 1)
       }
     }
-    val ddl = Dialect.translateDdl(stmt)
+    val ddl = Dialect.translateDdl(stmt.text)
     // "CREATE TABLE <name> (<cols>) USING parquet[ PARTITIONED ...]"
     val open = ddl.indexOf('(')
     val closeMark = ddl.indexOf(") USING parquet")
@@ -2811,7 +2766,6 @@ class StatementRouter(spark: SparkSession, root: String) {
     val name = ddl.substring("CREATE TABLE ".length, open).trim
     val schema = StructType.fromDDL(
       ddl.substring(open + 1, closeMark).replace(" NOT NULL", ""))
-    val ifNotExists = Dialect.lex(stmt).filter(_.sig).lift(2).exists(_.is("if"))
     if (VersionedTable.latestVersion(spark, tablePath(name)).isDefined) {
       require(ifNotExists, s"table $name already exists")
       return summary(0L)
@@ -2832,21 +2786,18 @@ class StatementRouter(spark: SparkSession, root: String) {
     // written value-partitioned, WHERE on the partition columns prunes
     // directories (reference DocTableInfo.partitionedBy — one index per
     // partition; PartitionPruningSpec asserts the pruning)
-    locally {
-      val sig = Dialect.lex(stmt).filter(_.sig)
-      val pb = sig.indexWhere(_.is("partitioned"))
-      if (pb >= 0 && sig.lift(pb + 1).exists(_.is("by")) &&
-          sig.lift(pb + 2).exists(_.isSym("("))) {
-        val c = matchFwd(sig, pb + 2)
-        val cols = splitTopCommas(sig.slice(pb + 3, c)).map(p => unq(p.head))
-        VersionedTable.setPartitionSpec(spark, tablePath(name),
-          VersionedTable.PartitionSpec(cols, ""))
-      }
+    val pb = sig.indexWhere(_.is("partitioned"))
+    if (pb >= 0 && sig.lift(pb + 1).exists(_.is("by")) &&
+        sig.lift(pb + 2).exists(_.isSym("("))) {
+      val c = matchFwd(sig, pb + 2)
+      val cols = splitTopCommas(sig.slice(pb + 3, c)).map(p => unq(p.head))
+      VersionedTable.setPartitionSpec(spark, tablePath(name),
+        VersionedTable.PartitionSpec(cols, ""))
     }
     // PRIMARY KEY (table-level clause or per-column modifier) → durable
     // identity metadata (reference DocTableInfo.primaryKey); SHOW CREATE
     // TABLE renders it back and the indexed _score route joins through it
-    val pkCols = parsePrimaryKey(Dialect.lex(stmt).filter(_.sig))
+    val pkCols = parsePrimaryKey(sig)
     if (pkCols.nonEmpty) {
       VersionedTable.setPrimaryKey(spark, tablePath(name), pkCols)
       sources.InformationSchema.registerPrimaryKey(name, pkCols)
@@ -2854,7 +2805,7 @@ class StatementRouter(spark: SparkSession, root: String) {
     // fulltext INDEX defs (table-level and column-level) → durable index
     // spec; the analyzer must exist NOW, like the reference's CREATE-time
     // validation
-    val ftIndexes = parseFulltextIndexes(Dialect.lex(stmt).filter(_.sig))
+    val ftIndexes = parseFulltextIndexes(sig)
     if (ftIndexes.nonEmpty) {
       ftIndexes.foreach(ix => require(
         ix.analyzer.startsWith("vector:") ||
@@ -2866,7 +2817,7 @@ class StatementRouter(spark: SparkSession, root: String) {
     // untyped generated columns get their type inferred from the
     // expression and stitched into the schema at their declared position
     val (fullSchema, cspec) =
-      parseConstraints(name, Dialect.lex(stmt).filter(_.sig), schema)
+      parseConstraints(name, sig, schema)
     if (cspec.generated.nonEmpty || cspec.checks.nonEmpty ||
         cspec.notNull.nonEmpty || cspec.defaults.nonEmpty)
       VersionedTable.setConstraintSpec(spark, tablePath(name), cspec)
@@ -2891,7 +2842,7 @@ class StatementRouter(spark: SparkSession, root: String) {
     var q = sig.slice(from, sig.length)
     if (q.headOption.exists(_.isSym("(")) && matchFwd(q, 0) == q.length - 1)
       q = q.slice(1, q.length - 1)
-    registerViews(renderSig(q))
+    registerViews(q)
     val df = spark.sql(Dialect.translate(renderSig(q)))
     VersionedTable.commit(spark, tablePath(name), df)
     summary(readTable(name).count())
@@ -3272,13 +3223,6 @@ class StatementRouter(spark: SparkSession, root: String) {
   // CreateForeignTablePlan.java, CreateUserMappingPlan.java — the metadata
   // half is fully functional; the actual JDBC scan needs an endpoint) ----------
 
-  private def unq(t: Tok): String =
-    if (t.text.length >= 2 && t.text.head == '\'' && t.text.last == '\'')
-      t.text.substring(1, t.text.length - 1).replace("''", "'")
-    else if (t.text.length >= 2 && t.text.head == '"' && t.text.last == '"')
-      t.text.substring(1, t.text.length - 1)
-    else t.text
-
   /** `OPTIONS (key 'value', ...)` anywhere after `from`. */
   private def parseOptions(sig: Vector[Tok], from: Int): Map[String, String] = {
     val oi = sig.indexWhere(_.is("options"), from)
@@ -3470,9 +3414,9 @@ class StatementRouter(spark: SparkSession, root: String) {
     summary(1L)
   }
 
-  private def createServer(sig: Vector[Tok]): DataFrame = {
-    var i = 2
-    if (sig.lift(i).exists(_.is("if"))) i += 3
+  private def createServer(stmt: Stmt): DataFrame = {
+    val sig = stmt.sig
+    val i = stmt.nameAt(2)
     val name = sig(i).text
     val opts = parseOptions(sig, i)
     graft.sources.Fdw.createServer(name,
@@ -3480,10 +3424,9 @@ class StatementRouter(spark: SparkSession, root: String) {
     summary(0L)
   }
 
-  private def createForeignTable(sig: Vector[Tok]): DataFrame = {
-    var i = 3
-    if (sig.lift(i).exists(_.is("if"))) i += 3
-    val name = sig(i).text
+  private def createForeignTable(stmt: Stmt): DataFrame = {
+    val sig = stmt.sig
+    val name = sig(stmt.nameAt(3)).text
     val si = sig.lastIndexWhere(_.is("server"))
     require(si > 0 && si + 1 < sig.length, "CREATE FOREIGN TABLE needs SERVER <name>")
     val server = sig(si + 1).text
@@ -3661,7 +3604,8 @@ class StatementRouter(spark: SparkSession, root: String) {
   /** `DECLARE c [BINARY] [[A|IN]SENSITIVE] [[NO] SCROLL] CURSOR
     * [{WITH|WITHOUT} HOLD] FOR query`. The query plan suspends behind
     * `toLocalIterator` — nothing executes until the first FETCH. */
-  private def declareCursor(stmt: String, sig: Vector[Tok]): DataFrame = {
+  private def declareCursor(stmt: Stmt): DataFrame = {
+    val sig = stmt.sig
     val name = unq(sig(1))
     require(!cursors.contains(name), s"""Cursor "$name" already exists""")
     val ci = sig.indexWhere(_.is("cursor"))
@@ -3669,15 +3613,15 @@ class StatementRouter(spark: SparkSession, root: String) {
     val flags = sig.slice(2, ci)
     val scroll = flags.exists(_.is("scroll")) &&
       !flags.sliding(2).exists(p => p.length == 2 && p(0).is("no") && p(1).is("scroll"))
-    val m = java.util.regex.Pattern
-      .compile("(?is)\\bcursor\\b(?:\\s+(?:with|without)\\s+hold)?\\s+for\\b(.*)$")
-      .matcher(stmt)
-    require(m.find(), "DECLARE needs CURSOR FOR <query>")
-    val query = m.group(1).trim
-    registerViews(query)
+    val hold = sig.lift(ci + 1).exists(t => t.is("with") || t.is("without")) &&
+      sig.lift(ci + 2).exists(_.is("hold"))
+    val fi = if (hold) ci + 3 else ci + 1
+    require(sig.lift(fi).exists(_.is("for")), "DECLARE needs CURSOR FOR <query>")
+    val query = stmt.from(fi + 1)
+    registerViews(query.sig)
     // non-recording inner path: execute() already logs the DECLARE once
-    val df = spark.sql(applyDeclaredAnalyzers(Dialect.translate(query)))
-    cursors(name) = sources.Cursor.declare(name, query, df, scroll)
+    val df = lower(query.text)
+    cursors(name) = sources.Cursor.declare(name, query.text, df, scroll)
     summary(0L)
   }
 
@@ -3941,22 +3885,15 @@ class StatementRouter(spark: SparkSession, root: String) {
     * Hadoop FileSystem for the configured location URI). */
   private def repositoriesFile = new Path(root, "_repositories")
 
-  private def repositories: Map[String, (String, String)] = {
-    if (!fs.exists(repositoriesFile)) return Map.empty
-    val in = fs.open(repositoriesFile)
-    val bytes = new Array[Byte](in.available())
-    in.readFully(bytes); in.close()
-    new String(bytes, "UTF-8").split("\n").filter(_.nonEmpty).map { l =>
+  private def repositories: Map[String, (String, String)] =
+    if (!fs.exists(repositoriesFile)) Map.empty
+    else readTextFile(repositoriesFile).split("\n").filter(_.nonEmpty).map { l =>
       val a = l.split("\t", 3); a(0) -> (a(1), a(2))
     }.toMap
-  }
 
-  private def writeRepositories(m: Map[String, (String, String)]): Unit = {
-    val out = fs.create(repositoriesFile, true)
-    out.write(m.toSeq.sortBy(_._1)
-      .map { case (n, (t, l)) => s"$n\t$t\t$l" }.mkString("\n").getBytes("UTF-8"))
-    out.close()
-  }
+  private def writeRepositories(m: Map[String, (String, String)]): Unit =
+    writeTextFile(repositoriesFile, m.toSeq.sortBy(_._1)
+      .map { case (n, (t, l)) => s"$n\t$t\t$l" }.mkString("\n"))
 
   /** `CREATE REPOSITORY r TYPE t WITH (location = '…')`. */
   private def createRepository(sig: Vector[Tok]): DataFrame = {
@@ -4013,13 +3950,8 @@ class StatementRouter(spark: SparkSession, root: String) {
     val (_, loc) = repositories.getOrElse(repo,
       sys.error(s"repository $repo does not exist"))
     val names: Seq[String] =
-      if (sig.lift(5).exists(_.is("all"))) {
-        val rp = new Path(root)
-        if (!fs.exists(rp)) Seq.empty
-        else fs.listStatus(rp).toSeq.filter(st => st.isDirectory &&
-            fs.exists(new Path(st.getPath, "_manifests")))
-          .map(_.getPath.getName)
-      } else {
+      if (sig.lift(5).exists(_.is("all"))) tableNames
+      else {
         require(sig.lift(5).exists(_.is("table")), "TABLE list or ALL expected")
         val stop = sig.indexWhere(_.is("with")) match {
           case -1 => sig.length
@@ -4033,15 +3965,13 @@ class StatementRouter(spark: SparkSession, root: String) {
     names.foreach { t =>
       val df = readTable(t)
       df.write.mode("overwrite").parquet(new Path(snapDir, s"$t/data").toString)
-      val out = fs.create(new Path(snapDir, s"$t/_schema"), true)
-      out.write(df.schema.toDDL.getBytes("UTF-8")); out.close()
+      writeTextFile(new Path(snapDir, s"$t/_schema"), df.schema.toDDL)
       tableSpecFiles.foreach { f =>
         val p = new Path(tablePath(t), f)
         if (fs.exists(p)) copyFile(p, new Path(snapDir, s"$t/$f"))
       }
     }
-    val marker = fs.create(new Path(snapDir, "_snapshot"), true)
-    marker.write(names.sorted.mkString("\n").getBytes("UTF-8")); marker.close()
+    writeTextFile(new Path(snapDir, "_snapshot"), names.sorted.mkString("\n"))
     summary(names.length.toLong)
   }
 
@@ -4058,12 +3988,7 @@ class StatementRouter(spark: SparkSession, root: String) {
     val snapDir = new Path(loc, snap)
     val markerPath = new Path(snapDir, "_snapshot")
     require(fs.exists(markerPath), s"snapshot $repo.$snap does not exist")
-    val stored: Seq[String] = {
-      val in = fs.open(markerPath)
-      val bytes = new Array[Byte](in.available())
-      in.readFully(bytes); in.close()
-      new String(bytes, "UTF-8").split("\n").toSeq.filter(_.nonEmpty)
-    }
+    val stored = readTextFile(markerPath).split("\n").toSeq.filter(_.nonEmpty)
     val names: Seq[String] =
       if (sig.lift(5).exists(_.is("all")) || sig.length <= 5) stored
       else {
@@ -4080,10 +4005,7 @@ class StatementRouter(spark: SparkSession, root: String) {
         val p = new Path(snapDir, s"$t/$f")
         if (fs.exists(p)) copyFile(p, new Path(tablePath(t), f))
       }
-      val schemaIn = fs.open(new Path(snapDir, s"$t/_schema"))
-      val bytes = new Array[Byte](schemaIn.available())
-      schemaIn.readFully(bytes); schemaIn.close()
-      val schema = StructType.fromDDL(new String(bytes, "UTF-8"))
+      val schema = StructType.fromDDL(readTextFile(new Path(snapDir, s"$t/_schema")))
       val df = spark.read.schema(schema)
         .parquet(new Path(snapDir, s"$t/data").toString)
       VersionedTable.commit(spark, tablePath(t), df)
@@ -4108,9 +4030,10 @@ class StatementRouter(spark: SparkSession, root: String) {
   /** `DROP SCHEMA [IF EXISTS] s [CASCADE]` — a plain drop requires the
     * namespace empty; CASCADE drops its tables first (drop-schema
     * semantics mirror PG's, which the reference follows). */
-  private def dropSchema(sig: Vector[Tok]): DataFrame = {
+  private def dropSchema(stmt: Stmt): DataFrame = {
+    val sig = stmt.sig
     val ifExists = sig.lift(2).exists(_.is("if"))
-    val ni = if (ifExists) 4 else 2
+    val ni = stmt.nameAt(2)
     val s = unq(sig(ni)).toLowerCase
     val cascade = sig.lift(ni + 1).exists(_.is("cascade"))
     val cur = registeredSchemas
@@ -4118,14 +4041,7 @@ class StatementRouter(spark: SparkSession, root: String) {
       require(ifExists, s"schema $s does not exist")
       return summary(0L)
     }
-    val members = {
-      val rp = new Path(root)
-      if (!fs.exists(rp)) Seq.empty[String]
-      else fs.listStatus(rp).toSeq.filter(st => st.isDirectory &&
-          st.getPath.getName.startsWith(s + "__") &&
-          fs.exists(new Path(st.getPath, "_manifests")))
-        .map(_.getPath.getName)
-    }
+    val members = tableNames.filter(_.startsWith(s + "__"))
     if (members.nonEmpty) {
       require(cascade, s"schema $s is not empty (use CASCADE)")
       members.foreach { m =>
@@ -4135,18 +4051,14 @@ class StatementRouter(spark: SparkSession, root: String) {
         spark.catalog.dropTempView(m)
       }
     }
-    val out = fs.create(schemasFile, true)
-    out.write((cur - s).toSeq.sorted.mkString("\n").getBytes("UTF-8"))
-    out.close()
+    writeSchemas(cur - s)
     sources.InformationSchema.dropSchema(s)
     summary(0L)
   }
 
-  private def dropTable(sig: Vector[Tok]): DataFrame = {
-    var i = 2
-    val ifExists = sig.lift(i).exists(_.is("if")) && sig.lift(i + 1).exists(_.is("exists"))
-    if (ifExists) i += 2
-    val name = sig(i).text
+  private def dropTable(stmt: Stmt): DataFrame = {
+    val ifExists = stmt.sig.lift(2).exists(_.is("if"))
+    val name = stmt.sig(stmt.nameAt(2)).text
     val p = new Path(tablePath(name))
     if (!fs.exists(p)) require(ifExists, s"table $name does not exist")
     else {
@@ -4160,8 +4072,8 @@ class StatementRouter(spark: SparkSession, root: String) {
 
   // ---------- INSERT ----------
 
-  private def insert(stmt: String): DataFrame = {
-    val ts = Dialect.lex(Dialect.translate(stmt)).filter(_.sig)
+  private def insert(stmt: Stmt): DataFrame = {
+    val ts = translated(stmt.text).sig
     require(ts(0).is("insert") && ts(1).is("into"), "INSERT INTO expected")
     var i = 2
     val name = ts(i).text; i += 1
@@ -4191,7 +4103,7 @@ class StatementRouter(spark: SparkSession, root: String) {
       if (srcToks.headOption.exists(_.is("values")))
         spark.sql("SELECT * FROM " + renderSig(srcToks) +
           s" AS __v(${cols.mkString(", ")})")
-      else { registerViews(renderSig(srcToks)); spark.sql(renderSig(srcToks)).toDF(cols: _*) }
+      else { registerViews(srcToks); spark.sql(renderSig(srcToks)).toDF(cols: _*) }
     // align to the full target schema: unlisted columns become typed nulls
     val alignedRaw = rowsRaw.select(target.schema.fields.map { f =>
       if (cols.contains(f.name)) rowsRaw(f.name).cast(f.dataType).as(f.name)
@@ -4281,7 +4193,7 @@ class StatementRouter(spark: SparkSession, root: String) {
     * the assignments (rhs may reference `excluded.<col>` = the incoming row
     * and bare `<col>` = the current row), unmatched targets pass through. */
   private def mergeUpsert(target: DataFrame, rows: DataFrame, keys: Seq[String],
-                          assigns: Seq[(String, String)]): DataFrame = {
+                          assigns: Seq[(String, Vector[Tok])]): DataFrame = {
     val t = target.as("__t")
     val e = rows.dropDuplicates(keys).as("__e")
     val joined = t.join(e, keys.map(k => t(k) === e(k)).reduce(_ && _), "full_outer")
@@ -4292,8 +4204,7 @@ class StatementRouter(spark: SparkSession, root: String) {
       val base = when(inserted, e(cname)).otherwise(t(cname))
       assignMap.get(cname) match {
         case Some(rhs) =>
-          val rewritten = qualifyExcluded(rhs)
-          when(matched, expr(rewritten)).otherwise(base).as(cname)
+          when(matched, expr(qualifyExcluded(rhs))).otherwise(base).as(cname)
         case None => base.as(cname)
       }
     }.toSeq: _*)
@@ -4302,8 +4213,7 @@ class StatementRouter(spark: SparkSession, root: String) {
   /** `excluded.x` → `__e.x`; bare column words stay unqualified, which
     * resolves against the join output — ambiguous only if the same name is
     * assigned AND referenced bare, so bare refs are qualified to `__t`. */
-  private def qualifyExcluded(rhsSql: String): String = {
-    val toks = Dialect.lex(rhsSql).filter(_.sig)
+  private def qualifyExcluded(toks: Vector[Tok]): String = {
     val out = scala.collection.mutable.ArrayBuffer.empty[String]
     var i = 0
     while (i < toks.length) {
@@ -4319,8 +4229,8 @@ class StatementRouter(spark: SparkSession, root: String) {
 
   // ---------- UPDATE / DELETE ----------
 
-  private def update(stmt: String): DataFrame = {
-    val ts = Dialect.lex(Dialect.translate(stmt)).filter(_.sig)
+  private def update(stmt: Stmt): DataFrame = {
+    val ts = translated(stmt.text).sig
     require(ts(0).is("update") && ts(2).is("set"), "UPDATE <t> SET expected")
     val name = ts(1).text
     val (setEnd, whereToks, retToks) = tailClauses(ts, 3)
@@ -4329,7 +4239,7 @@ class StatementRouter(spark: SparkSession, root: String) {
     // per-row OCC: a rewritten `_seq_no` predicate references the
     // row-diff seq column — join it onto the snapshot for the filter,
     // drop it again before the write
-    val needSeq = stmt.toLowerCase.contains("__graft_seq_no")
+    val needSeq = stmt.text.toLowerCase.contains("__graft_seq_no")
     val cur0 = readTable(name)
     val cur = if (!needSeq) cur0 else withSeqNo(cur0, name,
       VersionedTable.latestVersion(spark, tablePath(name)).getOrElse(1))
@@ -4342,7 +4252,7 @@ class StatementRouter(spark: SparkSession, root: String) {
       .map { case (c, ex, _) => c -> expr(ex).cast(cur.schema(c).dataType) }
       .toMap
     val (next, touched) = Dml.update(cur, cond,
-      assigns.map { case (c, rhs) => c -> expr(rhs) }.toMap, genRecompute)
+      assigns.map { case (c, rhs) => c -> expr(renderSig(rhs)) }.toMap, genRecompute)
     spec.foreach { sp =>
       val assignedGen = sp.generated.filter { case (c, _, _) => assigns.exists(_._1 == c) }
       if (assignedGen.nonEmpty)
@@ -4400,13 +4310,13 @@ class StatementRouter(spark: SparkSession, root: String) {
     } catch { case scala.util.control.NonFatal(_) => () }
   }
 
-  private def delete(stmt: String): DataFrame = {
-    val ts = Dialect.lex(Dialect.translate(stmt)).filter(_.sig)
+  private def delete(stmt: Stmt): DataFrame = {
+    val ts = translated(stmt.text).sig
     require(ts(0).is("delete") && ts(1).is("from"), "DELETE FROM expected")
     val name = ts(2).text
     val (_, whereToks, retToks) = tailClauses(ts, 3)
     val cond = whereToks.map(w => expr(renderSig(w))).getOrElse(lit(true))
-    val needSeq = stmt.toLowerCase.contains("__graft_seq_no")
+    val needSeq = stmt.text.toLowerCase.contains("__graft_seq_no")
     val cur0 = readTable(name)
     val cur = if (!needSeq) cur0 else withSeqNo(cur0, name,
       VersionedTable.latestVersion(spark, tablePath(name)).getOrElse(1))
@@ -4450,11 +4360,11 @@ class StatementRouter(spark: SparkSession, root: String) {
   }
 
   /** `a = expr, b = expr` (top-level commas, first top-level `=`). */
-  private def parseAssignments(v: Vector[Tok]): Seq[(String, String)] =
+  private def parseAssignments(v: Vector[Tok]): Seq[(String, Vector[Tok])] =
     splitTopCommas(v).map { part =>
       val eq = part.indexWhere(_.isSym("="))
       require(eq > 0, s"assignment expected in: ${renderSig(part)}")
-      (part(eq - 1).text, renderSig(part.slice(eq + 1, part.length)))
+      (part(eq - 1).text, part.slice(eq + 1, part.length))
     }
 
   private def splitTopCommas(v: Vector[Tok]): Seq[Vector[Tok]] = {
@@ -4472,6 +4382,82 @@ class StatementRouter(spark: SparkSession, root: String) {
 }
 
 object StatementRouter {
+  import Dialect.Tok
+
+  /** One statement, lexed once: every token — whitespace and comments
+    * included, so `text` is exactly their concatenation — and the
+    * significant ones the router reads. Resolution, privilege checks,
+    * dispatch, the routes and the handlers all read these tokens; a
+    * rewrite builds its result with a [[Stmt.Builder]] instead of
+    * rendering text and lexing it again. */
+  private[graft] final class Stmt private (toks: Vector[Tok]) {
+    val text: String = Dialect.render(toks)
+    val sig: Vector[Tok] = toks.filter(_.sig)
+
+    /** Index of the object name at `i`, past an `IF [NOT] EXISTS` guard. */
+    def nameAt(i: Int): Int =
+      if (!sig.lift(i).exists(_.is("if"))) i
+      else if (sig.lift(i + 1).exists(_.is("not"))) i + 3
+      else i + 2
+
+    /** The relation named at `i` — `a.b` or bare `a`, lower-cased. */
+    def relAt(i: Int): Option[String] =
+      if (!sig.lift(i).exists(_.isWord)) None
+      else if (sig.lift(i + 1).exists(_.isSym(".")) && sig.lift(i + 2).exists(_.isWord))
+        Some(s"${unq(sig(i)).toLowerCase}.${unq(sig(i + 2)).toLowerCase}")
+      else Some(unq(sig(i)).toLowerCase)
+
+    /** The statement from its `i`-th significant token on (the query of
+      * an EXPLAIN or a DECLARE), without trailing whitespace. */
+    def from(i: Int): Stmt = {
+      val start = toks.indices.filter(k => toks(k).sig).lift(i).getOrElse(toks.length)
+      new Stmt(toks.slice(start, toks.lastIndexWhere(_.kind != Dialect.K.Ws) + 1))
+    }
+  }
+
+  private[graft] object Stmt {
+    def apply(text: String): Stmt = new Stmt(Dialect.lex(text))
+
+    /** A script's statements, split on top-level semicolons — literal-safe,
+      * since the split walks tokens, never raw text. */
+    def script(text: String): Seq[Stmt] = {
+      val toks = Dialect.lex(text)
+      val cuts = -1 +: toks.indices.filter(toks(_).isSym(";")) :+ toks.length
+      cuts.sliding(2).map { case Seq(a, b) => new Stmt(toks.slice(a + 1, b)) }
+        .filter(_.text.trim.nonEmpty).toSeq
+    }
+
+    /** A rewritten statement: kept tokens and generated SQL fragments,
+      * one space apart — the text token rewrites have always rendered. */
+    final class Builder {
+      private val out = Vector.newBuilder[Tok]
+      private var empty = true
+      private def add(ts: Vector[Tok]): Unit = {
+        if (!empty) out += Tok(Dialect.K.Ws, " ")
+        out ++= ts; empty = false
+      }
+      def keep(t: Tok): Unit = add(Vector(t))
+      def gen(sql: String): Unit = add(Dialect.lex(sql))
+      def result: Stmt = new Stmt(out.result())
+    }
+  }
+
+  /** A matched SELECT route's side-effecting half: returns its EXPLAIN
+    * label's execution suffix, or None when the route declines after all. */
+  private[graft] type Served = () => Option[String]
+
+  /** A declared-index route that matched a SELECT: the statement reading
+    * the route's view, its EXPLAIN `route:` label, and the half that
+    * builds or loads the index and registers the view. */
+  private[graft] final case class Route(stmt: Stmt, label: String, serve: Served)
+
+  private[graft] def unq(t: Tok): String =
+    if (t.text.length >= 2 && t.text.head == '\'' && t.text.last == '\'')
+      t.text.substring(1, t.text.length - 1).replace("''", "'")
+    else if (t.text.length >= 2 && t.text.head == '"' && t.text.last == '"')
+      t.text.substring(1, t.text.length - 1)
+    else t.text
+
   /** Monotonic id for per-statement Spark job groups (`KILL` targets). */
   private[graft] val jobSeq = new java.util.concurrent.atomic.AtomicLong(0)
   /** Monotonic id for per-statement temp views — JVM-global so views from
@@ -4480,7 +4466,8 @@ object StatementRouter {
   /** How the last declared index a statement resolved (fielded or
     * single-column fulltext, int8 or PQ vector) came to be — "loaded" |
     * "delta" | "full"; "" when the statement resolved none or hit the
-    * in-session memo. Set by [[durableIndex]], reset per SELECT.
+    * in-session memo. Set by [[durableIndex]] for each index it resolves,
+    * reset per SELECT.
     *
     * All the provenance slots are THREAD-LOCAL: a statement's route is a
     * per-statement fact, and routers sharing one SparkSession execute on

@@ -28,19 +28,21 @@ object CopyOps {
     * corrupt-record column — same contract as the reference's typed target
     * table). Paths may be globs; .gz files decompress transparently. */
   def copyFromJson(spark: SparkSession, schema: StructType, path: String,
-                   firstPerKey: Seq[String] = Nil): (DataFrame, DataFrame) = {
+                   firstPerKey: Seq[String] = Nil,
+                   existing: Option[DataFrame] = None): (DataFrame, DataFrame) = {
     val withCorrupt = StructType(schema.fields :+ StructField(CorruptCol, StringType, nullable = true))
     val raw = spark.read
       .schema(withCorrupt)
       .option("mode", "PERMISSIVE")
       .option("columnNameOfCorruptRecord", CorruptCol)
       .json(path)
-    split(raw, schema, firstPerKey)
+    split(raw, schema, firstPerKey, existing)
   }
 
   /** COPY FROM csv (with header). Same contract as [[copyFromJson]]. */
   def copyFromCsv(spark: SparkSession, schema: StructType, header: Boolean, path: String,
-                  firstPerKey: Seq[String] = Nil): (DataFrame, DataFrame) = {
+                  firstPerKey: Seq[String] = Nil,
+                  existing: Option[DataFrame] = None): (DataFrame, DataFrame) = {
     val withCorrupt = StructType(schema.fields :+ StructField(CorruptCol, StringType, nullable = true))
     val raw = spark.read
       .schema(withCorrupt)
@@ -48,7 +50,7 @@ object CopyOps {
       .option("mode", "PERMISSIVE")
       .option("columnNameOfCorruptRecord", CorruptCol)
       .csv(path)
-    split(raw, schema, firstPerKey)
+    split(raw, schema, firstPerKey, existing)
   }
 
   /** (good rows without bookkeeping cols, RETURN SUMMARY per file).
@@ -57,21 +59,30 @@ object CopyOps {
     * would), and the cache also keeps COPY single-pass over the input.
     * With `firstPerKey`, good rows repeating a key keep only the first in
     * file order (file path, then position in the file) — the reference
-    * imports a PRIMARY KEY once and fails the later rows. */
-  private def split(raw0: DataFrame, schema: StructType,
-                    firstPerKey: Seq[String]): (DataFrame, DataFrame) = {
+    * imports a PRIMARY KEY once and fails the later rows. The summary then
+    * counts a parsed row as a success only when it is that first row and
+    * `existing` (the target table) does not hold its key; the other rows
+    * count as errors, as in the reference. */
+  private def split(raw0: DataFrame, schema: StructType, firstPerKey: Seq[String],
+                    existing: Option[DataFrame]): (DataFrame, DataFrame) = {
     val raw = raw0.withColumn("_file", input_file_name())
       .withColumn("_pos", monotonically_increasing_id()).cache()
     val parsed = raw.filter(col(CorruptCol).isNull)
-    val good = (if (firstPerKey.isEmpty) parsed else {
+    val firsts = if (firstPerKey.isEmpty) parsed else {
       val w = Window.partitionBy(firstPerKey.map(col): _*).orderBy(col("_file"), col("_pos"))
       parsed.withColumn("_rn", row_number().over(w)).filter(col("_rn") === 1)
-    }).select(schema.fieldNames.map(col).toSeq: _*)
+    }
+    val good = firsts.select(schema.fieldNames.map(col).toSeq: _*)
+    val kept =
+      if (firstPerKey.isEmpty) firsts else existing.fold(firsts)(Dml.absent(_, firsts, firstPerKey))
+    val ok = coalesce(col("ok"), lit(0L))
     val summary = raw.groupBy(col("_file").as("uri"))
-      .agg(
-        count(when(col(CorruptCol).isNull, 1)).as("success_count"),
-        count(col(CorruptCol)).as("error_count"),
+      .agg(count(lit(1)).as("rows"),
         slice(collect_list(col(CorruptCol)), 1, 5).as("error_samples"))
+      .join(kept.groupBy(col("_file").as("uri")).agg(count(lit(1)).as("ok")),
+        Seq("uri"), "left")
+      .select(col("uri"), ok.as("success_count"), (col("rows") - ok).as("error_count"),
+        col("error_samples"))
       .orderBy(col("uri"))
     (good, summary)
   }

@@ -63,6 +63,22 @@ class ConstraintsSpec extends SparkTestBase {
       Seq((1L, "a"), (2L, "b"), (3L, "c")))
   }
 
+  test("PRIMARY KEY: COPY FROM RETURN SUMMARY counts skipped keys as errors") {
+    val r = newRouter()
+    r.execute("CREATE TABLE pks (id BIGINT PRIMARY KEY, v TEXT)")
+    r.execute("INSERT INTO pks (id, v) VALUES (1, 'a'), (2, 'b')")
+    val f = graft.ArtifactStore.scratchDir("graft_pks").resolve("rows.json")
+    java.nio.file.Files.write(f, ("{\"id\": 1, \"v\": \"x\"}\n" +
+      "{\"id\": 3, \"v\": \"c\"}\n{\"id\": 3, \"v\": \"d\"}\n").getBytes)
+    val sum = r.execute(s"COPY pks FROM '$f' RETURN SUMMARY").collect()
+    // an existing key (1) and a repeated one (the second 3) fail their rows
+    assert(sum.map(_.getAs[Long]("success_count")).sum == 1L)
+    assert(sum.map(_.getAs[Long]("error_count")).sum == 2L)
+    assert(r.execute("SELECT id, v FROM pks ORDER BY id").collect()
+      .map(x => (x.getLong(0), x.getString(1))).toSeq ==
+      Seq((1L, "a"), (2L, "b"), (3L, "c")))
+  }
+
   test("generated column: non-deterministic expressions skip validation") {
     val r = newRouter()
     r.execute("CREATE TABLE genrand (a int, b GENERATED ALWAYS AS (random() + 10))")

@@ -10,7 +10,8 @@ import scala.jdk.CollectionConverters._
   * session-scoped memos live in graft.Memo, so no session is keyed by its
   * identity hash (which can collide after GC) and neither the query
   * catalog nor the statement router holds ad-hoc memo maps; every
-  * SparkSession comes from Engine.session. */
+  * SparkSession comes from Engine.session; the router lexes each statement
+  * once and keeps one SELECT route chain. */
 class MemoHygieneSpec extends AnyFunSuite {
 
   private def offenders(dir: String, words: String*): Seq[String] = {
@@ -40,6 +41,17 @@ class MemoHygieneSpec extends AnyFunSuite {
     val hits = offenders("src/main/scala/graft/StatementRouter.scala",
       "ConcurrentHashMap", "TrieMap")
     assert(hits.isEmpty, hits.mkString("\n"))
+  }
+
+  test("StatementRouter.scala: at most 5 Dialect.lex sites and no dry parameter") {
+    // the sites: the script, stored view texts, Stmt (the incoming and the
+    // translated statement) and generated fragments
+    val src = new String(
+      Files.readAllBytes(Paths.get("src/main/scala/graft/StatementRouter.scala")), "UTF-8")
+    val lexes = "Dialect\\.lex\\(".r.findAllIn(src).length
+    assert(lexes <= 5, s"$lexes Dialect.lex( call sites")
+    assert("\\bdry\\s*:".r.findFirstIn(src).isEmpty,
+      "a dry parameter is back: plain EXPLAIN runs the route chain itself")
   }
 
   test("no SparkSession builder or core-count read under src outside Engine.scala") {

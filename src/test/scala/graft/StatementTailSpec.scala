@@ -401,6 +401,46 @@ class StatementTailSpec extends SparkTestBase {
       "plain EXPLAIN must not build the fulltext index")
   }
 
+  /** A table with a single-column PRIMARY KEY, a composite FULLTEXT
+    * index and a VECTOR index, so one statement can fire both the fielded
+    * MATCH route and the stored knn route. */
+  private def fieldedKnnTable(dir: String): StatementRouter = {
+    val r = new StatementRouter(spark,
+      graft.ArtifactStore.scratchDir(dir).toFile.getAbsolutePath)
+    r.execute(
+      """CREATE TABLE fk (id BIGINT PRIMARY KEY, a TEXT, b TEXT, emb FLOAT_VECTOR(2),
+        |  INDEX ab USING FULLTEXT (a, b) WITH (analyzer = 'standard'),
+        |  INDEX iv USING VECTOR (emb) WITH (centroids = 2, nprobe = 2))"""
+        .stripMargin)
+    r.execute("INSERT INTO fk (id, a, b, emb) VALUES " +
+      "(1, 'spark one', 'x', [1.0, 0.0]), (2, 'y', 'spark two', [0.9, 0.1]), " +
+      "(3, 'z', 'w', [0.0, 1.0])")
+    r
+  }
+  private val fieldedKnn =
+    "SELECT id, _score FROM fk WHERE MATCH((a, b), 'spark') AND knn_match(emb, [1.0, 0.0], 2)"
+
+  test("plain EXPLAIN reports the route EXPLAIN ANALYZE serves (fielded MATCH + knn)") {
+    val r = fieldedKnnTable("graft_expl_fk")
+    def route(plan: String) = plan.linesIterator.next().stripPrefix("route: ")
+    val plain = route(r.execute(s"EXPLAIN $fieldedKnn").head().getString(0))
+    val served = route(r.execute(s"EXPLAIN ANALYZE $fieldedKnn").head().getString(0))
+    // the execution facts (`, index …`, `, probe …`) are ANALYZE-only
+    assert(plain == served.split(", (index|probe) ")(0), s"$plain vs $served")
+    assert(plain == "stored-index-filtered", plain)
+    assert(r.execute(fieldedKnn).collect().map(_.getLong(0)).toSet == Set(1L, 2L))
+  }
+
+  test("a knn index memo hit reports no build, even after a fresh fielded build") {
+    val r = fieldedKnnTable("graft_prov_fk")
+    // memoizes the knn index at this version; the fielded one stays unbuilt
+    r.execute("SELECT id FROM fk WHERE knn_match(emb, [1.0, 0.0], 2)").collect()
+    val head = r.execute(s"EXPLAIN ANALYZE $fieldedKnn").head().getString(0)
+      .linesIterator.next()
+    assert(head.startsWith("route: stored-index-filtered"), head)
+    assert(!head.contains(", index "), head)
+  }
+
   test("route provenance is thread-local: concurrent sessions don't cross-talk") {
     // the carrier itself: a fresh thread starts from the initial value,
     // and its writes never leak into this thread's slot
