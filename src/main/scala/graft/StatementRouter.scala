@@ -5,7 +5,7 @@ import graft.sources.{Dml, VersionedTable}
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{ArrayType, MapType, StructType}
 import org.apache.hadoop.fs.Path
 
 /** Full-statement execution — the porting entry point for a CrateDB client.
@@ -93,20 +93,18 @@ class StatementRouter(spark: SparkSession, root: String) {
     * table — `DocTableInfo.partitionedBy`). When the table is partitioned,
     * not bucketed, the statement runs in autocommit, no assignment moves a
     * row across partitions, and the partition-column types render to
-    * directory names losslessly, returns the distinct partition tuples the
-    * DML touches; [[VersionedTable.commitPartial]] then moves only those
-    * partitions. None → full copy-on-write commit. The distinct-collect is
-    * partition-metadata sized (the reference holds the same list in its
-    * cluster state) and prunes to the WHERE's partitions on read. */
-  private def partitionTouch(name: String, touchedRows: => DataFrame,
-                             movedCols: Set[String] = Set.empty): Option[Seq[Seq[Any]]] = {
+    * directory names losslessly, returns the partition columns; the
+    * statement's [[Dml.tally]] over them lists the partitions it touches,
+    * and [[VersionedTable.commitPartial]] moves only those. None → full
+    * copy-on-write commit. Decided from metadata alone: no job runs. */
+  private def partitionCols(name: String, schema: StructType,
+                            movedCols: Set[String] = Set.empty): Option[Seq[String]] = {
     if (txn.isDefined) return None
     val ps = VersionedTable.partitionSpec(spark, tablePath(name)).getOrElse(return None)
     if (VersionedTable.bucketSpec(spark, tablePath(name)).isDefined) return None
     if (ps.cols.exists(movedCols.contains)) return None
-    val rows = touchedRows
     val safe = ps.cols.forall { c =>
-      rows.schema(c).dataType match {
+      schema(c).dataType match {
         case _: org.apache.spark.sql.types.StringType => true
         case org.apache.spark.sql.types.IntegerType | org.apache.spark.sql.types.LongType |
              org.apache.spark.sql.types.ShortType | org.apache.spark.sql.types.ByteType |
@@ -114,9 +112,15 @@ class StatementRouter(spark: SparkSession, root: String) {
         case _ => false // timestamps/decimals format differently in dir names
       }
     }
-    if (!safe) return None
-    val vals = rows.select(ps.cols.map(col): _*).distinct().collect()
-    Some(vals.toSeq.map(r => ps.cols.indices.map(r.get)))
+    if (safe) Some(ps.cols) else None
+  }
+
+  /** The affected-row count and, under [[partitionCols]], the touched
+    * partitions of a DML statement whose changed rows are `rows`: one
+    * [[Dml.tally]], one job at most. */
+  private def touchOf(rows: DataFrame, parts: Option[Seq[String]]): (Long, Option[Seq[Seq[Any]]]) = {
+    val counts = Dml.tally(rows, parts.getOrElse(Nil))
+    (counts.values.sum, parts.map(_ => counts.keys.toSeq))
   }
 
   private def beginTxn(): DataFrame = {
@@ -2161,14 +2165,8 @@ class StatementRouter(spark: SparkSession, root: String) {
       val touched = Seq(ps.cols.map(c => pairs(c.toLowerCase)))
       val part = cur.filter(
         ps.cols.map(c => col(c) === lit(pairs(c.toLowerCase))).reduce(_ && _))
-      val bytes = part.queryExecution.optimizedPlan.stats.sizeInBytes
-      val files = math.max(1, (bytes / (128L * 1024 * 1024)).toInt)
-      writeTable(name, part.repartition(files), Some(touched))
-    } else {
-      val bytes = cur.queryExecution.optimizedPlan.stats.sizeInBytes
-      val files = math.max(1, (bytes / (128L * 1024 * 1024)).toInt)
-      writeTable(name, cur.repartition(files))
-    }
+      writeTable(name, part.repartition(VersionedTable.writeTasks(part)), Some(touched))
+    } else writeTable(name, cur.repartition(VersionedTable.writeTasks(cur)))
     summary(0L)
   }
 
@@ -2635,28 +2633,29 @@ class StatementRouter(spark: SparkSession, root: String) {
       // COPY): of the file rows repeating a key only the first is read,
       // and rows whose key the table holds are skipped
       val pk = VersionedTable.primaryKey(spark, tablePath(name))
-      val (rows, fileSummary) =
+      val parsed =
         if (fmt == "csv")
-          sources.CopyOps.copyFromCsv(spark, target.schema,
-            opts.getOrElse("header", "true").toBoolean, path, pk, Some(target))
-        else sources.CopyOps.copyFromJson(spark, target.schema, path, pk, Some(target))
-      // RETURN SUMMARY counts against the table as it stood before this
-      // COPY, so it is computed before the write
-      val report =
-        if (ts.exists(_.is("summary"))) Some(fileSummary.localCheckpoint()) else None
+          sources.CopyOps.readCsv(spark, target.schema,
+            opts.getOrElse("header", "true").toBoolean, path, pk)
+        else sources.CopyOps.readJson(spark, target.schema, path, pk)
       // generated columns recompute for file rows (reference: "computed as
       // needed for every INSERT, UPDATE and COPY FROM"); CHECK/NOT NULL
       // enforced like INSERT. Files carrying a generated column get it
       // recomputed (deterministic expressions yield the same value).
-      val checked = enforceOnInsert(name, rows, Set.empty)
-      // materialized once: the count, the touched partitions and the
-      // write would each re-run the dedup window and the anti-join
+      val checked = enforceOnInsert(name, parsed.rows, Set.empty)
+      // materialized once, still carrying each row's file: the count, the
+      // touched partitions, RETURN SUMMARY and the write would each re-run
+      // the dedup window and the anti-join
       val imported =
         if (pk.isEmpty) checked else Dml.absent(target, checked, pk).localCheckpoint()
-      val n = imported.count()
+      // RETURN SUMMARY counts against the table as it stood before this
+      // COPY, so it is computed before the write
+      val report =
+        if (ts.exists(_.is("summary"))) Some(parsed.summary(imported).localCheckpoint())
+        else None
       // an append only changes the incoming rows' partitions
-      writeTable(name, Dml.insertInto(target, imported),
-        partitionTouch(name, imported))
+      val (n, parts) = touchOf(imported, partitionCols(name, target.schema))
+      writeTable(name, Dml.insertInto(target, imported), parts)
       report.getOrElse(summary(n))
     } else {
       val cur = readTable(name)
@@ -2713,14 +2712,15 @@ class StatementRouter(spark: SparkSession, root: String) {
     // parsed→analyzed→optimized→physical breakdown; COSTS = the
     // cost-annotated logical plan
     val mode = if (costs) "cost" else if (verbose) "extended" else "formatted"
-    registerViews(inner.sig)
     val head = inner.sig.headOption.fold("")(_.text.toLowerCase)
     if (head == "select" || head == "with") {
       if (analyze) {
+        // resolveSelect registers the views itself
         val df = resolveSelect(inner)
         val prov = s"route: ${StatementRouter.lastSelectRoute.get()}"
         Seq(prov + "\n" + sources.Maintenance.explain(df, analyze)).toDF("plan")
       } else {
+        registerViews(inner.sig)
         val (route, base, served) = routeSelect(inner, _ => Some(""))
         // a matched route's statement reads views only its served half
         // registers: show the exact lowering it upgrades instead
@@ -2729,9 +2729,11 @@ class StatementRouter(spark: SparkSession, root: String) {
             sources.Maintenance.explain(df, analyze = false, mode = mode))
           .toDF("plan")
       }
-    } else
+    } else {
+      registerViews(inner.sig)
       Seq(sources.Maintenance.explain(Engine.sql(spark, inner.text), analyze,
         mode = mode)).toDF("plan")
+    }
   }
 
   private def summary(n: Long): DataFrame = {
@@ -4111,22 +4113,6 @@ class StatementRouter(spark: SparkSession, root: String) {
     }.toSeq: _*)
     // generated columns computed/validated, CHECK + NOT NULL enforced
     val aligned = enforceOnInsert(name, alignedRaw, cols.toSet)
-    val pk = if (oc < 0) VersionedTable.primaryKey(spark, tablePath(name)) else Nil
-    // VALUES rows are already on the driver: count them and compare their
-    // keys there, so the key check adds only the lookup in the table
-    val localKeys = aligned.queryExecution.optimizedPlan match {
-      case _: LocalRelation if pk.nonEmpty => Some(aligned.select(pk.map(col): _*).collect().toSeq)
-      case _ => None
-    }
-    val n = localKeys.fold(aligned.count())(_.size.toLong)
-    // a plain INSERT of a key that exists or repeats within the statement
-    // fails before anything is written (reference DuplicateKeyException)
-    require(pk.isEmpty || (localKeys match {
-      case Some(keys) => keys.distinct.size == n &&
-        target.join(aligned.select(pk.map(col): _*), pk, "left_semi").count() == 0
-      case None =>
-        Dml.absent(target, aligned, pk).select(pk.map(col): _*).distinct().count() == n
-    }), s"DuplicateKeyException: a row with the same primary key exists already in $name")
     var conflictKeys: Seq[String] = Nil
     var doNothing = false
     val next: DataFrame => DataFrame =
@@ -4149,6 +4135,29 @@ class StatementRouter(spark: SparkSession, root: String) {
           cur => mergeUpsert(cur, aligned, keys, assigns)
         }
       }
+    // plain INSERT / DO NOTHING change rows only inside the incoming
+    // rows' partitions; DO UPDATE may touch a matched row whose partition
+    // differs from the incoming value → full commit
+    val (n, touchedParts) = touchOf(aligned,
+      if (oc < 0 || doNothing) partitionCols(name, target.schema) else None)
+    // a plain INSERT of a key that exists or repeats within the statement
+    // fails before anything is written (reference DuplicateKeyException).
+    // VALUES rows are on the driver: their keys are compared there, and
+    // the table is probed with them as a literal predicate its scan
+    // pushes down
+    val pk = if (oc < 0) VersionedTable.primaryKey(spark, tablePath(name)) else Nil
+    val literalKeys = aligned.queryExecution.optimizedPlan.isInstanceOf[LocalRelation] &&
+      pk.forall(c => aligned.schema(c).dataType match {
+        case _: ArrayType | _: MapType | _: StructType => false
+        case _ => true
+      })
+    require(pk.isEmpty || (
+      if (literalKeys) {
+        val keys = aligned.select(pk.map(col): _*).collect().toSeq
+        keys.distinct.size == n &&
+          Dml.tally(target.filter(Dml.keyPredicate(pk, keys)), Nil).isEmpty
+      } else Dml.absent(target, aligned, pk).select(pk.map(col): _*).distinct().count() == n
+    ), s"DuplicateKeyException: a row with the same primary key exists already in $name")
     val newState = next(target)
     // RETURNING * | exprs (reference dml.rst): the rows the statement
     // actually produced — plain inserts return the incoming rows; DO
@@ -4167,11 +4176,6 @@ class StatementRouter(spark: SparkSession, root: String) {
               conflictKeys, "left_semi")
         selectReturning(affected, retToks).localCheckpoint()
       }
-    // plain INSERT / DO NOTHING change rows only inside the incoming
-    // rows' partitions; DO UPDATE may touch a matched row whose partition
-    // differs from the incoming value → full commit
-    val touchedParts =
-      if (oc < 0 || doNothing) partitionTouch(name, aligned) else None
     // ON CONFLICT DO UPDATE matched rows get `_touched` markers, like
     // autocommit UPDATE: the reference assigns a fresh per-doc seqNo on
     // ANY write (SysColumns.java:49-64), including an upsert that writes
@@ -4260,16 +4264,21 @@ class StatementRouter(spark: SparkSession, root: String) {
           fillDefaults = false)
       enforceRowConstraints(touched, sp)
     }
+    val (n, parts) = touchOf(cur.filter(cond),
+      partitionCols(name, cur.schema, assigns.map(_._1).toSet))
     val result = retToks match {
       case Some(r) =>
         val rt = if (needSeq && !r.exists(_.is("__graft_seq_no")))
           touched.drop("__graft_seq_no") else touched
         selectReturning(rt, r).localCheckpoint()
-      case None    => summary(cur.filter(cond).count())
+      case None    => summary(n)
     }
-    writeTable(name, if (needSeq) next.drop("__graft_seq_no") else next,
-      partitionTouch(name, cur.filter(cond), assigns.map(_._1).toSet))
-    markTouched(name, touched)
+    // no matched row: nothing changes, so nothing is written (the
+    // reference answers 0 and leaves the table as it was)
+    if (n > 0) {
+      writeTable(name, if (needSeq) next.drop("__graft_seq_no") else next, parts)
+      markTouched(name, touched)
+    }
     result
   }
 
@@ -4321,15 +4330,15 @@ class StatementRouter(spark: SparkSession, root: String) {
     val cur = if (!needSeq) cur0 else withSeqNo(cur0, name,
       VersionedTable.latestVersion(spark, tablePath(name)).getOrElse(1))
     val (next, deleted) = Dml.delete(cur, cond)
+    val (n, parts) = touchOf(cur.filter(cond), partitionCols(name, cur.schema))
     val result = retToks match {
       case Some(r) =>
         val rt = if (needSeq && !r.exists(_.is("__graft_seq_no")))
           deleted.drop("__graft_seq_no") else deleted
         selectReturning(rt, r).localCheckpoint()
-      case None    => summary(cur.filter(cond).count())
+      case None    => summary(n)
     }
-    writeTable(name, if (needSeq) next.drop("__graft_seq_no") else next,
-      partitionTouch(name, cur.filter(cond)))
+    if (n > 0) writeTable(name, if (needSeq) next.drop("__graft_seq_no") else next, parts)
     result
   }
 

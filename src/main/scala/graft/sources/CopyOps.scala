@@ -23,68 +23,81 @@ object CopyOps {
 
   val CorruptCol = "_corrupt_record"
 
+  /** The source file of each parsed row, kept on [[Parsed.rows]]. */
+  val FileCol = "_file"
+
+  /** One COPY FROM read. `rows` are the good rows in the target schema
+    * plus [[FileCol]]; with `firstPerKey`, of the rows repeating a key only
+    * the first in file order (file path, then position in the file) — the
+    * reference imports a PRIMARY KEY once and fails the later rows.
+    * [[summary]] builds RETURN SUMMARY from the rows actually kept, so a
+    * caller that filters `rows` further (the existing-key anti-join)
+    * derives both the summary and the import from one pass. */
+  final class Parsed private[CopyOps] (raw: DataFrame, val rows: DataFrame) {
+
+    /** RETURN SUMMARY per file: a parsed row counts as a success when it is
+      * in `kept` (a subset of [[rows]], still carrying [[FileCol]]); every
+      * other row of the file, corrupt or skipped, is an error. */
+    def summary(kept: DataFrame): DataFrame = {
+      val ok = coalesce(col("ok"), lit(0L))
+      raw.groupBy(col(FileCol).as("uri"))
+        .agg(count(lit(1)).as("rows"),
+          slice(collect_list(col(CorruptCol)), 1, 5).as("error_samples"))
+        .join(kept.groupBy(col(FileCol).as("uri")).agg(count(lit(1)).as("ok")),
+          Seq("uri"), "left")
+        .select(col("uri"), ok.as("success_count"), (col("rows") - ok).as("error_count"),
+          col("error_samples"))
+        .orderBy(col("uri"))
+    }
+
+    /** (good rows without bookkeeping cols, RETURN SUMMARY per file). */
+    def split: (DataFrame, DataFrame) = (rows.drop(FileCol), summary(rows))
+  }
+
   /** COPY FROM json-lines. Returns (good rows, per-file summary).
     * `schema` is required for a stable error channel (schema-on-read with a
     * corrupt-record column — same contract as the reference's typed target
     * table). Paths may be globs; .gz files decompress transparently. */
-  def copyFromJson(spark: SparkSession, schema: StructType, path: String,
-                   firstPerKey: Seq[String] = Nil,
-                   existing: Option[DataFrame] = None): (DataFrame, DataFrame) = {
-    val withCorrupt = StructType(schema.fields :+ StructField(CorruptCol, StringType, nullable = true))
-    val raw = spark.read
-      .schema(withCorrupt)
-      .option("mode", "PERMISSIVE")
-      .option("columnNameOfCorruptRecord", CorruptCol)
-      .json(path)
-    split(raw, schema, firstPerKey, existing)
-  }
+  def copyFromJson(spark: SparkSession, schema: StructType, path: String): (DataFrame, DataFrame) =
+    readJson(spark, schema, path).split
 
   /** COPY FROM csv (with header). Same contract as [[copyFromJson]]. */
-  def copyFromCsv(spark: SparkSession, schema: StructType, header: Boolean, path: String,
-                  firstPerKey: Seq[String] = Nil,
-                  existing: Option[DataFrame] = None): (DataFrame, DataFrame) = {
-    val withCorrupt = StructType(schema.fields :+ StructField(CorruptCol, StringType, nullable = true))
-    val raw = spark.read
-      .schema(withCorrupt)
+  def copyFromCsv(spark: SparkSession, schema: StructType, header: Boolean,
+                  path: String): (DataFrame, DataFrame) =
+    readCsv(spark, schema, header, path).split
+
+  /** COPY FROM json-lines as one [[Parsed]] read (the router's path). */
+  def readJson(spark: SparkSession, schema: StructType, path: String,
+               firstPerKey: Seq[String] = Nil): Parsed =
+    parse(spark.read.schema(withCorrupt(schema))
+      .option("mode", "PERMISSIVE")
+      .option("columnNameOfCorruptRecord", CorruptCol)
+      .json(path), schema, firstPerKey)
+
+  /** COPY FROM csv as one [[Parsed]] read. */
+  def readCsv(spark: SparkSession, schema: StructType, header: Boolean, path: String,
+              firstPerKey: Seq[String] = Nil): Parsed =
+    parse(spark.read.schema(withCorrupt(schema))
       .option("header", header.toString)
       .option("mode", "PERMISSIVE")
       .option("columnNameOfCorruptRecord", CorruptCol)
-      .csv(path)
-    split(raw, schema, firstPerKey, existing)
-  }
+      .csv(path), schema, firstPerKey)
 
-  /** (good rows without bookkeeping cols, RETURN SUMMARY per file).
-    * The parsed scan is cached: Spark disallows plans that read ONLY the
+  private def withCorrupt(schema: StructType) =
+    StructType(schema.fields :+ StructField(CorruptCol, StringType, nullable = true))
+
+  /** The parsed scan is cached: Spark disallows plans that read ONLY the
     * corrupt-record column from a raw file scan (the summary aggregation
-    * would), and the cache also keeps COPY single-pass over the input.
-    * With `firstPerKey`, good rows repeating a key keep only the first in
-    * file order (file path, then position in the file) — the reference
-    * imports a PRIMARY KEY once and fails the later rows. The summary then
-    * counts a parsed row as a success only when it is that first row and
-    * `existing` (the target table) does not hold its key; the other rows
-    * count as errors, as in the reference. */
-  private def split(raw0: DataFrame, schema: StructType, firstPerKey: Seq[String],
-                    existing: Option[DataFrame]): (DataFrame, DataFrame) = {
-    val raw = raw0.withColumn("_file", input_file_name())
+    * would), and the cache also keeps COPY single-pass over the input. */
+  private def parse(raw0: DataFrame, schema: StructType, firstPerKey: Seq[String]): Parsed = {
+    val raw = raw0.withColumn(FileCol, input_file_name())
       .withColumn("_pos", monotonically_increasing_id()).cache()
     val parsed = raw.filter(col(CorruptCol).isNull)
     val firsts = if (firstPerKey.isEmpty) parsed else {
-      val w = Window.partitionBy(firstPerKey.map(col): _*).orderBy(col("_file"), col("_pos"))
+      val w = Window.partitionBy(firstPerKey.map(col): _*).orderBy(col(FileCol), col("_pos"))
       parsed.withColumn("_rn", row_number().over(w)).filter(col("_rn") === 1)
     }
-    val good = firsts.select(schema.fieldNames.map(col).toSeq: _*)
-    val kept =
-      if (firstPerKey.isEmpty) firsts else existing.fold(firsts)(Dml.absent(_, firsts, firstPerKey))
-    val ok = coalesce(col("ok"), lit(0L))
-    val summary = raw.groupBy(col("_file").as("uri"))
-      .agg(count(lit(1)).as("rows"),
-        slice(collect_list(col(CorruptCol)), 1, 5).as("error_samples"))
-      .join(kept.groupBy(col("_file").as("uri")).agg(count(lit(1)).as("ok")),
-        Seq("uri"), "left")
-      .select(col("uri"), ok.as("success_count"), (col("rows") - ok).as("error_count"),
-        col("error_samples"))
-      .orderBy(col("uri"))
-    (good, summary)
+    new Parsed(raw, firsts.select((schema.fieldNames :+ FileCol).map(col).toSeq: _*))
   }
 
   /** COPY TO json-lines; gzip optional (reference formats :67-68). */

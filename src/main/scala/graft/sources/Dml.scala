@@ -1,6 +1,7 @@
 package graft.sources
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
@@ -24,10 +25,51 @@ object Dml {
 
   /** The rows of `rows` whose key is absent from `target`: one anti-join
     * (broadcast when small), shared by ON CONFLICT DO NOTHING, its
-    * RETURNING rows, the plain-INSERT duplicate-key check and COPY FROM
-    * into a PRIMARY KEY table. */
+    * RETURNING rows, the duplicate-key check of a plain INSERT … SELECT
+    * and COPY FROM into a PRIMARY KEY table. */
   def absent(target: DataFrame, rows: DataFrame, keys: Seq[String]): DataFrame =
     rows.join(target.select(keys.map(col).toSeq: _*), keys, "left_anti")
+
+  /** Row count per distinct value tuple of `cols`, in one pass: each
+    * partition counts its own rows and the driver merges the per-partition
+    * maps. Nothing shuffles, so this is one job where a `groupBy().count()`
+    * is two under AQE, and none when the plan is a local relation, whose
+    * rows are on the driver already. With no `cols` the one key is the
+    * empty tuple and its count the row count; no rows → an empty map. The
+    * DML statements read their affected-row count and the partitions they
+    * touch from it. */
+  def tally(df: DataFrame, cols: Seq[String]): Map[Seq[Any], Long] = {
+    val sel = df.select(cols.map(col): _*)
+    sel.queryExecution.optimizedPlan match {
+      case _: LocalRelation => countRows(sel.collect().iterator)
+      case _ =>
+        sel.rdd.mapPartitions(rows => Iterator(countRows(rows))).collect()
+          .foldLeft(Map.empty[Seq[Any], Long]) { (acc, part) =>
+            part.foldLeft(acc) { case (a, (k, n)) => a.updated(k, a.getOrElse(k, 0L) + n) }
+          }
+    }
+  }
+
+  private def countRows(rows: Iterator[Row]): Map[Seq[Any], Long] = {
+    val m = scala.collection.mutable.HashMap.empty[Seq[Any], Long]
+    rows.foreach { r => val k = r.toSeq; m(k) = m.getOrElse(k, 0L) + 1L }
+    m.toMap
+  }
+
+  /** A literal predicate matching the rows whose `cols` equal one of
+    * `keys` (each holding the key columns in `cols` order): an IN list for
+    * one column, a balanced OR of ANDs for several. The scan pushes it
+    * down, so probing a table for a handful of driver-side keys reads only
+    * the row groups that may hold them. */
+  def keyPredicate(cols: Seq[String], keys: Seq[Row]): Column =
+    if (cols.length == 1) col(cols.head).isin(keys.map(_.get(0)): _*)
+    else if (keys.isEmpty) lit(false)
+    else {
+      def any(cs: Seq[Column]): Column =
+        if (cs.length == 1) cs.head
+        else { val (a, b) = cs.splitAt(cs.length / 2); any(a) || any(b) }
+      any(keys.map(r => cols.indices.map(i => col(cols(i)) === lit(r.get(i))).reduce(_ && _)))
+    }
 
   /** INSERT ... ON CONFLICT (key) DO NOTHING: keep existing rows, add only
     * rows whose key is absent. */

@@ -296,10 +296,28 @@ object VersionedTable {
   def latestVersion(spark: SparkSession, path: String): Option[Int] =
     versions(spark, path).lastOption
 
+  /** The size one written file aims at: commits and OPTIMIZE cut their
+    * input into this many bytes per write task. */
+  val TargetFileBytes: Long = 128L * 1024 * 1024
+
+  /** Write tasks for `df`: ceil(plan bytes / [[TargetFileBytes]]), clamped
+    * to [1, Int.MaxValue] (a join's default size estimate is the product
+    * of its children's, far past the Int range). */
+  def writeTasks(df: DataFrame): Int = {
+    val bytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
+    ((bytes + TargetFileBytes - 1) / TargetFileBytes).max(1).min(Int.MaxValue).toInt
+  }
+
+  /** `df` coalesced to [[writeTasks]] tasks, without a shuffle: a commit
+    * writes files sized by its input, where one task per input file would
+    * leave a few rows in each of many small files. */
+  private def sized(df: DataFrame): DataFrame = df.coalesce(writeTasks(df))
+
   /** Commit `df` as the next version; returns the committed version number.
     * The data write happens BEFORE any metadata changes; the single-file
     * manifest rename is the commit point. */
-  def commit(spark: SparkSession, path: String, df: DataFrame): Int = {
+  def commit(spark: SparkSession, path: String, input: DataFrame): Int = {
+    val df = sized(input)
     val f = fs(spark)
     val next = latestVersion(spark, path).getOrElse(0) + 1
     val dataDir = new Path(path, f"data/v$next%05d")
@@ -460,7 +478,7 @@ object VersionedTable {
         ps.cols.zip(vals).map { case (c, v) =>
           if (v == null) col(c).isNull else col(c) === lit(v)
         }.reduce(_ && _)).reduce(_ || _)
-      df.filter(cond).write.mode("error")
+      sized(df.filter(cond)).write.mode("error")
         .partitionBy(ps.cols: _*).parquet(dataDir.toString)
       require(f.exists(new Path(dataDir, "_SUCCESS")),
         s"versioned commit aborted: data write $dataDir did not complete")

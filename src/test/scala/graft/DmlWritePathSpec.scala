@@ -1,0 +1,170 @@
+package graft
+
+import graft.sources.VersionedTable
+
+/** The DML write path on a `PARTITIONED BY` PRIMARY KEY table: each
+  * statement runs one pre-write pass (its affected-row count and touched
+  * partitions from one tally, or a pushed-down literal key probe for a
+  * VALUES INSERT) plus the write of its touched partitions, and the write
+  * is sized by its input rather than by the number of input files. */
+class DmlWritePathSpec extends SparkTestBase {
+
+  private val tagKey = "graft.test.dml"
+
+  /** Spark jobs started while `f` runs, attributed through a local
+    * property. The listener bus delivers events in order, so a sentinel
+    * job seen by the listener means every job of `f` was counted too. */
+  private def jobsOf[T](f: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val sentinel = new java.util.concurrent.CountDownLatch(1)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(js.properties).map(_.getProperty(tagKey)).foreach {
+          case "stmt"     => jobs.incrementAndGet()
+          case "sentinel" => sentinel.countDown()
+          case _          => ()
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setLocalProperty(tagKey, "stmt")
+      val out = try f finally sc.setLocalProperty(tagKey, null)
+      sc.setLocalProperty(tagKey, "sentinel")
+      try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty(tagKey, null)
+      assert(sentinel.await(30, java.util.concurrent.TimeUnit.SECONDS))
+      (out, jobs.get())
+    } finally sc.removeSparkListener(listener)
+  }
+
+  private val days = (1 to 8).map(d => f"2024-03-$d%02d")
+
+  private def newTable(): (StatementRouter, String) = {
+    val root = graft.ArtifactStore.scratchDir("graft_dmlwp").toFile.getAbsolutePath
+    val r = new StatementRouter(spark, root)
+    r.execute("""CREATE TABLE m (id BIGINT PRIMARY KEY, day TEXT, v DOUBLE PRECISION)
+        PARTITIONED BY (day)""")
+    r.execute("INSERT INTO m (id, day, v) VALUES " +
+      (0 until 200).map(i => s"($i, '${days(i % 8)}', ${i * 0.25})").mkString(", "))
+    (r, s"$root/m")
+  }
+
+  private def affected(r: StatementRouter, sql: String): Long =
+    r.execute(sql).head().getLong(0)
+
+  private def latest(path: String): Int = VersionedTable.latestVersion(spark, path).get
+
+  /** Partition directories the latest version wrote itself. */
+  private def written(path: String): Seq[String] =
+    Option(new java.io.File(f"$path/data/v${latest(path)}%05d").listFiles()).toSeq.flatten
+      .filter(_.isDirectory).map(_.getName).sorted
+
+  test("UPDATE by key, DELETE of a key range and a 50-row INSERT run at most 2 jobs each") {
+    val (r, path) = newTable()
+    val (upd, updJobs) = jobsOf(affected(r, "UPDATE m SET v = 1.5 WHERE id = 17"))
+    assert(upd == 1L)
+    assert(updJobs <= 2, s"UPDATE ran $updJobs jobs")
+    assert(written(path) == Seq(s"day=${days(17 % 8)}"))
+
+    val (del, delJobs) = jobsOf(affected(r, "DELETE FROM m WHERE id >= 40 AND id < 60"))
+    assert(del == 20L)
+    assert(delJobs <= 2, s"DELETE ran $delJobs jobs")
+
+    val values = (1000 until 1050)
+      .map(i => s"($i, '${days(i % 8)}', 0.5)").mkString(", ")
+    val (ins, insJobs) = jobsOf(affected(r, s"INSERT INTO m (id, day, v) VALUES $values"))
+    assert(ins == 50L)
+    assert(insJobs <= 2, s"INSERT ran $insJobs jobs")
+    assert(r.execute("SELECT count(*), sum(v) FROM m").head().toSeq ==
+      Seq(230L, (0 until 200).filterNot(i => i >= 40 && i < 60)
+        .map(i => if (i == 17) 1.5 else i * 0.25).sum + 25.0))
+  }
+
+  test("an INSERT into 8 partitions leaves one file per partition") {
+    val (r, path) = newTable()
+    r.execute("INSERT INTO m (id, day, v) VALUES " +
+      (500 until 540).map(i => s"($i, '${days(i % 8)}', 1.0)").mkString(", "))
+    val dirs = new java.io.File(f"$path/data/v${latest(path)}%05d").listFiles()
+      .filter(_.isDirectory)
+    assert(dirs.map(_.getName).sorted.toSeq == days.map(d => s"day=$d"))
+    dirs.foreach { d =>
+      val files = d.listFiles().filter(_.getName.endsWith(".parquet"))
+      assert(files.length == 1, s"${d.getName}: ${files.map(_.getName).mkString(", ")}")
+    }
+  }
+
+  test("zero matches: UPDATE and DELETE answer 0 and commit nothing") {
+    val (r, path) = newTable()
+    val v = latest(path)
+    assert(affected(r, "UPDATE m SET v = 0 WHERE id = 999") == 0L)
+    assert(affected(r, "DELETE FROM m WHERE id < 0") == 0L)
+    assert(r.execute("UPDATE m SET v = 0 WHERE id = 999 RETURNING id").collect().isEmpty)
+    assert(latest(path) == v)
+    // an unpartitioned table is not rewritten either
+    r.execute("CREATE TABLE u (id BIGINT PRIMARY KEY, v TEXT)")
+    r.execute("INSERT INTO u (id, v) VALUES (1, 'a')")
+    val uPath = path.stripSuffix("/m") + "/u"
+    val uv = latest(uPath)
+    assert(affected(r, "UPDATE u SET v = 'b' WHERE id = 2") == 0L)
+    assert(affected(r, "DELETE FROM u WHERE v = 'z'") == 0L)
+    assert(latest(uPath) == uv)
+  }
+
+  test("a NULL partition value is tallied and rewritten as its default partition") {
+    val (r, path) = newTable()
+    r.execute("INSERT INTO m (id, day, v) VALUES (300, NULL, 2.0), (301, NULL, 3.0)")
+    assert(written(path) == Seq("day=__HIVE_DEFAULT_PARTITION__"))
+    assert(affected(r, "UPDATE m SET v = v * 2 WHERE id = 301") == 1L)
+    assert(written(path) == Seq("day=__HIVE_DEFAULT_PARTITION__"))
+    // the other partitions ride along by reference
+    assert(VersionedTable.manifestEntries(spark, path, latest(path)).length == 9)
+    assert(affected(r, "DELETE FROM m WHERE day IS NULL") == 2L)
+    assert(r.execute("SELECT count(*) FROM m WHERE day IS NULL").head().getLong(0) == 0L)
+    assert(r.execute("SELECT count(*) FROM m").head().getLong(0) == 200L)
+  }
+
+  test("a SET that moves the partition column commits the whole table") {
+    val (r, path) = newTable()
+    assert(affected(r, s"UPDATE m SET day = '${days(7)}' WHERE id < 3") == 3L)
+    assert(VersionedTable.manifestEntries(spark, path, latest(path)).length == 1)
+    assert(r.execute(s"SELECT count(*) FROM m WHERE day = '${days(7)}'").head()
+      .getLong(0) == 25L + 3L)
+  }
+
+  test("inside BEGIN…COMMIT the counts hold and COMMIT writes one whole version") {
+    val (r, path) = newTable()
+    val v = latest(path)
+    r.execute("BEGIN")
+    assert(affected(r, "UPDATE m SET v = -1 WHERE id = 5") == 1L)
+    assert(affected(r, "DELETE FROM m WHERE id >= 100") == 100L)
+    assert(affected(r, "UPDATE m SET v = 0 WHERE id = 999") == 0L)
+    assert(affected(r, s"INSERT INTO m (id, day, v) VALUES (900, '${days(0)}', 4.0)") == 1L)
+    assert(latest(path) == v)
+    r.execute("COMMIT")
+    assert(latest(path) == v + 1)
+    assert(VersionedTable.manifestEntries(spark, path, latest(path)).length == 1)
+    assert(r.execute("SELECT count(*) FROM m").head().getLong(0) == 101L)
+    assert(r.execute("SELECT v FROM m WHERE id = 5").head().getDouble(0) == -1.0)
+  }
+
+  test("a multi-column PRIMARY KEY duplicate is found by the literal key probe") {
+    val root = graft.ArtifactStore.scratchDir("graft_dmlwp").toFile.getAbsolutePath
+    val r = new StatementRouter(spark, root)
+    r.execute("""CREATE TABLE mk (a BIGINT, b TEXT, v BIGINT, PRIMARY KEY (a, b))
+        PARTITIONED BY (b)""")
+    r.execute("INSERT INTO mk (a, b, v) VALUES (1, 'x', 10), (2, 'y', 20)")
+    val path = s"$root/mk"
+    val v = latest(path)
+    // (1, 'y') and (2, 'x') cross the stored keys' columns, but neither
+    // is a stored key
+    assert(affected(r, "INSERT INTO mk (a, b, v) VALUES (1, 'y', 30), (2, 'x', 40)") == 2L)
+    val e = intercept[Exception](
+      r.execute("INSERT INTO mk (a, b, v) VALUES (3, 'z', 50), (2, 'y', 60)"))
+    assert(e.getMessage.contains("DuplicateKeyException"), e.getMessage)
+    val rep = intercept[Exception](
+      r.execute("INSERT INTO mk (a, b, v) VALUES (4, 'z', 1), (4, 'z', 2)"))
+    assert(rep.getMessage.contains("DuplicateKeyException"), rep.getMessage)
+    assert(latest(path) == v + 1)
+    assert(r.execute("SELECT sum(v) FROM mk").head().getLong(0) == 100L)
+  }
+}
