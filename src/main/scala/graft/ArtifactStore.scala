@@ -1,5 +1,6 @@
 package graft
 
+import graft.sources.ParquetFooter
 import org.apache.spark.sql.SparkSession
 
 /** On-disk home for DYNAMIC-ORACLE model artifacts (VERDICT r11 ask #1).
@@ -115,7 +116,7 @@ object ArtifactStore {
     if (!dir.isDirectory) return None
     SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
       .flatMap { spark =>
-        try Some(spark.read.parquet(dir.getAbsolutePath)
+        try Some(ParquetFooter.read(spark, dir.getAbsolutePath)
           .select("idx", "v").collect()
           .map(r => (r.getInt(0), r.getString(1))).toSeq.sortBy(_._1))
         catch { case _: Throwable => None }
@@ -135,7 +136,7 @@ object ArtifactStore {
     SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
       .flatMap { spark =>
         try {
-          val rows = spark.read.parquet(dir.getAbsolutePath)
+          val rows = ParquetFooter.read(spark, dir.getAbsolutePath)
             .select("idx", "v", "sf_dir").collect()
           if (rows.exists(_.getString(2) != expectSfDir)) {
             System.err.println(s"[artifact] '$name' is STALE: trained on " +

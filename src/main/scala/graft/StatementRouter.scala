@@ -1,7 +1,7 @@
 package graft
 
 import graft.operators.{MatchText, Similarity}
-import graft.sources.{Dml, VersionedTable}
+import graft.sources.{Dml, ParquetFooter, VersionedTable}
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
@@ -1119,7 +1119,7 @@ class StatementRouter(spark: SparkSession, root: String) {
             xxhash64(df.columns.sorted.map(col): _*).as("h"))
         }
         val built: Option[DataFrame] =
-          if (fs.exists(sidecar)) Some(spark.read.parquet(sidecar.toString))
+          if (fs.exists(sidecar)) Some(ParquetFooter.read(spark, sidecar.toString))
           else {
             val prevSidecar = new Path(s"$path/_seqno/v${version - 1}")
             val m: Option[DataFrame] =
@@ -1129,7 +1129,7 @@ class StatementRouter(spark: SparkSession, root: String) {
                 // seq. A `_touched` marker ([[markTouched]]) also
                 // advances its pks — an UPDATE writing identical values
                 // changes no hash but the reference still bumps the seq
-                val prior = spark.read.parquet(prevSidecar.toString)
+                val prior = ParquetFooter.read(spark, prevSidecar.toString)
                 val prevH = hashes(version - 1)
                   .withColumnRenamed("h", "h_prev")
                 val touchedP = new Path(s"$path/_touched/v$version")
@@ -1138,7 +1138,7 @@ class StatementRouter(spark: SparkSession, root: String) {
                     .join(prevH, Seq("graft_seq_pk"), "left")
                     .join(prior, Seq("graft_seq_pk"), "left")
                   if (fs.exists(touchedP))
-                    base.join(spark.read.parquet(touchedP.toString)
+                    base.join(ParquetFooter.read(spark, touchedP.toString)
                         .withColumn("graft_touched", lit(true)),
                       Seq("graft_seq_pk"), "left")
                   else base.withColumn("graft_touched", lit(null).cast("boolean"))
@@ -1168,7 +1168,7 @@ class StatementRouter(spark: SparkSession, root: String) {
                   val tv = st.getPath.getName.stripPrefix("v").toIntOption
                   if (tv.exists(_ <= version)) fs.delete(st.getPath, true)
                 }
-                spark.read.parquet(sidecar.toString)
+                ParquetFooter.read(spark, sidecar.toString)
               } catch {
                 case scala.util.control.NonFatal(_) => df.localCheckpoint()
               }
@@ -1215,7 +1215,7 @@ class StatementRouter(spark: SparkSession, root: String) {
       val touchedEvents = (v + 1 to version).flatMap { tv =>
         val p = new Path(s"$path/_touched/v$tv")
         if (fs.exists(p))
-          try Some(spark.read.parquet(p.toString)
+          try Some(ParquetFooter.read(spark, p.toString)
             .select(col("graft_seq_pk"), lit(tv).cast("long").as("v")))
           catch { case scala.util.control.NonFatal(_) => None }
         else None
@@ -1334,9 +1334,9 @@ class StatementRouter(spark: SparkSession, root: String) {
     val remDirs = changed.toSeq.flatMap(oldDirs.get)
     val addDirs = changed.toSeq.flatMap(newDirs.get)
     val removed = if (remDirs.isEmpty) readTable(table).select(col(pk)).limit(0)
-                  else spark.read.parquet(remDirs: _*).select(col(pk))
+                  else ParquetFooter.read(spark, remDirs: _*).select(col(pk))
     val added = if (addDirs.isEmpty) readTable(table).limit(0)
-                else spark.read.parquet(addDirs: _*)
+                else ParquetFooter.read(spark, addDirs: _*)
     Some((prev, removed, added))
   }
 
@@ -1732,7 +1732,7 @@ class StatementRouter(spark: SparkSession, root: String) {
           // size: treat as never-stale (legacy behavior)
           val (baseN, cum, smp) =
             if (fs.exists(prevMeta)) {
-              val row = spark.read.parquet(prevMeta.toString).collect()(0)
+              val row = ParquetFooter.read(spark, prevMeta.toString).collect()(0)
               (row.getLong(0), row.getLong(1), row.getInt(2))
             } else (Long.MaxValue, 0L, 32)
           val newCum = cum + removed.count() + added.count()
@@ -1891,7 +1891,7 @@ class StatementRouter(spark: SparkSession, root: String) {
               .toDF("base_n", "cum_delta", "samples").coalesce(1)
               .write.mode("overwrite").parquet(s"$stored/calibmeta")
           }
-          val rows = spark.read.parquet(curvePath).collect()
+          val rows = ParquetFooter.read(spark, curvePath).collect()
             .map(r => (r.getInt(0), r.getDouble(1))).sortBy(_._1)
           Int.box(rows.find(_._2 >= target).map(_._1).getOrElse(centCount))
         }

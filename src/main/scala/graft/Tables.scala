@@ -1,6 +1,9 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.TableIdentifier
+
+import graft.sources.ParquetFooter
 
 /** Fixture-table catalog.
   *
@@ -16,13 +19,15 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  /** Resolved-scan memo: `spark.read.parquet` eagerly lists the dataset and
-    * reads footers for schema inference on EVERY call — pure metadata work
-    * that a catalog-backed engine does once (the reference caches table
-    * metadata in DocTableInfo; Spark caches it for catalog tables but not
-    * for repeated `read.parquet` calls). The fixture files are immutable,
-    * so the resolved DataFrame (plan metadata only — every execution still
-    * scans the parquet) is reused per (session, dir, table). */
+  /** Resolved-scan memo: a Parquet read lists the dataset and takes its
+    * schema from a footer on EVERY call — pure metadata work that a
+    * catalog-backed engine does once (the reference caches table metadata
+    * in DocTableInfo; Spark caches it for catalog tables but not for
+    * repeated reads). The schema comes from the footer on the driver
+    * ([[graft.sources.ParquetFooter]]), so a first load runs no Spark job.
+    * The fixture files are immutable, so the resolved DataFrame (plan
+    * metadata only — every execution still scans the parquet) is reused
+    * per (session, dir, table). */
   def load(spark: SparkSession, dir: String, name: String): DataFrame = {
     // the nanos conf must be set before the first events read in any
     // session; cheap, so set it unconditionally (memo hit or not)
@@ -41,7 +46,7 @@ object Tables {
       // NTZ → LTZ cast is instant-preserving and matches DuckDB's naive
       // timestamps.
       import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
-      val raw = spark.read.parquet(s"$dir/$name.parquet")
+      val raw = ParquetFooter.read(spark, s"$dir/$name.parquet")
       raw.schema("ts").dataType match {
         case LongType =>
           raw.withColumn("ts", org.apache.spark.sql.functions.timestamp_micros(
@@ -50,27 +55,27 @@ object Tables {
           raw.withColumn("ts", raw("ts").cast(TimestampType))
         case _ => raw
       }
-    } else spark.read.parquet(s"$dir/$name.parquet")
+    } else ParquetFooter.read(spark, s"$dir/$name.parquet")
 
   /** Register every fixture table as a temp view so `spark.sql` works on the
     * same names the DuckDB oracle uses. Cheap + idempotent. */
   def registerAll(spark: SparkSession, dir: String): Unit =
     names.foreach(n => load(spark, dir, n).createOrReplaceTempView(n))
 
-  /** Register fixture tables as catalog (external parquet) tables and run
-    * `ANALYZE TABLE … COMPUTE STATISTICS` on each — this is what actually
-    * feeds `spark.sql.cbo.joinReorder` (reference
+  /** Register fixture tables as catalog (external parquet) tables with
+    * table statistics — what feeds `spark.sql.cbo.joinReorder` (reference
     * `TableStatsService.java:101`): CBO needs rowCount stats, which temp
-    * views over bare file scans never have. `events` is excluded (its
-    * TIMESTAMP(NANOS) column needs the converted temp view from [[load]]).
-    * Idempotent; call once per session before stats-sensitive planning. */
-  /** ANALYZE is a full scan per table; the fixture files are immutable, so
-    * the computed stats are too — re-ANALYZE per invocation was pure
-    * re-computation (the reference's TableStatsService likewise refreshes
-    * on a schedule, not per statement). The memo skips the scan when this
-    * (session, dir) already analyzed and the catalog tables still exist;
-    * the temp-view unshadowing stays per-call because interleaved entries
-    * re-register fixture temp views. */
+    * views over bare file scans never have. Each table is created with the
+    * footer schema of its [[load]] and given the statistics `ANALYZE …
+    * COMPUTE STATISTICS` would compute by a full scan — file bytes and the
+    * footers' row counts ([[ParquetFooter.stats]]) — so registration runs
+    * no Spark job. `events` is excluded (its TIMESTAMP(NANOS) column needs
+    * the converted temp view from [[load]]). The fixture files are
+    * immutable, so the memo skips the work when this (session, dir)
+    * already registered and the catalog tables still point at `dir`; the
+    * temp-view unshadowing stays per-call because interleaved entries
+    * re-register fixture temp views. Call once per session before
+    * stats-sensitive planning. */
   def registerAllWithStats(spark: SparkSession, dir: String): Unit = {
     // stats are pointless unless the planner consumes them
     spark.conf.set("spark.sql.cbo.enabled", "true")
@@ -81,8 +86,8 @@ object Tables {
       spark.catalog.dropTempView(n)
       // location guard (ADVICE r15): CREATE TABLE IF NOT EXISTS is a no-op
       // when the name already points at a DIFFERENT dir's files — the old
-      // path would then ANALYZE (and memoize) the wrong scale factor's
-      // data silently. Drop and recreate when the location mismatches.
+      // path would then attach (and memoize) the wrong scale factor's
+      // stats silently. Drop and recreate when the location mismatches.
       // The catalog stores a qualified location, so a relative `dir` is
       // qualified before the comparison.
       val raw = new org.apache.hadoop.fs.Path(s"$dir/$n.parquet")
@@ -92,12 +97,14 @@ object Tables {
       val cur =
         if (!spark.catalog.tableExists(n)) None
         else Some(new org.apache.hadoop.fs.Path(spark.sessionState.catalog
-          .getTableMetadata(org.apache.spark.sql.catalyst.TableIdentifier(n))
+          .getTableMetadata(TableIdentifier(n))
           .location).toUri.getPath)
       if (cur.exists(_ != want)) spark.sql(s"DROP TABLE $n")
       if (firstTime || cur.isEmpty || cur.exists(_ != want)) {
-        spark.sql(s"CREATE TABLE IF NOT EXISTS $n USING parquet LOCATION '$loc'")
-        spark.sql(s"ANALYZE TABLE $n COMPUTE STATISTICS")
+        val ddl = load(spark, dir, n).schema.toDDL
+        spark.sql(s"CREATE TABLE IF NOT EXISTS $n ($ddl) USING parquet LOCATION '$loc'")
+        spark.sessionState.catalog.alterTableStats(TableIdentifier(n),
+          Some(ParquetFooter.stats(spark, loc.toString)))
       }
     }
     load(spark, dir, "events").createOrReplaceTempView("events")

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.functions.TextFunctions
+import graft.sources.ParquetFooter
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -1257,10 +1258,10 @@ object MatchText {
     * resolves it from the durable index spec. */
   def loadIndex(spark: org.apache.spark.sql.SparkSession, path: String,
                 analyzer: Analyzer = Analyzer.default): InvertedIndex = {
-    val st = spark.read.parquet(s"$path/stats").head()
+    val st = ParquetFooter.read(spark, s"$path/stats").head()
     InvertedIndex(
-      spark.read.parquet(s"$path/postings"),
-      spark.read.parquet(s"$path/termstats"),
+      ParquetFooter.read(spark, s"$path/postings"),
+      ParquetFooter.read(spark, s"$path/termstats"),
       st.getLong(0), st.getDouble(1), analyzer, st.getInt(2))
   }
 
@@ -1394,11 +1395,11 @@ object MatchText {
 
   def loadFieldedIndex(spark: org.apache.spark.sql.SparkSession, path: String,
                        analyzer: Analyzer = Analyzer.default): FieldedIndex = {
-    val st = spark.read.parquet(s"$path/stats").head()
+    val st = ParquetFooter.read(spark, s"$path/stats").head()
     FieldedIndex(
-      spark.read.parquet(s"$path/postings"),
-      spark.read.parquet(s"$path/termstats"),
-      spark.read.parquet(s"$path/fieldstats"),
+      ParquetFooter.read(spark, s"$path/postings"),
+      ParquetFooter.read(spark, s"$path/termstats"),
+      ParquetFooter.read(spark, s"$path/fieldstats"),
       analyzer, st.getInt(0))
   }
 

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.functions.VectorFunctions
+import graft.sources.ParquetFooter
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -343,8 +344,8 @@ object Similarity {
   /** (codes, centroids) of a stored quantized index. */
   def loadQuantizedIndex(spark: org.apache.spark.sql.SparkSession,
                          path: String): (DataFrame, DataFrame) =
-    (spark.read.parquet(s"$path/codes"),
-      spark.read.parquet(s"$path/centroids"))
+    (ParquetFooter.read(spark, s"$path/codes"),
+      ParquetFooter.read(spark, s"$path/centroids"))
 
   /** [[updateIndex]] on the int8 layout (kept as the stable entry point
     * for router/spec/catalog callers). */
@@ -1070,7 +1071,7 @@ object Similarity {
 
   def loadPqCodebooks(spark: org.apache.spark.sql.SparkSession,
                       path: String): Array[Array[Array[Float]]] = {
-    val rows = spark.read.parquet(path)
+    val rows = ParquetFooter.read(spark, path)
       .select(col("sub"), col("code"), col("vals"))
       .collect()
       .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Float](2).toArray))

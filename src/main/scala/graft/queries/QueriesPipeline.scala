@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.Tables
+import graft.sources.ParquetFooter
 import graft.functions.{GeoNetFunctions, TextFunctions, VectorFunctions}
 import graft.functions.aggregates.{LttbAggregator, TopKAggregator, TsPoint}
 import graft.operators._
@@ -54,7 +55,7 @@ object QueriesPipeline {
     def exactPairs(emb: DataFrame, threshold: Double, key: String): DataFrame = {
       val spark = emb.sparkSession
       val fp = fingerprint(Seq(emb), s"threshold=$threshold")
-      spark.read.parquet(memoized(spark, key, fp, "truth") { out =>
+      ParquetFooter.read(spark, memoized(spark, key, fp, "truth") { out =>
         val a = emb.select(col("vec_id").cast("long").as("id_a"),
           col("embedding").as("va"))
         val b = emb.select(col("vec_id").cast("long").as("id_b"),
@@ -78,7 +79,7 @@ object QueriesPipeline {
                  key: String): DataFrame = {
       val spark = corpus.sparkSession
       val fp = fingerprint(Seq(corpus, queries), s"k=$k")
-      spark.read.parquet(memoized(spark, key, fp, "knntruth") { out =>
+      ParquetFooter.read(spark, memoized(spark, key, fp, "knntruth") { out =>
         graft.operators.Similarity.bruteForceKnn(corpus, queries, k)
           .select(col("qid"), col("cid"))
           .write.mode("overwrite").parquet(s"$out/truth")
@@ -97,7 +98,7 @@ object QueriesPipeline {
           df.write.mode("overwrite").parquet(s"$out/$n") }
       }
       new java.io.File(p).listFiles().filter(_.isDirectory).map(f =>
-        f.getName -> spark.read.parquet(f.getAbsolutePath)).toMap
+        f.getName -> ParquetFooter.read(spark, f.getAbsolutePath)).toMap
     }
   }
 

@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.Memo
+import graft.sources.ParquetFooter
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -189,7 +190,7 @@ object QueriesRound10 {
       // replay the pick from the persisted curve
       val vdir = new java.io.File(s"$root/vrecall/_vecindex/iv").listFiles()
         .filter(f => new java.io.File(f, "recallcurve").exists()).head
-      val curve = s.read.parquet(s"${vdir.getAbsolutePath}/recallcurve")
+      val curve = ParquetFooter.read(s, s"${vdir.getAbsolutePath}/recallcurve")
         .collect().map(x => (x.getInt(0), x.getDouble(1))).sortBy(_._1)
       val expected = curve.find(_._2 >= 0.8).map(_._1).getOrElse(16)
       val npOk = expected == pickedStr.toInt

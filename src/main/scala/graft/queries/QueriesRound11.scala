@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.Memo
+import graft.sources.ParquetFooter
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -146,9 +147,9 @@ object QueriesRound11 {
           "recall_sample must ride the analyzer slot")
         val vdir = new java.io.File(s"$root/vcal/_vecindex/iv").listFiles()
           .filter(f => new java.io.File(f, "recallcurve").exists()).head
-        val curve = s.read.parquet(s"${vdir.getAbsolutePath}/recallcurve")
+        val curve = ParquetFooter.read(s, s"${vdir.getAbsolutePath}/recallcurve")
           .collect().map(x => (x.getInt(0), x.getDouble(1))).sortBy(_._1)
-        val meta = s.read.parquet(s"${vdir.getAbsolutePath}/calibmeta")
+        val meta = ParquetFooter.read(s, s"${vdir.getAbsolutePath}/calibmeta")
           .collect()(0)
         (curve.find(_._2 >= 0.9).map(_._1).getOrElse(32),
           meta.getInt(2) == 16 && meta.getLong(1) == 0L &&

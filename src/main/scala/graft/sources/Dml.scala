@@ -131,7 +131,8 @@ object Dml {
   def writePartitioned(df: DataFrame, path: String, partitionCols: Seq[String]): Unit =
     df.write.mode("overwrite").partitionBy(partitionCols: _*).parquet(path)
 
-  def readTable(spark: SparkSession, path: String): DataFrame = spark.read.parquet(path)
+  def readTable(spark: SparkSession, path: String): DataFrame =
+    ParquetFooter.read(spark, path)
 
   /** Atomically publish `next` as the new version of the Parquet table at
     * `path` — the commit protocol that makes copy-on-write DML real (the

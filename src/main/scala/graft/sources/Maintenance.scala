@@ -14,7 +14,7 @@ object Maintenance {
     * scan parallelism sane (thousands of tiny files → few right-sized ones).
     */
   def optimizeTable(spark: SparkSession, path: String, targetFileMB: Int = 128): Unit = {
-    val df = spark.read.parquet(path)
+    val df = ParquetFooter.read(spark, path)
     val bytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
     val files = math.max(1, (bytes / (targetFileMB.toLong * 1024 * 1024)).toInt)
     val tmp = path + "__optimized"

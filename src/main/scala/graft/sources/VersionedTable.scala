@@ -269,7 +269,7 @@ object VersionedTable {
                                  dataDir: String, spec: BucketSpec): String = {
     val name = catalogName(path, version)
     if (!spark.catalog.tableExists(name)) {
-      val schema = spark.read.parquet(dataDir).schema.toDDL
+      val schema = ParquetFooter.schema(spark, dataDir).toDDL
       spark.sql(
         s"""CREATE TABLE $name ($schema) USING parquet
            |CLUSTERED BY (${spec.cols.mkString(", ")})
@@ -551,14 +551,14 @@ object VersionedTable {
           case None =>
             // a committed version's data dir is immutable (copy-on-write;
             // vacuum removes whole dirs, never rewrites them), so the
-            // resolved scan — file listing + footer schema inference, paid
-            // per registerViews per statement otherwise — is reusable.
+            // resolved scan — file listing + footer schema, paid per
+            // registerViews per statement otherwise — is reusable.
             // Partitioned/bucketed reads stay per-call: their stored specs
             // are table-level and can evolve under an old version.
             // The immutability holds for commits, not for whole-directory
             // surgery: DROP TABLE, ALTER RENAME, ALTER CLUSTER SWAP TABLE
             // and vacuum invalidate every memo key naming the table path.
-            graft.Memo(spark, s"read#$dataDir")(spark.read.parquet(dataDir))
+            graft.Memo(spark, s"read#$dataDir")(ParquetFooter.read(spark, dataDir))
         }
     }
   }

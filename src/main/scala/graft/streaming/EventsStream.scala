@@ -263,7 +263,7 @@ object DedupStream {
     val afterHistory =
       if (!hasState) batch
       else {
-        val claims = spark.read.parquet(claimsPath)
+        val claims = graft.sources.ParquetFooter.read(spark, claimsPath)
         val claimedBands = claims
           .select(explode(col("keys")).as("key"), col("id").as("claimant"))
         val claimedSigs = claims

@@ -11,10 +11,14 @@ import scala.jdk.CollectionConverters._
   * identity hash (which can collide after GC) and neither the query
   * catalog nor the statement router holds ad-hoc memo maps; every
   * SparkSession comes from Engine.session; the router lexes each statement
-  * once and keeps one SELECT route chain. */
+  * once and keeps one SELECT route chain; Parquet metadata comes from the
+  * footers, not from Spark jobs. */
 class MemoHygieneSpec extends AnyFunSuite {
 
-  private def offenders(dir: String, words: String*): Seq[String] = {
+  private def offenders(dir: String, words: String*): Seq[String] =
+    matching(dir)(line => words.exists(line.contains))
+
+  private def matching(dir: String)(hit: String => Boolean): Seq[String] = {
     val walk = Files.walk(Paths.get(dir))
     val files: List[Path] =
       try walk.iterator.asScala.filter(_.toString.endsWith(".scala")).toList
@@ -23,7 +27,7 @@ class MemoHygieneSpec extends AnyFunSuite {
     for {
       f <- files
       (line, i) <- Files.readAllLines(f).asScala.zipWithIndex
-      if words.exists(line.contains)
+      if hit(line)
     } yield s"$f:${i + 1}: ${line.trim}"
   }
 
@@ -52,6 +56,23 @@ class MemoHygieneSpec extends AnyFunSuite {
     assert(lexes <= 5, s"$lexes Dialect.lex( call sites")
     assert("\\bdry\\s*:".r.findFirstIn(src).isEmpty,
       "a dry parameter is back: plain EXPLAIN runs the route chain itself")
+  }
+
+  test("Parquet reads under src/main take their schema from ParquetFooter") {
+    // a read that leaves the schema to Spark runs an inference job per
+    // call; ParquetFooter.read reads the same footer on the driver
+    val allowed = Map(
+      "/sources/ParquetFooter.scala:" ->
+        "the helper: its documentation and its fallback to Spark's inference",
+      "/sources/DynamicObjects.scala:" ->
+        "mergeSchema: dynamic-object files differ in columns, so every footer is merged")
+    val read = "\\.read\\b.*\\.parquet\\(".r
+    val hits = matching("src/main")(read.findFirstIn(_).isDefined)
+      .filterNot(h => allowed.keys.exists(h.contains))
+    assert(hits.isEmpty, hits.mkString("\n"))
+    val analyze = offenders("src/main/scala/graft/Tables.scala", "ANALYZE TABLE")
+    assert(analyze.isEmpty, "fixture statistics come from the footers:\n" +
+      analyze.mkString("\n"))
   }
 
   test("no SparkSession builder or core-count read under src outside Engine.scala") {

@@ -20,4 +20,32 @@ object TestSpark {
 abstract class SparkTestBase extends AnyFunSuite {
   lazy val spark: SparkSession = TestSpark.spark
   def sfDir: String = TestSpark.sfDir
+
+  private val tagKey = "graft.test.jobs"
+
+  /** Spark jobs started while `f` runs, attributed through a local
+    * property. The listener bus delivers events in order, so a sentinel
+    * job seen by the listener means every job of `f` was counted too. */
+  def jobsOf[T](f: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val sentinel = new java.util.concurrent.CountDownLatch(1)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(js.properties).map(_.getProperty(tagKey)).foreach {
+          case "run"      => jobs.incrementAndGet()
+          case "sentinel" => sentinel.countDown()
+          case _          => ()
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setLocalProperty(tagKey, "run")
+      val out = try f finally sc.setLocalProperty(tagKey, null)
+      sc.setLocalProperty(tagKey, "sentinel")
+      try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty(tagKey, null)
+      assert(sentinel.await(30, java.util.concurrent.TimeUnit.SECONDS))
+      (out, jobs.get())
+    } finally sc.removeSparkListener(listener)
+  }
 }
