@@ -21,6 +21,13 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *  - `spark.cleaner.periodicGC.interval=15s`: ContextCleaner reaps
   *    broadcast and checkpoint blocks only after a driver GC, and Spark's
   *    30-minute default never fires inside a catalog sweep;
+  *  - `spark.hadoop.fs.file.impl` = [[graft.sources.LocalFs]]: without
+  *    libhadoop, Hadoop's local FS forks a `chmod` process for every file,
+  *    checksum and directory a write creates (~35 per DML commit);
+  *    `LocalFs` sets the same mode with one syscall. Hadoop caches one
+  *    `file:` FileSystem per JVM and user, so this holds only while every
+  *    FileSystem comes from the session's Hadoop conf (`MemoHygieneSpec`
+  *    scans for the other ways to get one);
   *  - with `cbo` (the default), `spark.sql.cbo.enabled` and
   *    `cbo.joinReorder.enabled`: stats-driven join reordering mirrors the
   *    reference's join-graph reordering
@@ -49,6 +56,7 @@ object Engine {
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
       .config("spark.cleaner.periodicGC.interval", "15s")
+      .config("spark.hadoop.fs.file.impl", classOf[graft.sources.LocalFs].getName)
     if (cbo) builder
       .config("spark.sql.cbo.enabled", "true")
       .config("spark.sql.cbo.joinReorder.enabled", "true")

@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -11,8 +11,8 @@ import org.apache.spark.sql.expressions.Window
   * (rewritten to upsert, `dml/UpdateToInsert.java`), DELETE, and `RETURNING`
   * on a mutable Lucene store. On an immutable Parquet substrate the same
   * semantics are copy-on-write: each statement is a declarative DataFrame
-  * transform; `write` produces the next table version (a lakehouse format
-  * would add snapshot isolation on top — the dataflow is identical).
+  * transform whose result [[VersionedTable]] commits as the next table
+  * version, with snapshot isolation on top.
   *
   * All transforms are distributed joins/windows — no driver-side row loops.
   * RETURNING is literally the affected-row DataFrame.
@@ -92,8 +92,6 @@ object Dml {
       .unionByName(updates)
   }
 
-  /** UPDATE ... SET assignments WHERE cond, RETURNING *.
-    * Returns (new table state, returning rows). */
   /** UPDATE WHERE cond. SQL semantics: the condition AND every assignment
     * right-hand side read the OLD row (the match is decided before any
     * assignment applies — a `SET base = 10 WHERE base = 4` row still
@@ -123,33 +121,4 @@ object Dml {
   /** DELETE WHERE cond, RETURNING *. Returns (new state, deleted rows). */
   def delete(target: DataFrame, cond: Column): (DataFrame, DataFrame) =
     (target.filter(!coalesce(cond, lit(false))), target.filter(cond))
-
-  /** CREATE TABLE ... PARTITIONED BY: write value-partitioned Parquet —
-    * the direct analogue of the reference's partitioned tables
-    * (`DocTableInfo.partitionedBy`, one Lucene index per value), and what
-    * makes Catalyst prune partitions from WHERE clauses for free. */
-  def writePartitioned(df: DataFrame, path: String, partitionCols: Seq[String]): Unit =
-    df.write.mode("overwrite").partitionBy(partitionCols: _*).parquet(path)
-
-  def readTable(spark: SparkSession, path: String): DataFrame =
-    ParquetFooter.read(spark, path)
-
-  /** Atomically publish `next` as the new version of the Parquet table at
-    * `path` — the commit protocol that makes copy-on-write DML real (the
-    * reference gets the same guarantee from the Lucene translog,
-    * `execution/dml/upsert/TransportShardUpsertAction.java:91`):
-    *
-    *  1. `next` (which may read FROM `path`) is fully materialized into a
-    *     staging dir — the source is still intact if the job dies here;
-    *  2. the staging write's `_SUCCESS` marker is verified;
-    *  3. old and new are swapped by rename only ([[Maintenance.atomicSwap]]),
-    *     so every moment in time has at least one complete copy on disk.
-    *
-    * Readers racing the swap see the old or the new version, never a
-    * partial one. */
-  def commitVersion(spark: SparkSession, next: DataFrame, path: String): Unit = {
-    val staging = path + "__staging"
-    next.write.mode("overwrite").parquet(staging)
-    Maintenance.atomicSwap(spark, staging, path)
-  }
 }

@@ -5,9 +5,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Minimal multi-version table format: snapshot isolation + time travel on
   * plain Parquet, the lakehouse commit protocol the reference gets from its
-  * Lucene translog (`TransportShardUpsertAction.java:91`) and that
-  * `Dml.commitVersion`'s single-version swap cannot give (a reader racing
-  * the swap re-lists the directory mid-rename).
+  * Lucene translog (`TransportShardUpsertAction.java:91`) and that a
+  * single-version directory swap cannot give (a reader racing the swap
+  * re-lists the directory mid-rename).
   *
   * Layout:
   * {{{
@@ -86,9 +86,10 @@ object VersionedTable {
     * parquet moves partition columns to the end of the inferred schema
     * and loses them entirely on an empty table, so reads supply the
     * stored schema explicitly — order, types and empty-table behaviour
-    * all stay identical to an unpartitioned table. The schema line is
-    * refreshed on every commit, so ALTER TABLE schema changes propagate
-    * (older versions read missing columns as NULL, the lakehouse norm). */
+    * all stay identical to an unpartitioned table. A commit whose schema
+    * differs from the stored one rewrites the spec, so ALTER TABLE schema
+    * changes propagate (older versions read missing columns as NULL, the
+    * lakehouse norm); an unchanged schema leaves the file alone. */
   final case class PartitionSpec(cols: Seq[String], schemaDdl: String)
 
   private def partitionSpecFile(path: String) = new Path(path, "_partitionspec")
@@ -313,6 +314,13 @@ object VersionedTable {
     * leave a few rows in each of many small files. */
   private def sized(df: DataFrame): DataFrame = df.coalesce(writeTasks(df))
 
+  /** Store `df`'s schema in the partition spec `ps` when it differs. */
+  private def refreshSchema(spark: SparkSession, path: String, ps: PartitionSpec,
+                            df: DataFrame): Unit = {
+    val ddl = df.schema.toDDL
+    if (ddl != ps.schemaDdl) setPartitionSpec(spark, path, ps.copy(schemaDdl = ddl))
+  }
+
   /** Commit `df` as the next version; returns the committed version number.
     * The data write happens BEFORE any metadata changes; the single-file
     * manifest rename is the commit point. */
@@ -324,8 +332,7 @@ object VersionedTable {
     val pSpec = partitionSpec(spark, path)
     // keep the stored read-schema current: partitioned reads supply it
     // explicitly, so schema evolution must land here too
-    pSpec.foreach(ps => setPartitionSpec(spark, path,
-      PartitionSpec(ps.cols, df.schema.toDDL)))
+    pSpec.foreach(refreshSchema(spark, path, _, df))
     bucketSpec(spark, path) match {
       case Some(spec) =>
         // bucketed write: bucket metadata must live in the catalog, so the
@@ -459,7 +466,7 @@ object VersionedTable {
       s"commitPartial: partition tuples must match ${ps.cols}")
     val prev = latestVersion(spark, path)
     val next = prev.getOrElse(0) + 1
-    setPartitionSpec(spark, path, PartitionSpec(ps.cols, df.schema.toDDL))
+    refreshSchema(spark, path, ps, df)
 
     def dirName(vals: Seq[Any]): String =
       ps.cols.zip(vals).map { case (c, v) =>

@@ -119,6 +119,24 @@ class DmlWritePathSpec extends SparkTestBase {
     assert(r.execute("SELECT v FROM m WHERE id = 5").head().getDouble(0) == -1.0)
   }
 
+  test("the partition spec is rewritten only when a commit changes the schema") {
+    val (r, path) = newTable()
+    val spec = java.nio.file.Paths.get(path, "_partitionspec")
+    val old = java.nio.file.attribute.FileTime.fromMillis(1000000L)
+    def ddl = VersionedTable.partitionSpec(spark, path).get.schemaDdl
+    java.nio.file.Files.setLastModifiedTime(spec, old)
+    assert(affected(r, "UPDATE m SET v = 2.5 WHERE id = 9") == 1L)
+    assert(affected(r, "DELETE FROM m WHERE id = 10") == 1L)
+    assert(java.nio.file.Files.getLastModifiedTime(spec) == old)
+    assert(!ddl.contains("note"))
+    r.execute("ALTER TABLE m ADD COLUMN note TEXT")
+    r.execute(s"INSERT INTO m (id, day, v, note) VALUES (700, '${days(2)}', 1.0, 'n')")
+    assert(ddl.contains("note"))
+    assert(java.nio.file.Files.getLastModifiedTime(spec) != old)
+    assert(r.execute("SELECT note FROM m WHERE id = 700").head().getString(0) == "n")
+    assert(r.execute("SELECT count(*) FROM m WHERE note IS NULL").head().getLong(0) == 199L)
+  }
+
   test("a multi-column PRIMARY KEY duplicate is found by the literal key probe") {
     val root = graft.ArtifactStore.scratchDir("graft_dmlwp").toFile.getAbsolutePath
     val r = new StatementRouter(spark, root)

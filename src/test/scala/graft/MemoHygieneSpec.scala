@@ -12,7 +12,8 @@ import scala.jdk.CollectionConverters._
   * catalog nor the statement router holds ad-hoc memo maps; every
   * SparkSession comes from Engine.session; the router lexes each statement
   * once and keeps one SELECT route chain; Parquet metadata comes from the
-  * footers, not from Spark jobs. */
+  * footers, not from Spark jobs; every FileSystem comes from the session's
+  * Hadoop conf. */
 class MemoHygieneSpec extends AnyFunSuite {
 
   private def offenders(dir: String, words: String*): Seq[String] =
@@ -79,6 +80,16 @@ class MemoHygieneSpec extends AnyFunSuite {
     // this spec names the words it scans for, so it skips itself
     val hits = offenders("src", "SparkSession.builder", "SPARK_GRAFT_CPUS")
       .filterNot(h => h.contains("/Engine.scala:") || h.contains("/MemoHygieneSpec.scala:"))
+    assert(hits.isEmpty, hits.mkString("\n"))
+  }
+
+  test("every FileSystem under src/main comes from the session's Hadoop conf") {
+    // Hadoop caches one file: FileSystem per JVM and user, whichever conf
+    // asks first; a conf or FileSystem built on the side could cache the
+    // stock one, which forks chmod per file, in place of graft's LocalFs
+    val hits = offenders("src/main", "new Configuration(", "FileSystem.getLocal(",
+      "FileSystem.newInstance(", "new RawLocalFileSystem")
+      .filterNot(_.contains("/sources/LocalFs.scala:"))
     assert(hits.isEmpty, hits.mkString("\n"))
   }
 

@@ -69,20 +69,23 @@ class DmlSpec extends SparkTestBase {
     assert(out == Seq((1L, "a", 10.0), (2L, "b", 20.0), (3L, "c", 30.0), (4L, "d", 40.0)))
   }
 
-  test("commitVersion: read-modify-write on the same path is atomic") {
+  test("read-modify-write on the same path commits atomically") {
     val dir = graft.ArtifactStore.scratchDir("dml").toFile.getAbsolutePath + "/t"
-    target.write.parquet(dir)
-    // next version reads FROM the path it will replace — the staging dir
-    // makes that safe
-    val cur = Dml.readTable(spark, dir)
+    VersionedTable.commit(spark, dir, target)
+    // the next version reads FROM the table it replaces — the old
+    // version's data dir stays intact until the manifest names the new one
+    val cur = VersionedTable.read(spark, dir)
     val next = Dml.upsertReplace(cur,
       Seq((2L, "B!", 99.0), (4L, "d", 40.0)).toDF("id", "name", "val"), Seq("id"))
-    Dml.commitVersion(spark, next, dir)
-    val out = spark.read.parquet(dir).orderBy("id").as[(Long, String, Double)].collect().toSeq
+    VersionedTable.commit(spark, dir, next)
+    val out = VersionedTable.read(spark, dir).orderBy("id")
+      .as[(Long, String, Double)].collect().toSeq
     assert(out == Seq((1L, "a", 10.0), (2L, "B!", 99.0), (3L, "c", 30.0), (4L, "d", 40.0)))
-    // no staging/prev leftovers
+    // no staging leftovers: one table dir, two committed manifests
     val parent = new java.io.File(dir).getParentFile
     assert(parent.listFiles().map(_.getName).toSet == Set("t"))
+    assert(new java.io.File(dir, "_manifests").list().filterNot(_.startsWith(".")).toSet ==
+      Set("v00001.manifest", "v00002.manifest"))
   }
 
   test("upsert DO UPDATE replaces and inserts (MERGE semantics)") {
@@ -110,11 +113,13 @@ class DmlSpec extends SparkTestBase {
     val dir = graft.ArtifactStore.scratchDir("part").toFile.getAbsolutePath + "/t"
     val orders = Tables.load(spark, sfDir, "orders")
       .withColumn("o_year", year(col("o_orderdate")))
-    Dml.writePartitioned(orders, dir, Seq("o_year"))
-    val pruned = Dml.readTable(spark, dir).filter(col("o_year") === 1997)
+    VersionedTable.setPartitionSpec(spark, dir,
+      VersionedTable.PartitionSpec(Seq("o_year"), orders.schema.toDDL))
+    VersionedTable.commit(spark, dir, orders)
+    val pruned = VersionedTable.read(spark, dir).filter(col("o_year") === 1997)
     val plan = pruned.queryExecution.executedPlan.toString
     assert(plan.contains("PartitionFilters") && plan.contains("o_year"))
-    val allYears = Dml.readTable(spark, dir).select("o_year").distinct().count()
+    val allYears = VersionedTable.read(spark, dir).select("o_year").distinct().count()
     assert(allYears > 1 && pruned.select("o_year").distinct().count() == 1)
   }
 }
@@ -389,11 +394,13 @@ class StatsSpec extends SparkTestBase {
   test("dynamic partition pruning fires on a partitioned fact join") {
     val dir = graft.ArtifactStore.scratchDir("dpp").toFile.getAbsolutePath + "/t"
     val orders = Tables.load(spark, sfDir, "orders").withColumn("o_year", year(col("o_orderdate")))
-    graft.sources.Dml.writePartitioned(orders, dir, Seq("o_year"))
+    VersionedTable.setPartitionSpec(spark, dir,
+      VersionedTable.PartitionSpec(Seq("o_year"), orders.schema.toDDL))
+    VersionedTable.commit(spark, dir, orders)
     import spark.implicits._
     val dim = Seq((1996, "pick")).toDF("o_year", "tag")
     spark.conf.set("spark.sql.optimizer.dynamicPartitionPruning.enabled", "true")
-    val joined = graft.sources.Dml.readTable(spark, dir)
+    val joined = VersionedTable.read(spark, dir)
       .join(dim, Seq("o_year")).filter(col("tag") === "pick")
     val plan = joined.queryExecution.executedPlan.toString
     assert(plan.contains("dynamicpruning") || plan.contains("PartitionFilters: [isnotnull(o_year"))
@@ -402,14 +409,24 @@ class StatsSpec extends SparkTestBase {
 
 class MaintenanceSpec extends SparkTestBase {
   test("OPTIMIZE compacts many small files into few") {
-    val dir = graft.ArtifactStore.scratchDir("opt").toFile.getAbsolutePath + "/t"
-    Tables.load(spark, sfDir, "orders").repartition(24).write.parquet(dir)
-    def nFiles = new java.io.File(dir).listFiles().count(_.getName.endsWith(".parquet"))
+    val root = graft.ArtifactStore.scratchDir("opt").toFile.getAbsolutePath
+    val path = s"$root/t"
+    val orders = Tables.load(spark, sfDir, "orders")
+    // a writer capped at few records per file leaves many small files
+    val cap = "spark.sql.files.maxRecordsPerFile"
+    spark.conf.set(cap, math.max(1L, orders.count() / 24).toString)
+    try VersionedTable.commit(spark, path, orders) finally spark.conf.unset(cap)
+    def nFiles = {
+      val v = VersionedTable.latestVersion(spark, path).get
+      VersionedTable.manifestEntries(spark, path, v)
+        .flatMap(d => new java.io.File(d).listFiles())
+        .count(_.getName.endsWith(".parquet"))
+    }
     assert(nFiles >= 24)
-    val before = spark.read.parquet(dir).count()
-    Maintenance.optimizeTable(spark, dir)
+    val before = VersionedTable.read(spark, path).count()
+    new StatementRouter(spark, root).execute("OPTIMIZE TABLE t")
     assert(nFiles <= 4)
-    assert(spark.read.parquet(dir).count() == before)
+    assert(VersionedTable.read(spark, path).count() == before)
   }
 
   test("EXPLAIN returns a plan; EXPLAIN ANALYZE embeds runtime shape") {
