@@ -6,9 +6,10 @@ import org.apache.spark.sql.SparkSession
 
 /** The session-scoped memo: every build that outlives the call that made
   * it (resolved scans, router tables written once per fixture dir, trained
-  * indexes, ground-truth dumps, catalog snapshots) is cached here, keyed on
-  * (session, key). The reference keeps one per-table metadata cache
-  * (`DocTableInfo`) invalidated by cluster-state changes; the rules here:
+  * indexes, ground-truth dumps, catalog snapshots, primary-key maps) is
+  * cached here, keyed on (session, key). The reference keeps one
+  * per-table metadata cache (`DocTableInfo`) invalidated by cluster-state
+  * changes; the rules here:
   *
   *  - Scoped to the session: no other session, `newSession()` included,
   *    sees an entry. Memoized DataFrames reference their session, so weak
@@ -30,6 +31,7 @@ object Memo {
       if (!built) { value = build; built = true }
       value
     }
+    def peek: Option[Any] = synchronized { if (built) Some(value) else None }
   }
 
   private val sessions =
@@ -42,6 +44,13 @@ object Memo {
     evictStopped()
     sessions.computeIfAbsent(spark, _ => new ConcurrentHashMap[String, Cell]())
       .computeIfAbsent(key, _ => new Cell).get(build).asInstanceOf[T]
+  }
+
+  /** The value built under `key`, if any: looks, never builds. */
+  def peek[T](spark: SparkSession, key: String): Option[T] = {
+    evictStopped()
+    Option(sessions.get(spark)).flatMap(m => Option(m.get(key)))
+      .flatMap(_.peek).map(_.asInstanceOf[T])
   }
 
   /** Drop every session's entries whose key matches `drop`. */

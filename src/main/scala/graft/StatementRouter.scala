@@ -1,11 +1,10 @@
 package graft
 
 import graft.operators.{MatchText, Similarity}
-import graft.sources.{Dml, ParquetFooter, VersionedTable}
+import graft.sources.{Dml, KeyMap, ParquetFooter, VersionedTable}
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
-import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ArrayType, MapType, StructType}
+import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
 import org.apache.hadoop.fs.Path
 
 /** Full-statement execution — the porting entry point for a CrateDB client.
@@ -79,14 +78,67 @@ class StatementRouter(spark: SparkSession, root: String) {
     * once, later statements in the transaction read a stable materialized
     * state, and lineage cannot pile up across a long script. */
   private def writeTable(name: String, next: DataFrame,
-                         touched: Option[Seq[Seq[Any]]] = None): Unit =
+                         touched: Option[Seq[Seq[Any]]] = None): Option[Int] =
     txn match {
-      case Some(buf) => buf(name) = next.localCheckpoint()
-      case None      => touched match {
+      case Some(buf) => buf(name) = next.localCheckpoint(); None
+      case None      => Some(touched match {
         case Some(t) => VersionedTable.commitPartial(spark, tablePath(name), next, t)
         case None    => VersionedTable.commit(spark, tablePath(name), next)
-      }
+      })
     }
+
+  /** The current snapshot and, outside a transaction, the committed
+    * version it reads. */
+  private def snapshot(name: String): (DataFrame, Option[Int]) =
+    if (txn.isDefined) (readTable(name), None)
+    else {
+      val path = tablePath(name)
+      val v = VersionedTable.latestVersion(spark, path).getOrElse(
+        throw new IllegalArgumentException(s"no committed versions at $path"))
+      (VersionedTable.readVersion(spark, path, v), Some(v))
+    }
+
+  // ---------- primary-key map ----------
+
+  /** The key column and partition columns of a table whose versions carry
+    * a [[KeyMap]]: autocommit and a single-column PRIMARY KEY of a key
+    * type. Decided from metadata alone. */
+  private def keyed(name: String, schema: StructType): Option[(String, Seq[String])] =
+    if (txn.isDefined) None
+    else for {
+      k <- KeyMap.keyColumn(VersionedTable.primaryKey(spark, tablePath(name)), schema)
+      parts = VersionedTable.partitionSpec(spark, tablePath(name)).map(_.cols).getOrElse(Nil)
+      if parts.forall(schema.fieldNames.contains)
+    } yield (k, parts)
+
+  /** Whether assigning `cols` may change a row's key or partition. */
+  private def movesKey(cols: Iterable[String], k: String, parts: Seq[String]): Boolean =
+    cols.exists(c => (k +: parts).exists(_.equalsIgnoreCase(c)))
+
+  /** The entries of `version`'s key map that `rows` (the table filtered by
+    * a statement's condition) selects, with the map: None unless the
+    * optimized filter is a key predicate and the version has a map. */
+  private def keyHits(name: String, version: Option[Int], k: String, parts: Seq[String],
+                      rows: DataFrame): Option[(KeyMap, Seq[(Any, Seq[Any])])] =
+    for {
+      v   <- version
+      sel <- KeyMap.selection(rows.queryExecution.optimizedPlan, k)
+      m   <- KeyMap.of(spark, tablePath(name), v, k, parts)
+    } yield (m, m.select(sel))
+
+  /** Store `m`, derived from the map of version `base`, as the map of the
+    * version a write `committed`, when that is the next one: after a
+    * concurrent commit the statement's delta no longer describes it. */
+  private def storeKeyMap(name: String, base: Option[Int], committed: Option[Int],
+                          m: Option[KeyMap]): Unit =
+    for (b <- base; v <- committed if v == b + 1; km <- m)
+      KeyMap.store(spark, tablePath(name), v, km)
+
+  private def keyIn(k: String, keys: Seq[Any]): Column =
+    if (keys.isEmpty) lit(false) else col(k).isin(keys: _*)
+
+  private def duplicateKey(name: String) =
+    s"DuplicateKeyException: a row with the same primary key exists already in $name"
 
   /** Partition-granular DML eligibility (reference: DML on a partitioned
     * table touches one Lucene index per affected partition, never the
@@ -2140,7 +2192,9 @@ class StatementRouter(spark: SparkSession, root: String) {
     * post-ingest pass that keeps scan parallelism sane. */
   private def optimizeStmt(sig: Vector[Tok]): DataFrame = {
     val name = sig(2).text
-    val cur = readTable(name)
+    val (cur, version) = snapshot(name)
+    // compaction moves no key: the key map carries forward
+    val carried = version.flatMap(KeyMap.stored(spark, tablePath(name), _))
     val pi = sig.indexWhere(_.is("partition"))
     val psOpt = VersionedTable.partitionSpec(spark, tablePath(name))
     if (pi >= 0 && sig.lift(pi + 1).exists(_.isSym("(")) &&
@@ -2165,8 +2219,10 @@ class StatementRouter(spark: SparkSession, root: String) {
       val touched = Seq(ps.cols.map(c => pairs(c.toLowerCase)))
       val part = cur.filter(
         ps.cols.map(c => col(c) === lit(pairs(c.toLowerCase))).reduce(_ && _))
-      writeTable(name, part.repartition(VersionedTable.writeTasks(part)), Some(touched))
-    } else writeTable(name, cur.repartition(VersionedTable.writeTasks(cur)))
+      storeKeyMap(name, version,
+        writeTable(name, part.repartition(VersionedTable.writeTasks(part)), Some(touched)), carried)
+    } else storeKeyMap(name, version,
+      writeTable(name, cur.repartition(VersionedTable.writeTasks(cur))), carried)
     summary(0L)
   }
 
@@ -2628,7 +2684,7 @@ class StatementRouter(spark: SparkSession, root: String) {
       if (path.replaceAll("\\.gz$", "").endsWith(".csv")) "csv" else "json")
     val gzip = opts.get("compression").contains("gzip")
     if (isFrom) {
-      val target = readTable(name)
+      val (target, version) = snapshot(name)
       // PRIMARY KEY (reference: a duplicate key fails its row, not the
       // COPY): of the file rows repeating a key only the first is read,
       // and rows whose key the table holds are skipped
@@ -2653,9 +2709,27 @@ class StatementRouter(spark: SparkSession, root: String) {
       val report =
         if (ts.exists(_.is("summary"))) Some(parsed.summary(imported).localCheckpoint())
         else None
-      // an append only changes the incoming rows' partitions
-      val (n, parts) = touchOf(imported, partitionCols(name, target.schema))
-      writeTable(name, Dml.insertInto(target, imported), parts)
+      // an append only changes the incoming rows' partitions. Into a table
+      // with a stored key map, the import tally groups by the key too (when
+      // the input is small enough for the map), and the committed version
+      // gets the map plus the imported keys
+      val pcols = partitionCols(name, target.schema)
+      val seeded = for {
+        (k, ps) <- keyed(name, target.schema)
+        v       <- version
+        m       <- KeyMap.stored(spark, tablePath(name), v)
+        if m.size + KeyMap.rowEstimate(imported) <= KeyMap.MaxKeys
+      } yield (k, ps, m)
+      val (n, parts, nextMap) = seeded match {
+        case Some((k, ps, m)) =>
+          val t = Dml.tally(imported, k +: ps)
+          (t.values.sum, pcols.map(_ => t.keys.map(_.tail).toSeq.distinct),
+            KeyMap.fromTally(t, target.schema(k).dataType).map(m ++ _))
+        case None =>
+          val (n, parts) = touchOf(imported, pcols)
+          (n, parts, None)
+      }
+      storeKeyMap(name, version, writeTable(name, Dml.insertInto(target, imported), parts), nextMap)
       report.getOrElse(summary(n))
     } else {
       val cur = readTable(name)
@@ -2825,7 +2899,9 @@ class StatementRouter(spark: SparkSession, root: String) {
       VersionedTable.setConstraintSpec(spark, tablePath(name), cspec)
     val empty = spark.createDataFrame(
       spark.sparkContext.emptyRDD[Row], fullSchema)
-    VersionedTable.commit(spark, tablePath(name), empty)
+    val v = VersionedTable.commit(spark, tablePath(name), empty)
+    KeyMap.keyColumn(pkCols, fullSchema).foreach(k =>
+      KeyMap.store(spark, tablePath(name), v, KeyMap.empty(fullSchema(k).dataType)))
     summary(0L)
   }
 
@@ -4079,7 +4155,7 @@ class StatementRouter(spark: SparkSession, root: String) {
     require(ts(0).is("insert") && ts(1).is("into"), "INSERT INTO expected")
     var i = 2
     val name = ts(i).text; i += 1
-    val target = readTable(name)
+    val (target, version) = snapshot(name)
     // optional explicit column list
     var cols: Seq[String] = target.schema.fieldNames.toSeq
     if (i < ts.length && ts(i).isSym("(")) {
@@ -4115,6 +4191,7 @@ class StatementRouter(spark: SparkSession, root: String) {
     val aligned = enforceOnInsert(name, alignedRaw, cols.toSet)
     var conflictKeys: Seq[String] = Nil
     var doNothing = false
+    var upsertAssigns: Seq[(String, Vector[Tok])] = Nil
     val next: DataFrame => DataFrame =
       if (oc < 0) cur => Dml.insertInto(cur, aligned)
       else {
@@ -4132,9 +4209,19 @@ class StatementRouter(spark: SparkSession, root: String) {
         } else {
           require(ts(j + 1).is("update") && ts(j + 2).is("set"), "DO UPDATE SET expected")
           val assigns = parseAssignments(ts.slice(j + 3, stmtEnd))
+          upsertAssigns = assigns
           cur => mergeUpsert(cur, aligned, keys, assigns)
         }
       }
+    if (ri < 0) {
+      val conflict =
+        if (oc < 0) None
+        else Some(conflictKeys -> (if (doNothing) None else Some(upsertAssigns)))
+      keyedInsert(name, target, version, aligned, conflict) match {
+        case Some(n) => return summary(n)
+        case None    =>
+      }
+    }
     // plain INSERT / DO NOTHING change rows only inside the incoming
     // rows' partitions; DO UPDATE may touch a matched row whose partition
     // differs from the incoming value → full commit
@@ -4146,18 +4233,18 @@ class StatementRouter(spark: SparkSession, root: String) {
     // the table is probed with them as a literal predicate its scan
     // pushes down
     val pk = if (oc < 0) VersionedTable.primaryKey(spark, tablePath(name)) else Nil
-    val literalKeys = aligned.queryExecution.optimizedPlan.isInstanceOf[LocalRelation] &&
-      pk.forall(c => aligned.schema(c).dataType match {
-        case _: ArrayType | _: MapType | _: StructType => false
-        case _ => true
-      })
-    require(pk.isEmpty || (
-      if (literalKeys) {
-        val keys = aligned.select(pk.map(col): _*).collect().toSeq
+    val literalKeys =
+      if (pk.isEmpty || pk.exists(c => aligned.schema(c).dataType match {
+        case _: ArrayType | _: MapType | _: StructType => true
+        case _ => false
+      })) None
+      else Dml.localRows(aligned.select(pk.map(col): _*))
+    require(pk.isEmpty || (literalKeys match {
+      case Some(keys) =>
         keys.distinct.size == n &&
           Dml.tally(target.filter(Dml.keyPredicate(pk, keys)), Nil).isEmpty
-      } else Dml.absent(target, aligned, pk).select(pk.map(col): _*).distinct().count() == n
-    ), s"DuplicateKeyException: a row with the same primary key exists already in $name")
+      case None => Dml.absent(target, aligned, pk).select(pk.map(col): _*).distinct().count() == n
+    }), duplicateKey(name))
     val newState = next(target)
     // RETURNING * | exprs (reference dml.rst): the rows the statement
     // actually produced — plain inserts return the incoming rows; DO
@@ -4192,20 +4279,110 @@ class StatementRouter(spark: SparkSession, root: String) {
     result
   }
 
+  /** INSERT on the key path: VALUES rows, no RETURNING, into a table whose
+    * latest version has a [[KeyMap]]. The duplicate-key check of a plain
+    * INSERT and the conflict match of `ON CONFLICT (key)` are map lookups,
+    * so the write is the statement's one job, and the committed version
+    * gets the map plus the new keys. `conflict` is None for a plain INSERT,
+    * else the conflict keys and the DO UPDATE assignments (None for DO
+    * NOTHING). DO UPDATE writes the partitions of its new rows and of its
+    * matched stored rows ([[mergeKeyed]]). None, and the caller's path runs,
+    * when the map does not apply: a conflict target other than the key, an
+    * assignment to the key or a partition column, an upsert whose rows
+    * repeat a key or carry a NULL one, or a DO UPDATE over a column type
+    * no literal holds. Returns the affected-row count. */
+  private def keyedInsert(name: String, target: DataFrame, version: Option[Int],
+                          aligned: DataFrame,
+                          conflict: Option[(Seq[String], Option[Seq[(String, Vector[Tok])]])])
+      : Option[Long] = {
+    val assigned = conflict.flatMap(_._2).getOrElse(Nil).map(_._1)
+    for {
+      (k, parts) <- keyed(name, target.schema)
+      if conflict.forall(_._1.map(_.toLowerCase) == Seq(k.toLowerCase))
+      if !movesKey(assigned, k, parts)
+      rows <- Dml.localRows(aligned)
+      v <- version
+      incoming = rows.map(r => r.getAs[Any](k) -> parts.map(r.getAs[Any]))
+      keys = incoming.map(_._1)
+      if conflict.isEmpty || (!keys.contains(null) && keys.distinct.size == keys.size)
+      if !conflict.exists(_._2.isDefined) || aligned.schema.forall(f => literalType(f.dataType))
+      m <- KeyMap.of(spark, tablePath(name), v, k, parts)
+    } yield {
+      val (matched, fresh) = incoming.partition(e => e._1 != null && m.contains(e._1))
+      val freshKeys = fresh.map(_._1)
+      val (next, touched) = conflict match {
+        case None =>
+          require(matched.isEmpty && keys.distinct.size == keys.size, duplicateKey(name))
+          (Dml.insertInto(target, aligned), fresh.map(_._2))
+        case Some((_, None)) =>
+          (Dml.insertInto(target, aligned.filter(keyIn(k, freshKeys))), fresh.map(_._2))
+        case Some((_, Some(assigns))) =>
+          (mergeKeyed(target, aligned, k, assigns, matched.map(_._1)),
+            fresh.map(_._2) ++ matched.map(e => m.get(e._1).get))
+      }
+      val committed = writeTable(name, next,
+        partitionCols(name, target.schema, assigned.toSet).map(_ => touched.distinct))
+      if (conflict.exists(_._2.isDefined))
+        markTouched(name, aligned.filter(keyIn(k, matched.map(_._1))))
+      if (!freshKeys.contains(null)) storeKeyMap(name, version, committed, Some(m ++ fresh))
+      rows.length.toLong
+    }
+  }
+
+  /** Types whose values `lit` renders exactly. */
+  private def literalType(dt: DataType): Boolean = {
+    import org.apache.spark.sql.types._
+    dt match {
+      case _: NumericType | _: StringType | BooleanType | DateType | TimestampType |
+           TimestampNTZType | BinaryType => true
+      case _ => false
+    }
+  }
+
+  /** The DO UPDATE merge on the key path, one projection of the table:
+    * the incoming rows whose key it holds (`matched`) are on the driver, so
+    * they ride in the plan as one literal map from key to row, and each
+    * matched stored row reads its `excluded` row from it; the incoming
+    * rows of new keys are unioned on. No join, so nothing is broadcast or
+    * shuffled. Same result as [[mergeUpsert]] over rows with distinct
+    * keys; every column must be of a type a literal holds ([[literalType]]). */
+  private def mergeKeyed(target: DataFrame, rows: DataFrame, k: String,
+                         assigns: Seq[(String, Vector[Tok])], matched: Seq[Any]): DataFrame = {
+    val hit = keyIn(k, matched)
+    def value(v: Any, dt: DataType) = lit(v).cast(dt)
+    val incoming = Dml.localRows(rows.filter(hit)).get
+    val byKey = map_from_arrays(
+      array(incoming.map(r => value(r.getAs[Any](k), rows.schema(k).dataType)): _*),
+      array(incoming.map(r => struct(rows.schema.fields.toSeq.zipWithIndex.map { case (f, i) =>
+        value(r.get(i), f.dataType).as(f.name) }: _*)): _*))
+    val assignMap = assigns.toMap
+    target.withColumn("__e", try_element_at(byKey, col(k)))
+      .select(target.schema.fieldNames.map { cname =>
+        assignMap.get(cname) match {
+          case Some(rhs) => when(hit, expr(qualifyExcluded(rhs))).otherwise(col(cname)).as(cname)
+          case None      => col(cname)
+        }
+      }.toSeq: _*)
+      .unionByName(rows.filter(!hit).select(target.columns.map(col).toSeq: _*))
+  }
+
   /** Partial-assignment upsert (`DO UPDATE SET v = excluded.v || '!'`):
     * one full-outer merge — new keys insert whole rows, matched keys apply
     * the assignments (rhs may reference `excluded.<col>` = the incoming row
     * and bare `<col>` = the current row), unmatched targets pass through. */
   private def mergeUpsert(target: DataFrame, rows: DataFrame, keys: Seq[String],
                           assigns: Seq[(String, Vector[Tok])]): DataFrame = {
-    val t = target.as("__t")
-    val e = rows.dropDuplicates(keys).as("__e")
-    val joined = t.join(e, keys.map(k => t(k) === e(k)).reduce(_ && _), "full_outer")
-    val matched = keys.map(k => t(k).isNotNull && e(k).isNotNull).reduce(_ && _)
-    val inserted = keys.map(k => t(k).isNull).reduce(_ && _)
+    // the incoming row is one struct column, so bare names resolve to the
+    // current row alone
+    val e = col("__e")
+    val joined = target.join(
+      rows.dropDuplicates(keys).select(struct(rows.columns.map(col).toSeq: _*).as("__e")),
+      keys.map(k => target(k) === e(k)).reduce(_ && _), "full_outer")
+    val matched = keys.map(k => target(k).isNotNull && e(k).isNotNull).reduce(_ && _)
+    val inserted = keys.map(k => target(k).isNull).reduce(_ && _)
     val assignMap = assigns.toMap
     joined.select(target.schema.fieldNames.map { cname =>
-      val base = when(inserted, e(cname)).otherwise(t(cname))
+      val base = when(inserted, e(cname)).otherwise(target(cname))
       assignMap.get(cname) match {
         case Some(rhs) =>
           when(matched, expr(qualifyExcluded(rhs))).otherwise(base).as(cname)
@@ -4214,9 +4391,8 @@ class StatementRouter(spark: SparkSession, root: String) {
     }.toSeq: _*)
   }
 
-  /** `excluded.x` → `__e.x`; bare column words stay unqualified, which
-    * resolves against the join output — ambiguous only if the same name is
-    * assigned AND referenced bare, so bare refs are qualified to `__t`. */
+  /** `excluded.x` → `__e.x`, a field of the merge's incoming-row struct
+    * column; bare column words stay unqualified and read the current row. */
   private def qualifyExcluded(toks: Vector[Tok]): String = {
     val out = scala.collection.mutable.ArrayBuffer.empty[String]
     var i = 0
@@ -4244,7 +4420,7 @@ class StatementRouter(spark: SparkSession, root: String) {
     // row-diff seq column — join it onto the snapshot for the filter,
     // drop it again before the write
     val needSeq = stmt.text.toLowerCase.contains("__graft_seq_no")
-    val cur0 = readTable(name)
+    val (cur0, version) = snapshot(name)
     val cur = if (!needSeq) cur0 else withSeqNo(cur0, name,
       VersionedTable.latestVersion(spark, tablePath(name)).getOrElse(1))
     // generated columns recompute on every UPDATE (reference
@@ -4264,8 +4440,18 @@ class StatementRouter(spark: SparkSession, root: String) {
           fillDefaults = false)
       enforceRowConstraints(touched, sp)
     }
-    val (n, parts) = touchOf(cur.filter(cond),
-      partitionCols(name, cur.schema, assigns.map(_._1).toSet))
+    // a recomputed generated column moves like an assigned one
+    val moved = assigns.map(_._1).toSet ++ genRecompute.keySet
+    val pcols = partitionCols(name, cur.schema, moved)
+    // keys and partitions stay put: the key map carries forward, and a key
+    // predicate reads its count and partitions from it
+    val carry = keyed(name, cur.schema).filterNot { case (k, ps) => movesKey(moved, k, ps) }
+    val hits = carry.filter(_ => !needSeq && retToks.isEmpty).flatMap { case (k, ps) =>
+      keyHits(name, version, k, ps, cur.filter(cond)) }
+    val (n, parts) = hits match {
+      case Some((_, sel)) => (sel.length.toLong, pcols.map(_ => sel.map(_._2).distinct))
+      case None           => touchOf(cur.filter(cond), pcols)
+    }
     val result = retToks match {
       case Some(r) =>
         val rt = if (needSeq && !r.exists(_.is("__graft_seq_no")))
@@ -4276,8 +4462,10 @@ class StatementRouter(spark: SparkSession, root: String) {
     // no matched row: nothing changes, so nothing is written (the
     // reference answers 0 and leaves the table as it was)
     if (n > 0) {
-      writeTable(name, if (needSeq) next.drop("__graft_seq_no") else next, parts)
+      val committed = writeTable(name, if (needSeq) next.drop("__graft_seq_no") else next, parts)
       markTouched(name, touched)
+      if (carry.isDefined) storeKeyMap(name, version, committed,
+        hits.map(_._1).orElse(version.flatMap(KeyMap.stored(spark, tablePath(name), _))))
     }
     result
   }
@@ -4326,11 +4514,26 @@ class StatementRouter(spark: SparkSession, root: String) {
     val (_, whereToks, retToks) = tailClauses(ts, 3)
     val cond = whereToks.map(w => expr(renderSig(w))).getOrElse(lit(true))
     val needSeq = stmt.text.toLowerCase.contains("__graft_seq_no")
-    val cur0 = readTable(name)
+    val (cur0, version) = snapshot(name)
     val cur = if (!needSeq) cur0 else withSeqNo(cur0, name,
       VersionedTable.latestVersion(spark, tablePath(name)).getOrElse(1))
     val (next, deleted) = Dml.delete(cur, cond)
-    val (n, parts) = touchOf(cur.filter(cond), partitionCols(name, cur.schema))
+    val pcols = partitionCols(name, cur.schema)
+    // the key map answers a key predicate; any other condition tallies its
+    // keys with its partitions, so the map can drop them
+    val km = if (needSeq || retToks.isDefined) None else keyed(name, cur.schema)
+    val (n, parts, nextMap) = km.flatMap { case (k, ps) =>
+      keyHits(name, version, k, ps, cur.filter(cond)).map { case (m, sel) =>
+        (sel.length.toLong, pcols.map(_ => sel.map(_._2).distinct), Some(m -- sel.map(_._1)))
+      }.orElse(version.flatMap(KeyMap.stored(spark, tablePath(name), _)).map { m =>
+        val t = Dml.tally(cur.filter(cond), k +: ps)
+        (t.values.sum, pcols.map(_ => t.keys.map(_.tail).toSeq.distinct),
+          Some(m -- t.keys.map(_.head)))
+      })
+    }.getOrElse {
+      val (n, parts) = touchOf(cur.filter(cond), pcols)
+      (n, parts, None)
+    }
     val result = retToks match {
       case Some(r) =>
         val rt = if (needSeq && !r.exists(_.is("__graft_seq_no")))
@@ -4338,7 +4541,9 @@ class StatementRouter(spark: SparkSession, root: String) {
         selectReturning(rt, r).localCheckpoint()
       case None    => summary(n)
     }
-    if (n > 0) writeTable(name, if (needSeq) next.drop("__graft_seq_no") else next, parts)
+    if (n > 0)
+      storeKeyMap(name, version,
+        writeTable(name, if (needSeq) next.drop("__graft_seq_no") else next, parts), nextMap)
     result
   }
 

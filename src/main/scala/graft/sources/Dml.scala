@@ -1,6 +1,7 @@
 package graft.sources
 
 import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -34,20 +35,35 @@ object Dml {
     * partition counts its own rows and the driver merges the per-partition
     * maps. Nothing shuffles, so this is one job where a `groupBy().count()`
     * is two under AQE, and none when the plan is a local relation, whose
-    * rows are on the driver already. With no `cols` the one key is the
+    * rows are on the driver already. The job runs on the executed plan's
+    * internal rows, converted like `df.rdd` converts them, without the SQL
+    * execution `df.rdd` opens first. With no `cols` the one key is the
     * empty tuple and its count the row count; no rows → an empty map. The
     * DML statements read their affected-row count and the partitions they
     * touch from it. */
   def tally(df: DataFrame, cols: Seq[String]): Map[Seq[Any], Long] = {
     val sel = df.select(cols.map(col): _*)
-    sel.queryExecution.optimizedPlan match {
-      case _: LocalRelation => countRows(sel.collect().iterator)
-      case _ =>
-        sel.rdd.mapPartitions(rows => Iterator(countRows(rows))).collect()
+    localRows(sel) match {
+      case Some(rows) => countRows(rows.iterator)
+      case None =>
+        val toScala = CatalystTypeConverters.createToScalaConverter(sel.schema)
+        sel.queryExecution.toRdd
+          .mapPartitions(rows => Iterator(countRows(rows.map(r => toScala(r).asInstanceOf[Row]))))
+          .collect()
           .foldLeft(Map.empty[Seq[Any], Long]) { (acc, part) =>
             part.foldLeft(acc) { case (a, (k, n)) => a.updated(k, a.getOrElse(k, 0L) + n) }
           }
     }
+  }
+
+  /** The rows of `df` when its optimized plan is a local relation (VALUES
+    * rows, with their projections and filters folded in), converted on the
+    * driver: no job and no SQL execution. */
+  def localRows(df: DataFrame): Option[Seq[Row]] = df.queryExecution.optimizedPlan match {
+    case l: LocalRelation =>
+      val toScala = CatalystTypeConverters.createToScalaConverter(l.schema)
+      Some(l.data.map(r => toScala(r).asInstanceOf[Row]))
+    case _ => None
   }
 
   private def countRows(rows: Iterator[Row]): Map[Seq[Any], Long] = {

@@ -511,6 +511,12 @@ object VersionedTable {
     next
   }
 
+  /** Rows of a committed version, summed from the Parquet footers of the
+    * files its manifest lists, read on the driver: no job. */
+  def rowCount(spark: SparkSession, path: String, version: Int): Long =
+    manifestEntries(spark, path, version)
+      .map(e => ParquetFooter.stats(spark, e).rowCount.getOrElse(BigInt(0))).sum.toLong
+
   /** Read the latest committed snapshot. */
   def read(spark: SparkSession, path: String): DataFrame = {
     val v = latestVersion(spark, path).getOrElse(
@@ -529,39 +535,43 @@ object VersionedTable {
       case None =>
         partitionSpec(spark, path) match {
           case Some(ps) =>
-            // the stored schema pins column types and keeps empty tables
-            // full-width; the final select pins the declared column ORDER
-            // (Spark always reports partition columns last). A plain
-            // attribute select does not block partition pruning.
-            val schema = org.apache.spark.sql.types.StructType.fromDDL(ps.schemaDdl)
-            val entries = manifestEntries(spark, path, version)
-            // a partition-granular manifest mixes dirs from several
-            // version bases; each base gets ONE scan (basePath keeps
-            // native partition-value parsing and pruning), unioned
-            def ownerBase(e: String): String = {
-              var cur = new Path(e)
-              while (cur.getName.contains("=")) cur = cur.getParent
-              cur.toString
-            }
-            val scans = entries.groupBy(ownerBase).toSeq.sortBy(_._1)
-              .map { case (b, dirs) =>
-                spark.read.schema(schema).option("basePath", b)
-                  .parquet(dirs: _*)
+            // memoized like the unpartitioned read below; the key carries
+            // the spec text, so a schema change reads afresh
+            val spec = s"${ps.cols.mkString(",")}\t${ps.schemaDdl}"
+            graft.Memo(spark, s"read#$path#v$version#$spec") {
+              // the stored schema pins column types and keeps empty tables
+              // full-width; the final select pins the declared column ORDER
+              // (Spark always reports partition columns last). A plain
+              // attribute select does not block partition pruning.
+              val schema = org.apache.spark.sql.types.StructType.fromDDL(ps.schemaDdl)
+              // a partition-granular manifest mixes dirs from several
+              // version bases; each base gets ONE scan (basePath keeps
+              // native partition-value parsing and pruning), unioned
+              def ownerBase(e: String): String = {
+                var cur = new Path(e)
+                while (cur.getName.contains("=")) cur = cur.getParent
+                cur.toString
               }
-            val base =
-              if (scans.isEmpty)
-                spark.createDataFrame(
-                  spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-              else scans.reduce(_ unionByName _)
-            base.select(schema.fieldNames.map(org.apache.spark.sql.functions.col)
-              .toSeq: _*)
+              val scans = manifestEntries(spark, path, version).groupBy(ownerBase).toSeq
+                .sortBy(_._1)
+                .map { case (b, dirs) =>
+                  spark.read.schema(schema).option("basePath", b)
+                    .parquet(dirs: _*)
+                }
+              val base =
+                if (scans.isEmpty)
+                  spark.createDataFrame(
+                    spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+                else scans.reduce(_ unionByName _)
+              base.select(schema.fieldNames.map(org.apache.spark.sql.functions.col)
+                .toSeq: _*)
+            }
           case None =>
             // a committed version's data dir is immutable (copy-on-write;
             // vacuum removes whole dirs, never rewrites them), so the
             // resolved scan — file listing + footer schema, paid per
             // registerViews per statement otherwise — is reusable.
-            // Partitioned/bucketed reads stay per-call: their stored specs
-            // are table-level and can evolve under an old version.
+            // Bucketed reads stay per-call: they resolve a catalog entry.
             // The immutability holds for commits, not for whole-directory
             // surgery: DROP TABLE, ALTER RENAME, ALTER CLUSTER SWAP TABLE
             // and vacuum invalidate every memo key naming the table path.

@@ -48,4 +48,41 @@ abstract class SparkTestBase extends AnyFunSuite {
       (out, jobs.get())
     } finally sc.removeSparkListener(listener)
   }
+
+  /** SQL executions started while `f` runs, each with the node names of
+    * its initial physical plan, attributed through a job tag (the SQL
+    * execution start event carries the tags). A sentinel execution seen
+    * by the listener means every execution of `f` was seen too. */
+  def sqlPlansOf[T](f: => T): (T, Seq[Seq[String]]) = {
+    import org.apache.spark.sql.execution.SparkPlanInfo
+    import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+    val sc = spark.sparkContext
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[Seq[String]]()
+    val sentinel = new java.util.concurrent.CountDownLatch(1)
+    def nodes(p: SparkPlanInfo): Seq[String] = p.nodeName +: p.children.flatMap(nodes)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onOtherEvent(e: org.apache.spark.scheduler.SparkListenerEvent): Unit =
+        e match {
+          case s: SparkListenerSQLExecutionStart =>
+            if (s.jobTags.contains(s"$tagKey.run")) plans.add(nodes(s.sparkPlanInfo))
+            else if (s.jobTags.contains(s"$tagKey.sentinel")) sentinel.countDown()
+          case _ => ()
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.addJobTag(s"$tagKey.run")
+      val out = try f finally sc.removeJobTag(s"$tagKey.run")
+      sc.addJobTag(s"$tagKey.sentinel")
+      try spark.range(1).collect() finally sc.removeJobTag(s"$tagKey.sentinel")
+      assert(sentinel.await(30, java.util.concurrent.TimeUnit.SECONDS))
+      (out, plans.toArray(Array.empty[Seq[String]]).toSeq)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  /** The number of SQL executions started while `f` runs. */
+  def sqlExecutionsOf[T](f: => T): (T, Int) = {
+    val (out, plans) = sqlPlansOf(f)
+    (out, plans.length)
+  }
 }
