@@ -4322,7 +4322,7 @@ class StatementRouter(spark: SparkSession, root: String) {
       }
       val committed = writeTable(name, next,
         partitionCols(name, target.schema, assigned.toSet).map(_ => touched.distinct))
-      if (conflict.exists(_._2.isDefined))
+      if (conflict.exists(_._2.isDefined) && matched.nonEmpty)
         markTouched(name, aligned.filter(keyIn(k, matched.map(_._1))))
       if (!freshKeys.contains(null)) storeKeyMap(name, version, committed, Some(m ++ fresh))
       rows.length.toLong
@@ -4351,10 +4351,14 @@ class StatementRouter(spark: SparkSession, root: String) {
     val hit = keyIn(k, matched)
     def value(v: Any, dt: DataType) = lit(v).cast(dt)
     val incoming = Dml.localRows(rows.filter(hit)).get
+    // typed arrays: with no matched row they are empty, and an untyped
+    // empty map would leave `excluded.<col>` nothing to resolve against
     val byKey = map_from_arrays(
-      array(incoming.map(r => value(r.getAs[Any](k), rows.schema(k).dataType)): _*),
+      array(incoming.map(r => value(r.getAs[Any](k), rows.schema(k).dataType)): _*)
+        .cast(ArrayType(rows.schema(k).dataType)),
       array(incoming.map(r => struct(rows.schema.fields.toSeq.zipWithIndex.map { case (f, i) =>
-        value(r.get(i), f.dataType).as(f.name) }: _*)): _*))
+        value(r.get(i), f.dataType).as(f.name) }: _*)): _*)
+        .cast(ArrayType(StructType(rows.schema.fields.map(_.copy(nullable = true))))))
     val assignMap = assigns.toMap
     target.withColumn("__e", try_element_at(byKey, col(k)))
       .select(target.schema.fieldNames.map { cname =>
@@ -4519,17 +4523,13 @@ class StatementRouter(spark: SparkSession, root: String) {
       VersionedTable.latestVersion(spark, tablePath(name)).getOrElse(1))
     val (next, deleted) = Dml.delete(cur, cond)
     val pcols = partitionCols(name, cur.schema)
-    // the key map answers a key predicate; any other condition tallies its
-    // keys with its partitions, so the map can drop them
+    // the key map answers a key predicate; any other condition tallies,
+    // stores no map, and the next keyed statement rebuilds it by a scan
     val km = if (needSeq || retToks.isDefined) None else keyed(name, cur.schema)
     val (n, parts, nextMap) = km.flatMap { case (k, ps) =>
       keyHits(name, version, k, ps, cur.filter(cond)).map { case (m, sel) =>
         (sel.length.toLong, pcols.map(_ => sel.map(_._2).distinct), Some(m -- sel.map(_._1)))
-      }.orElse(version.flatMap(KeyMap.stored(spark, tablePath(name), _)).map { m =>
-        val t = Dml.tally(cur.filter(cond), k +: ps)
-        (t.values.sum, pcols.map(_ => t.keys.map(_.tail).toSeq.distinct),
-          Some(m -- t.keys.map(_.head)))
-      })
+      }
     }.getOrElse {
       val (n, parts) = touchOf(cur.filter(cond), pcols)
       (n, parts, None)

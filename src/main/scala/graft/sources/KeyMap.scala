@@ -51,7 +51,10 @@ object KeyMap {
 
   /** The most rows a table may hold for its versions to get a map. Past
     * it the DML statements take their scanning paths, so the driver never
-    * holds more than this many entries per table. */
+    * holds more than this many entries per table. A map takes about 150
+    * bytes of driver heap per key (`graft.KeyMapCost` in the tests), so
+    * about 10 MB at the cap; the cap bounds heap, since the map saves
+    * time at every size measured. */
   val MaxKeys: Int = 1 << 16
 
   /** Keys as literal predicates select them: the key in `in` (when set),
@@ -106,18 +109,24 @@ object KeyMap {
 
   private def memoKey(path: String, version: Int) = s"pkmap#$path#v$version"
 
+  /** Set once a version of the table at `path` counts more than
+    * [[MaxKeys]] rows; dropped with the path's maps. */
+  private def overKey(path: String) = s"pkmap#$path#over"
+
   /** The map of `version`: the stored one, else one scan of (`key` ++
     * `parts`), a [[Dml.tally]]. Before the scan, the version's row count
     * from its Parquet footers must be within [[MaxKeys]]. None over the
-    * cap, or when the version holds a NULL or repeated key. */
+    * cap, or when the version holds a NULL or repeated key. A table found
+    * over the cap has no map, and reads no footers for one, until DROP,
+    * RENAME, SWAP or vacuum drops its memo entries. */
   def of(spark: SparkSession, path: String, version: Int, key: String,
          parts: Seq[String]): Option[KeyMap] =
-    graft.Memo(spark, memoKey(path, version)) {
-      val rows =
-        try Some(VersionedTable.rowCount(spark, path, version))
-        catch { case scala.util.control.NonFatal(_) => None }
-      if (!rows.exists(_ <= MaxKeys)) None
-      else {
+    if (graft.Memo.peek[Boolean](spark, overKey(path)).contains(true)) None
+    else graft.Memo(spark, memoKey(path, version)) {
+      if (VersionedTable.rowCount(spark, path, version) > MaxKeys) {
+        graft.Memo(spark, overKey(path))(true)
+        None
+      } else {
         val df = VersionedTable.readVersion(spark, path, version)
         fromTally(Dml.tally(df, key +: parts), df.schema(key).dataType)
       }
@@ -127,12 +136,13 @@ object KeyMap {
   def stored(spark: SparkSession, path: String, version: Int): Option[KeyMap] =
     graft.Memo.peek[Option[KeyMap]](spark, memoKey(path, version)).flatten
 
-  /** Store `m` as the map of the committed `version`, when it is within
-    * [[MaxKeys]], in place of every map the table's path holds. Call only
-    * after the manifest rename. */
+  /** Store `m` as the map of the committed `version`, in place of every
+    * map the table's path holds; past [[MaxKeys]] entries, mark the table
+    * over the cap instead. Call only after the manifest rename. */
   def store(spark: SparkSession, path: String, version: Int, m: KeyMap): Unit = {
-    graft.Memo.invalidate(_.startsWith(s"pkmap#$path#v"))
+    graft.Memo.invalidate(_.startsWith(s"pkmap#$path#"))
     if (m.size <= MaxKeys) graft.Memo(spark, memoKey(path, version))(Some(m))
+    else graft.Memo(spark, overKey(path))(true)
   }
 
   /** A map from a tally over (key ++ partition columns); None when a key

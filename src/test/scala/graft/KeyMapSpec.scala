@@ -62,6 +62,31 @@ class KeyMapSpec extends SparkTestBase {
     assert(r.execute("SELECT day, v FROM m WHERE id IN (3, 4, 900) ORDER BY id").collect()
       .map(_.mkString("|")).toSeq == Seq(s"${days(3)}|9.5", s"${days(4)}|8.5", s"${days(5)}|7.5"))
     assert(r.execute("SELECT count(*) FROM m").head().getLong(0) == 231L)
+    // a fresh session has no map: its first keyed statement builds one by
+    // a scan (one more job), the next reads the map its commit stored
+    val reopened = new StatementRouter(spark.newSession(), root)
+    val (a, aJobs) = jobsOf(affected(reopened, "UPDATE m SET v = 2.5 WHERE id = 18"))
+    assert(a == 1L && aJobs == 2, s"first keyed UPDATE after reopening: $a rows, $aJobs jobs")
+    val (b, bJobs) = jobsOf(affected(reopened, "DELETE FROM m WHERE id IN (18, 19, 40)"))
+    assert(b == 2L && bJobs == 1, s"second keyed statement after reopening: $b rows, $bJobs jobs")
+  }
+
+  test("an upsert whose keys are all new inserts them, into a new table and a filled one") {
+    val live = new StatementRouter(spark, newRoot())
+    val txn = new StatementRouter(spark, newRoot())
+    Seq(live, txn).foreach(_.execute(ddl))
+    def fresh(ids: Range) = "INSERT INTO m (id, day, v) VALUES " +
+      ids.map(i => s"($i, '${days(i % 8)}', ${i * 0.5})").mkString(", ") +
+      " ON CONFLICT (id) DO UPDATE SET v = excluded.v"
+    Seq(fresh(0 until 5), fresh(5 until 9), upsert).foreach { sql =>
+      val (a, jobs) = jobsOf(affected(live, sql))
+      txn.execute("BEGIN")
+      val b = affected(txn, sql)
+      txn.execute("COMMIT")
+      assert(a == b && jobs == 1, s"$sql: live $a rows in $jobs jobs, txn $b")
+      assert(rows(live) == rows(txn), sql)
+    }
+    assert(rows(live).length == 10)
   }
 
   test("COPY FROM seeds the map from its import tally") {
@@ -220,6 +245,14 @@ class KeyMapSpec extends SparkTestBase {
     assert(KeyMap.stored(spark, path, latest(path)).isEmpty)
     assert(affected(r, s"INSERT INTO m (id, day, v) VALUES (3, '${days(0)}', 1.0)") == 1L)
     assertDuplicate(r, s"INSERT INTO m (id, day, v) VALUES (5000, '${days(0)}', 1.0)")
+    // a DELETE on another condition, on a table with a stored map,
+    // tallies and stores none; the next keyed statement builds one by a
+    // scan
+    assert(affected(r, s"DELETE FROM m WHERE day = '${days(7)}'") == 25L)
+    assert(KeyMap.stored(spark, path, latest(path)).isEmpty)
+    val (upd, jobs) = jobsOf(affected(r, "UPDATE m SET v = 0 WHERE id IN (8, 15, 16)"))
+    assert(upd == 2L && jobs == 2, s"UPDATE after a non-key DELETE: $upd rows, $jobs jobs")
+    assert(KeyMap.stored(spark, path, latest(path)).exists(m => !m.contains(15L) && m.contains(16L)))
     // inside a transaction the key checks see the staged rows
     r.execute("BEGIN")
     assert(affected(r, s"INSERT INTO m (id, day, v) VALUES (6000, '${days(0)}', 1.0)") == 1L)
@@ -241,5 +274,13 @@ class KeyMapSpec extends SparkTestBase {
     assert(r.execute("SELECT count(*), sum(v) FROM big WHERE id < 40").head().toSeq ==
       Seq(20L, (0 until 40).filterNot(i => i >= 10 && i < 30)
         .map(i => if (i == 5) -1L else i % 7L).sum))
+    // once over the cap, later versions read no footers for a map, even
+    // when they shrink under it; DROP clears that
+    VersionedTable.commit(spark, bigPath, spark.range(10).selectExpr("id", "id AS v"))
+    assert(KeyMap.of(spark, bigPath, latest(bigPath), "id", Nil).isEmpty)
+    r.execute("DROP TABLE big")
+    r.execute("CREATE TABLE big (id BIGINT PRIMARY KEY, v BIGINT)")
+    VersionedTable.commit(spark, bigPath, spark.range(10).selectExpr("id", "id AS v"))
+    assert(KeyMap.of(spark, bigPath, latest(bigPath), "id", Nil).map(_.size).contains(10))
   }
 }
