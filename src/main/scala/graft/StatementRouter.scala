@@ -160,8 +160,10 @@ class StatementRouter(spark: SparkSession, root: String) {
         case _: org.apache.spark.sql.types.StringType => true
         case org.apache.spark.sql.types.IntegerType | org.apache.spark.sql.types.LongType |
              org.apache.spark.sql.types.ShortType | org.apache.spark.sql.types.ByteType |
-             org.apache.spark.sql.types.BooleanType | org.apache.spark.sql.types.DateType => true
-        case _ => false // timestamps/decimals format differently in dir names
+             org.apache.spark.sql.types.BooleanType | org.apache.spark.sql.types.DateType |
+             org.apache.spark.sql.types.TimestampType |
+             org.apache.spark.sql.types.TimestampNTZType => true
+        case _ => false // decimals and floats: dir names unverified
       }
     }
     if (safe) Some(ps.cols) else None

@@ -2,6 +2,8 @@ package graft.sources
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+import org.apache.spark.sql.catalyst.expressions.{Cast, Literal}
 
 /** Minimal multi-version table format: snapshot isolation + time travel on
   * plain Parquet, the lakehouse commit protocol the reference gets from its
@@ -14,9 +16,15 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *   table/
   *     data/v00001/part-*.parquet     (immutable once committed)
   *     data/v00002/part-*.parquet
-  *     _manifests/v00001.manifest     (one line: the data dir of the version)
+  *     _manifests/v00001.manifest     (the data dirs of the version, one a line)
   *     _manifests/v00002.manifest
   * }}}
+  *
+  * A partition-granular commit ([[commitPartial]]) writes a manifest of
+  * several lines: its own data dir plus the partition dirs it carries
+  * forward from older versions. A partitioned version reads as ONE
+  * Parquet scan over a file index built from those dirs, so a query's plan
+  * depends on the statement, not on which commits wrote the partitions.
   *
   * Invariants:
   *  - data dirs are write-once; a version's files never change after its
@@ -393,7 +401,9 @@ object VersionedTable {
     val in = f.open(m)
     val bytes = new Array[Byte](in.available())
     in.readFully(bytes); in.close()
-    new String(bytes, "UTF-8").split("\n").toSeq.map(_.trim).filter(_.nonEmpty)
+    // no trim: a carried partition dir ends in its value, which may end
+    // in a blank
+    new String(bytes, "UTF-8").split("\n").toSeq.filter(_.nonEmpty)
       .map { line =>
         if (line.startsWith("data/")) new Path(path, line).toString
         else {
@@ -457,6 +467,7 @@ object VersionedTable {
   def commitPartial(spark: SparkSession, path: String, df: DataFrame,
                     touched: Seq[Seq[Any]]): Int = {
     import org.apache.spark.sql.functions.{col, lit}
+    import org.apache.spark.sql.types.StringType
     val f = fs(spark)
     val ps = partitionSpec(spark, path).getOrElse(
       throw new IllegalArgumentException(s"commitPartial: $path is not partitioned"))
@@ -468,13 +479,14 @@ object VersionedTable {
     val next = prev.getOrElse(0) + 1
     refreshSchema(spark, path, ps, df)
 
+    // the dir name Spark's writer gives these values: each cast to STRING
+    // in the session time zone, then path-escaped (null → the default
+    // partition)
+    val tz = Some(spark.sessionState.conf.sessionLocalTimeZone)
     def dirName(vals: Seq[Any]): String =
       ps.cols.zip(vals).map { case (c, v) =>
-        val s =
-          if (v == null) "__HIVE_DEFAULT_PARTITION__"
-          else org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-            .escapePathName(v.toString)
-        s"$c=$s"
+        val s = if (v == null) null else Cast(Literal(v), StringType, tz).eval().toString
+        ExternalCatalogUtils.getPartitionPathString(c, s)
       }.mkString("/")
     val touchedNames = touched.map(dirName).toSet
 
@@ -527,10 +539,10 @@ object VersionedTable {
   /** Time travel: read an exact committed version. Bucketed tables read
     * through their catalog entry (re-registered if the session is fresh)
     * so the clustering survives into join planning. */
-  def readVersion(spark: SparkSession, path: String, version: Int): DataFrame = {
-    val dataDir = dataDirFor(spark, path, version)
+  def readVersion(spark: SparkSession, path: String, version: Int): DataFrame =
     bucketSpec(spark, path) match {
       case Some(spec) =>
+        val dataDir = dataDirFor(spark, path, version)
         spark.table(ensureCatalogEntry(spark, path, version, dataDir, spec))
       case None =>
         partitionSpec(spark, path) match {
@@ -539,32 +551,7 @@ object VersionedTable {
             // the spec text, so a schema change reads afresh
             val spec = s"${ps.cols.mkString(",")}\t${ps.schemaDdl}"
             graft.Memo(spark, s"read#$path#v$version#$spec") {
-              // the stored schema pins column types and keeps empty tables
-              // full-width; the final select pins the declared column ORDER
-              // (Spark always reports partition columns last). A plain
-              // attribute select does not block partition pruning.
-              val schema = org.apache.spark.sql.types.StructType.fromDDL(ps.schemaDdl)
-              // a partition-granular manifest mixes dirs from several
-              // version bases; each base gets ONE scan (basePath keeps
-              // native partition-value parsing and pruning), unioned
-              def ownerBase(e: String): String = {
-                var cur = new Path(e)
-                while (cur.getName.contains("=")) cur = cur.getParent
-                cur.toString
-              }
-              val scans = manifestEntries(spark, path, version).groupBy(ownerBase).toSeq
-                .sortBy(_._1)
-                .map { case (b, dirs) =>
-                  spark.read.schema(schema).option("basePath", b)
-                    .parquet(dirs: _*)
-                }
-              val base =
-                if (scans.isEmpty)
-                  spark.createDataFrame(
-                    spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-                else scans.reduce(_ unionByName _)
-              base.select(schema.fieldNames.map(org.apache.spark.sql.functions.col)
-                .toSeq: _*)
+              partitionedScan(spark, path, version, ps)
             }
           case None =>
             // a committed version's data dir is immutable (copy-on-write;
@@ -575,9 +562,57 @@ object VersionedTable {
             // The immutability holds for commits, not for whole-directory
             // surgery: DROP TABLE, ALTER RENAME, ALTER CLUSTER SWAP TABLE
             // and vacuum invalidate every memo key naming the table path.
+            val dataDir = dataDirFor(spark, path, version)
             graft.Memo(spark, s"read#$dataDir")(ParquetFooter.read(spark, dataDir))
         }
     }
+
+  /** One scan over every partition directory of a partitioned version,
+    * whichever version bases the manifest places them in: the file index
+    * lists them under a partition spec built from the manifest (the way
+    * Spark's `CatalogFileIndex` reads catalog partitions at arbitrary
+    * locations), so the plan does not depend on the commit history.
+    * Partition values are the dir names cast to the stored schema's
+    * types in the session time zone. The stored schema pins column types
+    * and keeps empty tables full-width; the final select pins the declared
+    * column ORDER (Spark reports partition columns last) and does not block
+    * partition pruning. */
+  private def partitionedScan(spark: SparkSession, path: String, version: Int,
+                              ps: PartitionSpec): DataFrame = {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation,
+      InMemoryFileIndex, PartitionPath, PartitionSpec => FilePartitionSpec}
+    import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+    import org.apache.spark.sql.types.StructType
+    val schema = StructType.fromDDL(ps.schemaDdl)
+    val partSchema = StructType(ps.cols.map(c => schema.find(_.name.equalsIgnoreCase(c))
+      .getOrElse(throw new IllegalStateException(s"partition column $c not in $path's schema"))))
+    val dataSchema = StructType(schema.filterNot(partSchema.contains))
+    val tz = Some(spark.sessionState.conf.sessionLocalTimeZone)
+    val f = fs(spark)
+    val parts = partitionDirs(spark, path, version).map { case (name, dir) =>
+      val values = name.split("/").toSeq.zip(partSchema).map { case (seg, field) =>
+        val raw = seg.substring(seg.indexOf('=') + 1)
+        if (raw == ExternalCatalogUtils.DEFAULT_PARTITION_NAME) null
+        else Cast(Literal(ExternalCatalogUtils.unescapePathName(raw)), field.dataType, tz).eval()
+      }
+      // qualified: the index keys listed files by their qualified parent
+      // dir, and a partition path must match that key to find its files
+      PartitionPath(InternalRow.fromSeq(values), f.makeQualified(new Path(dir)))
+    }
+    val index = new InMemoryFileIndex(spark, parts.map(_.path), Map.empty, Some(schema),
+      userSpecifiedPartitionSpec = Some(FilePartitionSpec(partSchema, parts)))
+    // the index reads a missing root dir as empty; a committed partition
+    // dir always holds a data file, so one without listed files is lost
+    val listed = index.allFiles().map(_.getPath.getParent).toSet
+    val lost = parts.map(_.path).filterNot(listed.contains)
+    if (lost.nonEmpty)
+      throw new java.io.FileNotFoundException(
+        s"version $version of $path lists missing partition dirs: ${lost.mkString(", ")}")
+    val rel = HadoopFsRelation(index, partSchema, dataSchema, None, new ParquetFileFormat,
+      Map.empty)(spark)
+    spark.baseRelationToDataFrame(rel)
+      .select(schema.fieldNames.map(org.apache.spark.sql.functions.col).toSeq: _*)
   }
 
   /** Copy-on-write DML on the versioned table: apply `f` to the latest

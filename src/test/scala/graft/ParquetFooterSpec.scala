@@ -109,7 +109,8 @@ class ParquetFooterSpec extends SparkTestBase {
     // two partition levels, string values
     df.write.partitionBy("day", "tb").parquet(s"$root/two")
     assertParity(spark, s"$root/two")
-    // the router's changed-partition reads: several leaf dirs, no basePath
+    // the router's changed-partition reads (indexDelta): several leaf
+    // dirs, no basePath
     val leaves = Seq(s"$root/postings/tb=3", s"$root/postings/tb=0", s"$root/postings/tb=5")
     assertParity(spark, leaves: _*)
     sameRows(ParquetFooter.read(spark, leaves: _*), spark.read.parquet(leaves: _*))

@@ -1317,6 +1317,128 @@ class PartitionedTableSpec extends SparkTestBase {
   }
 }
 
+/** A partitioned version reads like an unpartitioned table holding the
+  * same rows, whichever commits wrote its partitions: the same statements
+  * run on a PARTITIONED BY table and on an unpartitioned twin, and every
+  * read, time travel included, returns the same schema and rows. Three or
+  * more partial commits leave manifests that mix several version bases. */
+class PartitionedScanParitySpec extends SparkTestBase {
+
+  /** `parts` are the partition columns with their types; `vals` gives one
+    * tuple of SQL literals for each of four partitions P0..P3. */
+  private def parity(label: String, parts: Seq[(String, String)],
+                     vals: Seq[Seq[String]]): Unit = {
+    val root = graft.ArtifactStore.scratchDir(s"graftpscan_$label").toFile.getAbsolutePath
+    val r = new StatementRouter(spark, root)
+    val names = parts.map(_._1)
+    val cols = parts.map { case (c, t) => s"$c $t" }.mkString(", ")
+    r.execute(s"""CREATE TABLE p (id BIGINT PRIMARY KEY, $cols, x DOUBLE PRECISION)
+        PARTITIONED BY (${names.mkString(", ")})""")
+    r.execute(s"CREATE TABLE u (id BIGINT PRIMARY KEY, $cols, x DOUBLE PRECISION)")
+    def both(stmt: String => String): Unit = Seq("p", "u").foreach(t => r.execute(stmt(t)))
+    def pred(i: Int): String = names.zip(vals(i)).map {
+      case (c, "NULL") => s"$c IS NULL"
+      case (c, v)      => s"$c = $v"
+    }.mkString(" AND ")
+    def row(id: Int, part: Int): String = s"($id, ${vals(part).mkString(", ")}, ${id * 0.25})"
+    def insert(t: String, rows: Seq[String]): String =
+      s"INSERT INTO $t (id, ${names.mkString(", ")}, x) VALUES ${rows.mkString(", ")}"
+    def same(p: org.apache.spark.sql.DataFrame, u: org.apache.spark.sql.DataFrame,
+             what: String): Unit = {
+      assert(p.schema.map(f => f.name -> f.dataType) == u.schema.map(f => f.name -> f.dataType),
+        what)
+      assert(p.collect().toSeq == u.collect().toSeq, what)
+    }
+    def reads(): Unit = Seq[String => String](
+      t => s"SELECT * FROM $t ORDER BY id",
+      t => s"SELECT ${names.mkString(", ")}, count(*) AS n, sum(x) AS s FROM $t " +
+        s"GROUP BY ${names.mkString(", ")} ORDER BY ${names.mkString(", ")}",
+      t => s"SELECT id, x FROM $t WHERE ${pred(1)} ORDER BY id",
+      t => s"SELECT count(*) AS n FROM $t WHERE ${names.head} IS NULL"
+    ).foreach(q => same(r.execute(q("p")), r.execute(q("u")), q("p")))
+
+    reads() // the empty table
+    both(t => insert(t, (1 to 6).map(i => row(i, i % 3))))
+    reads()
+    both(t => s"UPDATE $t SET x = x + 10 WHERE ${pred(0)}")
+    val travel = Seq("p", "u").map(t => VersionedTable.latestVersion(spark, s"$root/$t").get)
+    both(t => insert(t, Seq(row(7, 3), row(8, 3))))
+    both(t => s"DELETE FROM $t WHERE id = 2")
+    both(t => s"UPDATE $t SET x = x * 2 WHERE id = 4")
+    reads()
+    val latest = VersionedTable.latestVersion(spark, s"$root/p").get
+    val bases = VersionedTable.manifestEntries(spark, s"$root/p", latest)
+      .map(e => "/data/v\\d+".r.findFirstIn(e).get).distinct
+    assert(bases.length >= 3, bases.mkString(", "))
+    // time travel to the version the first UPDATE committed
+    same(VersionedTable.readVersion(spark, s"$root/p", travel(0)).orderBy("id"),
+      VersionedTable.readVersion(spark, s"$root/u", travel(1)).orderBy("id"), "time travel")
+    both(t => s"DELETE FROM $t")
+    reads() // every partition deleted
+  }
+
+  test("TEXT partition values that need escaping") {
+    parity("text", Seq("k" -> "TEXT"), Seq("'a/b'", "'x=y'", "'50%'", "' '").map(Seq(_)))
+  }
+
+  test("a NULL partition value") {
+    parity("null", Seq("k" -> "TEXT"), Seq("NULL", "'n'", "'m'", "'o'").map(Seq(_)))
+  }
+
+  test("INTEGER partition values") {
+    parity("int", Seq("k" -> "INTEGER"), Seq("1", "-2", "30", "0").map(Seq(_)))
+  }
+
+  test("DATE partition values") {
+    parity("date", Seq("k" -> "DATE"),
+      Seq("'2024-03-01'", "'2024-02-29'", "'1999-12-31'", "'2024-03-08'").map(Seq(_)))
+  }
+
+  test("TIMESTAMP partition values") {
+    parity("ts", Seq("k" -> "TIMESTAMP"), Seq("'2024-03-01 10:30:00'",
+      "'2024-03-02 00:00:00'", "'2024-03-01 23:59:59.5'", "'1999-12-31 12:00:00'").map(Seq(_)))
+  }
+
+  test("two partition levels") {
+    parity("two", Seq("a" -> "TEXT", "b" -> "INTEGER"),
+      Seq(Seq("'x'", "1"), Seq("'x'", "2"), Seq("'y'", "1"), Seq("'y'", "NULL")))
+  }
+}
+
+/** A partitioned version is one file scan, so a SELECT's plan, and the
+  * code generated for it, do not change as writes move partitions to new
+  * version dirs. */
+class PartitionedScanPlanSpec extends SparkTestBase
+    with org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {
+  import org.apache.spark.metrics.source.CodegenMetrics
+  import org.apache.spark.sql.execution.{FileSourceScanExec, UnionExec}
+
+  test("one scan and no union after keyed UPDATEs; the next UPDATE compiles no new code") {
+    val root = graft.ArtifactStore.scratchDir("graftpscan_plan").toFile.getAbsolutePath
+    val r = new StatementRouter(spark, root)
+    r.execute("""CREATE TABLE pdays (id BIGINT PRIMARY KEY, day TEXT, v DOUBLE PRECISION)
+        PARTITIONED BY (day)""")
+    r.execute("INSERT INTO pdays (id, day, v) VALUES " +
+      (1 to 32).map(i => s"($i, '2024-03-0${i % 8 + 1}', ${i * 0.5})").mkString(", "))
+    // ids 1..3 live in three different days: each UPDATE moves one day
+    // into a new version dir, so the manifest mixes four bases
+    (1 to 3).foreach(k => r.execute(s"UPDATE pdays SET v = v + 1 WHERE id = $k"))
+    val agg = "SELECT day, count(*) AS n, sum(v) AS s FROM pdays GROUP BY day ORDER BY day"
+    val df = r.execute(agg)
+    val rows = df.collect().map(x => (x.getString(0), x.getLong(1))).toSeq
+    assert(rows == (1 to 8).map(d => (f"2024-03-$d%02d", 4L)), rows)
+    val plan = df.queryExecution.executedPlan
+    assert(collect(plan) { case s: FileSourceScanExec => s }.length == 1, plan)
+    assert(collect(plan) { case u: UnionExec => u }.isEmpty, plan)
+    // id 4 lives in a fourth day: the snapshot now spans five bases
+    r.execute("UPDATE pdays SET v = v + 1 WHERE id = 4")
+    val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    assert(r.execute(agg).collect().map(x => (x.getString(0), x.getLong(1))).toSeq == rows)
+    val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+    assert(compiled == 0, s"the repeated aggregate compiled $compiled classes")
+  }
+}
+
 /** Multi-column MATCH + _score through a declared COMPOSITE fulltext index
   * (StatementRouter.routeFieldedScore): per-field BM25 with boosts replaces
   * the per-row TF fallback when the MATCH targets exactly one declared
